@@ -27,6 +27,10 @@ from collections.abc import Callable, Iterable, Iterator
 from pyspark.sql import DataFrame
 
 TransportFactory = Callable[[], Callable[[dict], int]]
+#: Transport failures a later attempt can get past: the connection was
+#: reset, refused or timed out. Transports raise these builtins rather
+#: than their HTTP client's own exceptions.
+RETRYABLE_ERRORS = (ConnectionError, TimeoutError)
 
 
 def payload_key(payload: str) -> str:
@@ -35,7 +39,11 @@ def payload_key(payload: str) -> str:
 
 def deliver_partition(rows: Iterable, transport: Callable[[dict], int], *,
                       max_retries: int = 3, backoff_s: float = 0.2) -> int:
-    """Send every payload row; raise if any batch is undeliverable."""
+    """Send every payload row; raise if any batch is undeliverable.
+
+    A transport may raise ``RETRYABLE_ERRORS`` (a reset, refused or
+    timed-out connection); those retry in the same bounded backoff as
+    a retryable status."""
     sent = 0
     for row in rows:
         request = {
@@ -44,7 +52,11 @@ def deliver_partition(rows: Iterable, transport: Callable[[dict], int], *,
             "body": row.payload,
         }
         for attempt in range(max_retries + 1):
-            status = transport(request)
+            try:
+                status = transport(request)
+                cause = f"status {status}"
+            except RETRYABLE_ERRORS as e:
+                status, cause = 0, repr(e)  # 0: no response at all
             if 200 <= status < 300:
                 sent += 1
                 break
@@ -55,7 +67,7 @@ def deliver_partition(rows: Iterable, transport: Callable[[dict], int], *,
             permanent = 400 <= status < 500 and status not in (408, 429)
             if permanent or attempt == max_retries:
                 raise RuntimeError(
-                    f"undeliverable batch (status {status}"
+                    f"undeliverable batch ({cause}"
                     f"{', permanent' if permanent else ''}) for "
                     f"{row.file}#{row.block_index}.{row.batch_id}")
             time.sleep(backoff_s * (2 ** attempt))
@@ -63,11 +75,15 @@ def deliver_partition(rows: Iterable, transport: Callable[[dict], int], *,
 
 
 def send_payloads(payloads: DataFrame,
-                  transport_factory: TransportFactory) -> None:
-    """foreachPartition delivery: one transport per partition."""
+                  transport_factory: TransportFactory) -> int:
+    """foreachPartition delivery: one transport per partition. Returns
+    the number of payloads sent, summed by an accumulator in the same
+    job."""
+    sent = payloads.sparkSession.sparkContext.accumulator(0)
 
     def run(it: Iterator) -> None:
         transport = transport_factory()
-        deliver_partition(it, transport)
+        sent.add(deliver_partition(it, transport))
 
     payloads.foreachPartition(run)
+    return sent.value

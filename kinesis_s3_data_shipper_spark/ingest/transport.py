@@ -56,11 +56,19 @@ def http_transport_factory(base_url: str,
 
     def factory() -> Callable[[dict], int]:
         def send(request: dict) -> int:
-            resp = _pool(base_url).request(
-                "POST",
-                build_url(base_url, request["url_path"]),
-                body=request["body"].encode("utf-8"),
-                headers=build_headers(token, request["idempotency_key"]))
+            from urllib3.exceptions import ProtocolError
+            from urllib3.exceptions import TimeoutError as PoolTimeout
+            url = build_url(base_url, request["url_path"])
+            try:
+                resp = _pool(base_url).request(
+                    "POST", url,
+                    body=request["body"].encode("utf-8"),
+                    headers=build_headers(token, request["idempotency_key"]))
+            except (ProtocolError, PoolTimeout) as e:
+                # The pool retries nothing (retries=False): hand reset,
+                # refused and timed-out connections to the sink's retry
+                # loop as the builtin it retries.
+                raise ConnectionError(f"POST {url}: {e}") from e
             # preload_content (default) drains the body, returning the
             # keep-alive socket to the pool.
             return int(resp.status)

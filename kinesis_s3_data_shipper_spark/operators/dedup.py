@@ -131,12 +131,6 @@ def _signature_sql(hashes_sql: str, num_hashes: int) -> str:
     return let(hashes_sql, "hs", f"array({mins})")
 
 
-def minhash_signature(hashes_col: str, num_hashes: int = 16) -> Column:
-    """MinHash signature: per permutation j, min over the shingle-hash
-    array of (a_j*h + b_j) mod p (see minhash_perm_params)."""
-    return F.expr(_signature_sql(hashes_col, num_hashes))
-
-
 def _bands_sql(sig_sql: str, num_bands: int, band_size: int) -> str:
     body = (f"transform(sequence(0, {num_bands - 1}),"
             f" b -> array_join(transform(slice(sig, b * {band_size} + 1,"

@@ -347,21 +347,6 @@ def pq_codes_arrow(vec_col: str, cb: list[list[list[float]]]) -> Column:
     return pandas_udf(codes, "array<long>")(F.col(vec_col))
 
 
-def pq_reconstruct(codes_col: str, cb: list[list[list[float]]]) -> Column:
-    """Decode PQ codes back to the quantized vector (codebook rows as
-    plan literals). dot(q, reconstruct(v)) is exactly the asymmetric-
-    distance (ADC) score sum_m dot(q_m, cb[m][code_m]) — production
-    caches the per-query K×M table; the algebra and result are
-    identical."""
-    parts = []
-    for m, words in enumerate(cb):
-        lit = "array(" + ",".join(_plane_literal(w) for w in words) + ")"
-        parts.append(
-            f"element_at({lit}, CAST(element_at({codes_col}, {m + 1})"
-            f" AS INT))")
-    return F.expr("flatten(array(" + ",".join(parts) + "))")
-
-
 def pq_adc_lut(qv_col: str, cb: list[list[list[float]]]) -> Column:
     """Per-QUERY ADC lookup table: lut[m][k] = dot(q_sub_m, cb[m][k]),
     each a dim-order left fold. Computed once per query row (M*K*d

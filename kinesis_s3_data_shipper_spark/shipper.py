@@ -14,12 +14,28 @@ Flag parity (reference → here):
 
 Secrets passed via ``--token`` are redacted when the config is echoed,
 like the reference's pp_args (K:236-245).
+
+Batch mode makes one pass over exactly the worklist, as the reference
+downloads and parses each unprocessed file once (K:187-216, K:82-174):
+
+1. list ``--input`` (the path column only, so no content is read),
+   drop the keys already in ``--processed-dir`` and collect the sorted
+   worklist;
+2. load exactly those files by explicit, glob-escaped path, so files
+   processed in earlier runs are never read again;
+3. split, parse and flatten once; with ``--payloads`` the events are
+   cached, and the events write and payload assembly share them;
+4. record the keys from that same scan's path column.
+
+``--declarative`` keeps a semi-join of the ``shipper`` DataSource's
+blocks against the worklist.
 """
 
 from __future__ import annotations
 
 import argparse
 import json
+import re
 import sys
 
 from pyspark.sql import DataFrame
@@ -31,6 +47,10 @@ from .ingest.tracking import filter_unprocessed, record_processed
 from .session import get_session
 
 REDACT_KEYS = ("token", "secret", "password", "key")
+#: Events per payload, the reference's --humio-batch default (K:265).
+DEFAULT_BATCH_SIZE = 5000
+#: Characters Hadoop expands in a path glob (GlobPattern).
+_GLOB_CHARS = re.compile(r"([\\\[\]{}*?])")
 
 
 def redacted(args: dict) -> dict:
@@ -53,7 +73,7 @@ def build_parser() -> argparse.ArgumentParser:
                    help="directory for parsed-event parquet output")
     p.add_argument("--prefix", default=None,
                    help="only process files whose path starts with this")
-    p.add_argument("--batch-size", type=int, default=5000,
+    p.add_argument("--batch-size", type=int, default=DEFAULT_BATCH_SIZE,
                    help="max events per assembled payload (default 5000, "
                         "the reference's --humio-batch default)")
     p.add_argument("--processed-dir", default=None,
@@ -102,53 +122,79 @@ def _read_processed(spark, processed_dir: str) -> DataFrame | None:
         raise
 
 
-def run_batch(spark, ns) -> int:
+def glob_escape(path: str) -> str:
+    """Backslash-escape Hadoop's glob characters, so a listed key loads
+    as exactly that file instead of a pattern over its siblings."""
+    return _GLOB_CHARS.sub(r"\\\1", path)
+
+
+def _path_frame(spark, paths: list[str]) -> DataFrame:
+    """A one-column ``path`` frame from an Arrow table: a local scan,
+    where a Python list would become a Python RDD with a job per use."""
+    import pyarrow as pa
+    return spark.createDataFrame(
+        pa.table({"path": pa.array(paths, pa.string())}))
+
+
+def _worklist(spark, ns) -> list[str]:
+    """Sorted keys of the input files not yet processed.
+
+    Materialized ONCE (sorted: the reference's lexicographic work-list
+    order, K:292) and the whole run is pinned to this snapshot: the
+    write and the processed-record must see the SAME file set, or a
+    file landing between two lazy re-listings gets recorded as
+    processed without its events ever being written. Driver memory:
+    path strings only, the same order of magnitude Spark's own
+    InMemoryFileIndex already holds for this listing."""
     if ns.declarative:
         from .sources.shipper_format import _list_files
-        from .sources.shipper_format import register as register_shipper
-        register_shipper(spark)
         # Listing happens driver-side (the DataSource planner does the
         # same walk), so empty files still enter the worklist and get
         # tracked/warned even though they yield zero block rows.
-        listing = spark.createDataFrame(
-            [(p,) for p in _list_files(ns.input, ns.prefix)], "path string")
-        raw = None
+        listing = _path_frame(spark, _list_files(ns.input, ns.prefix))
     else:
-        raw = (spark.read.format("binaryFile")
-               .option("recursiveFileLookup", "true")
-               .load(ns.input)
-               .select("path", "content"))
+        # Only the path column: binaryFile reads no content for it.
+        listing = (spark.read.format("binaryFile")
+                   .option("recursiveFileLookup", "true")
+                   .load(ns.input)
+                   .select("path"))
         if ns.prefix:
-            raw = raw.filter(F.col("path").startswith(ns.prefix))
-        listing = raw.select("path")
+            listing = listing.filter(F.col("path").startswith(ns.prefix))
     if ns.processed_dir:
         processed = _read_processed(spark, ns.processed_dir)
         if processed is not None:
             listing = filter_unprocessed(listing, processed, key_col="path")
+    return sorted(r.path for r in listing.collect())
 
-    # Materialize the work list ONCE (sorted — the reference's
-    # lexicographic work-list order, K:292) and pin the whole run to
-    # this snapshot: the write and the processed-record below must see
-    # the SAME file set, or a file landing between two lazy re-listings
-    # gets recorded as processed without its events ever being written.
-    # Driver memory: path strings only — the same order of magnitude
-    # Spark's own InMemoryFileIndex already holds for this listing.
-    worklist = sorted(r.path for r in listing.collect())
+
+def run_batch(spark, ns) -> int:
+    """One pass over exactly the worklist: list and filter once, read
+    only the listed files, split and parse them once, and record the
+    keys that read produced."""
+    worklist = _worklist(spark, ns)
     # Empty-input short-circuit (reference parity, K:284-286).
     if not worklist:
         print("no unprocessed input files matched; nothing to do",
               file=sys.stderr)
         return 0
-    work_df = spark.createDataFrame([(p,) for p in worklist], "path string")
     if ns.declarative:
+        from .sources.shipper_format import register as register_shipper
+        register_shipper(spark)
         reader = spark.read.format("shipper")
         if ns.prefix:
             reader = reader.option("prefix", ns.prefix)
+        done = _path_frame(spark, worklist)
         blocks = (reader.load(ns.input)
-                  .join(F.broadcast(work_df), "path", "left_semi"))
+                  .join(F.broadcast(done), "path", "left_semi"))
     else:
-        raw = raw.join(F.broadcast(work_df), "path", "left_semi")
-        blocks = split_blocks(raw)
+        # The worklist's files by explicit path: history bytes are never
+        # read, and a file gone since the listing fails the load. The
+        # record comes from this same scan's path column (no content
+        # read), so its keys are the listing's keys by construction.
+        raw = spark.read.format("binaryFile").load(
+            [glob_escape(p) for p in worklist])
+        done = raw.select("path")
+        blocks = split_blocks(raw.select("path", "content"))
 
     # Observability (reference logs block/event counts, K:114-117, 133,
     # 170): df.observe attaches the metric to the job itself — no
@@ -161,7 +207,28 @@ def run_batch(spark, ns) -> int:
     events = (flatten_events(parse_blocks(blocks))
               .observe(obs, F.count(F.lit(1)).alias("n_events"),
                        F.collect_set("file").alias("files_with_events")))
-    events.write.mode("append").parquet(ns.output)
+    pay = None
+    n_sent = 0
+    if ns.payloads:
+        # Split and parse once: the events write fills the cache, and
+        # payload assembly reads it back.
+        events = events.persist()
+    try:
+        events.write.mode("append").parquet(ns.output)
+        if ns.payloads:
+            pay = build_payloads(events, ns.batch_size)
+            if ns.post_url:
+                pay = pay.persist()  # one compute for both write and POST
+            pay.write.mode("append").parquet(ns.output + "_payloads")
+            if ns.post_url:
+                from .ingest.sink import send_payloads
+                from .ingest.transport import http_transport_factory
+                n_sent = send_payloads(
+                    pay, http_transport_factory(ns.post_url, ns.token))
+    finally:
+        if pay is not None:
+            pay.unpersist()
+        events.unpersist()
     metrics = obs.get
     files_with_events = set(metrics["files_with_events"])
     for path in worklist:
@@ -170,21 +237,12 @@ def run_batch(spark, ns) -> int:
     print(json.dumps({"metrics": {
         "n_events": metrics["n_events"],
         "n_files": len(files_with_events),
-        "n_files_empty": len(worklist) - len(files_with_events)}}),
+        "n_files_empty": len(worklist) - len(files_with_events),
+        "n_payloads_sent": n_sent}}),
         file=sys.stderr)
-    if ns.payloads:
-        pay = build_payloads(events, ns.batch_size)
-        if ns.post_url:
-            pay = pay.persist()  # one compute for both write and POST
-        pay.write.mode("append").parquet(ns.output + "_payloads")
-        if ns.post_url:
-            from .ingest.sink import send_payloads
-            from .ingest.transport import http_transport_factory
-            send_payloads(pay, http_transport_factory(ns.post_url, ns.token))
-            pay.unpersist()
     if ns.processed_dir:
         # The static snapshot — NOT a re-listing — becomes the record.
-        record_processed(ns.processed_dir, work_df, key_col="path")
+        record_processed(ns.processed_dir, done, key_col="path")
     return 0
 
 
@@ -192,6 +250,18 @@ def run_stream(spark, ns) -> int:
     from .streaming.jobs import streaming_ingest
     if not ns.checkpoint:
         print("--stream requires --checkpoint", file=sys.stderr)
+        return 2
+    # streaming_ingest takes none of the batch-only flags: refuse them
+    # rather than silently drop them.
+    ignored = [flag for flag, value in (
+        ("--payloads", ns.payloads), ("--post-url", ns.post_url),
+        ("--prefix", ns.prefix),
+        ("--batch-size", ns.batch_size != DEFAULT_BATCH_SIZE),
+        ("--processed-dir", ns.processed_dir),
+        ("--declarative", ns.declarative)) if value]
+    if ignored:
+        print(f"--stream does not support {', '.join(ignored)}",
+              file=sys.stderr)
         return 2
     streaming_ingest(spark, ns.input, checkpoint=ns.checkpoint,
                      out_dir=ns.output)

@@ -78,15 +78,3 @@ def wrap_ticks_as_blocks(ticks: DataFrame, *,
                     F.array(F.lit("synthetic")).alias("subscriptionFilters"),
                     F.col("logEvents"))), "UTF-8").alias("content")))
 
-
-def rate_shard_source(spark: SparkSession, *, rows_per_second: int = 100,
-                      log_group: str = "/synthetic/rate",
-                      events_per_block: int = 10) -> DataFrame:
-    """A synthetic Kinesis shard: the streaming ``rate`` source wrapped
-    into splitter-consumable blocks (update/complete sinks only — the
-    wrap aggregates without a watermark)."""
-    ensure_runtime_confs(spark)
-    rate = (spark.readStream.format("rate")
-            .option("rowsPerSecond", str(rows_per_second)).load())
-    return wrap_ticks_as_blocks(rate, log_group=log_group,
-                                events_per_block=events_per_block)

@@ -194,6 +194,43 @@ def test_sink_fails_fast_on_permanent_4xx():
     assert len(throttled) == 2  # 429 retried, then delivered
 
 
+def test_sink_retries_connection_resets_exactly_once():
+    """A transport that raises ConnectionResetError on the first attempt
+    of every key still delivers each payload exactly once; a connection
+    that never comes back fails after the bounded retries."""
+    from kinesis_s3_data_shipper_spark.ingest.sink import (deliver_partition,
+                                                           payload_key)
+
+    class Row:
+        def __init__(self, payload):
+            self.payload = payload
+            self.file, self.block_index, self.batch_id = "f", 0, 0
+
+    rows = [Row(f'{{"n":{i}}}') for i in range(5)]
+    reset, delivered = set(), []
+
+    def resets_once(request):
+        key = request["idempotency_key"]
+        if key not in reset:
+            reset.add(key)
+            raise ConnectionResetError("connection reset by peer")
+        delivered.append(key)
+        return 200
+
+    assert deliver_partition(rows, resets_once, backoff_s=0.0) == 5
+    assert delivered == [payload_key(r.payload) for r in rows]
+
+    attempts = []
+
+    def refused(request):
+        attempts.append(1)
+        raise ConnectionRefusedError("connection refused")
+
+    with pytest.raises(RuntimeError, match="ConnectionRefusedError"):
+        deliver_partition(rows[:1], refused, max_retries=2, backoff_s=0.0)
+    assert len(attempts) == 3
+
+
 def test_transport_url_and_headers():
     from kinesis_s3_data_shipper_spark.ingest.transport import (build_headers,
                                                                 build_url)

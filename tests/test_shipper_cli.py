@@ -6,12 +6,22 @@ streaming variant with a checkpoint.
 
 from __future__ import annotations
 
+import hashlib
+import http.server
 import json
 import os
+import socket
+import struct
+import threading
 
 import pytest
 
-from kinesis_s3_data_shipper_spark.ingest.fixture import fixture_files
+from pyspark.sql import functions as F
+
+from kinesis_s3_data_shipper_spark import shipper
+from kinesis_s3_data_shipper_spark.ingest.fixture import (fixture_files,
+                                                          make_raw_file)
+from kinesis_s3_data_shipper_spark.ingest.tracking import record_processed
 from kinesis_s3_data_shipper_spark.shipper import main, redacted
 
 
@@ -23,6 +33,67 @@ def landing(tmp_path):
         path = d / key.replace("/", "__")
         path.write_bytes(blob)
     return str(d)
+
+
+def run_metrics(err: str) -> dict:
+    """The metrics record a run prints to stderr."""
+    (line,) = [ln for ln in err.splitlines() if ln.startswith('{"metrics"')]
+    return json.loads(line)["metrics"]
+
+
+class HttpSink:
+    """A local HTTP ingest endpoint that records every accepted POST as
+    ``(path, headers, body)``. With ``reset_first_post`` it resets the
+    connection, unanswered, on the first POST of each idempotency key
+    (those keys are kept in ``resets``)."""
+
+    def __init__(self) -> None:
+        self.received: list[tuple[str, dict, bytes]] = []
+        self.resets: set[str] = set()
+        self.reset_first_post = False
+        lock = threading.Lock()
+        sink = self
+
+        class Handler(http.server.BaseHTTPRequestHandler):
+            def do_POST(self):
+                body = self.rfile.read(int(self.headers["Content-Length"]))
+                key = self.headers["X-Idempotency-Key"]
+                with lock:
+                    reset = sink.reset_first_post and key not in sink.resets
+                    if reset:
+                        sink.resets.add(key)
+                    else:
+                        sink.received.append(
+                            (self.path, dict(self.headers), body))
+                if reset:
+                    # Linger 0: closing sends RST, not FIN.
+                    self.connection.setsockopt(
+                        socket.SOL_SOCKET, socket.SO_LINGER,
+                        struct.pack("ii", 1, 0))
+                    self.close_connection = True
+                    return
+                self.send_response(200)
+                self.end_headers()
+
+            def log_message(self, *args):
+                pass
+
+        self.server = http.server.ThreadingHTTPServer(("127.0.0.1", 0),
+                                                      Handler)
+        self.url = f"http://127.0.0.1:{self.server.server_address[1]}"
+        threading.Thread(target=self.server.serve_forever,
+                         daemon=True).start()
+
+    def close(self) -> None:
+        self.server.shutdown()
+        self.server.server_close()
+
+
+@pytest.fixture()
+def http_sink():
+    sink = HttpSink()
+    yield sink
+    sink.close()
 
 
 def test_redaction():
@@ -68,42 +139,49 @@ def test_batch_payloads_written(spark, landing, tmp_path):
     assert set(body) == {"tags", "events"}
 
 
-def test_batch_post_http_e2e(spark, landing, tmp_path):
+def test_batch_post_http_e2e(spark, landing, tmp_path, http_sink, capsys):
     """--payloads --post-url against a real local HTTP server: executor
     workers POST through the pooled transport; the server (driver
-    process) must see every payload with auth + idempotency headers."""
-    import http.server
-    import threading
+    process) must see every payload with auth + idempotency headers,
+    and the run's metrics must count exactly the POSTs it received."""
+    out = str(tmp_path / "ev")
+    assert main(["--input", landing, "--output", out, "--payloads",
+                 "--post-url", http_sink.url, "--token", "tkn",
+                 "--batch-size", "40"]) == 0
+    received = http_sink.received
+    n_payloads = spark.read.parquet(out + "_payloads").count()
+    assert len(received) == n_payloads > 0
+    assert run_metrics(capsys.readouterr().err)["n_payloads_sent"] == \
+        len(received)
+    path, headers, body = received[0]
+    assert path == "/api/v1/ingest/humio-structured"
+    assert headers["Authorization"] == "Bearer tkn"
+    assert headers["X-Idempotency-Key"]
+    assert set(json.loads(body)) == {"tags", "events"}
 
-    received = []
 
-    class Handler(http.server.BaseHTTPRequestHandler):
-        def do_POST(self):
-            body = self.rfile.read(int(self.headers["Content-Length"]))
-            received.append((self.path, dict(self.headers), body))
-            self.send_response(200)
-            self.end_headers()
-
-        def log_message(self, *args):
-            pass
-
-    srv = http.server.ThreadingHTTPServer(("127.0.0.1", 0), Handler)
-    threading.Thread(target=srv.serve_forever, daemon=True).start()
-    try:
-        url = f"http://127.0.0.1:{srv.server_address[1]}"
-        out = str(tmp_path / "ev")
-        assert main(["--input", landing, "--output", out, "--payloads",
-                     "--post-url", url, "--token", "tkn",
-                     "--batch-size", "40"]) == 0
-        n_payloads = spark.read.parquet(out + "_payloads").count()
-        assert len(received) == n_payloads > 0
-        path, headers, body = received[0]
-        assert path == "/api/v1/ingest/humio-structured"
-        assert headers["Authorization"] == "Bearer tkn"
-        assert headers["X-Idempotency-Key"]
-        assert set(json.loads(body)) == {"tags", "events"}
-    finally:
-        srv.shutdown()
+def test_batch_post_retries_connection_resets(spark, tmp_path, http_sink,
+                                              capsys):
+    """The sink resets the connection on the first POST of every
+    payload. Each reset retries inside the sink's backoff instead of
+    failing the task, and every payload lands exactly once."""
+    d = tmp_path / "landing"
+    d.mkdir()
+    for key, blob in fixture_files():
+        if "/nb3-" in key:  # 12 files, 36 payloads: a short backoff bill
+            (d / key.replace("/", "__")).write_bytes(blob)
+    http_sink.reset_first_post = True
+    out = str(tmp_path / "ev")
+    assert main(["--input", str(d), "--output", out, "--payloads",
+                 "--post-url", http_sink.url]) == 0
+    keys = [headers["X-Idempotency-Key"]
+            for _, headers, _ in http_sink.received]
+    expected = {hashlib.sha256(r.payload.encode()).hexdigest()
+                for r in spark.read.parquet(out + "_payloads").collect()}
+    assert sorted(keys) == sorted(expected)
+    assert http_sink.resets == expected
+    assert run_metrics(capsys.readouterr().err)["n_payloads_sent"] == \
+        len(expected)
 
 
 def test_post_outage_no_loss_no_dup_across_retry(spark, landing, tmp_path):
@@ -124,10 +202,6 @@ def test_post_outage_no_loss_no_dup_across_retry(spark, landing, tmp_path):
     both attempts — no loss (phase-2 alone covers the full set) and
     no duplicates (dedup by key equals the payload table's key set,
     with one body per key)."""
-    import hashlib
-    import http.server
-    import threading
-
     out = str(tmp_path / "ev")
     processed = tmp_path / "processed"
     port_holder = {}
@@ -164,8 +238,11 @@ def test_post_outage_no_loss_no_dup_across_retry(spark, landing, tmp_path):
     args = lambda: ["--input", landing, "--output", out, "--payloads",  # noqa: E731
                     "--post-url", f"http://127.0.0.1:{port_holder['port']}",
                     "--processed-dir", str(processed), "--batch-size", "5"]
+    cached_rdds = spark.sparkContext._jsc.getPersistentRDDs().size()
     with pytest.raises(Exception):
         main(args())
+    # The failed run leaves no cached events or payloads behind.
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == cached_rdds
     # The flaw under test: a failed delivery must NOT mark files done.
     assert not os.path.exists(str(processed)), (
         "files recorded as processed despite failed delivery — the "
@@ -216,6 +293,25 @@ def test_stream_requires_checkpoint(landing, tmp_path):
                  "--stream"]) == 2
 
 
+def test_stream_rejects_batch_only_flags(landing, tmp_path, capsys):
+    """streaming_ingest takes none of the batch-only flags, so --stream
+    refuses them by name instead of silently dropping them."""
+    assert main(["--input", landing, "--output", str(tmp_path / "o"),
+                 "--stream", "--checkpoint", str(tmp_path / "ckpt"),
+                 "--payloads", "--prefix", "x", "--batch-size", "10"]) == 2
+    err = capsys.readouterr().err.splitlines()[-1]
+    assert err == ("--stream does not support --payloads, --prefix, "
+                   "--batch-size")
+    assert main(["--input", landing, "--output", str(tmp_path / "o"),
+                 "--stream", "--checkpoint", str(tmp_path / "ckpt"),
+                 "--post-url", "http://127.0.0.1:9", "--declarative",
+                 "--processed-dir", str(tmp_path / "p")]) == 2
+    err = capsys.readouterr().err.splitlines()[-1]
+    assert err == ("--stream does not support --post-url, "
+                   "--processed-dir, --declarative")
+    assert not os.path.exists(str(tmp_path / "o"))
+
+
 def test_stream_run(spark, landing, tmp_path):
     out = str(tmp_path / "stream_out")
     ckpt = str(tmp_path / "ckpt")
@@ -258,3 +354,102 @@ def test_batch_declarative_matches_imperative(spark, landing, tmp_path,
     assert main(["--input", landing, "--output", out_dec, "--declarative",
                  "--processed-dir", processed]) == 0
     assert "nothing to do" in capsys.readouterr().err
+
+
+def events_per_file(spark, out: str) -> dict[str, int]:
+    return {r.file: r.n for r in
+            spark.read.parquet(out).groupBy("file").agg(
+                F.count(F.lit(1)).alias("n")).collect()}
+
+
+def test_batch_odd_filenames_ship_once(spark, tmp_path, capsys):
+    """Keys with spaces, escapes and Hadoop glob characters load as
+    exactly their own file: unescaped, ``ship*.log`` would also read its
+    siblings and ``ship[1].log`` would read ``ship1.log``. The ``:``
+    sibling (a name Hadoop cannot open) stays outside ``--prefix``; an
+    unescaped glob would fail listing beside it."""
+    d = tmp_path / "landing"
+    d.mkdir()
+    names = ["ship a b.log", "ship%20c.log", "ship[1].log", "ship1.log",
+             "ship{a,b}.log", "shipa.log", "shipb.log", "ship*.log",
+             "ship?.log", "ship\\x.log"]
+    blob = make_raw_file(n_blocks=2, events_per_block=3, gzip_depth=1)
+    for name in names + ["skip:me.log"]:
+        (d / name).write_bytes(blob)
+    out = str(tmp_path / "ev")
+    processed = str(tmp_path / "processed")
+    args = ["--input", str(d), "--output", out, "--processed-dir",
+            processed, "--prefix", f"file:{d}/ship"]
+
+    assert main(args) == 0
+    assert events_per_file(spark, out) == {
+        f"file:{d}/{name}": 6 for name in names}
+    recorded = [r.path for r in spark.read.parquet(processed).collect()]
+    assert sorted(recorded) == sorted(f"file:{d}/{n}" for n in names)
+
+    capsys.readouterr()
+    assert main(args) == 0
+    assert "nothing to do" in capsys.readouterr().err
+
+
+def test_batch_skips_keys_recorded_from_listing(spark, landing, tmp_path):
+    """A processed dir holding binaryFile listing keys (what earlier
+    versions recorded) still skips those files, and the keys the run
+    records are byte-identical to the listing's."""
+    listing = (spark.read.format("binaryFile")
+               .option("recursiveFileLookup", "true").load(landing)
+               .select("path"))
+    keys = sorted(r.path for r in listing.collect())
+    old, new = keys[::2], keys[1::2]
+    processed = str(tmp_path / "processed")
+    record_processed(processed, listing.filter(F.col("path").isin(old)))
+
+    out = str(tmp_path / "ev")
+    assert main(["--input", landing, "--output", out,
+                 "--processed-dir", processed]) == 0
+    shipped = set(events_per_file(spark, out))
+    assert shipped and shipped <= set(new)
+    recorded = sorted(r.path for r in spark.read.parquet(processed).collect())
+    assert recorded == keys
+
+
+def test_batch_vanished_file_fails_unrecorded(spark, landing, tmp_path,
+                                              monkeypatch):
+    """A worklist file deleted between the listing and the read fails
+    the run, and no key is recorded."""
+    listed = shipper._worklist
+
+    def list_then_delete(spark, ns):
+        worklist = listed(spark, ns)
+        os.remove(worklist[0][len("file:"):])
+        return worklist
+
+    monkeypatch.setattr(shipper, "_worklist", list_then_delete)
+    processed = tmp_path / "processed"
+    with pytest.raises(Exception, match="PATH_NOT_FOUND"):
+        main(["--input", landing, "--output", str(tmp_path / "ev"),
+              "--processed-dir", str(processed)])
+    assert not processed.exists()
+
+
+def test_batch_post_job_count(spark, landing, tmp_path, http_sink):
+    """Structural guard on the one-pass plan: the Spark jobs of one
+    ``--payloads --post-url`` run over the fixture landing dir. They are
+    the listing; Spark's listing of the 74 explicit paths (it lists more
+    than 32 paths with a job); the events write, which fills the cache;
+    and four for payload assembly, its write and the send (AQE runs
+    shuffle stages as jobs of their own). Earlier versions ran 8, two
+    of them to broadcast a Python-RDD worklist frame: once for the
+    events and again for a second split and parse for the payloads."""
+    sc = spark.sparkContext
+    group = "test_batch_post_job_count"
+    sc.setJobGroup(group, group)
+    try:
+        assert main(["--input", landing, "--output", str(tmp_path / "ev"),
+                     "--payloads", "--post-url", http_sink.url,
+                     "--batch-size", "40"]) == 0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 7
+    assert http_sink.received
