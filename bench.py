@@ -16,10 +16,11 @@ OUTPUT CONTRACT (round-6 fix): the harness that records this bench
 keeps only the last ~2,000 characters of stdout, and the round-5
 official artifact was lost because the single JSON line grew past that
 with the per-query dispersion map. So: the FINAL stdout line is now
-the COMPACT record only ({metric, value, unit, queries, sf} with
-2-decimal timings and no whitespace — `tests/test_bench_output.py`
-pins it under the capture budget), and the detail record (3-decimal
-timings + dispersion + errors) is written to $SPARK_GRAFT_BENCH_FULL
+the COMPACT record only, rendered by `compact_line` ({metric, value,
+unit, queries, sf, ...} with 2-decimal timings and no whitespace; past
+CAPTURE_BUDGET it drops the per-query map), and the detail record
+(3-decimal timings + dispersion + errors) is written to
+$SPARK_GRAFT_BENCH_FULL
 (default ./BENCH_HEADLINE_LOCAL.json — renamed from BENCH_FULL_LOCAL
 in r10: it holds the 63-query HEADLINE set, not the full registry;
 registry-wide per-query timings live in CORRECTNESS_LOCAL*.json's
@@ -46,6 +47,11 @@ import time
 
 from kinesis_s3_data_shipper_spark.plans import all_queries
 from kinesis_s3_data_shipper_spark.session import get_session
+from tests.oracle_harness import full_value_agg
+
+#: The driver keeps the last ~2,000 characters of stdout; leave
+#: headroom for a trailing newline and log fragments sharing the tail.
+CAPTURE_BUDGET = 1900
 
 #: Steal-outlier replacement protocol (r11 verdict ask #2): the
 #: committed dispersion blocks show isolated per-run steal spikes
@@ -184,23 +190,37 @@ TAIL = [
 ]
 
 
-def full_value(df) -> int:
-    """Fetch-free full-value action: bit_xor(xxhash64(all cols)).
-    A bare count() lets Catalyst ELIMINATE work nothing reads —
-    measured on the tail tier's own first run: the ngram groups
-    form (docs LEFT JOIN distinct-keyed member map) "benched" at
-    0.53 s under count() because the row count is join-invariant
-    and the optimizer dropped both joins, vs 10.8 s for the real
-    plan (the sweep's compute_sec; same lesson documented at
-    tests/oracle_harness.py::full_value_agg).  Map columns route
-    through to_json (hash exprs reject MapType ordering).
-    Module-level so tests/test_bench_output.py can plan-pin the
-    join-survives-under-full-value property."""
-    from pyspark.sql import functions as F
-    cols = [F.to_json(F.col(c)) if "map<" in t else F.col(c)
-            for c, t in df.dtypes]
-    return len(df.select(F.bit_xor(F.xxhash64(*cols)).alias("h"))
-               .collect())
+def compact_line(timings: dict[str, float], tail_timings: dict[str, float],
+                 sf, cpus: int, steal_pct: float | None,
+                 incomplete: bool = False) -> str:
+    """The driver-visible final stdout line: 2-decimal timings, no
+    whitespace.  ``steal_pct`` is always present (null where
+    /proc/stat cannot be read).  A line over CAPTURE_BUDGET drops the
+    per-query ``queries`` map, which the side file keeps."""
+    compact = {
+        "metric": "headline_queries_total_runtime",
+        "value": round(sum(timings.values()), 2),
+        "unit": "sec",
+        "queries": {n: round(t, 2) for n, t in timings.items()},
+        # One driver-visible number for the heavy tail; its per-query
+        # map lives in the FULL record (capture budget).
+        "tail_sec": round(sum(tail_timings.values()), 2),
+        "sf": sf,
+        # Session config + health are part of the driver-visible line,
+        # so a mis-configured or steal-contaminated session
+        # self-identifies instead of reading as a regression.
+        "cpus": cpus,
+        "steal_pct": steal_pct,
+    }
+    if incomplete:
+        # A crashed query's timing is missing from `value`, so the
+        # headline total must never be compared against a full run.
+        compact["incomplete"] = True
+    line = json.dumps(compact, separators=(",", ":"))
+    if len(line) > CAPTURE_BUDGET:
+        del compact["queries"]
+        line = json.dumps(compact, separators=(",", ":"))
+    return line
 
 
 def main() -> None:
@@ -269,9 +289,11 @@ def main() -> None:
         # count() — its cross-round comparability (r01..r12 records)
         # outweighs the elimination risk, which the plan-audit gate
         # covers for correctness-of-shape.
-        n = full_value(df) if name in TAIL else df.count()
+        if name in TAIL:
+            full_value_agg(df)
+        else:
+            df.count()
         elapsed = time.perf_counter() - start
-        assert n >= 0
         rs = runs[name]
         if rs and extra_budget > 0 and elapsed > OUTLIER_MULT * min(rs):
             extra_budget -= 1
@@ -358,7 +380,8 @@ def main() -> None:
         "tail_scope": f"tail_{len(TAIL)}_heaviest_nonheadline",
         # Tail action = fetch-free full-value agg, NOT count():
         # count() let Catalyst eliminate the groups form's joins
-        # (0.53 s vs the 10.8 s real plan) — see one_run/full_value.
+        # (0.53 s vs the 10.8 s real plan) — see one_run and
+        # tests/oracle_harness.py::full_value_agg.
         "tail_action": "bit_xor_xxhash64_full_value",
         "tail_sec": round(sum(tail_timings.values()), 3),
         "tail_queries": tail_timings,
@@ -377,31 +400,9 @@ def main() -> None:
             "pct_of_host": round(100.0 * (steal1 - steal0)
                                  / (ticks1 - ticks0), 3),
         }
-    compact = {
-        "metric": "headline_queries_total_runtime",
-        "value": round(sum(timings.values()), 2),
-        "unit": "sec",
-        "queries": {n: round(t, 2) for n, t in timings.items()},
-        # One driver-visible number for the heavy tail; its per-query
-        # map lives in the FULL record (capture budget).
-        "tail_sec": round(sum(tail_timings.values()), 2),
-        "sf": sf_val,
-        # r14 (verdict ask #2): session config + health are part of the
-        # driver-visible line, so a mis-configured or steal-contaminated
-        # session self-identifies instead of reading as a regression
-        # (r13's driver session carried 1.517% steal vs the committed
-        # sessions' 0.003-0.09% and its uniform ~25% inflation was only
-        # diagnosable from the side file).
-        "cpus": eff_cpus,
-    }
-    if "steal" in full:
-        compact["steal_pct"] = full["steal"]["pct_of_host"]
     if errors:
-        # A crashed query's timing is missing from `value`, so the
-        # headline total must never be compared against a full run.
         full["errors"] = errors
         full["incomplete"] = True
-        compact["incomplete"] = True
     full_path = os.environ.get("SPARK_GRAFT_BENCH_FULL",
                                "BENCH_HEADLINE_LOCAL.json")
     with open(full_path, "w") as fh:
@@ -409,7 +410,9 @@ def main() -> None:
         fh.write("\n")
     # FINAL line = compact record only; must fit the driver's ~2 KB
     # stdout tail capture or the round's official artifact is lost.
-    print(json.dumps(compact, separators=(",", ":")))
+    print(compact_line(timings, tail_timings, sf_val, eff_cpus,
+                       full.get("steal", {}).get("pct_of_host"),
+                       incomplete=bool(errors)))
     spark.stop()
 
 

@@ -7,8 +7,7 @@ already-processed keys from each run's listing, pushing a
 210-216). In this engine the *streaming* path gets this for free from
 the Structured Streaming file-source checkpoint; the *batch* path uses
 the same semantics as a left-anti join against a processed-files
-table, with the prefix filter applied before the join so it can push
-into the table scan.
+table. The caller filters the listing by prefix before the join.
 """
 
 from __future__ import annotations
@@ -18,13 +17,8 @@ from pyspark.sql import functions as F
 
 
 def filter_unprocessed(candidates: DataFrame, processed: DataFrame, *,
-                       key_col: str = "path",
-                       prefix: str | None = None) -> DataFrame:
-    """candidates minus processed (left-anti on the file key), with an
-    optional pushed-down prefix predicate on both sides."""
-    if prefix is not None:
-        candidates = candidates.filter(F.col(key_col).startswith(prefix))
-        processed = processed.filter(F.col(key_col).startswith(prefix))
+                       key_col: str = "path") -> DataFrame:
+    """candidates minus processed (left-anti on the file key)."""
     return candidates.join(F.broadcast(processed.select(key_col).distinct()),
                            key_col, "left_anti")
 

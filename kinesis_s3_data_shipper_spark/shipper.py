@@ -27,8 +27,9 @@ downloads and parses each unprocessed file once (K:187-216, K:82-174):
    cached, and the events write and payload assembly share them;
 4. record the keys from that same scan's path column.
 
-``--declarative`` keeps a semi-join of the ``shipper`` DataSource's
-blocks against the worklist.
+``--stream`` tails ``--input`` through
+``sources.kinesis.firehose_landing_source``; its checkpoint is the
+processed-file record.
 """
 
 from __future__ import annotations
@@ -96,12 +97,6 @@ def build_parser() -> argparse.ArgumentParser:
                         "URL's structured-ingest endpoint through a "
                         "per-executor pooled transport (the reference's "
                         "HTTP sink, with idempotency keys + retry)")
-    p.add_argument("--declarative", action="store_true",
-                   help="batch mode: scan blocks via the custom 'shipper' "
-                        "DataSource (spark.read.format('shipper')) instead "
-                        "of binaryFile + splitter. Tracking keys become "
-                        "plain OS paths rather than file: URIs — keep one "
-                        "mode per --processed-dir")
     p.add_argument("--debug", action="store_true")
     return p
 
@@ -128,14 +123,6 @@ def glob_escape(path: str) -> str:
     return _GLOB_CHARS.sub(r"\\\1", path)
 
 
-def _path_frame(spark, paths: list[str]) -> DataFrame:
-    """A one-column ``path`` frame from an Arrow table: a local scan,
-    where a Python list would become a Python RDD with a job per use."""
-    import pyarrow as pa
-    return spark.createDataFrame(
-        pa.table({"path": pa.array(paths, pa.string())}))
-
-
 def _worklist(spark, ns) -> list[str]:
     """Sorted keys of the input files not yet processed.
 
@@ -146,20 +133,13 @@ def _worklist(spark, ns) -> list[str]:
     processed without its events ever being written. Driver memory:
     path strings only, the same order of magnitude Spark's own
     InMemoryFileIndex already holds for this listing."""
-    if ns.declarative:
-        from .sources.shipper_format import _list_files
-        # Listing happens driver-side (the DataSource planner does the
-        # same walk), so empty files still enter the worklist and get
-        # tracked/warned even though they yield zero block rows.
-        listing = _path_frame(spark, _list_files(ns.input, ns.prefix))
-    else:
-        # Only the path column: binaryFile reads no content for it.
-        listing = (spark.read.format("binaryFile")
-                   .option("recursiveFileLookup", "true")
-                   .load(ns.input)
-                   .select("path"))
-        if ns.prefix:
-            listing = listing.filter(F.col("path").startswith(ns.prefix))
+    # Only the path column: binaryFile reads no content for it.
+    listing = (spark.read.format("binaryFile")
+               .option("recursiveFileLookup", "true")
+               .load(ns.input)
+               .select("path"))
+    if ns.prefix:
+        listing = listing.filter(F.col("path").startswith(ns.prefix))
     if ns.processed_dir:
         processed = _read_processed(spark, ns.processed_dir)
         if processed is not None:
@@ -177,24 +157,14 @@ def run_batch(spark, ns) -> int:
         print("no unprocessed input files matched; nothing to do",
               file=sys.stderr)
         return 0
-    if ns.declarative:
-        from .sources.shipper_format import register as register_shipper
-        register_shipper(spark)
-        reader = spark.read.format("shipper")
-        if ns.prefix:
-            reader = reader.option("prefix", ns.prefix)
-        done = _path_frame(spark, worklist)
-        blocks = (reader.load(ns.input)
-                  .join(F.broadcast(done), "path", "left_semi"))
-    else:
-        # The worklist's files by explicit path: history bytes are never
-        # read, and a file gone since the listing fails the load. The
-        # record comes from this same scan's path column (no content
-        # read), so its keys are the listing's keys by construction.
-        raw = spark.read.format("binaryFile").load(
-            [glob_escape(p) for p in worklist])
-        done = raw.select("path")
-        blocks = split_blocks(raw.select("path", "content"))
+    # The worklist's files by explicit path: history bytes are never
+    # read, and a file gone since the listing fails the load. The
+    # record comes from this same scan's path column (no content
+    # read), so its keys are the listing's keys by construction.
+    raw = spark.read.format("binaryFile").load(
+        [glob_escape(p) for p in worklist])
+    done = raw.select("path")
+    blocks = split_blocks(raw.select("path", "content"))
 
     # Observability (reference logs block/event counts, K:114-117, 133,
     # 170): df.observe attaches the metric to the job itself — no
@@ -257,8 +227,7 @@ def run_stream(spark, ns) -> int:
         ("--payloads", ns.payloads), ("--post-url", ns.post_url),
         ("--prefix", ns.prefix),
         ("--batch-size", ns.batch_size != DEFAULT_BATCH_SIZE),
-        ("--processed-dir", ns.processed_dir),
-        ("--declarative", ns.declarative)) if value]
+        ("--processed-dir", ns.processed_dir)) if value]
     if ignored:
         print(f"--stream does not support {', '.join(ignored)}",
               file=sys.stderr)

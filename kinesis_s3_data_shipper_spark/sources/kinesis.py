@@ -9,8 +9,9 @@ landing prefix**:
 - the file-source checkpoint is the shard iterator + seen-files log in
   one (replacing the reference's SQLite table, kinesis-to-humio.py
   48-68);
-- ``maxFilesPerTrigger`` is the batch-size throttle (the reference's
-  ``--humio-batch`` analog at the file level);
+- ``maxFilesPerTrigger`` (:data:`MAX_FILES_PER_TRIGGER`) is the
+  batch-size throttle (the reference's ``--humio-batch`` analog at the
+  file level);
 - ``latestFirst=false`` preserves oldest-first ordering (K:292).
 
 For integration tests and demos without any object store, the ``rate``
@@ -27,23 +28,23 @@ from pyspark.sql import functions as F
 
 from ..session import ensure_runtime_confs
 
+#: Streaming sources require an explicit schema; this is binaryFile's.
 BINARY_FILE_SCHEMA = ("path STRING, modificationTime TIMESTAMP,"
                       " length LONG, content BINARY")
+#: Files per micro-batch: the trigger-size throttle.
+MAX_FILES_PER_TRIGGER = 64
 
 
-def firehose_landing_source(spark: SparkSession, landing: str, *,
-                            max_files_per_trigger: int | None = 64,
-                            oldest_first: bool = True) -> DataFrame:
+def firehose_landing_source(spark: SparkSession, landing: str) -> DataFrame:
     """Streaming (path, content) rows from a Firehose-style landing
-    prefix (local dir or s3a:// URI)."""
+    prefix (local dir or s3a:// URI), oldest files first."""
     ensure_runtime_confs(spark)
-    reader = (spark.readStream.format("binaryFile")
-              .schema(BINARY_FILE_SCHEMA)
-              .option("latestFirst", str(not oldest_first).lower()))
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger",
-                               str(max_files_per_trigger))
-    return reader.load(landing).select("path", "content")
+    return (spark.readStream.format("binaryFile")
+            .schema(BINARY_FILE_SCHEMA)
+            .option("latestFirst", "false")
+            .option("maxFilesPerTrigger", str(MAX_FILES_PER_TRIGGER))
+            .load(landing)
+            .select("path", "content"))
 
 
 def wrap_ticks_as_blocks(ticks: DataFrame, *,

@@ -2,15 +2,15 @@
 for the reference's raw file format: optionally (double-)gzipped files
 of concatenated `{"messageType":"DATA_MESSAGE"` JSON blocks.
 
-Makes ingestion fully declarative:
+A batch-only block scan. The shipper CLI does not use it: both of its
+modes read through binaryFile + the splitter.
 
-    spark.dataSource.register(ShipperDataSource)
+    register(spark)
     blocks = spark.read.format("shipper").load("/landing/dir")
-    events = flatten_events(parse_blocks_from_source(blocks))
+    events = flatten_events(parse_blocks(blocks))
 
-vs the imperative binaryFile → mapInPandas splitter chain (which
-remains the streaming path). Same splitter semantics — the reader
-reuses `ingest.splitter.gunzip_recursive` / `split_marker_blocks`
+Same splitter semantics — the reader reuses
+`ingest.splitter.gunzip_recursive` / `split_marker_blocks`
 byte-for-byte (reference parity: kinesis-to-humio.py:91-96, 107-127).
 
 Scale design: one InputPartition per FILE — gzip is non-splittable, so
@@ -27,7 +27,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql.datasource import (DataSource, DataSourceReader,
-                                    DataSourceStreamReader, InputPartition)
+                                    InputPartition)
 
 from ..ingest.splitter import gunzip_recursive, split_marker_blocks
 
@@ -76,63 +76,14 @@ class ShipperDataSourceReader(DataSourceReader):
         # listing still yields one task with partition=None — emit nothing.
         if partition is None:
             return
-        yield from _read_file_blocks(partition.path)
-
-
-def _read_file_blocks(path: str):
-    """Executor-side block rows for one file (shared batch/stream)."""
-    with open(path, "rb") as fh:
-        data = fh.read()
-    data = gunzip_recursive(data)
-    for i, block in enumerate(split_marker_blocks(data)):
-        yield (path, block.decode("utf-8", errors="replace"), i)
-
-
-class ShipperStreamReader(DataSourceStreamReader):
-    """Streaming flavor: `spark.readStream.format("shipper")`.
-
-    Offsets are the sorted file listing itself (`{"seen": [...]}`), a
-    pure function of the landing dir — so `partitions(start, end)` is
-    deterministic on replay (the committed end-offset pins exactly
-    which files a batch owns, Structured Streaming's exactly-once
-    contract; this is the role the reference's SQLite seen-files table
-    played, K:48-68, with the batch-loss flaw fixed by the checkpoint
-    log). A micro-batch's partitions are the newly-listed files, one
-    per file (gzip is non-splittable). Listing-as-offset is O(files)
-    driver state, same asymptotics as Spark's own FileStreamSource
-    seen-files map; a production S3 deployment would swap the walk for
-    a LIST and compact old entries the way FileStreamSource does.
-    """
-
-    def __init__(self, options: dict):
-        self.root = options.get("path")
-        if not self.root:
-            raise ValueError("shipper source requires a path: "
-                             ".load('/landing/dir')")
-        self.prefix = options.get("prefix")
-
-    def initialOffset(self) -> dict:
-        return {"seen": []}
-
-    def latestOffset(self) -> dict:
-        return {"seen": _list_files(self.root, self.prefix)}
-
-    def partitions(self, start: dict, end: dict):
-        new = sorted(set(end["seen"]) - set(start["seen"]))
-        return [ShipperInputPartition(p) for p in new]
-
-    def read(self, partition: ShipperInputPartition):
-        yield from _read_file_blocks(partition.path)
-
-    def commit(self, end: dict) -> None:
-        # Processed-file state lives entirely in the checkpoint's
-        # offset log; nothing source-side to clean up.
-        pass
+        with open(partition.path, "rb") as fh:
+            data = gunzip_recursive(fh.read())
+        for i, block in enumerate(split_marker_blocks(data)):
+            yield (partition.path, block.decode("utf-8", errors="replace"), i)
 
 
 class ShipperDataSource(DataSource):
-    """spark.read.format("shipper").option("prefix", ...).load(dir) —
-    and the same format/options under spark.readStream."""
+    """spark.read.format("shipper").option("prefix", ...).load(dir)."""
 
     @classmethod
     def name(cls) -> str:
@@ -143,9 +94,6 @@ class ShipperDataSource(DataSource):
 
     def reader(self, schema) -> DataSourceReader:
         return ShipperDataSourceReader(self.options)
-
-    def streamReader(self, schema) -> DataSourceStreamReader:
-        return ShipperStreamReader(self.options)
 
 
 def register(spark) -> None:

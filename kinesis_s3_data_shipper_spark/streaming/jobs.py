@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from ..ingest.pipeline import flatten_events, parse_blocks
 from ..ingest.splitter import split_blocks
 from ..session import ensure_runtime_confs
+from ..sources.kinesis import firehose_landing_source
 
 #: The driver's events table has shipped as both TIMESTAMP(NANOS)
 #: parquet (readable only as epoch-nanos LongType, `nanosAsLong`) and
@@ -493,27 +494,18 @@ def streaming_left_outer_join(spark: SparkSession, events_dir: str, *,
 
 
 def streaming_ingest(spark: SparkSession, landing_dir: str, *,
-                     checkpoint: str, out_dir: str,
-                     max_files_per_trigger: int = 64) -> None:
-    """The reference's whole job as a streaming query: binaryFile
-    landing dir → gunzip+split (foreachBatch reuses the exact batch
+                     checkpoint: str, out_dir: str) -> None:
+    """The reference's whole job as a streaming query: the Firehose
+    landing source → gunzip+split (foreachBatch reuses the exact batch
     operators) → parsed/enriched events appended as parquet. The
     checkpoint replaces the SQLite seen-files table (O4/O19); task
     retries + idempotent event_ids give at-least-once without the
     reference's lost-batch flaw."""
-    ensure_runtime_confs(spark)
-    # Streaming sources require an explicit schema; this is binaryFile's.
-    raw = (spark.readStream.format("binaryFile")
-           .schema("path STRING, modificationTime TIMESTAMP,"
-                   " length LONG, content BINARY")
-           .option("maxFilesPerTrigger", str(max_files_per_trigger))
-           .option("latestFirst", "false")
-           .load(landing_dir))
+    raw = firehose_landing_source(spark, landing_dir)
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
         with _batch_shuffle_scope(spark):
-            events = flatten_events(parse_blocks(split_blocks(
-                batch_df.select("path", "content"))))
+            events = flatten_events(parse_blocks(split_blocks(batch_df)))
             # Idempotent sink: each epoch OVERWRITES its own partition
             # directory, so a retried/replayed epoch rewrites the same
             # data instead of appending a duplicate copy — exactly-once

@@ -61,6 +61,8 @@ def merge(records: list[dict]) -> dict:
     for r in records[1:]:
         if r["queries"].keys() != names:
             raise ValueError("sessions benched different query sets")
+        if r.get("cpus") != records[0].get("cpus"):
+            raise ValueError("sessions ran with different cpus")
     if any(r.get("incomplete") for r in records):
         raise ValueError("a session had errored queries; fix first")
     queries = {n: round(min(r["queries"][n] for r in records), 3)
@@ -95,9 +97,8 @@ def merge(records: list[dict]) -> dict:
         "session_replaced_runs": [
             r.get("replaced_runs", 0) for r in records],
         "sf": records[0]["sf"],
-        # r14: the per-session effective core count (bench.py now reads
-        # it back from the live SparkContext) rides along so the merged
-        # artifact is self-describing too.
+        # The effective core count, the same in every session (checked
+        # above), so the merged artifact is self-describing too.
         "cpus": records[0].get("cpus"),
     }
 

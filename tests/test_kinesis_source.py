@@ -46,8 +46,7 @@ def test_firehose_source_streams_landing_dir(spark, tmp_path):
     (landing / "a.dat").write_bytes(
         make_raw_file(n_blocks=2, events_per_block=3, gzip_depth=1))
 
-    raw = firehose_landing_source(spark, str(landing),
-                                  max_files_per_trigger=1)
+    raw = firehose_landing_source(spark, str(landing))
     assert raw.isStreaming
     events = flatten_events(parse_blocks(split_blocks(raw)))
     q = (events.writeStream.format("memory").queryName("fh_test")

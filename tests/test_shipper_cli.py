@@ -13,14 +13,15 @@ import os
 import socket
 import struct
 import threading
+from collections import Counter
 
 import pytest
 
 from pyspark.sql import functions as F
 
 from kinesis_s3_data_shipper_spark import shipper
-from kinesis_s3_data_shipper_spark.ingest.fixture import (fixture_files,
-                                                          make_raw_file)
+from kinesis_s3_data_shipper_spark.ingest.fixture import (
+    fixture_files, ground_truth_events, make_raw_file)
 from kinesis_s3_data_shipper_spark.ingest.tracking import record_processed
 from kinesis_s3_data_shipper_spark.shipper import main, redacted
 
@@ -304,11 +305,10 @@ def test_stream_rejects_batch_only_flags(landing, tmp_path, capsys):
                    "--batch-size")
     assert main(["--input", landing, "--output", str(tmp_path / "o"),
                  "--stream", "--checkpoint", str(tmp_path / "ckpt"),
-                 "--post-url", "http://127.0.0.1:9", "--declarative",
+                 "--post-url", "http://127.0.0.1:9",
                  "--processed-dir", str(tmp_path / "p")]) == 2
     err = capsys.readouterr().err.splitlines()[-1]
-    assert err == ("--stream does not support --post-url, "
-                   "--processed-dir, --declarative")
+    assert err == "--stream does not support --post-url, --processed-dir"
     assert not os.path.exists(str(tmp_path / "o"))
 
 
@@ -323,37 +323,15 @@ def test_stream_run(spark, landing, tmp_path):
     assert main(["--input", landing, "--output", out,
                  "--stream", "--checkpoint", ckpt]) == 0
     assert spark.read.parquet(out).count() == n
-
-
-def test_batch_declarative_matches_imperative(spark, landing, tmp_path,
-                                              capsys):
-    """--declarative (custom DataSource scan) must produce the exact
-    event set of the default binaryFile+splitter path, and keep the
-    tracking/zero-block-warning behavior."""
-    out_imp = str(tmp_path / "ev_imp")
-    out_dec = str(tmp_path / "ev_dec")
-    processed = str(tmp_path / "processed_dec")
-
-    assert main(["--input", landing, "--output", out_imp]) == 0
-    assert main(["--input", landing, "--output", out_dec, "--declarative",
-                 "--processed-dir", processed]) == 0
-    err = capsys.readouterr().err
-    assert "warning: 0 message blocks in" in err and "empty.dat" in err
-
-    key = ["file", "block_index", "event_id"]
-
-    def canon(path):
-        return {tuple(os.path.basename(r.file).split("__")[-1:] +
-                      [r.block_index, r.event_id])
-                for r in spark.read.parquet(path).select(*key).collect()}
-
-    got_imp, got_dec = canon(out_imp), canon(out_dec)
-    assert got_dec == got_imp and len(got_dec) > 0
-
-    # Incremental skip works on OS-path tracking keys too.
-    assert main(["--input", landing, "--output", out_dec, "--declarative",
-                 "--processed-dir", processed]) == 0
-    assert "nothing to do" in capsys.readouterr().err
+    # A new file: the next run picks up exactly its events.
+    new = os.path.join(landing, "new.dat")
+    with open(new, "wb") as fh:
+        fh.write(make_raw_file(n_blocks=2, events_per_block=3, gzip_depth=1))
+    assert main(["--input", landing, "--output", out,
+                 "--stream", "--checkpoint", ckpt]) == 0
+    events = spark.read.parquet(out)
+    assert events.count() == n + 6
+    assert events.filter(F.col("file") == f"file:{new}").count() == 6
 
 
 def events_per_file(spark, out: str) -> dict[str, int]:
@@ -430,6 +408,39 @@ def test_batch_vanished_file_fails_unrecorded(spark, landing, tmp_path,
         main(["--input", landing, "--output", str(tmp_path / "ev"),
               "--processed-dir", str(processed)])
     assert not processed.exists()
+
+
+def test_batch_truncated_gzip_fails_then_ships_once(spark, landing, tmp_path,
+                                                    http_sink):
+    """A truncated gzip file among good files fails the run before any
+    payload is sent or any key recorded. Once a good copy replaces it,
+    the re-run delivers every event exactly once."""
+    good = make_raw_file(n_blocks=3, events_per_block=5, gzip_depth=1)
+    late = os.path.join(landing, "late.gz")
+    with open(late, "wb") as fh:
+        fh.write(good[:len(good) // 2])
+    processed = tmp_path / "processed"
+    args = ["--input", landing, "--output", str(tmp_path / "ev"),
+            "--payloads", "--post-url", http_sink.url,
+            "--processed-dir", str(processed), "--batch-size", "40"]
+
+    with pytest.raises(Exception, match="EOFError"):
+        main(args)
+    assert not processed.exists()
+    assert http_sink.received == []
+
+    with open(late, "wb") as fh:
+        fh.write(good)
+    assert main(args) == 0
+    delivered = Counter(
+        (ev["attributes"]["file"], ev["attributes"]["id"])
+        for _, _, body in http_sink.received
+        for ev in json.loads(body)["events"])
+    expected = [(f"file:{landing}/{ev['file'].replace('/', '__')}",
+                 ev["event_id"]) for ev in ground_truth_events()]
+    expected += [(f"file:{late}", f"evt-{i:012d}") for i in range(15)]
+    assert delivered == Counter(expected)
+    assert len(expected) == len(set(expected))
 
 
 def test_batch_post_job_count(spark, landing, tmp_path, http_sink):

@@ -1,7 +1,7 @@
 """Tests for the `shipper` custom Python Data Source (PySpark 4
-DataSource API) — the declarative twin of the binaryFile→mapInPandas
-splitter chain. Both paths must yield identical blocks, and the full
-parse→explode pipeline must compose on top of the source unchanged.
+DataSource API), a batch block scan of raw landing files. It must yield
+exactly the blocks the pure-Python splitter finds, and the full
+parse→explode pipeline must compose on top of it unchanged.
 """
 
 from __future__ import annotations
@@ -107,45 +107,3 @@ def test_pipeline_composes_on_source(shipper_spark, landing_dir):
             for ev in json.loads(block)["logEvents"]:
                 expect.add((os.path.basename(key), i, ev["id"]))
     assert got == expect
-
-
-def test_stream_reader_incremental_batches(shipper_spark, tmp_path):
-    """spark.readStream.format("shipper"): run one availableNow drain,
-    drop a new file into the landing dir, drain again on the SAME
-    checkpoint — the second run must pick up exactly the new file's
-    blocks (offset log = processed-file state, the reference's SQLite
-    `files` table with exactly-once instead of at-least-once)."""
-    from kinesis_s3_data_shipper_spark.ingest.fixture import fixture_files
-
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    fixtures = {os.path.basename(k): v for k, v in fixture_files()
-                if k.endswith(("gz1-s0.dat", "gz2-s0.dat"))}
-    first, second = sorted(fixtures)[:2]
-    (landing / first).write_bytes(fixtures[first])
-
-    ckpt = str(tmp_path / "ckpt")
-    out = str(tmp_path / "out")
-
-    def drain():
-        # Parquet sink: memory sinks can't recover a checkpoint, and
-        # checkpoint recovery across runs is exactly what's under test.
-        q = (shipper_spark.readStream.format("shipper")
-             .load(str(landing))
-             .writeStream.format("parquet")
-             .option("path", out)
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
-        return {(os.path.basename(r.path), r.block_index, r.block)
-                for r in shipper_spark.read.parquet(out).collect()}
-
-    def expected(*keys):
-        return {(k, i, b.decode()) for k in keys for i, b in enumerate(
-            split_marker_blocks(gunzip_recursive(fixtures[k])))}
-
-    assert drain() == expected(first)
-
-    (landing / second).write_bytes(fixtures[second])
-    # Same checkpoint: the second drain appends ONLY the new file.
-    assert drain() == expected(first, second)
