@@ -13,6 +13,12 @@ batches are silently lost on re-run. This sink fixes that:
 - one transport per partition (executor-side connection reuse, the
   pooled-manager pattern, but per executor instead of per process).
 
+Delivery is a lazy pass-through (``deliver_payloads``): a
+``mapInArrow`` that POSTs each Arrow batch of payload rows and then
+yields it unchanged, so the POSTs run inside whatever job consumes the
+rows — the shipper's ``<output>_payloads`` write, which therefore
+commits only when every POST succeeded.
+
 The transport is injected (``Callable[[dict], int]`` returning an HTTP
 status) so tests run a recording transport and production plugs in an
 http.client/urllib3 pool without this module importing either.
@@ -74,16 +80,34 @@ def deliver_partition(rows: Iterable, transport: Callable[[dict], int], *,
     return sent
 
 
+def deliver_payloads(payloads: DataFrame,
+                     transport_factory: TransportFactory) -> DataFrame:
+    """``payloads`` with every row POSTed before it is passed on: one
+    transport per partition, each Arrow batch delivered by
+    ``deliver_partition`` and then yielded unchanged. Lazy: the POSTs
+    run in the job that consumes the result."""
+    from pyspark.sql import Row
+
+    def post(batches: Iterator) -> Iterator:
+        transport = transport_factory()
+        for batch in batches:
+            deliver_partition((Row(**r) for r in batch.to_pylist()),
+                              transport)
+            yield batch
+
+    return payloads.mapInArrow(post, payloads.schema)
+
+
 def send_payloads(payloads: DataFrame,
                   transport_factory: TransportFactory) -> int:
-    """foreachPartition delivery: one transport per partition. Returns
-    the number of payloads sent, summed by an accumulator in the same
-    job."""
-    sent = payloads.sparkSession.sparkContext.accumulator(0)
+    """Deliver every payload row now, in one job with no shuffle (a
+    ``count()`` would add an aggregation stage); returns the number
+    sent."""
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
 
-    def run(it: Iterator) -> None:
-        transport = transport_factory()
-        sent.add(deliver_partition(it, transport))
-
-    payloads.foreachPartition(run)
-    return sent.value
+    sent = Observation("sent")
+    (deliver_payloads(payloads, transport_factory)
+     .observe(sent, F.count(F.lit(1)).alias("n"))
+     .write.format("noop").mode("overwrite").save())
+    return sent.get["n"]

@@ -48,7 +48,7 @@ def build_headers(token: str | None, idempotency_key: str) -> dict[str, str]:
 
 def http_transport_factory(base_url: str,
                            token: str | None = None) -> Callable[[], Callable[[dict], int]]:
-    """TransportFactory for ``send_payloads``: per-executor pooled POST.
+    """TransportFactory for ``deliver_payloads``: per-executor pooled POST.
 
     The returned closure captures only (base_url, token) strings, so it
     pickles cleanly to executors; the pool is created lazily worker-side.

@@ -23,8 +23,11 @@ downloads and parses each unprocessed file once (K:187-216, K:82-174):
    worklist;
 2. load exactly those files by explicit, glob-escaped path, so files
    processed in earlier runs are never read again;
-3. split, parse and flatten once; with ``--payloads`` the events are
-   cached, and the events write and payload assembly share them;
+3. split and parse once, and write the flattened events; with
+   ``--payloads`` the parsed blocks are cached, and a second job
+   assembles each block's payloads in place (no shuffle), POSTs them
+   with ``--post-url`` and writes ``<output>_payloads``, which is
+   therefore committed only when every POST succeeded;
 4. record the keys from that same scan's path column.
 
 ``--stream`` tails ``--input`` through
@@ -42,7 +45,7 @@ import sys
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .ingest.pipeline import build_payloads, flatten_events, parse_blocks
+from .ingest.pipeline import block_payloads, flatten_events, parse_blocks
 from .ingest.splitter import split_blocks
 from .ingest.tracking import filter_unprocessed, record_processed
 from .session import get_session
@@ -63,6 +66,13 @@ def redacted(args: dict) -> dict:
     return out
 
 
+def _batch_size(text: str) -> int:
+    n = int(text)
+    if n < 1:
+        raise argparse.ArgumentTypeError(f"must be at least 1, not {n}")
+    return n
+
+
 def build_parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(
         prog="python -m kinesis_s3_data_shipper_spark",
@@ -74,7 +84,8 @@ def build_parser() -> argparse.ArgumentParser:
                    help="directory for parsed-event parquet output")
     p.add_argument("--prefix", default=None,
                    help="only process files whose path starts with this")
-    p.add_argument("--batch-size", type=int, default=DEFAULT_BATCH_SIZE,
+    p.add_argument("--batch-size", type=_batch_size,
+                   default=DEFAULT_BATCH_SIZE,
                    help="max events per assembled payload (default 5000, "
                         "the reference's --humio-batch default)")
     p.add_argument("--processed-dir", default=None,
@@ -174,31 +185,34 @@ def run_batch(spark, ns) -> int:
     # "0 message blocks" path (K:114-115).
     from pyspark.sql import Observation
     obs = Observation("shipper")
-    events = (flatten_events(parse_blocks(blocks))
-              .observe(obs, F.count(F.lit(1)).alias("n_events"),
-                       F.collect_set("file").alias("files_with_events")))
-    pay = None
-    n_sent = 0
+    parsed = parse_blocks(blocks)
     if ns.payloads:
         # Split and parse once: the events write fills the cache, and
         # payload assembly reads it back.
-        events = events.persist()
+        parsed = parsed.persist()
+    events = (flatten_events(parsed)
+              .observe(obs, F.count(F.lit(1)).alias("n_events"),
+                       F.collect_set("file").alias("files_with_events")))
+    n_sent = 0
     try:
+        # Every file is split (and a bad one fails the run) before the
+        # first POST.
         events.write.mode("append").parquet(ns.output)
         if ns.payloads:
-            pay = build_payloads(events, ns.batch_size)
+            pay = block_payloads(parsed, ns.batch_size)
             if ns.post_url:
-                pay = pay.persist()  # one compute for both write and POST
+                from .ingest.sink import deliver_payloads
+                from .ingest.transport import http_transport_factory
+                sent = Observation("sink")
+                pay = deliver_payloads(
+                    pay, http_transport_factory(ns.post_url, ns.token)
+                ).observe(sent, F.count(F.lit(1)).alias("n"))
+            # One job: assemble, POST, write.
             pay.write.mode("append").parquet(ns.output + "_payloads")
             if ns.post_url:
-                from .ingest.sink import send_payloads
-                from .ingest.transport import http_transport_factory
-                n_sent = send_payloads(
-                    pay, http_transport_factory(ns.post_url, ns.token))
+                n_sent = sent.get["n"]
     finally:
-        if pay is not None:
-            pay.unpersist()
-        events.unpersist()
+        parsed.unpersist()
     metrics = obs.get
     files_with_events = set(metrics["files_with_events"])
     for path in worklist:

@@ -8,15 +8,16 @@ from __future__ import annotations
 
 import gzip
 import json
+from collections import Counter
 
 import pytest
 
 from kinesis_s3_data_shipper_spark.ingest.fixture import (
     LOG_STREAM_SHAPES, encode_blocks, make_block, make_raw_file)
 from kinesis_s3_data_shipper_spark.ingest.pipeline import (
-    build_payloads, flatten_events, parse_blocks)
+    block_payloads, build_payloads, flatten_events, parse_blocks)
 from kinesis_s3_data_shipper_spark.ingest.splitter import (
-    gunzip_recursive, split_marker_blocks)
+    SPLIT_SCHEMA, gunzip_recursive, split_blocks, split_marker_blocks)
 from kinesis_s3_data_shipper_spark.plans.ingest import raw_fixture_df
 
 
@@ -133,6 +134,165 @@ def test_batching_respects_size_and_preserves_events(spark):
     sample = json.loads(rows[0].payload)
     assert set(sample) == {"tags", "events"}
     assert {"logStreamPrefix", "logGroup"} == set(sample["tags"])
+
+
+def window_groupby_payloads(events, batch_size):
+    """The payload assembly of earlier versions, kept as the oracle:
+    number each block's events by id in a window, then regroup them per
+    chunk. Payload rows must stay byte-identical to it, because the
+    idempotency key is the sha256 of the payload."""
+    from pyspark.sql import Window as W
+    from pyspark.sql import functions as F
+
+    w = W.partitionBy("file", "block_index").orderBy("event_id")
+    chunked = events.withColumn(
+        "batch_id", ((F.row_number().over(w) - F.lit(1)) / batch_size)
+        .cast("int"))
+    return (
+        chunked.groupBy("file", "block_index", "batch_id",
+                        "logStreamPrefix", "logGroup")
+        .agg(F.sort_array(F.collect_list(F.struct(
+            F.col("timestamp_ms").alias("timestamp"),
+            F.struct(
+                F.col("event_id").alias("id"),
+                F.col("message").alias("message"),
+                F.col("file").alias("file"),
+                F.col("logStream").alias("logStream"),
+            ).alias("attributes")))).alias("events"))
+        .select(
+            "file", "block_index", "batch_id",
+            F.to_json(F.struct(
+                F.struct(
+                    F.col("logStreamPrefix").alias("logStreamPrefix"),
+                    F.col("logGroup").alias("logGroup")).alias("tags"),
+                F.col("events"))).alias("payload"),
+            F.size("events").alias("n_events"))
+    )
+
+
+def payload_rows(payloads) -> list[tuple]:
+    return sorted(tuple(r) for r in payloads.select(
+        "file", "block_index", "batch_id", "payload", "n_events").collect())
+
+
+@pytest.fixture(scope="module")
+def fixture_parsed(spark):
+    """The fixture matrix parsed, hazard and empty files included."""
+    parsed = parse_blocks(split_blocks(raw_fixture_df(spark))).persist()
+    yield parsed
+    parsed.unpersist()
+
+
+@pytest.mark.parametrize("batch_size", [1, 7, 30, 5000])
+def test_block_payloads_match_window_groupby(fixture_parsed, batch_size):
+    events = flatten_events(fixture_parsed)
+    want = payload_rows(window_groupby_payloads(events, batch_size))
+    assert want
+    assert payload_rows(block_payloads(fixture_parsed, batch_size)) == want
+    assert payload_rows(build_payloads(events, batch_size)) == want
+
+
+def parsed_blocks(spark, blocks: list[dict]):
+    """One file's blocks, parsed as the splitter would hand them over."""
+    return parse_blocks(spark.createDataFrame(
+        [("file:/in.dat", json.dumps(b, separators=(",", ":")), i)
+         for i, b in enumerate(blocks)], SPLIT_SCHEMA))
+
+
+def test_block_payloads_edge_cases(spark):
+    def block(n, offset=0):
+        return make_block(log_group="/g", log_stream="a/b/c", n_events=n,
+                          base_ts_ms=1_585_699_200_000, event_offset=offset)
+
+    empty, exact, dup = block(0), block(5), block(4)
+    # Ids evt-0..2 twice, the second time with other messages.
+    again = block(3)["logEvents"]
+    for ev in again:
+        ev["message"] = "again: " + ev["message"]
+    dup["logEvents"] += again
+    missing = block(2)
+    del missing["logEvents"]
+    # Timestamps that run against the ids: chunks are cut in id order,
+    # and each payload lists its events in timestamp order.
+    backwards = block(12)
+    for i, ev in enumerate(backwards["logEvents"]):
+        ev["timestamp"] = 1_585_699_200_000 - 137 * i
+    parsed = parsed_blocks(spark, [empty, exact, dup, missing, backwards])
+    rows = block_payloads(parsed, 5).filter("block_index != 4").collect()
+    by_block = {}
+    for r in rows:
+        by_block.setdefault(r.block_index, []).append(r)
+    # No payload from an empty or missing logEvents; exactly batch_size
+    # events make one payload, with no empty chunk after it.
+    assert sorted(by_block) == [1, 2]
+    assert [(r.batch_id, r.n_events) for r in by_block[1]] == [(0, 5)]
+    # Duplicate ids: every event is shipped once, in chunks of <= 5.
+    assert sorted((r.batch_id, r.n_events) for r in by_block[2]) == \
+        [(0, 5), (1, 2)]
+    shipped = Counter(
+        (ev["attributes"]["id"], ev["attributes"]["message"])
+        for r in by_block[2] for ev in json.loads(r.payload)["events"])
+    assert shipped == Counter((ev["id"], ev["message"])
+                              for ev in dup["logEvents"])
+    unique = parsed.filter("block_index != 2")
+    assert payload_rows(block_payloads(unique, 5)) == payload_rows(
+        window_groupby_payloads(flatten_events(unique), 5))
+    with pytest.raises(ValueError, match="at least 1"):
+        block_payloads(parsed, 0)
+
+
+def test_run_batch_payload_plan_has_no_exchange(spark, tmp_path, http_sink,
+                                                monkeypatch):
+    """The payload job run_batch builds (assemble, POST, write) is
+    narrow: its plan holds no Exchange."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from kinesis_s3_data_shipper_spark.ingest.fixture import fixture_files
+    from kinesis_s3_data_shipper_spark.shipper import main
+
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    for key, blob in fixture_files()[:8]:
+        (landing / key.replace("/", "__")).write_bytes(blob)
+    plans = {}
+    write = DataFrameWriter.parquet
+
+    def spy(self, path, *args, **kwargs):
+        plans[path] = self._df._jdf.queryExecution().executedPlan().toString()
+        return write(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    out = str(tmp_path / "ev")
+    assert main(["--input", str(landing), "--output", out, "--payloads",
+                 "--post-url", http_sink.url, "--batch-size", "7"]) == 0
+    plan = plans[out + "_payloads"]
+    assert "MapInArrow" in plan and "Generate posexplode" in plan
+    assert "Exchange" not in plan
+    assert http_sink.received
+
+
+def test_send_payloads_posts_every_row_in_one_job(spark, http_sink):
+    from kinesis_s3_data_shipper_spark.ingest.sink import (payload_key,
+                                                           send_payloads)
+    from kinesis_s3_data_shipper_spark.ingest.transport import (
+        http_transport_factory)
+
+    rows = [("f", 0, i, f'{{"n":{i}}}', 1) for i in range(5)]
+    payloads = spark.createDataFrame(
+        rows, "file string, block_index int, batch_id int, payload string,"
+              " n_events int")
+    sc = spark.sparkContext
+    group = "test_send_payloads_posts_every_row_in_one_job"
+    sc.setJobGroup(group, group)
+    try:
+        sent = send_payloads(payloads, http_transport_factory(http_sink.url))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sent == 5
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert sorted(h["X-Idempotency-Key"] for _, h, _ in http_sink.received) \
+        == sorted(payload_key(r[3]) for r in rows)
 
 
 def test_sink_delivers_and_retries(spark):

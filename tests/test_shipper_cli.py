@@ -6,12 +6,11 @@ streaming variant with a checkpoint.
 
 from __future__ import annotations
 
+import glob
 import hashlib
 import http.server
 import json
 import os
-import socket
-import struct
 import threading
 from collections import Counter
 
@@ -40,61 +39,6 @@ def run_metrics(err: str) -> dict:
     """The metrics record a run prints to stderr."""
     (line,) = [ln for ln in err.splitlines() if ln.startswith('{"metrics"')]
     return json.loads(line)["metrics"]
-
-
-class HttpSink:
-    """A local HTTP ingest endpoint that records every accepted POST as
-    ``(path, headers, body)``. With ``reset_first_post`` it resets the
-    connection, unanswered, on the first POST of each idempotency key
-    (those keys are kept in ``resets``)."""
-
-    def __init__(self) -> None:
-        self.received: list[tuple[str, dict, bytes]] = []
-        self.resets: set[str] = set()
-        self.reset_first_post = False
-        lock = threading.Lock()
-        sink = self
-
-        class Handler(http.server.BaseHTTPRequestHandler):
-            def do_POST(self):
-                body = self.rfile.read(int(self.headers["Content-Length"]))
-                key = self.headers["X-Idempotency-Key"]
-                with lock:
-                    reset = sink.reset_first_post and key not in sink.resets
-                    if reset:
-                        sink.resets.add(key)
-                    else:
-                        sink.received.append(
-                            (self.path, dict(self.headers), body))
-                if reset:
-                    # Linger 0: closing sends RST, not FIN.
-                    self.connection.setsockopt(
-                        socket.SOL_SOCKET, socket.SO_LINGER,
-                        struct.pack("ii", 1, 0))
-                    self.close_connection = True
-                    return
-                self.send_response(200)
-                self.end_headers()
-
-            def log_message(self, *args):
-                pass
-
-        self.server = http.server.ThreadingHTTPServer(("127.0.0.1", 0),
-                                                      Handler)
-        self.url = f"http://127.0.0.1:{self.server.server_address[1]}"
-        threading.Thread(target=self.server.serve_forever,
-                         daemon=True).start()
-
-    def close(self) -> None:
-        self.server.shutdown()
-        self.server.server_close()
-
-
-@pytest.fixture()
-def http_sink():
-    sink = HttpSink()
-    yield sink
-    sink.close()
 
 
 def test_redaction():
@@ -185,6 +129,31 @@ def test_batch_post_retries_connection_resets(spark, tmp_path, http_sink,
         len(expected)
 
 
+def test_batch_post_survives_5xx_bursts(spark, tmp_path, http_sink, capsys):
+    """The sink answers 503 to the first POST of every payload. Each
+    503 retries inside the sink's backoff, the run succeeds, every key
+    lands once after dedup by key, and ``n_payloads_sent`` counts the
+    payload rows written."""
+    d = tmp_path / "landing"
+    d.mkdir()
+    for key, blob in fixture_files():
+        if "/nb3-" in key:
+            (d / key.replace("/", "__")).write_bytes(blob)
+    http_sink.first_post_status = 503
+    out = str(tmp_path / "ev")
+    assert main(["--input", str(d), "--output", out, "--payloads",
+                 "--post-url", http_sink.url]) == 0
+    written = spark.read.parquet(out + "_payloads").collect()
+    expected = {hashlib.sha256(r.payload.encode()).hexdigest()
+                for r in written}
+    keys = [headers["X-Idempotency-Key"]
+            for _, headers, _ in http_sink.received]
+    assert sorted(keys) == sorted(expected)
+    assert http_sink.refused == expected
+    assert run_metrics(capsys.readouterr().err)["n_payloads_sent"] == \
+        len(written)
+
+
 def test_post_outage_no_loss_no_dup_across_retry(spark, landing, tmp_path):
     """Exactly-once delivery under an injected mid-run sink outage —
     the regression test for the reference's lost-batch flaw (K:158
@@ -242,8 +211,11 @@ def test_post_outage_no_loss_no_dup_across_retry(spark, landing, tmp_path):
     cached_rdds = spark.sparkContext._jsc.getPersistentRDDs().size()
     with pytest.raises(Exception):
         main(args())
-    # The failed run leaves no cached events or payloads behind.
+    # The failed run leaves no cached blocks behind.
     assert spark.sparkContext._jsc.getPersistentRDDs().size() == cached_rdds
+    # The POSTs run inside the payload write, so a failed delivery
+    # commits no payload rows: the re-run does not append them twice.
+    assert not glob.glob(os.path.join(out + "_payloads", "*.parquet"))
     # The flaw under test: a failed delivery must NOT mark files done.
     assert not os.path.exists(str(processed)), (
         "files recorded as processed despite failed delivery — the "
@@ -447,11 +419,11 @@ def test_batch_post_job_count(spark, landing, tmp_path, http_sink):
     """Structural guard on the one-pass plan: the Spark jobs of one
     ``--payloads --post-url`` run over the fixture landing dir. They are
     the listing; Spark's listing of the 74 explicit paths (it lists more
-    than 32 paths with a job); the events write, which fills the cache;
-    and four for payload assembly, its write and the send (AQE runs
-    shuffle stages as jobs of their own). Earlier versions ran 8, two
-    of them to broadcast a Python-RDD worklist frame: once for the
-    events and again for a second split and parse for the payloads."""
+    than 32 paths with a job); the events write, which fills the cache
+    of parsed blocks; and one job that assembles the payloads block by
+    block, POSTs them and writes them. A shuffle in payload assembly
+    (AQE runs each shuffle stage as a job) or a send job of its own
+    would add jobs."""
     sc = spark.sparkContext
     group = "test_batch_post_job_count"
     sc.setJobGroup(group, group)
@@ -462,5 +434,22 @@ def test_batch_post_job_count(spark, landing, tmp_path, http_sink):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 7
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 4
     assert http_sink.received
+
+
+@pytest.mark.parametrize("size", ["0", "-3"])
+def test_batch_size_below_one_rejected(tmp_path, capsys, monkeypatch, size):
+    """A batch size below 1 is a usage error (exit 2) caught before any
+    Spark work: no session, no output."""
+    def no_session(*args, **kwargs):
+        raise AssertionError("a Spark session was requested")
+
+    monkeypatch.setattr(shipper, "get_session", no_session)
+    with pytest.raises(SystemExit) as exc:
+        main(["--input", str(tmp_path), "--output", str(tmp_path / "o"),
+              "--payloads", "--batch-size", size])
+    assert exc.value.code == 2
+    assert f"--batch-size: must be at least 1, not {size}" in \
+        capsys.readouterr().err
+    assert not (tmp_path / "o").exists()
