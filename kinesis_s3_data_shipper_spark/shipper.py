@@ -19,20 +19,19 @@ Batch mode makes one pass over exactly the worklist, as the reference
 downloads and parses each unprocessed file once (K:187-216, K:82-174):
 
 1. list ``--input`` (the path column only, so no content is read),
-   drop the keys already in ``--processed-dir`` and collect the sorted
-   worklist;
-2. load exactly those files by explicit, glob-escaped path, so files
-   processed in earlier runs are never read again;
-3. split and parse once, and write the flattened events; with
-   ``--payloads`` the parsed blocks are cached, and a second job
-   assembles each block's payloads in place (no shuffle), POSTs them
-   with ``--post-url`` and writes ``<output>_payloads``, which is
-   therefore committed only when every POST succeeded;
-4. record the keys from that same scan's path column.
+   drop the keys already in ``--processed-dir`` and load exactly the
+   rest by explicit, glob-escaped path;
+2. :func:`ship` them: split and parse once and write the flattened
+   events; with ``--payloads`` the parsed blocks are cached, and a
+   second job assembles each block's payloads in place (no shuffle),
+   POSTs them with ``--post-url`` and writes ``<output>_payloads``,
+   which is therefore committed only when every POST succeeded;
+3. record the keys from that same scan's path column.
 
-``--stream`` tails ``--input`` through
+``--stream`` runs the same :func:`ship` once per micro-batch epoch of
 ``sources.kinesis.firehose_landing_source``; its checkpoint is the
-processed-file record.
+processed-file record, and its output carries an ``_epoch`` partition
+column, so batch and stream runs must not share one ``--output``.
 """
 
 from __future__ import annotations
@@ -42,7 +41,7 @@ import json
 import re
 import sys
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from .ingest.pipeline import block_payloads, flatten_events, parse_blocks
@@ -51,8 +50,6 @@ from .ingest.tracking import filter_unprocessed, record_processed
 from .session import get_session
 
 REDACT_KEYS = ("token", "secret", "password", "key")
-#: Events per payload, the reference's --humio-batch default (K:265).
-DEFAULT_BATCH_SIZE = 5000
 #: Characters Hadoop expands in a path glob (GlobPattern).
 _GLOB_CHARS = re.compile(r"([\\\[\]{}*?])")
 
@@ -84,8 +81,7 @@ def build_parser() -> argparse.ArgumentParser:
                    help="directory for parsed-event parquet output")
     p.add_argument("--prefix", default=None,
                    help="only process files whose path starts with this")
-    p.add_argument("--batch-size", type=_batch_size,
-                   default=DEFAULT_BATCH_SIZE,
+    p.add_argument("--batch-size", type=_batch_size, default=5000,
                    help="max events per assembled payload (default 5000, "
                         "the reference's --humio-batch default)")
     p.add_argument("--processed-dir", default=None,
@@ -158,35 +154,31 @@ def _worklist(spark, ns) -> list[str]:
     return sorted(r.path for r in listing.collect())
 
 
-def run_batch(spark, ns) -> int:
-    """One pass over exactly the worklist: list and filter once, read
-    only the listed files, split and parse them once, and record the
-    keys that read produced."""
-    worklist = _worklist(spark, ns)
-    # Empty-input short-circuit (reference parity, K:284-286).
-    if not worklist:
-        print("no unprocessed input files matched; nothing to do",
-              file=sys.stderr)
-        return 0
-    # The worklist's files by explicit path: history bytes are never
-    # read, and a file gone since the listing fails the load. The
-    # record comes from this same scan's path column (no content
-    # read), so its keys are the listing's keys by construction.
-    raw = spark.read.format("binaryFile").load(
-        [glob_escape(p) for p in worklist])
-    done = raw.select("path")
-    blocks = split_blocks(raw.select("path", "content"))
+def _write(df: DataFrame, path: str, epoch: int | None) -> None:
+    """Append, or dynamically overwrite the epoch's ``_epoch``
+    partition, so a replayed epoch rewrites its rows."""
+    if epoch is None:
+        df.write.mode("append").parquet(path)
+    else:
+        (df.withColumn("_epoch", F.lit(epoch)).write.mode("overwrite")
+         .partitionBy("_epoch").option("partitionOverwriteMode", "dynamic")
+         .parquet(path))
 
+
+def ship(raw: DataFrame, opts, epoch: int | None = None) -> None:
+    """The ship step of both modes, over (path, content) rows, under
+    the parsed CLI flags ``opts``. Every file is split (and a bad one
+    fails the step) before the first POST."""
     # Observability (reference logs block/event counts, K:114-117, 133,
-    # 170): df.observe attaches the metric to the job itself — no
-    # second scan, readable after the action. collect_set(file) is
-    # bounded by the run's file count (same scale as the snapshot) and
-    # lets us warn per zero-output file like the reference's
-    # "0 message blocks" path (K:114-115).
-    from pyspark.sql import Observation
-    obs = Observation("shipper")
-    parsed = parse_blocks(blocks)
-    if ns.payloads:
+    # 170): df.observe attaches the metrics to the events write itself
+    # — no second scan. The file sets are bounded by the step's file
+    # count and give the reference's per-file "0 message blocks"
+    # warning (K:114-115).
+    seen, obs = Observation(), Observation()
+    parsed = parse_blocks(split_blocks(
+        raw.select("path", "content")
+        .observe(seen, F.collect_set("path").alias("files"))))
+    if opts.payloads:
         # Split and parse once: the events write fills the cache, and
         # payload assembly reads it back.
         parsed = parsed.persist()
@@ -195,38 +187,52 @@ def run_batch(spark, ns) -> int:
                        F.collect_set("file").alias("files_with_events")))
     n_sent = 0
     try:
-        # Every file is split (and a bad one fails the run) before the
-        # first POST.
-        events.write.mode("append").parquet(ns.output)
-        if ns.payloads:
-            pay = block_payloads(parsed, ns.batch_size)
-            if ns.post_url:
+        _write(events, opts.output, epoch)
+        if opts.payloads:
+            pay = block_payloads(parsed, opts.batch_size)
+            if opts.post_url:
                 from .ingest.sink import deliver_payloads
                 from .ingest.transport import http_transport_factory
-                sent = Observation("sink")
+                sent = Observation()
                 pay = deliver_payloads(
-                    pay, http_transport_factory(ns.post_url, ns.token)
+                    pay, http_transport_factory(opts.post_url, opts.token)
                 ).observe(sent, F.count(F.lit(1)).alias("n"))
             # One job: assemble, POST, write.
-            pay.write.mode("append").parquet(ns.output + "_payloads")
-            if ns.post_url:
+            _write(pay, opts.output + "_payloads", epoch)
+            if opts.post_url:
                 n_sent = sent.get["n"]
     finally:
         parsed.unpersist()
-    metrics = obs.get
-    files_with_events = set(metrics["files_with_events"])
-    for path in worklist:
-        if path not in files_with_events:
-            print(f"warning: 0 message blocks in {path}", file=sys.stderr)
+    files, metrics = set(seen.get["files"]), obs.get
+    empty = files - set(metrics["files_with_events"])
+    for path in sorted(empty):
+        print(f"warning: 0 message blocks in {path}", file=sys.stderr)
     print(json.dumps({"metrics": {
         "n_events": metrics["n_events"],
-        "n_files": len(files_with_events),
-        "n_files_empty": len(worklist) - len(files_with_events),
+        "n_files": len(files - empty),
+        "n_files_empty": len(empty),
         "n_payloads_sent": n_sent}}),
         file=sys.stderr)
+
+
+def run_batch(spark, ns) -> int:
+    """One pass over exactly the worklist: list and filter once, ship
+    only the listed files, and record the keys that read produced."""
+    worklist = _worklist(spark, ns)
+    # Empty-input short-circuit (reference parity, K:284-286).
+    if not worklist:
+        print("no unprocessed input files matched; nothing to do",
+              file=sys.stderr)
+        return 0
+    # The worklist's files by explicit path: history bytes are never
+    # read, and a file gone since the listing fails the load.
+    raw = spark.read.format("binaryFile").load(
+        [glob_escape(p) for p in worklist])
+    ship(raw, ns)
     if ns.processed_dir:
-        # The static snapshot — NOT a re-listing — becomes the record.
-        record_processed(ns.processed_dir, done, key_col="path")
+        # The static snapshot — NOT a re-listing — becomes the record:
+        # this scan's path column, so its keys are the listing's.
+        record_processed(ns.processed_dir, raw.select("path"))
     return 0
 
 
@@ -235,19 +241,17 @@ def run_stream(spark, ns) -> int:
     if not ns.checkpoint:
         print("--stream requires --checkpoint", file=sys.stderr)
         return 2
-    # streaming_ingest takes none of the batch-only flags: refuse them
-    # rather than silently drop them.
+    # The checkpoint is the stream's record: refuse the batch record's
+    # flags rather than silently drop them.
     ignored = [flag for flag, value in (
-        ("--payloads", ns.payloads), ("--post-url", ns.post_url),
         ("--prefix", ns.prefix),
-        ("--batch-size", ns.batch_size != DEFAULT_BATCH_SIZE),
         ("--processed-dir", ns.processed_dir)) if value]
     if ignored:
         print(f"--stream does not support {', '.join(ignored)}",
               file=sys.stderr)
         return 2
     streaming_ingest(spark, ns.input, checkpoint=ns.checkpoint,
-                     out_dir=ns.output)
+                     out_dir=ns.output, opts=ns)
     return 0
 
 

@@ -8,7 +8,8 @@ Structured Streaming's file source + checkpoint subsumes that state
 machine natively: the checkpoint's seen-files log IS the reference's
 `files` table, exactly-once per micro-batch epoch, `latestFirst=false`
 preserving its oldest-first ordering (K:292), `maxFilesPerTrigger`
-bounding a trigger the way `--humio-batch` bounded a POST.
+bounding a trigger the way `--humio-batch` bounded a POST. The ingest
+query's ``foreachBatch`` body is the batch shipper's own ship step.
 
 All jobs run to completion under ``trigger(availableNow=True)`` for
 tests, and identically as continuous micro-batch jobs in production.
@@ -17,6 +18,7 @@ tests, and identically as continuous micro-batch jobs in production.
 from __future__ import annotations
 
 import contextlib
+import copy
 import datetime
 import glob
 import os
@@ -24,8 +26,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..ingest.pipeline import flatten_events, parse_blocks
-from ..ingest.splitter import split_blocks
 from ..session import ensure_runtime_confs
 from ..sources.kinesis import firehose_landing_source
 
@@ -107,8 +107,8 @@ def _events_stream(spark: SparkSession, events_dir: str,
 #: values (the oracle gate re-attests this per round).
 #: KNOWN SIDE EFFECT of the drain-wide pin: batch jobs launched INSIDE
 #: a ``foreachBatch`` body run under the same session conf, so their
-#: shuffles (the incremental-merge sink's groupBy + bucketed writes,
-#: the ingest sink's dynamic-overwrite writes) are also capped at
+#: shuffles (the incremental-merge sink's groupBy + bucketed writes;
+#: the ingest sink's ship step has none) are also capped at
 #: :data:`STATE_PARTITIONS` during the drain.  At this repo's fixture
 #: sizes that cap is a WIN (micro-batches are tiny; fewer tasks =
 #: lower floor), so the default inherits the pin.  At 100 TB the two
@@ -494,33 +494,23 @@ def streaming_left_outer_join(spark: SparkSession, events_dir: str, *,
 
 
 def streaming_ingest(spark: SparkSession, landing_dir: str, *,
-                     checkpoint: str, out_dir: str) -> None:
-    """The reference's whole job as a streaming query: the Firehose
-    landing source → gunzip+split (foreachBatch reuses the exact batch
-    operators) → parsed/enriched events appended as parquet. The
-    checkpoint replaces the SQLite seen-files table (O4/O19); task
-    retries + idempotent event_ids give at-least-once without the
-    reference's lost-batch flaw."""
-    raw = firehose_landing_source(spark, landing_dir)
-
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
-        with _batch_shuffle_scope(spark):
-            events = flatten_events(parse_blocks(split_blocks(batch_df)))
-            # Idempotent sink: each epoch OVERWRITES its own partition
-            # directory, so a retried/replayed epoch rewrites the same
-            # data instead of appending a duplicate copy — exactly-once
-            # output on top of the checkpoint's exactly-once input,
-            # fixing the reference's lost/duplicated-batch flaw
-            # (SURVEY §3).
-            (events.withColumn("_epoch", F.lit(epoch_id))
-             .write.mode("overwrite")
-             .partitionBy("_epoch")
-             .option("partitionOverwriteMode", "dynamic")
-             .parquet(out_dir))
-
-    query = _drain(spark, raw.writeStream.foreachBatch(process)
-             .option("checkpointLocation", checkpoint)
-             .trigger(availableNow=True))
+                     checkpoint: str, out_dir: str, opts=None) -> None:
+    """The shipper's ``--stream`` mode: :func:`shipper.ship` run on each
+    micro-batch epoch of the Firehose landing source, under the
+    shipper's parsed flags ``opts`` (default: events only) with
+    ``out_dir`` as ``--output``. The checkpoint replaces the SQLite
+    seen-files table (O4/O19), and each epoch overwrites its own
+    ``_epoch`` partition, so exactly-once input gives exactly-once
+    output, fixing the reference's lost/duplicated-batch flaw."""
+    from ..shipper import build_parser, ship
+    opts = build_parser().parse_args(
+        ["--input", landing_dir, "--output", out_dir],
+        namespace=copy.copy(opts))
+    _drain(spark, firehose_landing_source(spark, landing_dir).writeStream
+           .foreachBatch(lambda batch_df, epoch_id:
+                         ship(batch_df, opts, epoch_id))
+           .option("checkpointLocation", checkpoint)
+           .trigger(availableNow=True))
 
 
 def streaming_enriched_counts(spark: SparkSession, events_dir: str,

@@ -21,7 +21,8 @@ from pyspark.sql import functions as F
 from kinesis_s3_data_shipper_spark import shipper
 from kinesis_s3_data_shipper_spark.ingest.fixture import (
     fixture_files, ground_truth_events, make_raw_file)
-from kinesis_s3_data_shipper_spark.ingest.tracking import record_processed
+from kinesis_s3_data_shipper_spark.ingest.tracking import (
+    filter_unprocessed, record_processed)
 from kinesis_s3_data_shipper_spark.shipper import main, redacted
 
 
@@ -35,10 +36,16 @@ def landing(tmp_path):
     return str(d)
 
 
+def metric_records(err: str) -> list[dict]:
+    """The metrics records a run prints to stderr, one per ship step."""
+    return [json.loads(ln)["metrics"] for ln in err.splitlines()
+            if ln.startswith('{"metrics"')]
+
+
 def run_metrics(err: str) -> dict:
-    """The metrics record a run prints to stderr."""
-    (line,) = [ln for ln in err.splitlines() if ln.startswith('{"metrics"')]
-    return json.loads(line)["metrics"]
+    """The metrics record a batch run prints to stderr."""
+    (record,) = metric_records(err)
+    return record
 
 
 def test_redaction():
@@ -267,43 +274,95 @@ def test_stream_requires_checkpoint(landing, tmp_path):
 
 
 def test_stream_rejects_batch_only_flags(landing, tmp_path, capsys):
-    """streaming_ingest takes none of the batch-only flags, so --stream
-    refuses them by name instead of silently dropping them."""
+    """The checkpoint is the stream's record, so --stream refuses the
+    batch record's flags by name instead of silently dropping them,
+    and accepts the ship step's flags."""
     assert main(["--input", landing, "--output", str(tmp_path / "o"),
                  "--stream", "--checkpoint", str(tmp_path / "ckpt"),
-                 "--payloads", "--prefix", "x", "--batch-size", "10"]) == 2
+                 "--prefix", "x", "--processed-dir", str(tmp_path / "p")]) == 2
     err = capsys.readouterr().err.splitlines()[-1]
-    assert err == ("--stream does not support --payloads, --prefix, "
-                   "--batch-size")
+    assert err == "--stream does not support --prefix, --processed-dir"
     assert main(["--input", landing, "--output", str(tmp_path / "o"),
                  "--stream", "--checkpoint", str(tmp_path / "ckpt"),
-                 "--post-url", "http://127.0.0.1:9",
+                 "--payloads", "--post-url", "http://127.0.0.1:9",
+                 "--batch-size", "10", "--token", "t",
                  "--processed-dir", str(tmp_path / "p")]) == 2
     err = capsys.readouterr().err.splitlines()[-1]
-    assert err == "--stream does not support --post-url, --processed-dir"
+    assert err == "--stream does not support --processed-dir"
     assert not os.path.exists(str(tmp_path / "o"))
 
 
-def test_stream_run(spark, landing, tmp_path):
+def test_stream_run(spark, landing, tmp_path, http_sink, capsys):
+    """--stream runs the batch ship step once per epoch: it prints the
+    batch mode's metrics record per epoch, and those records add up to
+    the events and payloads it wrote."""
+    assert main(["--input", landing, "--output", str(tmp_path / "batch")]) == 0
+    batch_keys = set(run_metrics(capsys.readouterr().err))
+
     out = str(tmp_path / "stream_out")
-    ckpt = str(tmp_path / "ckpt")
-    assert main(["--input", landing, "--output", out,
-                 "--stream", "--checkpoint", ckpt]) == 0
+    args = ["--input", landing, "--output", out, "--stream",
+            "--checkpoint", str(tmp_path / "ckpt"), "--payloads",
+            "--post-url", http_sink.url, "--batch-size", "40"]
+    assert main(args) == 0
+    records = metric_records(capsys.readouterr().err)
+    assert len(records) == 2  # 74 files, at most 64 per trigger
+    assert all(set(r) == batch_keys for r in records)
     n = spark.read.parquet(out).count()
     assert n > 0
+    assert sum(r["n_events"] for r in records) == n
+    n_payloads = spark.read.parquet(out + "_payloads").count()
+    assert sum(r["n_payloads_sent"] for r in records) == n_payloads == \
+        len(http_sink.received)
     # Re-run with the same checkpoint: no files re-processed.
-    assert main(["--input", landing, "--output", out,
-                 "--stream", "--checkpoint", ckpt]) == 0
+    assert main(args) == 0
+    assert metric_records(capsys.readouterr().err) == []
     assert spark.read.parquet(out).count() == n
     # A new file: the next run picks up exactly its events.
     new = os.path.join(landing, "new.dat")
     with open(new, "wb") as fh:
         fh.write(make_raw_file(n_blocks=2, events_per_block=3, gzip_depth=1))
-    assert main(["--input", landing, "--output", out,
-                 "--stream", "--checkpoint", ckpt]) == 0
+    assert main(args) == 0
+    (record,) = metric_records(capsys.readouterr().err)
+    assert record["n_events"] == 6
     events = spark.read.parquet(out)
     assert events.count() == n + 6
     assert events.filter(F.col("file") == f"file:{new}").count() == 6
+
+
+def test_stream_post_failure_then_rerun_ships_once(spark, landing, tmp_path,
+                                                   http_sink):
+    """--stream --payloads --post-url against a sink that answers 400
+    (a permanent error) to every first POST: the first epoch fails
+    after its events write. The re-run on the same checkpoint replays
+    that epoch into its own ``_epoch`` partition, so each (file, event
+    id) is in the events output exactly once, and every event is
+    delivered."""
+    out = str(tmp_path / "ev")
+    args = ["--input", landing, "--output", out, "--stream",
+            "--checkpoint", str(tmp_path / "ckpt"), "--payloads",
+            "--post-url", http_sink.url, "--batch-size", "40"]
+    http_sink.first_post_status = 400
+    with pytest.raises(Exception, match="undeliverable batch"):
+        main(args)
+    assert spark.read.parquet(out).count() > 0
+    assert http_sink.received == []
+
+    http_sink.first_post_status = None
+    assert main(args) == 0
+    events = spark.read.parquet(out)
+    assert sorted(r._epoch for r in events.select("_epoch").distinct()
+                  .collect()) == [0, 1]
+    expected = Counter(
+        (f"file:{landing}/{ev['file'].replace('/', '__')}", ev["event_id"])
+        for ev in ground_truth_events())
+    assert Counter((r.file, r.event_id)
+                   for r in events.select("file", "event_id").collect()) \
+        == expected
+    delivered = Counter(
+        (ev["attributes"]["file"], ev["attributes"]["id"])
+        for _, _, body in http_sink.received
+        for ev in json.loads(body)["events"])
+    assert delivered == expected
 
 
 def events_per_file(spark, out: str) -> dict[str, int]:
@@ -361,6 +420,28 @@ def test_batch_skips_keys_recorded_from_listing(spark, landing, tmp_path):
     assert shipped and shipped <= set(new)
     recorded = sorted(r.path for r in spark.read.parquet(processed).collect())
     assert recorded == keys
+
+
+def test_filter_unprocessed_sort_merge_join(spark, tmp_path):
+    """With broadcast joins off, the tracking anti-join plans a
+    sort-merge join (no hint forces a broadcast of the growing key
+    table) and skips exactly the recorded keys, duplicates and all."""
+    keys = [f"file:/landing/f-{i:03d}.log" for i in range(30)]
+    processed = str(tmp_path / "processed")
+    record_processed(processed, spark.createDataFrame(
+        [(k,) for k in keys[::3] * 2], "path string"))
+    candidates = spark.createDataFrame([(k,) for k in keys], "path string")
+    threshold = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(threshold)
+    spark.conf.set(threshold, "-1")
+    try:
+        kept = filter_unprocessed(candidates, spark.read.parquet(processed))
+        got = sorted(r.path for r in kept.collect())
+        plan = kept._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set(threshold, old)
+    assert "SortMergeJoin" in plan and "Broadcast" not in plan
+    assert got == sorted(set(keys) - set(keys[::3]))
 
 
 def test_batch_vanished_file_fails_unrecorded(spark, landing, tmp_path,
@@ -436,6 +517,36 @@ def test_batch_post_job_count(spark, landing, tmp_path, http_sink):
         sc.setLocalProperty("spark.job.description", None)
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == 4
     assert http_sink.received
+
+
+def test_batch_processed_dir_job_count(spark, landing, tmp_path):
+    """Structural guard on tracking: the Spark jobs of a
+    ``--processed-dir`` re-run that finds 2 new files beside the 74 the
+    first run recorded. They are the processed dir's schema read; the
+    listing's anti-join against the recorded keys, two jobs (the
+    planner broadcasts the small key table, then the listing is
+    collected); the events write; and the record. A ``distinct()`` on
+    either side of tracking would add a job (AQE runs each shuffle
+    stage as a job)."""
+    out = str(tmp_path / "ev")
+    args = ["--input", landing, "--output", out,
+            "--processed-dir", str(tmp_path / "processed")]
+    assert main(args) == 0
+    for name in ("new1.dat", "new2.dat"):
+        with open(os.path.join(landing, name), "wb") as fh:
+            fh.write(make_raw_file(n_blocks=2, events_per_block=3,
+                                   gzip_depth=1))
+    sc = spark.sparkContext
+    group = "test_batch_processed_dir_job_count"
+    sc.setJobGroup(group, group)
+    try:
+        assert main(args) == 0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 5
+    assert set(events_per_file(spark, out)) >= {
+        f"file:{landing}/new1.dat", f"file:{landing}/new2.dat"}
 
 
 @pytest.mark.parametrize("size", ["0", "-3"])
