@@ -18,7 +18,6 @@ from ..functions.decimal_safe import fixed2_str, sql_fixed2_str
 from ..sources.tables import load_table
 from .base import register
 
-NS_PER_WEEK = 604_800_000_000_000
 US_PER_WEEK = 604_800_000_000
 
 

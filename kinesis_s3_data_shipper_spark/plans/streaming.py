@@ -224,7 +224,7 @@ SELECT c_mktsegment, event_type, COUNT(*) AS n,
 FROM events JOIN customer ON user_id = c_custkey
 GROUP BY 1, 2
 """, doc="Stream-static enrichment: the events stream joins the static "
-         "customer dimension (broadcast, re-read per micro-batch) and "
+         "customer dimension (re-read per micro-batch) and "
          "aggregates per (segment, type) — checked against the batch "
          "join oracle. The streaming twin of the reference's per-event "
          "enrichment projection (kinesis-to-humio.py:144-148).")
@@ -310,7 +310,7 @@ def streaming_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     name = f"smerge_{uuid.uuid4().hex[:8]}"
     return streaming_incremental_merge(
         spark, landing, table_dir=os.path.join(work, "table"),
-        checkpoint=checkpoint, query_name=name, max_files_per_trigger=1)
+        checkpoint=checkpoint, query_name=name)
 
 
 @register("streaming_topk", oracle=f"""
@@ -418,7 +418,7 @@ def _stage_time_slices(spark: SparkSession, sf_dir: str,
               "micro-batches in explicit applyInPandasWithState group "
               "state — s = max(0, s + (x - mu*(1+k))) folded batch by "
               "batch, with the baseline mean joined in from a STATIC "
-              "calibration aggregate (stream-static broadcast join "
+              "calibration aggregate (stream-static join "
               "ahead of the stateful op). The landing dir is staged "
               "as ts-range slices with increasing mtimes + "
               "maxFilesPerTrigger=1, so the cross-batch fold order "

@@ -507,8 +507,7 @@ def warehouse_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     # inside every epoch — concurrent housekeeping.
     streaming_incremental_merge(
         spark, landing, table_dir=table_dir, checkpoint=checkpoint,
-        query_name=f"lifecycle_{uuid.uuid4().hex[:8]}",
-        max_files_per_trigger=1, vacuum_keep=2)
+        query_name=f"lifecycle_{uuid.uuid4().hex[:8]}", vacuum_keep=2)
     # (2) One more epoch, published then RETRIED with the same batch
     # id after a vacuum — the crash-before-checkpoint-commit path.
     # The delta is the whole events table once more (same per-epoch

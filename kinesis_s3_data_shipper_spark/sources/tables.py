@@ -30,8 +30,6 @@ TABLE_NAMES: tuple[str, ...] = (
     "orders", "lineitem", "events", "documents", "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def _normalize_event_ts(df: DataFrame) -> DataFrame:
     """Map ``ts`` to epoch-nanos LongType whatever the physical type.

@@ -9,15 +9,19 @@ machine natively: the checkpoint's seen-files log IS the reference's
 `files` table, exactly-once per micro-batch epoch, `latestFirst=false`
 preserving its oldest-first ordering (K:292), `maxFilesPerTrigger`
 bounding a trigger the way `--humio-batch` bounded a POST. The ingest
-query's ``foreachBatch`` body is the batch shipper's own ship step.
+query's ``foreachBatch`` body is the batch shipper's own ship step,
+which has no shuffle.
 
-All jobs run to completion under ``trigger(availableNow=True)`` for
-tests, and identically as continuous micro-batch jobs in production.
+Every query starts and drains in one place, :func:`_drain`, under a
+run-once ``trigger(availableNow=True)`` over a checkpointed source.
+Queries whose emissions the caller reads back build their sink in
+:func:`_drain_emissions` (a memory table, or a checkpoint-recoverable
+parquet directory); the ingest and incremental-merge queries hand
+their own ``foreachBatch`` body to :func:`_drain`.
 """
 
 from __future__ import annotations
 
-import contextlib
 import copy
 import datetime
 import glob
@@ -88,14 +92,14 @@ def _events_stream(spark: SparkSession, events_dir: str,
     return reader.parquet(events_dir)
 
 
-#: State-store partition count pinned while a drain runs (r11 verdict
-#: ask #4).  Spark sizes a stateful operator's state-store count from
+#: State-store partition count pinned while a drain runs.  Spark sizes
+#: a stateful operator's state-store count from
 #: ``spark.sql.shuffle.partitions`` AT THE FIRST BATCH and records it
 #: in the checkpoint; inheriting the session's CPU-count default (32
 #: locally) gave every micro-batch 32 state-store tasks each paying a
 #: per-task store open/commit/snapshot floor — measured 8.2 s -> 2.6 s
 #: on the dedup twin's identical 200k-row drain going 32 -> 4.  State
-#: partitioning is a STATE-VOLUME knob, not a CPU knob: these bounded
+#: partitioning is a STATE-VOLUME setting, not a CPU one: these bounded
 #: fixtures hold <= ~100k state rows, so 8 partitions keep every task
 #: meaningfully sized; a 100 TB deployment sizes this to keys-on-disk
 #: (RocksDB store count), which is exactly why it must not silently
@@ -104,46 +108,12 @@ def _events_stream(spark: SparkSession, events_dir: str,
 #: partition count, and the per-key fold order is enforced by the
 #: explicit (ts, event_id) sort inside each update function — so the
 #: partition count can change parallelism and store-file counts, never
-#: values (the oracle gate re-attests this per round).
-#: KNOWN SIDE EFFECT of the drain-wide pin: batch jobs launched INSIDE
-#: a ``foreachBatch`` body run under the same session conf, so their
-#: shuffles (the incremental-merge sink's groupBy + bucketed writes;
-#: the ingest sink's ship step has none) are also capped at
-#: :data:`STATE_PARTITIONS` during the drain.  At this repo's fixture
-#: sizes that cap is a WIN (micro-batches are tiny; fewer tasks =
-#: lower floor), so the default inherits the pin.  At 100 TB the two
-#: knobs diverge — state volume does not track per-batch compute
-#: volume — so shuffling sinks route through
-#: :func:`_batch_shuffle_scope`, and a deployment sets
-#: ``SPARK_GRAFT_STREAM_BATCH_SHUFFLE_PARTITIONS`` to size batch
-#: compute independently of the state-store count (which stays
-#: checkpoint-pinned from the first batch regardless of later conf).
-STATE_PARTITIONS = int(os.environ.get(
-    "SPARK_GRAFT_STREAM_STATE_PARTITIONS", "8"))
-
-_BATCH_SINK_PARTITIONS: str | None = os.environ.get(
-    "SPARK_GRAFT_STREAM_BATCH_SHUFFLE_PARTITIONS")
-
-
-@contextlib.contextmanager
-def _batch_shuffle_scope(spark: SparkSession):
-    """Inside a ``foreachBatch`` body: lift the drain's state-volume
-    shuffle pin to the deployment's batch-compute value for the
-    duration of the batch work, restoring the pin before the next
-    micro-batch plans.  No-op unless
-    ``SPARK_GRAFT_STREAM_BATCH_SHUFFLE_PARTITIONS`` is set — the
-    stateful plan's state-store count is immune either way (recorded
-    in the checkpoint at the first batch), this only affects the batch
-    job's own shuffles."""
-    if _BATCH_SINK_PARTITIONS is None:
-        yield
-        return
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _BATCH_SINK_PARTITIONS)
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+#: values (tests/test_state_partition_invariance.py).
+#: The pin covers the whole drain, so batch jobs launched inside a
+#: ``foreachBatch`` body run under it too: the incremental-merge sink's
+#: groupBy and bucketed writes shuffle into this many partitions; the
+#: ingest sink's ship step has no shuffle.
+STATE_PARTITIONS = 8
 
 
 def _drain(spark: SparkSession, writer):
@@ -163,9 +133,33 @@ def _drain(spark: SparkSession, writer):
         spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
+def _drain_emissions(spark: SparkSession, out: DataFrame, mode: str, *,
+                     checkpoint: str, query_name: str,
+                     output_dir: str | None = None) -> DataFrame:
+    """Drain ``out`` in output ``mode`` under ``availableNow`` and
+    return every row it emitted.
+
+    By default the rows go to the memory sink named ``query_name``
+    (light, but Spark refuses to resume a memory-sink query from an
+    existing checkpoint).  With ``output_dir`` each micro-batch is
+    appended there as parquet instead, which IS checkpoint-recoverable:
+    a stopped query restarted on the same checkpoint continues from its
+    restored state over only the new files, and the directory keeps
+    every emission across runs."""
+    writer = (out.writeStream.outputMode(mode)
+              .option("checkpointLocation", checkpoint)
+              .trigger(availableNow=True))
+    if output_dir is None:
+        _drain(spark, writer.format("memory").queryName(query_name))
+        return spark.table(query_name)
+    _drain(spark, writer.foreachBatch(
+        lambda batch_df, _epoch:
+        batch_df.write.mode("append").parquet(output_dir)))
+    return spark.read.parquet(output_dir)
+
+
 def streaming_hourly_counts(spark: SparkSession, events_dir: str, *,
-                            checkpoint: str, query_name: str,
-                            watermark: str = "1 hour") -> DataFrame:
+                            checkpoint: str, query_name: str) -> DataFrame:
     """Event-time tumbling 1-hour aggregate with a watermark; complete
     mode into an in-memory table; returns the result when drained.
 
@@ -176,7 +170,7 @@ def streaming_hourly_counts(spark: SparkSession, events_dir: str, *,
     events = _events_stream(spark, events_dir)
     agg = (
         events.withColumn("event_time", _event_time(events))
-        .withWatermark("event_time", watermark)
+        .withWatermark("event_time", "1 hour")
         .groupBy(F.window("event_time", "1 hour"), "event_type")
         .agg(F.count("*").alias("n"),
              F.sum(F.col("value").cast("decimal(18,6)")).cast("double")
@@ -184,16 +178,12 @@ def streaming_hourly_counts(spark: SparkSession, events_dir: str, *,
     out = agg.select(
         F.unix_millis(F.col("window.start")).alias("hour_ms"),
         "event_type", "n", "sum_value")
-    query = _drain(spark, out.writeStream.outputMode("complete")
-             .format("memory").queryName(query_name)
-             .option("checkpointLocation", checkpoint)
-             .trigger(availableNow=True))
-    return spark.table(query_name)
+    return _drain_emissions(spark, out, "complete",
+                            checkpoint=checkpoint, query_name=query_name)
 
 
 def streaming_sliding_counts(spark: SparkSession, events_dir: str, *,
-                             checkpoint: str, query_name: str,
-                             watermark: str = "1 hour") -> DataFrame:
+                             checkpoint: str, query_name: str) -> DataFrame:
     """Event-time SLIDING (hopping) 1-hour window, 30-minute slide:
     every event lands in exactly two overlapping windows. Complete
     mode into a memory sink, drained with availableNow.
@@ -206,7 +196,7 @@ def streaming_sliding_counts(spark: SparkSession, events_dir: str, *,
     events = _events_stream(spark, events_dir)
     agg = (
         events.withColumn("event_time", _event_time(events))
-        .withWatermark("event_time", watermark)
+        .withWatermark("event_time", "1 hour")
         .groupBy(F.window("event_time", "1 hour", "30 minutes"),
                  "event_type")
         .agg(F.count("*").alias("n"),
@@ -215,16 +205,12 @@ def streaming_sliding_counts(spark: SparkSession, events_dir: str, *,
     out = agg.select(
         F.unix_millis(F.col("window.start")).alias("win_ms"),
         "event_type", "n", "sum_value")
-    query = _drain(spark, out.writeStream.outputMode("complete")
-             .format("memory").queryName(query_name)
-             .option("checkpointLocation", checkpoint)
-             .trigger(availableNow=True))
-    return spark.table(query_name)
+    return _drain_emissions(spark, out, "complete",
+                            checkpoint=checkpoint, query_name=query_name)
 
 
 def streaming_dedup_counts(spark: SparkSession, events_dir: str, *,
-                           checkpoint: str, query_name: str,
-                           watermark: str = "2 hours") -> DataFrame:
+                           checkpoint: str, query_name: str) -> DataFrame:
     """Streaming exact dedup on event_id within the watermark — the
     streaming twin of dedup_exact (dropDuplicatesWithinWatermark bounds
     state; RocksDB state store at scale). Counts per type AFTER dedup,
@@ -232,14 +218,11 @@ def streaming_dedup_counts(spark: SparkSession, events_dir: str, *,
     events = _events_stream(spark, events_dir)
     deduped = (
         events.withColumn("event_time", _event_time(events))
-        .withWatermark("event_time", watermark)
+        .withWatermark("event_time", "2 hours")
         .dropDuplicatesWithinWatermark(["event_id"])
         .groupBy("event_type").agg(F.count("*").alias("n")))
-    query = _drain(spark, deduped.writeStream.outputMode("complete")
-             .format("memory").queryName(query_name)
-             .option("checkpointLocation", checkpoint)
-             .trigger(availableNow=True))
-    return spark.table(query_name)
+    return _drain_emissions(spark, deduped, "complete",
+                            checkpoint=checkpoint, query_name=query_name)
 
 
 #: Sentinel event time far past any test data (2100-01-01, epoch-nanos).
@@ -252,16 +235,15 @@ SENTINEL_USER = -1
 
 
 def streaming_session_windows(spark: SparkSession, events_dir: str, *,
-                              checkpoint: str, query_name: str,
-                              gap: str = "30 minutes") -> DataFrame:
+                              checkpoint: str, query_name: str) -> DataFrame:
     """session_window gap-based sessions per user, append mode.
 
     Stages a sentinel far-future event (user_id = -1) into the landing
     dir so the watermark passes every real session; the sentinel's own
     session is filtered from the result. Semantics: an event extends a
-    session while it lands strictly inside [start, last+gap) — a gap of
-    exactly `gap` opens a NEW session (>= convention, vs the batch
-    sessionize query's >)."""
+    session while it lands strictly inside [start, last + 30 min) — a
+    gap of exactly 30 minutes opens a NEW session (>= convention, vs
+    the batch sessionize query's >)."""
     ensure_runtime_confs(spark)
     sentinel = _sentinel_df(spark, events_dir, [(-1, "sentinel")])
     sentinel.write.mode("append").parquet(events_dir)
@@ -270,15 +252,14 @@ def streaming_session_windows(spark: SparkSession, events_dir: str, *,
     sessions = (
         events.withColumn("event_time", _event_time(events))
         .withWatermark("event_time", "0 seconds")
-        .groupBy(F.session_window("event_time", gap), "user_id")
+        .groupBy(F.session_window("event_time", "30 minutes"), "user_id")
         .agg(F.count("*").alias("n_events"))
         .select("user_id", "n_events",
-                F.unix_millis(F.col("session_window.start")).alias("start_ms")))
-    query = _drain(spark, sessions.writeStream.outputMode("append")
-             .format("memory").queryName(query_name)
-             .option("checkpointLocation", checkpoint)
-             .trigger(availableNow=True))
-    return spark.table(query_name).filter(F.col("user_id") != SENTINEL_USER)
+                F.unix_millis(F.col("session_window.start"))
+                .alias("start_ms")))
+    emitted = _drain_emissions(spark, sessions, "append",
+                               checkpoint=checkpoint, query_name=query_name)
+    return emitted.filter(F.col("user_id") != SENTINEL_USER)
 
 
 def streaming_cusum_final(spark: SparkSession, events_dir: str, *,
@@ -292,7 +273,7 @@ def streaming_cusum_final(spark: SparkSession, events_dir: str, *,
     max(0, ·) clamp is non-linear).
 
     Dataflow: the event stream is enriched with the per-user baseline
-    ``(sv, n)`` via a stream-STATIC broadcast join (in production the
+    ``(sv, n)`` via a stream-STATIC join (in production the
     baseline is yesterday's calibration table; here it is the batch
     aggregate over the same data so the drained result is
     hash-comparable to the batch oracle), then each user's state
@@ -313,21 +294,17 @@ def streaming_cusum_final(spark: SparkSession, events_dir: str, *,
     ``n_seen`` is monotone, so the final state row is the max_by —
     state never grows beyond one (s, seen) pair per user.
 
-    Sinks: by default the update-mode MEMORY sink (light, but Spark
-    refuses to resume a memory-sink query from an existing
-    checkpoint). Pass ``output_dir`` to switch to a foreachBatch
-    parquet-append sink, which IS checkpoint-recoverable: a stopped
-    query restarted with the same checkpoint continues folding the
-    restored state over only the new files, and the parquet dir
-    accumulates every emission across runs, so the max_by read below
-    yields the up-to-date statistic for ALL users (the restart test's
-    subject, tests/test_stateful_streaming.py).
+    Sinks: see :func:`_drain_emissions`.  With ``output_dir`` a
+    restarted query keeps folding its restored state over only the new
+    files, and the max_by read below yields the up-to-date statistic
+    for ALL users (the restart test's subject,
+    tests/test_stateful_streaming.py).
     """
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     events = _events_stream(spark, events_dir, max_files=1)
-    enriched = events.join(F.broadcast(baseline), "user_id")
+    enriched = events.join(baseline, "user_id")
 
     def update(key, pdfs, state: GroupState):
         pdf = pd.concat(list(pdfs), ignore_index=True)
@@ -346,21 +323,9 @@ def streaming_cusum_final(spark: SparkSession, events_dir: str, *,
         stateStructType="s DOUBLE, seen LONG",
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout))
-    if output_dir is not None:
-        def sink(batch_df: DataFrame, _epoch: int) -> None:
-            batch_df.write.mode("append").parquet(output_dir)
-
-        query = _drain(spark, out.writeStream.outputMode("update")
-                 .foreachBatch(sink)
-                 .option("checkpointLocation", checkpoint)
-                 .trigger(availableNow=True))
-        emissions = spark.read.parquet(output_dir)
-    else:
-        query = _drain(spark, out.writeStream.outputMode("update")
-                 .format("memory").queryName(query_name)
-                 .option("checkpointLocation", checkpoint)
-                 .trigger(availableNow=True))
-        emissions = spark.table(query_name)
+    emissions = _drain_emissions(spark, out, "update",
+                                 checkpoint=checkpoint, query_name=query_name,
+                                 output_dir=output_dir)
     return (emissions
             .groupBy("user_id")
             .agg(F.max("n_seen").alias("n_events"),
@@ -370,8 +335,8 @@ def streaming_cusum_final(spark: SparkSession, events_dir: str, *,
 
 
 def streaming_running_user_counts(spark: SparkSession, events_dir: str, *,
-                                  checkpoint: str, query_name: str,
-                                  max_files_per_trigger: int = 1) -> DataFrame:
+                                  checkpoint: str, query_name: str
+                                  ) -> DataFrame:
     """Custom stateful operator via applyInPandasWithState: a per-user
     running event counter carried across micro-batches in explicit
     group state (the surface for stateful logic that session_window /
@@ -383,8 +348,7 @@ def streaming_running_user_counts(spark: SparkSession, events_dir: str, *,
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    events = _events_stream(spark, events_dir,
-                            max_files=max_files_per_trigger)
+    events = _events_stream(spark, events_dir, max_files=1)
 
     def update(key, pdfs, state: GroupState):
         n = 0
@@ -401,19 +365,15 @@ def streaming_running_user_counts(spark: SparkSession, events_dir: str, *,
         stateStructType="total LONG",
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout))
-    query = _drain(spark, counted.writeStream.outputMode("update")
-             .format("memory").queryName(query_name)
-             .option("checkpointLocation", checkpoint)
-             .trigger(availableNow=True))
-    # Update-mode memory sink keeps every emission; the running maximum
-    # per user IS the final total (totals are monotone).
-    return (spark.table(query_name)
-            .groupBy("user_id").agg(F.max("total").alias("total")))
+    # Update mode keeps every emission; the running maximum per user IS
+    # the final total (totals are monotone).
+    emissions = _drain_emissions(spark, counted, "update",
+                                 checkpoint=checkpoint, query_name=query_name)
+    return emissions.groupBy("user_id").agg(F.max("total").alias("total"))
 
 
 def streaming_late_data_counts(spark: SparkSession, events_dir: str, *,
-                               checkpoint: str, query_name: str,
-                               watermark: str = "2 hours") -> DataFrame:
+                               checkpoint: str, query_name: str) -> DataFrame:
     """Hourly counts in APPEND mode with real late-data semantics.
 
     The landing dir must hold the on-time file (older mtime) and the
@@ -428,41 +388,21 @@ def streaming_late_data_counts(spark: SparkSession, events_dir: str, *,
     events = _events_stream(spark, events_dir, max_files=1)
     agg = (
         events.withColumn("event_time", _event_time(events))
-        .withWatermark("event_time", watermark)
+        .withWatermark("event_time", "2 hours")
         .groupBy(F.window("event_time", "1 hour"), "event_type")
         .agg(F.count("*").alias("n")))
     out = agg.select(
         F.unix_millis(F.col("window.start")).alias("hour_ms"),
         "event_type", "n")
-    query = _drain(spark, out.writeStream.outputMode("append")
-             .format("memory").queryName(query_name)
-             .option("checkpointLocation", checkpoint)
-             .trigger(availableNow=True))
-    return spark.table(query_name)
+    return _drain_emissions(spark, out, "append",
+                            checkpoint=checkpoint, query_name=query_name)
 
 
-def streaming_left_outer_join(spark: SparkSession, events_dir: str, *,
-                              checkpoint: str, query_name: str,
-                              window: str = "30 minutes") -> DataFrame:
-    """Stream-stream LEFT OUTER interval join: every click emits — with
-    its matching same-user purchases inside [click, click + window],
-    or ONCE with nulls when the watermark proves no match can arrive.
-
-    The null-extension side is the hard part of streaming outer joins:
-    an unmatched click can only be emitted when event time has provably
-    passed click_time + window + watermark delay, so the output is
-    driven by watermark progress, not batch boundaries. Two far-future
-    sentinel rows (one per event_type, user -1, filtered from the
-    result) push the final watermark past every real click's horizon,
-    making availableNow drain the complete, deterministic outer result
-    that the batch LEFT JOIN oracle computes. State stays bounded to
-    watermark + interval on both sides — the same eviction contract as
-    the inner interval join."""
-    ensure_runtime_confs(spark)
-    sentinels = _sentinel_df(spark, events_dir,
-                             [(-2, "click"), (-3, "purchase")])
-    sentinels.write.mode("append").parquet(events_dir)
-
+def _click_purchase_lags(spark: SparkSession, events_dir: str,
+                         how: str) -> DataFrame:
+    """Clicks joined to same-user purchases landing within
+    [click, click + 30 minutes], both sides watermarked 1 hour, as
+    (user_id, click_id, purchase_id, lag_ms)."""
     def side(event_type: str, id_alias: str, time_alias: str,
              user_alias: str) -> DataFrame:
         stream = _events_stream(spark, events_dir)
@@ -480,17 +420,38 @@ def streaming_left_outer_join(spark: SparkSession, events_dir: str, *,
         (F.col("user_id") == F.col("p_user"))
         & (F.col("purchase_time") >= F.col("click_time"))
         & (F.col("purchase_time")
-           <= F.col("click_time") + F.expr(f"INTERVAL {window}")),
-        "leftOuter")
-    out = joined.select(
+           <= F.col("click_time") + F.expr("INTERVAL 30 minutes")),
+        how)
+    return joined.select(
         "user_id", "click_id", "purchase_id",
         (F.unix_millis("purchase_time") - F.unix_millis("click_time"))
         .alias("lag_ms"))
-    query = _drain(spark, out.writeStream.outputMode("append")
-             .format("memory").queryName(query_name)
-             .option("checkpointLocation", checkpoint)
-             .trigger(availableNow=True))
-    return spark.table(query_name).filter(F.col("user_id") != SENTINEL_USER)
+
+
+def streaming_left_outer_join(spark: SparkSession, events_dir: str, *,
+                              checkpoint: str, query_name: str) -> DataFrame:
+    """Stream-stream LEFT OUTER interval join: every click emits — with
+    its matching same-user purchases inside [click, click + 30 min],
+    or ONCE with nulls when the watermark proves no match can arrive.
+
+    The null-extension side is the hard part of streaming outer joins:
+    an unmatched click can only be emitted when event time has provably
+    passed click_time + interval + watermark delay, so the output is
+    driven by watermark progress, not batch boundaries. Two far-future
+    sentinel rows (one per event_type, user -1, filtered from the
+    result) push the final watermark past every real click's horizon,
+    making availableNow drain the complete, deterministic outer result
+    that the batch LEFT JOIN oracle computes. State stays bounded to
+    watermark + interval on both sides — the same eviction contract as
+    the inner interval join."""
+    ensure_runtime_confs(spark)
+    sentinels = _sentinel_df(spark, events_dir,
+                             [(-2, "click"), (-3, "purchase")])
+    sentinels.write.mode("append").parquet(events_dir)
+    out = _click_purchase_lags(spark, events_dir, "leftOuter")
+    emitted = _drain_emissions(spark, out, "append",
+                               checkpoint=checkpoint, query_name=query_name)
+    return emitted.filter(F.col("user_id") != SENTINEL_USER)
 
 
 def streaming_ingest(spark: SparkSession, landing_dir: str, *,
@@ -517,158 +478,43 @@ def streaming_enriched_counts(spark: SparkSession, events_dir: str,
                               customer_path: str, *, checkpoint: str,
                               query_name: str) -> DataFrame:
     """Stream-static enrichment join: the event stream joins the static
-    customer dimension (re-read each micro-batch, broadcast — the
-    standard streaming enrichment pattern), then aggregates per
+    customer dimension (re-read each micro-batch — the standard
+    streaming enrichment pattern), then aggregates per
     (segment, event_type). Stateless join + stateful agg; at scale the
-    static side is a slowly-changing parquet/Delta dim and the
-    broadcast keeps the stream shuffle-free below the agg."""
+    static side is a slowly-changing parquet/Delta dim that grows with
+    the corpus, so the join strategy is left to the planner's size
+    estimate rather than forced to a broadcast."""
     events = _events_stream(spark, events_dir)
     dim = (spark.read.parquet(customer_path)
            .select(F.col("c_custkey").alias("user_id"), "c_mktsegment"))
     enriched = (
-        events.join(F.broadcast(dim), "user_id")
+        events.join(dim, "user_id")
         .groupBy("c_mktsegment", "event_type")
         .agg(F.count("*").alias("n"),
              F.sum(F.col("value").cast("decimal(18,6)")).cast("double")
               .alias("sum_value")))
-    query = _drain(spark, enriched.writeStream.outputMode("complete")
-             .format("memory").queryName(query_name)
-             .option("checkpointLocation", checkpoint)
-             .trigger(availableNow=True))
-    return spark.table(query_name)
+    return _drain_emissions(spark, enriched, "complete",
+                            checkpoint=checkpoint, query_name=query_name)
 
 
 def streaming_interval_join(spark: SparkSession, events_dir: str, *,
-                            checkpoint: str, query_name: str,
-                            window: str = "30 minutes") -> DataFrame:
+                            checkpoint: str, query_name: str) -> DataFrame:
     """Stream-stream inner join with an event-time interval condition:
     each click joins the purchases of the same user landing within
-    [click, click + window]. BOTH sides are watermarked and the range
+    [click, click + 30 min]. BOTH sides are watermarked and the range
     rides the join condition, so Spark bounds each side's join state
     to watermark + interval — the canonical funnel/attribution join at
     scale (vs buffering either stream forever). Inner join => matches
     emit as found; availableNow drains the full fixture
     deterministically."""
-    def side(event_type: str, id_alias: str, time_alias: str,
-             user_alias: str) -> DataFrame:
-        stream = _events_stream(spark, events_dir)
-        return (stream
-                .filter(F.col("event_type") == event_type)
-                .select(F.col("event_id").alias(id_alias),
-                        F.col("user_id").alias(user_alias),
-                        _event_time(stream).alias(time_alias))
-                .withWatermark(time_alias, "1 hour"))
-
-    clicks = side("click", "click_id", "click_time", "user_id")
-    purchases = side("purchase", "purchase_id", "purchase_time", "p_user")
-    joined = clicks.join(
-        purchases,
-        (F.col("user_id") == F.col("p_user"))
-        & (F.col("purchase_time") >= F.col("click_time"))
-        & (F.col("purchase_time")
-           <= F.col("click_time") + F.expr(f"INTERVAL {window}")))
-    out = joined.select(
-        "user_id", "click_id", "purchase_id",
-        (F.unix_millis("purchase_time") - F.unix_millis("click_time"))
-        .alias("lag_ms"))
-    query = _drain(spark, out.writeStream.outputMode("append")
-             .format("memory").queryName(query_name)
-             .option("checkpointLocation", checkpoint)
-             .trigger(availableNow=True))
-    return spark.table(query_name)
-
-
-def tws_available() -> bool:
-    """transformWithStateInPandas drives its state server over
-    protobuf/gRPC; absent those wheels the Python runner cannot start.
-    Gate callers (and the unit test) so environments without protobuf
-    fall back to applyInPandasWithState (streaming_running_user_counts
-    — same semantics, previous-generation API)."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-        return True
-    except ImportError:
-        return False
-
-
-def streaming_user_stats_tws(spark: SparkSession, events_dir: str, *,
-                             checkpoint: str, query_name: str,
-                             max_files_per_trigger: int = 1) -> DataFrame:
-    """Per-user running (count, exact sum) via transformWithStateInPandas
-    — the Spark 4 arbitrary-stateful API (StatefulProcessor + typed
-    ValueState) that supersedes applyInPandasWithState: state is a
-    named, schema'd handle the processor reads/writes explicitly, which
-    is what multi-state operators (CEP, enrichment caches, per-key
-    models) need. RocksDB-backed (session default), so state size is
-    bounded by disk, not heap, at 100 TB key cardinalities.
-
-    Determinism: `value` is fixed-pointed to int64 micros BEFORE it
-    enters state (cast decimal(18,6) × 1e6), so the cross-batch sum is
-    exact integer arithmetic — the streaming twin of the engine-wide
-    decimal-safe SUM convention — and the final double equals the
-    batch oracle's CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE)
-    bit-for-bit.
-
-    Emits the running totals on every batch a user appears in; the
-    final emission per user (max n — monotone) equals the batch
-    groupBy, which the test checks.
-
-    Requires protobuf at runtime (see :func:`tws_available`); in
-    environments without it, streaming_running_user_counts covers the
-    same contract on the applyInPandasWithState API.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor, StatefulProcessorHandle)
-
-    class UserStats(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._agg = handle.getValueState(
-                "agg", "n LONG, sum_micros LONG")
-
-        def handleInputRows(self, key, rows, timer_values):
-            n, s = 0, 0
-            for pdf in rows:
-                n += len(pdf)
-                s += int(pdf["value_micros"].sum())
-            if self._agg.exists():
-                prev_n, prev_s = self._agg.get()
-                n, s = n + prev_n, s + prev_s
-            self._agg.update((n, s))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n": [n], "sum_micros": [s]})
-
-        def close(self) -> None:
-            pass
-
-    events = _events_stream(spark, events_dir,
-                            max_files=max_files_per_trigger)
-    ev = events.select(
-        "user_id",
-        (F.col("value").cast("decimal(18,6)") * 1_000_000)
-        .cast("long").alias("value_micros"))
-    out = ev.groupBy("user_id").transformWithStateInPandas(
-        UserStats(),
-        outputStructType="user_id LONG, n LONG, sum_micros LONG",
-        outputMode="Update",
-        timeMode="None")
-    query = _drain(spark, out.writeStream.outputMode("update")
-             .format("memory").queryName(query_name)
-             .option("checkpointLocation", checkpoint)
-             .trigger(availableNow=True))
-    # Update-mode memory sink keeps every emission; n is strictly
-    # monotone per user, so max(struct(n, sum)) is the final state.
-    final = (spark.table(query_name)
-             .groupBy("user_id")
-             .agg(F.max(F.struct("n", "sum_micros")).alias("_f")))
-    return final.select(
-        "user_id", F.col("_f.n").alias("n"),
-        (F.col("_f.sum_micros") / F.lit(1_000_000.0)).alias("sum_value"))
+    out = _click_purchase_lags(spark, events_dir, "inner")
+    return _drain_emissions(spark, out, "append",
+                            checkpoint=checkpoint, query_name=query_name)
 
 
 #: Bucket count for the incrementally-merged aggregate table. At 100 TB
-#: key cardinality this would be ~1024; tests use the default too (the
-#: touched-bucket arithmetic is identical, only dir counts change).
+#: key cardinality this would be ~1024 (the touched-bucket arithmetic
+#: is identical, only dir counts change).
 MERGE_BUCKETS = 64
 
 
@@ -712,14 +558,13 @@ def _read_buckets(spark: SparkSession, table_dir: str,
 
 
 def merge_delta_into_bucketed_table(spark: SparkSession, delta: DataFrame,
-                                    batch_id: int, table_dir: str, *,
-                                    num_buckets: int = MERGE_BUCKETS) -> None:
+                                    batch_id: int, table_dir: str) -> None:
     """MERGE one epoch's per-user delta ``(user_id, d_n, d_sum)`` into
     the bucketed versioned table — the foreachBatch body, exposed so
     tests can replay an epoch directly (retry simulation).
 
     Scale shape: the table is hash-bucketed by user_id (pmod
-    ``num_buckets``), and an epoch rewrites ONLY the buckets its delta
+    :data:`MERGE_BUCKETS`), and an epoch rewrites ONLY the buckets its delta
     touches — cost O(|delta| x bucket-size) per epoch, not O(|table|)
     (the unbucketed full-outer rewrite pays a full-table shuffle for
     every small delta). Each touched bucket gets an immutable
@@ -728,9 +573,8 @@ def merge_delta_into_bucketed_table(spark: SparkSession, delta: DataFrame,
     rewrites exactly its own (bucket, version) dirs from the
     strictly-older state it originally read (see _bucket_versions).
     """
-    delta = (delta.withColumn("b", F.pmod(F.hash("user_id"),
-                                          F.lit(num_buckets)))
-             .persist())
+    bucket = F.pmod(F.hash("user_id"), F.lit(MERGE_BUCKETS))
+    delta = delta.withColumn("b", bucket).persist()
     touched = {r.b for r in delta.select("b").distinct().collect()}
     base_vers = {b: v for b, v in
                  _bucket_versions(table_dir, below=batch_id).items()
@@ -743,9 +587,7 @@ def merge_delta_into_bucketed_table(spark: SparkSession, delta: DataFrame,
     else:
         merged = (base.join(delta, "user_id", "full_outer")
                   .select("user_id",
-                          F.coalesce("b", F.pmod(F.hash("user_id"),
-                                                 F.lit(num_buckets)))
-                          .alias("b"),
+                          F.coalesce("b", bucket).alias("b"),
                           (F.coalesce("n", F.lit(0))
                            + F.coalesce("d_n", F.lit(0))).alias("n"),
                           (F.coalesce("sum_micros", F.lit(0))
@@ -773,8 +615,6 @@ def read_bucketed_table(spark: SparkSession, table_dir: str) -> DataFrame:
 def streaming_incremental_merge(spark: SparkSession, events_dir: str, *,
                                 table_dir: str, checkpoint: str,
                                 query_name: str,
-                                max_files_per_trigger: int = 1,
-                                num_buckets: int = MERGE_BUCKETS,
                                 vacuum_keep: int | None = None) -> DataFrame:
     """foreachBatch incremental MERGE: maintain a materialized per-user
     (n, sum_micros) aggregate table across micro-batches — the
@@ -794,30 +634,25 @@ def streaming_incremental_merge(spark: SparkSession, events_dir: str, *,
 
     Returns the final table state (latest version of every bucket).
     """
-    events = _events_stream(spark, events_dir,
-                            max_files=max_files_per_trigger)
+    events = _events_stream(spark, events_dir, max_files=1)
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        with _batch_shuffle_scope(spark):
-            delta = (batch_df
-                     .select("user_id",
-                             (F.col("value").cast("decimal(18,6)")
-                              * 1_000_000)
-                             .cast("long").alias("vm"))
-                     .groupBy("user_id")
-                     .agg(F.count("*").alias("d_n"),
-                          F.sum("vm").alias("d_sum")))
-            merge_delta_into_bucketed_table(spark, delta, batch_id,
-                                            table_dir,
-                                            num_buckets=num_buckets)
-            if vacuum_keep is not None:
-                from ..operators.maintenance import vacuum_versions
-                vacuum_versions(table_dir, keep=vacuum_keep)
+        delta = (batch_df
+                 .select("user_id",
+                         (F.col("value").cast("decimal(18,6)") * 1_000_000)
+                         .cast("long").alias("vm"))
+                 .groupBy("user_id")
+                 .agg(F.count("*").alias("d_n"),
+                      F.sum("vm").alias("d_sum")))
+        merge_delta_into_bucketed_table(spark, delta, batch_id, table_dir)
+        if vacuum_keep is not None:
+            from ..operators.maintenance import vacuum_versions
+            vacuum_versions(table_dir, keep=vacuum_keep)
 
-    query = _drain(spark, events.writeStream.foreachBatch(merge_batch)
-             .queryName(query_name)
-             .option("checkpointLocation", checkpoint)
-             .trigger(availableNow=True))
+    _drain(spark, events.writeStream.foreachBatch(merge_batch)
+           .queryName(query_name)
+           .option("checkpointLocation", checkpoint)
+           .trigger(availableNow=True))
     return read_bucketed_table(spark, table_dir)
 
 
@@ -850,11 +685,10 @@ def streaming_rate_limit_final(spark: SparkSession, events_dir: str, *,
     user appears in; n_seen is monotone so the final state row is the
     max_by.
 
-    Sinks mirror streaming_cusum_final: memory sink by default; pass
-    ``output_dir`` for the checkpoint-recoverable foreachBatch parquet
-    sink (a stopped query restarted with the same checkpoint resumes
-    the restored (level, admitted, last_ts, seen) state over only the
-    new files — the restart test's subject)."""
+    Sinks: see :func:`_drain_emissions`.  With ``output_dir`` a
+    restarted query resumes the restored (level, admitted, last_ts,
+    seen) state over only the new files — the restart test's
+    subject."""
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -888,21 +722,9 @@ def streaming_rate_limit_final(spark: SparkSession, events_dir: str, *,
                          " seen LONG"),
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout))
-    if output_dir is not None:
-        def sink(batch_df: DataFrame, _epoch: int) -> None:
-            batch_df.write.mode("append").parquet(output_dir)
-
-        query = _drain(spark, out.writeStream.outputMode("update")
-                 .foreachBatch(sink)
-                 .option("checkpointLocation", checkpoint)
-                 .trigger(availableNow=True))
-        emissions = spark.read.parquet(output_dir)
-    else:
-        query = _drain(spark, out.writeStream.outputMode("update")
-                 .format("memory").queryName(query_name)
-                 .option("checkpointLocation", checkpoint)
-                 .trigger(availableNow=True))
-        emissions = spark.table(query_name)
+    emissions = _drain_emissions(spark, out, "update",
+                                 checkpoint=checkpoint, query_name=query_name,
+                                 output_dir=output_dir)
     return (emissions
             .groupBy("user_id")
             .agg(F.max("n_seen").alias("n_events"),
@@ -972,11 +794,8 @@ def streaming_match_recognize_final(spark: SparkSession,
         stateStructType="matches LONG, fsm LONG, seen LONG",
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout))
-    query = _drain(spark, out.writeStream.outputMode("update")
-             .format("memory").queryName(query_name)
-             .option("checkpointLocation", checkpoint)
-             .trigger(availableNow=True))
-    emissions = spark.table(query_name)
+    emissions = _drain_emissions(spark, out, "update",
+                                 checkpoint=checkpoint, query_name=query_name)
     return (emissions.groupBy("user_id")
             .agg(F.max("n_seen").alias("n_events"),
                  F.max_by("n_matches", "n_seen").alias("n_matches"),
@@ -1045,11 +864,8 @@ def streaming_holt_final(spark: SparkSession, events_dir: str, *,
         stateStructType="x1 DOUBLE, l DOUBLE, b DOUBLE, seen LONG",
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout))
-    query = _drain(spark, out.writeStream.outputMode("update")
-             .format("memory").queryName(query_name)
-             .option("checkpointLocation", checkpoint)
-             .trigger(availableNow=True))
-    emissions = spark.table(query_name)
+    emissions = _drain_emissions(spark, out, "update",
+                                 checkpoint=checkpoint, query_name=query_name)
     return (emissions.groupBy("user_id")
             .agg(F.max("n_seen").alias("n_events"),
                  F.max_by("l", "n_seen").alias("lf"),
@@ -1156,26 +972,11 @@ def streaming_changepoint_final(spark: SparkSession, events_dir: str, *,
         stateStructType="hrs ARRAY<LONG>, ns ARRAY<LONG>, seen LONG",
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout))
-    if output_dir is not None:
-        # Checkpoint-recoverable sink (the streaming_cusum contract):
-        # a stopped query restarted with the same checkpoint folds only
-        # the new files onto the restored histograms, and the parquet
-        # dir accumulates every emission across runs so the max_by
-        # read below stays current for all types.
-        def sink(batch_df: DataFrame, _epoch: int) -> None:
-            batch_df.write.mode("append").parquet(output_dir)
-
-        query = _drain(spark, out.writeStream.outputMode("update")
-                 .foreachBatch(sink)
-                 .option("checkpointLocation", checkpoint)
-                 .trigger(availableNow=True))
-        emissions = spark.read.parquet(output_dir)
-    else:
-        query = _drain(spark, out.writeStream.outputMode("update")
-                 .format("memory").queryName(query_name)
-                 .option("checkpointLocation", checkpoint)
-                 .trigger(availableNow=True))
-        emissions = spark.table(query_name)
+    # With output_dir a restarted query folds only the new files onto
+    # the restored histograms (the streaming_cusum contract).
+    emissions = _drain_emissions(spark, out, "update",
+                                 checkpoint=checkpoint, query_name=query_name,
+                                 output_dir=output_dir)
     # seen is monotone per type: max_by(seen) is the drained state.
     # Means + rounding are JVM-side with the batch plan's expression
     # trees; the L >= 2 floor applies on the drained state (a stream

@@ -1,0 +1,62 @@
+"""Every streaming query in the package starts and drains in
+``streaming/jobs.py::_drain``, and every collecting sink is built in
+``_drain_emissions``.  A static check over the package source: a second
+``.start()`` or memory sink would be a drain that per-query settings
+(the state-partition pin) and progress capture silently miss."""
+
+from __future__ import annotations
+
+import ast
+import pathlib
+
+import kinesis_s3_data_shipper_spark
+
+PKG = pathlib.Path(kinesis_s3_data_shipper_spark.__file__).parent
+JOBS = "streaming/jobs.py"
+
+
+def _call_sites(is_match) -> list[tuple[str, str | None]]:
+    """(module path, innermost enclosing function) of every call in the
+    package that ``is_match`` accepts."""
+    sites = []
+
+    def visit(node, path, func):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                visit(child, path, child.name)
+                continue
+            if isinstance(child, ast.Call) and is_match(child):
+                sites.append((path, func))
+            visit(child, path, func)
+
+    for file in sorted(PKG.rglob("*.py")):
+        tree = ast.parse(file.read_text(), filename=str(file))
+        visit(tree, file.relative_to(PKG).as_posix(), None)
+    return sites
+
+
+def _method(*names):
+    return lambda call: (isinstance(call.func, ast.Attribute)
+                         and call.func.attr in names)
+
+
+def test_streams_start_and_wait_only_in_drain():
+    assert _call_sites(_method("start", "toTable")) == [(JOBS, "_drain")]
+    assert _call_sites(_method("awaitTermination")) == [(JOBS, "_drain")]
+
+
+def test_memory_sink_built_only_in_drain_emissions():
+    def memory_format(call):
+        return (_method("format")(call) and len(call.args) == 1
+                and isinstance(call.args[0], ast.Constant)
+                and call.args[0].value == "memory")
+
+    assert _call_sites(memory_format) == [(JOBS, "_drain_emissions")]
+
+
+def test_foreach_batch_sinks():
+    """The parquet emission sink lives in the helper; only the two
+    queries whose batch body does its own work build another."""
+    assert sorted(_call_sites(_method("foreachBatch"))) == [
+        (JOBS, "_drain_emissions"), (JOBS, "streaming_incremental_merge"),
+        (JOBS, "streaming_ingest")]

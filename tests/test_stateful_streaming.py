@@ -31,43 +31,6 @@ def test_running_counts_match_batch(spark, tmp_path, sf_small):
     assert got_map == want_map
 
 
-def test_tws_user_stats_match_batch(spark, tmp_path, sf_small):
-    """transformWithStateInPandas (Spark 4 StatefulProcessor): running
-    per-user (n, exact sum) carried in ValueState across two
-    micro-batches must land on 2x the single-copy batch aggregate.
-    Skipped where the TWS python runner's protobuf dependency is
-    absent; streaming_running_user_counts covers the same contract on
-    the applyInPandasWithState API there."""
-    import pytest
-
-    from kinesis_s3_data_shipper_spark.streaming.jobs import (
-        streaming_user_stats_tws, tws_available)
-    if not tws_available():
-        pytest.skip("protobuf unavailable: TWS python runner can't start")
-
-    from pyspark.sql import functions as F
-
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    src = f"{sf_small}/events.parquet"
-    shutil.copy(src, landing / "a.parquet")
-    shutil.copy(src, landing / "b.parquet")
-
-    got = streaming_user_stats_tws(
-        spark, str(landing), checkpoint=str(tmp_path / "ckpt_tws"),
-        query_name="tws_stats_test")
-    got_map = {r.user_id: (r.n, round(r.sum_value, 6))
-               for r in got.collect()}
-
-    want = (spark.read.parquet(src).groupBy("user_id")
-            .agg(F.count("*").alias("n"),
-                 F.sum(F.col("value").cast("decimal(18,6)"))
-                 .alias("s")).collect())
-    want_map = {r.user_id: (2 * r.n, round(float(2 * r.s), 6))
-                for r in want}
-    assert got_map == want_map
-
-
 def test_incremental_merge_matches_batch(spark, tmp_path, sf_small):
     """foreachBatch MERGE: two micro-batches of the same file must
     leave the materialized table at exactly 2x the single-copy batch

@@ -62,42 +62,3 @@ def test_drain_restores_conf_on_failure(spark):
     with pytest.raises(RuntimeError):
         _drain(spark, Boom())
     assert spark.conf.get(key) == before
-
-
-def test_state_partitions_env_pin_fresh_interpreter():
-    """STATE_PARTITIONS reads SPARK_GRAFT_STREAM_STATE_PARTITIONS at
-    import time — a deployment that sets the env var must see it take
-    effect in a fresh interpreter (r12 verdict ask #6).  Plain import,
-    no Spark session needed."""
-    import subprocess
-    import sys
-    env = dict(os.environ,
-               SPARK_GRAFT_STREAM_STATE_PARTITIONS="5",
-               SPARK_GRAFT_STREAM_BATCH_SHUFFLE_PARTITIONS="96")
-    out = subprocess.run(
-        [sys.executable, "-c",
-         "from kinesis_s3_data_shipper_spark.streaming import jobs;"
-         "print(jobs.STATE_PARTITIONS, jobs._BATCH_SINK_PARTITIONS)"],
-        capture_output=True, text=True, env=env, check=True)
-    assert out.stdout.split() == ["5", "96"], out.stdout
-
-
-def test_batch_shuffle_scope_lifts_and_restores(spark, monkeypatch):
-    """Inside a foreachBatch body the scope lifts the drain pin to the
-    deployment's batch-compute value and restores it; unset -> no-op
-    (r12 advice: the pin must not silently cap batch parallelism when
-    the deployment says otherwise)."""
-    from kinesis_s3_data_shipper_spark.streaming import jobs
-    key = "spark.sql.shuffle.partitions"
-    before = spark.conf.get(key)
-    try:
-        spark.conf.set(key, str(STATE_PARTITIONS))
-        monkeypatch.setattr(jobs, "_BATCH_SINK_PARTITIONS", "96")
-        with jobs._batch_shuffle_scope(spark):
-            assert spark.conf.get(key) == "96"
-        assert spark.conf.get(key) == str(STATE_PARTITIONS)
-        monkeypatch.setattr(jobs, "_BATCH_SINK_PARTITIONS", None)
-        with jobs._batch_shuffle_scope(spark):
-            assert spark.conf.get(key) == str(STATE_PARTITIONS)
-    finally:
-        spark.conf.set(key, before)
