@@ -4,70 +4,79 @@ Two primitives every checkpoint-per-round loop in this repo needs
 (k-core / PageRank / Louvain fixpoints, min-label connected
 components):
 
-- :func:`truncated_checkpoint` — eager ``localCheckpoint`` plus a
-  STATS FIREWALL.  ``Dataset.localCheckpoint`` copies the origin
-  plan's estimated statistics into the new LogicalRDD
-  (``rewriteStatsAndConstraints``), and size-only join estimation
-  MULTIPLIES children's ``sizeInBytes`` — so when a loop builds round
-  N's checkpoints from round N-1's checkpoints, the BigInt estimate
-  compounds exponentially in the round count.  By Louvain level 5 the
-  driver spent ~70 s per level multiplying megabyte-long BigIntegers
-  inside ``SizeInBytesOnlyStatsPlanVisitor`` (jstack-verified) while
-  executors idled; the 6-level loop dropped 98 s -> 10 s after the
-  firewall.  The fix re-wraps the SAME persisted RDD without origin
-  stats.  Join strategy is unaffected: the inherited products were
-  already far above every broadcast threshold, exactly like the
-  default leaf estimate that replaces them, and explicit
-  ``broadcast()`` hints still apply.
+- :func:`truncated_checkpoint` — eager ``localCheckpoint`` that
+  reports the checkpoint's MEASURED size.  ``Dataset.localCheckpoint``
+  copies the origin plan's estimated statistics into the new
+  LogicalRDD, and size-only join estimation MULTIPLIES children's
+  ``sizeInBytes`` — so when a loop builds round N's checkpoints from
+  round N-1's checkpoints, the BigInt estimate compounds
+  exponentially in the round count (the Louvain fixpoint once spent
+  ~70 s per level multiplying megabyte-long BigIntegers in the
+  driver).  The origin estimate is therefore dropped, and the
+  checkpoint instead reports the row count observed while it was
+  written, times the schema's row width — Spark's own size for
+  exactly that many rows.  ``autoBroadcastJoinThreshold`` and AQE
+  then pick the join from the real size: a node-sized frame
+  broadcasts while it is small and sort-merge joins once it is not,
+  with no hint at the call site.
 
 - :func:`release_checkpoint` — free a checkpointed frame's blocks
   once the loop has superseded it, so live storage stays O(1) rounds
   instead of O(rounds) (an 8-round peel otherwise parks ~17
   edge-scale block sets for the session lifetime).
 
-Both reach through private APIs (``internalCreateDataFrame`` is
-``private[sql]``, which compiles to a public JVM method) and degrade
-gracefully: a Spark release that moves the internals falls back to
-the plain checkpoint / skips the release — correctness is never
-affected, only deep-loop driver time and disk residency.
-``tests/test_truncated_checkpoint.py`` carries a canary that fails
-the suite (instead of silently restoring the 98 s stall) if the wrap
-ever degrades to the fallback on the running Spark version.
+Both reach through private APIs (the ``LogicalRDD`` constructor and
+``classic.Dataset.ofRows``) and degrade gracefully: a Spark release
+that moves the internals falls back to the plain checkpoint / skips
+the release — correctness is never affected, only join choice, deep-
+loop driver time and disk residency.  ``tests/test_truncated_
+checkpoint.py`` fails the suite if the measured size ever degrades to
+the fallback's inherited estimate on the running Spark version.
 
-TRADEOFF the stats firewall accepts: ``internalCreateDataFrame``
-re-wraps with UNKNOWN outputPartitioning/outputOrdering, while
-``localCheckpoint``'s own LogicalRDD preserves both.  A loop whose
-per-round join could have REUSED the checkpoint's partitioning
-(checkpoint keyed on the join key, joined on it next round) will
-re-shuffle the wrapped frame where the plain checkpoint would not.
-Every current fixpoint loop re-keys between rounds anyway (the bench
-numbers are a net win), but a future shape that relies on checkpoint
-partitioning reuse should pass the frame through plain
-``localCheckpoint`` and cap its loop depth instead.
+The re-wrapped leaf keeps the outputPartitioning and outputOrdering
+that ``localCheckpoint`` recorded (under AQE usually none), and drops
+the origin's constraints along with its statistics.
 """
 
 from __future__ import annotations
 
 import logging
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
+from pyspark.sql import functions as F
 
 log = logging.getLogger(__name__)
 
 
 def truncated_checkpoint(df: DataFrame, storage_level=None) -> DataFrame:
-    """Eager localCheckpoint with the stats firewall (module doc)."""
-    if storage_level is None:
-        ckpt = df.localCheckpoint(eager=True)
-    else:
-        ckpt = df.localCheckpoint(eager=True, storageLevel=storage_level)
+    """Eager localCheckpoint that reports its measured size (module
+    doc)."""
+    obs = Observation()
+    ckpt = (df.observe(obs, F.count(F.lit(1)).alias("rows"))
+            .localCheckpoint(eager=True, storageLevel=storage_level))
     try:
         spark = ckpt.sparkSession
-        jrdd = ckpt._jdf.queryExecution().analyzed().rdd()
-        jdf = spark._jsparkSession.internalCreateDataFrame(
-            jrdd, ckpt._jdf.schema(), False)
-        return DataFrame(jdf, spark)
-    except Exception:
+        jvm, jss = spark._jvm, spark._jsparkSession
+        leaf = ckpt._jdf.queryExecution().analyzed()
+        none = jvm.scala.Option.empty()
+
+        def wrap(stats):  # the checkpoint's RDD as a LogicalRDD
+            return jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+                jss, jvm.org.apache.spark.sql.execution.LogicalRDD(
+                    leaf.output(), leaf.rdd(), leaf.outputPartitioning(),
+                    leaf.outputOrdering(), False, none, jss, stats, none))
+
+        # Spark sizes a limit(n) over a stats-free leaf as n × row width,
+        # so its Statistics is the measured size.  It stays a JVM object:
+        # py4j returns a scala BigInt to Python as an int, so Statistics
+        # cannot be built from Python.  Past Int.MaxValue rows the frame
+        # reports that many, far above any broadcast threshold.
+        stats = (wrap(none).limit(min(obs.get["rows"], 2**31 - 1))
+                 .queryExecution().optimizedPlan().stats())
+        return DataFrame(wrap(jvm.scala.Some(stats)), spark)
+    except Exception as exc:  # private-API drift: fall back, but say so
+        log.warning("truncated_checkpoint kept the inherited size "
+                    "estimate (%s)", exc)
         return ckpt
 
 

@@ -938,7 +938,7 @@ def setsim_prefix_pairs(docs: DataFrame, *, id_col: str = "doc_id",
     # collision instead of merely costing work.
     toksh = toks.select("doc_id", F.xxhash64("word").alias("word"))
     df = toksh.groupBy("word").agg(F.count("*").alias("df"))
-    ranked = (toksh.join(F.broadcast(df), "word")
+    ranked = (toksh.join(df, "word")
               .withColumn("pos", F.row_number().over(
                   W.partitionBy("doc_id").orderBy("df", "word")))
               .withColumn("s", F.count("*").over(W.partitionBy("doc_id"))))

@@ -266,7 +266,7 @@ def ivf_assign_broadcast(vectors: DataFrame, centroids: DataFrame, *,
     best = F.max(F.struct(F.col("_cos").alias("c"),
                           (-F.col("cid")).alias("neg_cid"),
                           F.col("cid").alias("cid")))
-    return (v.crossJoin(F.broadcast(c))
+    return (v.crossJoin(c)
             .select(id_col, cos.alias("_cos"), "cid")
             .groupBy(id_col)
             .agg(best.alias("_best"))
@@ -427,7 +427,7 @@ def cosine_topk(corpus: DataFrame, queries: DataFrame, *, id_col: str,
                       F.col(vec_col).alias("_cv"),
                       norm(vec_col, dim).alias("_cn"))
     scored = (
-        c.crossJoin(F.broadcast(q))
+        c.crossJoin(q)
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .select("query_id", "neighbor_id",
                 F.round(dot("_qv", "_cv", dim)

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..functions.decimal_safe import fixed2_str, sql_fixed2_str
+from ..operators.checkpoint import release_checkpoint
 from ..sources.tables import load_table
 from .base import register
 
@@ -80,7 +81,7 @@ def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     np_ = p.agg(F.count("*").alias("n_view_click_purchase"))
     # Three 1-row aggregates combine via broadcast-nested-loop — no
     # shuffle, no driver collect.
-    return nv.join(F.broadcast(nc)).join(F.broadcast(np_))
+    return nv.join(nc).join(np_)
 
 
 @register("events_retention_cohort", oracle=f"""
@@ -214,7 +215,7 @@ def agg_sketch_merge_kll(spark: SparkSession, sf_dir: str) -> DataFrame:
                       F.element_at("_sks", 1),
                       lambda acc, x: F.kll_sketch_merge_double(acc, x)),
                   F.lit(0.5)).alias("_med_est")))
-    return (ev.join(F.broadcast(merged), "event_type")
+    return (ev.join(merged, "event_type")
             .groupBy("event_type")
             .agg(F.count("*").alias("exact_n"),
                  F.avg((F.col("value") <= F.col("_med_est"))
@@ -546,33 +547,10 @@ def _graph_ckpt(df: DataFrame) -> DataFrame:
     recomputing — a cluster deployment would back these blocks with
     reliable shuffle storage; the plan SHAPE is what carries to
     100 TB."""
-    # The eager checkpoint includes the STATS FIREWALL: without it,
-    # chained per-level checkpoints compound the inherited BigInt
-    # sizeInBytes estimate exponentially and the Louvain fixpoint
-    # spent ~70 s/level in driver-side BigInteger math by level 5
-    # (operators/checkpoint.py documents the mechanism; 98 s -> 10 s
-    # for the 6-level loop after the fix).
     from pyspark.storagelevel import StorageLevel
 
     from ..operators.checkpoint import truncated_checkpoint
     return truncated_checkpoint(df, StorageLevel.DISK_ONLY)
-
-
-def _graph_unpersist(df: DataFrame) -> None:
-    """Free a :func:`_graph_ckpt` frame's blocks once it is superseded.
-
-    Iterative plans (k-core / Louvain / PageRank fixpoints) checkpoint
-    every round; without explicit release the session accumulates one
-    edge-scale DISK_ONLY block set PER ROUND for its lifetime (r08
-    advice: ~17 sets after an 8-round peel) — real disk at the 100 TB
-    shape these plans target.  ``localCheckpoint`` offers no public
-    unpersist, so this reaches the checkpointed RDD through the
-    LogicalRDD plan node; best-effort by design (a Spark version that
-    moves the internals just skips the release — correctness is
-    unaffected because callers only release frames no live result
-    depends on)."""
-    from ..operators.checkpoint import release_checkpoint
-    release_checkpoint(df)
 
 
 def _copurchase_edges(spark: SparkSession, sf_dir: str, *,
@@ -630,7 +608,7 @@ def _oriented_edges(e: DataFrame) -> tuple[DataFrame, DataFrame]:
         .groupBy("node").agg(F.count("*").alias("dg")))
     ds = deg.select(F.col("node").alias("s"), F.col("dg").alias("sdg"))
     dd = deg.select(F.col("node").alias("d"), F.col("dg").alias("ddg"))
-    ann = e.join(F.broadcast(ds), "s").join(F.broadcast(dd), "d")
+    ann = e.join(ds, "s").join(dd, "d")
     lt = (F.col("sdg") < F.col("ddg")) | \
          ((F.col("sdg") == F.col("ddg")) & (F.col("s") < F.col("d")))
     o = _graph_ckpt(ann.select(
@@ -770,9 +748,9 @@ def basket_pair_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
                    F.col("n_part").alias("n_a"))
     cb = pc.select(F.col("part").alias("part_b"),
                    F.col("n_part").alias("n_b"))
-    return (pairs.join(F.broadcast(ca), "part_a")
-            .join(F.broadcast(cb), "part_b")
-            .crossJoin(F.broadcast(n_baskets))
+    return (pairs.join(ca, "part_a")
+            .join(cb, "part_b")
+            .crossJoin(n_baskets)
             .select("part_a", "part_b", "n_ab",
                     F.round(F.col("n_ab").cast("double") / F.col("n_a"), 6)
                      .alias("confidence"),
@@ -847,7 +825,7 @@ def profile_key_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
                   F.max("c").alias("max_count"))
     w = W.orderBy("c").rowsBetween(W.unboundedPreceding, 0)
     cum = (coc.withColumn("cum", F.sum("k").over(w))
-           .crossJoin(F.broadcast(tot)))
+           .crossJoin(tot))
     p50 = (cum.filter(F.col("cum")
                       >= F.ceil(F.lit(0.5) * F.col("n_keys")).cast("long"))
            .agg(F.min("c").alias("p50_count")))
@@ -859,7 +837,7 @@ def profile_key_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .when(F.col("max_count") <= 64 * F.col("p99_count"),
                       "aqe-skew-split")
                 .otherwise("salt"))
-    return (tot.crossJoin(F.broadcast(p50)).crossJoin(F.broadcast(p99))
+    return (tot.crossJoin(p50).crossJoin(p99)
             .select("n_keys", "n_rows", "max_count", "p50_count",
                     "p99_count",
                     F.round(F.col("max_count").cast("double")
@@ -911,7 +889,7 @@ def events_funnel_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("user_id").distinct())
     nc = c.agg(F.count("*").cast("long").alias("n_clicked"))
     nv = conv.agg(F.count("*").cast("long").alias("n_converted_1h"))
-    return (nc.join(F.broadcast(nv))
+    return (nc.join(nv)
             .select("n_clicked", "n_converted_1h",
                     F.round(F.col("n_converted_1h").cast("double")
                             / F.col("n_clicked"), 6)
@@ -1037,7 +1015,7 @@ def agg_sketch_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
            .select("user_id", "exact_cnt", "r",
                    F.expr(_CMS_HASH_SPARK.format(
                        r="r", key="user_id")).alias("b"))
-           .join(F.broadcast(counters), ["r", "b"]))
+           .join(counters, ["r", "b"]))
     return (est.groupBy("user_id", "exact_cnt")
             .agg(F.min("c").alias("_est"))
             .select("user_id",
@@ -1132,8 +1110,8 @@ def graph_jaccard_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
               .agg(F.count("*").cast("long").alias("n_common")))
     da = deg.select(F.col("node").alias("pa"), F.col("dg").alias("deg_a"))
     db = deg.select(F.col("node").alias("pb"), F.col("dg").alias("deg_b"))
-    return (common.join(F.broadcast(da), "pa")
-            .join(F.broadcast(db), "pb")
+    return (common.join(da, "pa")
+            .join(db, "pb")
             .select(F.col("pa").alias("part_a"),
                     F.col("pb").alias("part_b"),
                     "n_common",
@@ -1289,15 +1267,13 @@ def _kcore_degrees(edges: DataFrame) -> DataFrame:
 
 
 def _kcore_peel(edges: DataFrame, deg: DataFrame) -> DataFrame:
-    # r14: the alive set is node-sized — broadcast both semi-joins
-    # (the _oriented_edges degree-annotation pattern) so a peel round
-    # never shuffles the edge-scale frame by u and again by v.
+    # The alive set is node-sized: while its checkpointed degrees are
+    # under the broadcast threshold both semi-joins broadcast, and a
+    # peel round never shuffles the edge-scale frame by u and by v.
     alive = deg.filter(F.col("dg") >= _KCORE_K).select("node")
     return (edges
-            .join(F.broadcast(alive.withColumnRenamed("node", "u")),
-                  "u", "left_semi")
-            .join(F.broadcast(alive.withColumnRenamed("node", "v")),
-                  "v", "left_semi"))
+            .join(alive.withColumnRenamed("node", "u"), "u", "left_semi")
+            .join(alive.withColumnRenamed("node", "v"), "v", "left_semi"))
 
 
 #: Benford first-digit expectation, per mille: round(log10(1+1/d)*1000)
@@ -1355,9 +1331,9 @@ def profile_benford_digits(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = c.agg(F.sum("n").cast("long").alias("total"))
     e = values_df(spark, _BENFORD_MILLI, "digit long, exp_milli long")
     obs = F.expr("(1000 * COALESCE(n, 0L)) div total")
-    return (F.broadcast(e)
+    return (e
             .join(c, "digit", "left")
-            .crossJoin(F.broadcast(t))
+            .crossJoin(t)
             .select("digit",
                     F.coalesce("n", F.lit(0)).cast("long").alias("n"),
                     obs.alias("obs_milli"), "exp_milli",
@@ -1460,7 +1436,7 @@ def _louvain_graph(spark: SparkSession,
     # und is materialized; the oriented s<d list is dead (the
     # pagerank fixpoint's convention — left live it survived every
     # Louvain call, caught by the r11 block-count gate).
-    _graph_unpersist(ew)
+    release_checkpoint(ew)
     deg = _graph_ckpt(und.groupBy(F.col("u").alias("node"))
                       .agg(F.sum("w").cast("long").alias("k")))
     m2 = deg.agg(F.sum("k").cast("long").alias("m2"))
@@ -1475,21 +1451,17 @@ def _louvain_merge_decision(und: DataFrame, deg: DataFrame,
     put when the best gain is <= 0.  Shared verbatim by the phase-1
     merge step and the phase-2 contracted re-run, mirroring the
     oracle's shared CTE prefix."""
-    # r14: the degree annotations are node-sized BROADCASTS (the
-    # _oriented_edges degree-annotation pattern this graph family
-    # already uses, and the r13 verdict's louvain ask): without the
-    # hint the stats-firewalled checkpoints default to huge estimates
-    # and every per-level join sort-merge-shuffles the EDGE-scale
-    # frame by u and again by v — measured 5 Exchanges in the level-0
-    # decision job vs 1 (the argmax groupBy) after.  Deg shrinks every
-    # contraction level, so level 0's node set is the broadcast
-    # ceiling, identical to the jaccard/triangle family's.
+    # The degree annotations are node-sized: deg is a checkpoint
+    # reporting its measured size, so while it is under the broadcast
+    # threshold both joins broadcast and the level's only Exchange is
+    # the argmax groupBy (5 Exchanges when they sort-merge).  Deg
+    # shrinks every contraction level, so level 0 is the largest.
     gains = (und
-             .join(F.broadcast(deg.select(F.col("node").alias("u"),
-                                          F.col("k").alias("ku"))), "u")
-             .join(F.broadcast(deg.select(F.col("node").alias("v"),
-                                          F.col("k").alias("kv"))), "v")
-             .crossJoin(F.broadcast(m2))
+             .join(deg.select(F.col("node").alias("u"),
+                              F.col("k").alias("ku")), "u")
+             .join(deg.select(F.col("node").alias("v"),
+                              F.col("k").alias("kv")), "v")
+             .crossJoin(m2)
              .select(F.col("u").alias("node"),
                      F.col("v").alias("neighbor"), "ku",
                      (F.col("m2") * F.col("w")
@@ -1577,27 +1549,25 @@ def graph_louvain_contract_step(spark: SparkSession,
     und, deg, m2 = _louvain_graph(spark, sf_dir)
     comm = _graph_ckpt(_louvain_merge_decision(und, deg, m2)
                        .select("node", "community"))
-    # r14: node-sized community map broadcast into the contraction
-    # joins (the fixpoint loop's rationale, same annotation pattern).
     cund = _graph_ckpt(
-        und.join(F.broadcast(comm.select(F.col("node").alias("u"),
-                                         F.col("community")
-                                         .alias("cu"))), "u")
-        .join(F.broadcast(comm.select(F.col("node").alias("v"),
-                                      F.col("community")
-                                      .alias("cv"))), "v")
+        und.join(comm.select(F.col("node").alias("u"),
+                             F.col("community")
+                             .alias("cu")), "u")
+        .join(comm.select(F.col("node").alias("v"),
+                          F.col("community")
+                          .alias("cv")), "v")
         .filter(F.col("cu") != F.col("cv"))
         .groupBy(F.col("cu").alias("u"), F.col("cv").alias("v"))
         .agg(F.sum("w").cast("long").alias("w")))
     cdeg = _graph_ckpt(
-        deg.join(F.broadcast(comm), "node")
+        deg.join(comm, "node")
         .groupBy(F.col("community").alias("node"))
         .agg(F.sum("k").cast("long").alias("k")))
     decided = _louvain_merge_decision(cund, cdeg, m2)
     return (cdeg.select("node", F.col("k").alias("k_node"))
-            .join(F.broadcast(decided.select(
+            .join(decided.select(
                       "node", F.col("community").alias("comm2"),
-                      F.col("gain_num").alias("g2"))),
+                      F.col("gain_num").alias("g2")),
                   "node", "left")
             .select("node", "k_node",
                     F.coalesce("comm2", F.col("node")).alias("community"),
@@ -1678,7 +1648,7 @@ def graph_kcore_fixpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionAll(e.select(F.col("d").alias("u"),
                            F.col("s").alias("v")))
         .observe(obs0, F.count(F.lit(1)).alias("n_edges")))
-    _graph_unpersist(e)  # und is materialized; the directed list is dead
+    release_checkpoint(e)  # und is materialized; the directed list is dead
     n_edges = obs0.get["n_edges"]
     for _ in range(_KCORE_FIX_ROUNDS):
         # The degree table feeds BOTH semi-join sides of the peel; the
@@ -1692,7 +1662,7 @@ def graph_kcore_fixpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Each round's eager materialization has fully consumed deg and
         # (on progress) the previous survivor set — release superseded
         # rounds so live blocks stay O(1) rounds, not O(rounds).
-        _graph_unpersist(deg)
+        release_checkpoint(deg)
         # RETRY CAVEAT (r13 advice): observed metrics are accumulator-
         # backed, and task/stage RETRIES can overcount them at cluster
         # scale.  Pagerank/louvain fusions fail safe (an overcount only
@@ -1705,9 +1675,9 @@ def graph_kcore_fixpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
         # deployment that re-backs the checkpoints with reliable
         # storage must also swap this check for an exact count().
         if n_next == n_edges:
-            _graph_unpersist(survived)  # fixpoint: und already holds it
+            release_checkpoint(survived)  # fixpoint: und already holds it
             break
-        _graph_unpersist(und)
+        release_checkpoint(und)
         und, n_edges = survived, n_next
     return (und.groupBy(F.col("u").alias("node"))
             .agg(F.count("*").cast("long").alias("core_deg")))
@@ -1783,7 +1753,7 @@ def graph_pagerank_fixpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.select(F.col("s").alias("u"), F.col("d").alias("v"))
         .unionAll(e.select(F.col("d").alias("u"),
                            F.col("s").alias("v"))))
-    _graph_unpersist(e)  # und is materialized; the directed list is dead
+    release_checkpoint(e)  # und is materialized; the directed list is dead
     outdeg = _graph_ckpt(
         und.groupBy("u").agg(F.count("*").cast("long").alias("d")))
     rank = _graph_ckpt(
@@ -1801,15 +1771,13 @@ def graph_pagerank_fixpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
         # metric's count matches the old inner-join count exactly:
         # _prev is non-null for every node, and count(when(...))
         # counts strict pr inequality.
-        # r14: rank/outdeg are node-sized — broadcast them (the
-        # _oriented_edges degree-annotation pattern) so each round's
-        # job shuffles only the contribution groupBy, never the
-        # edge-scale und by u (measured 4 Exchanges -> 1 per round).
+        # rank/outdeg are node-sized checkpoints: while under the
+        # broadcast threshold they broadcast, and each round shuffles
+        # only the contribution groupBy (4 Exchanges -> 1 per round).
         obs = Observation()
         nxt = _graph_ckpt(
-            und.join(F.broadcast(rank.select(F.col("node").alias("u"),
-                                             "pr")), "u")
-            .join(F.broadcast(outdeg), "u")
+            und.join(rank.select(F.col("node").alias("u"), "pr"), "u")
+            .join(outdeg, "u")
             .select(F.col("v").alias("node"),
                     F.expr("pr div d").alias("c"))
             .groupBy("node")
@@ -1817,8 +1785,7 @@ def graph_pagerank_fixpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "CAST(150000000000 + "
                 "(85 * sum(CAST(c AS DECIMAL(38,0)))) div 100 "
                 "AS BIGINT)").alias("pr"))
-            .join(F.broadcast(rank.select("node",
-                                          F.col("pr").alias("_prev"))),
+            .join(rank.select("node", F.col("pr").alias("_prev")),
                   "node", "left")
             .observe(obs, F.count(F.when(
                 F.col("_prev").isNotNull()
@@ -1826,15 +1793,15 @@ def graph_pagerank_fixpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
             .drop("_prev"))
         n_changed = obs.get["n_changed"]
         if n_changed == 0:
-            _graph_unpersist(nxt)  # fixpoint: rank already holds it
+            release_checkpoint(nxt)  # fixpoint: rank already holds it
             break
-        _graph_unpersist(rank)
+        release_checkpoint(rank)
         rank = nxt
     # Only the final rank checkpoint feeds the result; the edge set
     # and out-degrees are superseded once iteration stops (r10 verdict
     # ask #6's block-count gate caught both surviving the session).
-    _graph_unpersist(und)
-    _graph_unpersist(outdeg)
+    release_checkpoint(und)
+    release_checkpoint(outdeg)
     return rank.select("node", F.col("pr").alias("pagerank_scaled"))
 
 
@@ -1981,15 +1948,11 @@ def graph_louvain_fixpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
         # column is already in the frame, so the separate
         # comm.agg(sum).first() job that ran once per level was pure
         # scheduling floor on a tiny plan.
-        # r14: dec/back are node-sized decision tables — broadcast them
-        # (the merge decision's degree-annotation rationale) so the
-        # comm job plans with zero Exchange instead of three node-frame
-        # shuffles.
         obs = Observation()
         comm = _graph_ckpt(
             deg.select("node")
-            .join(F.broadcast(dec), "node", "left")
-            .join(F.broadcast(back),
+            .join(dec, "node", "left")
+            .join(back,
                   (F.col("community") == F.col("t_node"))
                   & (F.col("t_comm") == F.col("node"))
                   & (F.col("gain_num") > 0)
@@ -2000,56 +1963,53 @@ def graph_louvain_fixpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.when(moved, F.col("gain_num"))
                     .otherwise(F.lit(0)).cast("long").alias("gain"))
             .observe(obs, F.sum("gain").alias("total_gain")))
-        _graph_unpersist(dec)
+        release_checkpoint(dec)
         # Convergence = nobody MOVED this level (any positive gain
         # produces at least one mover: non-mutual winners move, and a
         # mutual pair moves its larger id) — one driver-side long,
         # read from the observation the checkpoint write populated.
         total_gain = obs.get["total_gain"]
         if not total_gain:
-            _graph_unpersist(comm)
+            release_checkpoint(comm)
             break
-        # r14: comm is the node-sized community map — broadcast it into
-        # the contraction joins so the edge-scale und is never shuffled
-        # for annotation (only the contraction groupBy exchanges), and
-        # cdeg/nassign plan annotation-free of node-frame shuffles.
+        # comm is the node-sized community map: while it is under the
+        # broadcast threshold the edge-scale und is never shuffled for
+        # annotation, only for the contraction groupBy.
         cund = _graph_ckpt(
-            und.join(F.broadcast(comm.select(F.col("node").alias("u"),
-                                             F.col("community")
-                                             .alias("cu"))), "u")
-            .join(F.broadcast(comm.select(F.col("node").alias("v"),
-                                          F.col("community")
-                                          .alias("cv"))), "v")
+            und.join(comm.select(F.col("node").alias("u"),
+                                 F.col("community")
+                                 .alias("cu")), "u")
+            .join(comm.select(F.col("node").alias("v"),
+                              F.col("community")
+                              .alias("cv")), "v")
             .filter(F.col("cu") != F.col("cv"))
             .groupBy(F.col("cu").alias("u"), F.col("cv").alias("v"))
             .agg(F.sum("w").cast("long").alias("w")))
         cdeg = _graph_ckpt(
-            deg.join(F.broadcast(comm.select("node", "community")),
-                     "node")
+            deg.join(comm.select("node", "community"), "node")
             .groupBy(F.col("community").alias("node"))
             .agg(F.sum("k").cast("long").alias("k")))
         nassign = _graph_ckpt(
-            assign.join(F.broadcast(
-                comm.select(F.col("node").alias("community"),
-                            F.col("community").alias("nc"))),
+            assign.join(comm.select(F.col("node").alias("community"),
+                                    F.col("community").alias("nc")),
                         "community")
             .select("orig", F.col("nc").alias("community")))
         # Superseded level: release everything the next level and the
         # final rollup no longer read (deg0 stays — the rollup needs
         # the ORIGINAL degrees).
-        _graph_unpersist(und)
+        release_checkpoint(und)
         if deg is not deg0:
-            _graph_unpersist(deg)
-        _graph_unpersist(assign)
-        _graph_unpersist(comm)
+            release_checkpoint(deg)
+        release_checkpoint(assign)
+        release_checkpoint(comm)
         und, deg, assign = cund, cdeg, nassign
     # The returned rollup reads only assign + deg0: the FINAL level's
     # contracted graph (und, deg) is superseded the moment the loop
     # exits — release it like every earlier level's (r10 verdict ask
     # #6's block-count gate caught these two surviving the session).
-    _graph_unpersist(und)
+    release_checkpoint(und)
     if deg is not deg0:
-        _graph_unpersist(deg)
+        release_checkpoint(deg)
     return (assign.join(deg0.select(F.col("node").alias("orig"), "k"),
                         "orig")
             .groupBy(F.col("community").alias("node"))

@@ -103,13 +103,12 @@ def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
                          F.col("_loc.doc_id").alias("first_doc_id"),
                          F.col("_loc.pos").alias("_pos"))
                  .persist())  # tiny; probed twice below
-    texts = (docs.join(F.broadcast(survivors
-                                   .select("span_hash", "first_doc_id",
-                                           "_pos")),
+    texts = (docs.join(survivors
+                       .select("span_hash", "first_doc_id", "_pos"),
                        docs.doc_id == F.col("first_doc_id"))
              .select("span_hash",
                      span_text_at("text", "_pos", 20).alias("span")))
-    return (survivors.join(F.broadcast(texts), "span_hash")
+    return (survivors.join(texts, "span_hash")
             .select("span_hash", "span", "n_docs", "n_occurrences",
                     "first_doc_id"))
 
@@ -298,8 +297,8 @@ FROM embeddings e LEFT JOIN k ON e.vec_id = k.id_b
               "— 1-hop keeper assignment; transitive closure is "
               "dedup_clusters_cc's job. Scale: the only quadratic work "
               "is within-bucket (n/2^bits per bucket), the keeper agg "
-              "shuffles bare id pairs, and the left join back to the "
-              "corpus broadcasts the (tiny) dup map.")
+              "shuffles bare id pairs, and the dup map joins back to "
+              "the corpus by size (a broadcast while it is small).")
 def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import cosine_pairs, hyperplanes, lsh_bucket
     emb = load_table(spark, sf_dir, "embeddings")
@@ -309,8 +308,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
                          block_col="bucket", threshold=_EMB_DUP_TAU,
                          dim=64)
     dup_map = pairs.groupBy("id_b").agg(F.min("id_a").alias("min_dup"))
-    return (emb.join(F.broadcast(dup_map),
-                     emb.vec_id == dup_map.id_b, "left")
+    return (emb.join(dup_map, emb.vec_id == dup_map.id_b, "left")
             .select(emb.vec_id,
                     F.coalesce("min_dup", "vec_id").alias("keeper_vec_id"),
                     F.when(F.col("min_dup").isNull(), F.lit(0))
@@ -499,7 +497,7 @@ def dedup_bloom_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = docs.select(
         "doc_id",
         F.explode(F.expr(f"array({_bloom_pos_spark('text')})")).alias("p"))
-    return (cand.join(F.broadcast(pos), "p", "left")
+    return (cand.join(pos, "p", "left")
             .groupBy("doc_id")
             .agg(F.when(F.count("_m") == 3, F.lit(1)).otherwise(F.lit(0))
                  .cast("long").alias("bloom_maybe_seen")))

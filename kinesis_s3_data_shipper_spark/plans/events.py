@@ -338,7 +338,7 @@ def events_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     n, sx, sxx = F.col("n"), F.col("sx"), F.col("sxx")
     z = ((F.col("value") - sx / n)
          / F.sqrt((sxx - sx * sx / n) / (n - 1)))
-    return (ev.join(F.broadcast(s), ev.event_type == F.col("s_type"))
+    return (ev.join(s, ev.event_type == F.col("s_type"))
             .select("event_id", "event_type", "value", z.alias("zscore"))
             .filter(F.abs("zscore") > 2.5))
 
@@ -879,7 +879,7 @@ def events_sliding_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         F.explode(F.expr("sequence(day, day + 6)")).alias("wday"))
         .distinct())
-    return (contrib.crossJoin(F.broadcast(span))
+    return (contrib.crossJoin(span)
             .filter(F.col("wday") <= F.col("dmax"))
             .groupBy(F.col("wday").cast("long").alias("day"))
             .agg(F.countDistinct("user_id").cast("long")
@@ -1592,7 +1592,7 @@ def events_markov_stationary_step(spark: SparkSession,
          .localCheckpoint(eager=True))
     rowtot = (c.groupBy("src")
               .agg(F.sum("c").cast("long").alias("c_src")))
-    msg = (c.join(F.broadcast(rowtot), "src")
+    msg = (c.join(rowtot, "src")
            .select("dst", F.expr("(200000000 * c) div c_src")
                    .alias("units")))
     return (msg.groupBy(F.col("dst").alias("event_type"))

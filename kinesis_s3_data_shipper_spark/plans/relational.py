@@ -106,8 +106,7 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_shipdate") > F.lit("1998-01-01").cast("timestamp"))
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
-        # customer is the small side at every sf → broadcast, no shuffle.
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
+        .join(cust, orders.o_custkey == cust.c_custkey)
         .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
         .agg(F.sum(_revenue()).cast("double").alias("revenue"))
         .select(
@@ -143,11 +142,11 @@ def q5_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     supp = load_table(spark, sf_dir, "supplier")
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
+        .join(supp, li.l_suppkey == supp.s_suppkey)
         .join(cust, (orders.o_custkey == cust.c_custkey)
                     & (supp.s_nationkey == cust.c_nationkey))
-        .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
-        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
+        .join(nation, cust.c_nationkey == nation.n_nationkey)
+        .join(region, nation.n_regionkey == region.r_regionkey)
         .groupBy("n_name")
         .agg(F.sum(_revenue()).cast("double").alias("revenue"))
     )
@@ -173,7 +172,7 @@ def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
            .agg(dsum("l_quantity", "total_qty"))
            .filter(F.col("total_qty") > 150))
     return (big.join(orders, big.l_orderkey == orders.o_orderkey)
-            .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
+            .join(cust, orders.o_custkey == cust.c_custkey)
             .select("c_custkey", "c_name", "o_orderkey", "total_qty")
             .orderBy(F.desc("total_qty"), "o_orderkey")
             .limit(20))
@@ -330,7 +329,7 @@ def join_range_pred(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part")
     return (
-        li.join(F.broadcast(part),
+        li.join(part,
                 (li.l_partkey == part.p_partkey)
                 & (li.l_quantity >= part.p_size - 5)
                 & (li.l_quantity <= part.p_size + 5))
@@ -385,7 +384,7 @@ def join_interval_binned(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr(f"start_d div {_IV_BIN_DAYS}"),
             F.expr(f"end_d div {_IV_BIN_DAYS}"))))
     li_b = li.withColumn("bin", F.expr(f"ship_d div {_IV_BIN_DAYS}"))
-    return (li_b.join(F.broadcast(iv_b), "bin")
+    return (li_b.join(iv_b, "bin")
             .filter(F.col("ship_d").between(F.col("start_d"),
                                             F.col("end_d")))
             .groupBy("iv_id")
@@ -1007,11 +1006,10 @@ def q17_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     # only brand-filtered parts matter — so semi-reduce lineitem to
     # those parts first via the broadcast part dim, then compute the
     # threshold on that bounded subset.
-    li_brand = li.join(F.broadcast(part),
-                       li.l_partkey == part.p_partkey)
+    li_brand = li.join(part, li.l_partkey == part.p_partkey)
     thresh = (li_brand.groupBy("l_partkey")
               .agg((F.lit(0.2) * F.avg("l_quantity")).alias("qty_cap")))
-    return (li_brand.join(F.broadcast(thresh), "l_partkey")
+    return (li_brand.join(thresh, "l_partkey")
             .filter(F.col("l_quantity") < F.col("qty_cap"))
             .agg((F.sum(F.col("l_extendedprice").cast(MONEY))
                   .cast("double") / 7.0).alias("avg_yearly")))
@@ -1032,9 +1030,9 @@ WHERE n1.n_name IN ('NATION_1', 'NATION_2')
   AND n1.n_name <> n2.n_name
 GROUP BY 1, 2, 3
 """, doc="TPC-H q7 shape: six-way join with the same dimension (nation) "
-         "joined twice under different roles; the two nation sides and "
-         "supplier/customer dims all ride broadcasts, so the only big "
-         "shuffle is lineitem-orders.")
+         "joined twice under different roles; while the nation, supplier "
+         "and customer dims are under the broadcast threshold they "
+         "broadcast, so the only big shuffle is lineitem-orders.")
 def q7_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
@@ -1048,10 +1046,10 @@ def q7_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     picked = F.col("supp_nation").isin("NATION_1", "NATION_2")
     return (li
             .join(orders, li.l_orderkey == orders.o_orderkey)
-            .join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
-            .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-            .join(F.broadcast(n1), F.col("s_nationkey") == F.col("s_nkey"))
-            .join(F.broadcast(n2), F.col("c_nationkey") == F.col("c_nkey"))
+            .join(supp, li.l_suppkey == supp.s_suppkey)
+            .join(cust, orders.o_custkey == cust.c_custkey)
+            .join(n1, F.col("s_nationkey") == F.col("s_nkey"))
+            .join(n2, F.col("c_nationkey") == F.col("c_nkey"))
             .filter(picked
                     & F.col("cust_nation").isin("NATION_1", "NATION_2")
                     & (F.col("supp_nation") != F.col("cust_nation")))
@@ -1082,9 +1080,8 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
            .groupBy("l_suppkey")
            .agg(F.sum(_revenue()).cast("double").alias("total_revenue")))
     mx = rev.agg(F.max("total_revenue").alias("_mx"))
-    return (rev.join(F.broadcast(mx),
-                     rev.total_revenue == F.col("_mx"))
-            .join(F.broadcast(supp), rev.l_suppkey == supp.s_suppkey)
+    return (rev.join(mx, rev.total_revenue == F.col("_mx"))
+            .join(supp, rev.l_suppkey == supp.s_suppkey)
             .select("s_suppkey", "s_name", "total_revenue"))
 
 
@@ -1129,8 +1126,7 @@ def q21_sole_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("l3.l_suppkey") != F.col("l1.l_suppkey"))
             & (F.col("l3.l_shipdate") > F.col("l1.l_shipdate")),
         "left_anti")
-    return (last.join(F.broadcast(supp),
-                      F.col("l1.l_suppkey") == F.col("s_suppkey"))
+    return (last.join(supp, F.col("l1.l_suppkey") == F.col("s_suppkey"))
             .groupBy("s_name").agg(F.count("*").alias("n_last_ship")))
 
 
@@ -1161,8 +1157,7 @@ def q22_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     thresh = (cust.filter(F.col("c_acctbal") > 0.0)
               .agg((F.sum(F.col("c_acctbal").cast("decimal(18,6)"))
                     .cast("double") / F.count("c_acctbal")).alias("_avg")))
-    return (cust.join(F.broadcast(thresh),
-                      cust.c_acctbal > F.col("_avg"))
+    return (cust.join(thresh, cust.c_acctbal > F.col("_avg"))
             .join(orders, cust.c_custkey == orders.o_custkey, "left_anti")
             .groupBy("c_mktsegment")
             .agg(F.count("*").alias("n_custs"),
@@ -1298,7 +1293,7 @@ def q14_promo_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
            * (F.lit(1) - F.col("l_discount").cast(RATE)))
     promo = F.when(F.col("p_type") == "PROMO", rev) \
              .otherwise(F.lit(0).cast("decimal(20,10)"))
-    return (li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
+    return (li.join(part, li.l_partkey == part.p_partkey)
             .agg((F.sum(promo).cast("double")
                   / F.sum(rev).cast("double")).alias("promo_share"),
                  F.count("*").alias("n_rows")))
@@ -1336,7 +1331,7 @@ def q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
            & (F.col("p_size") <= 35) & F.col("l_quantity").between(20, 35)))
     rev = (F.col("l_extendedprice").cast(MONEY)
            * (F.lit(1) - F.col("l_discount").cast(RATE)))
-    return (li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
+    return (li.join(part, li.l_partkey == part.p_partkey)
             .filter(cond)
             .agg(F.sum(rev).cast("double").alias("revenue"),
                  F.count("*").alias("n_rows")))
@@ -1454,9 +1449,8 @@ def q10_returned_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     rev = (F.col("l_extendedprice").cast(MONEY)
            * (F.lit(1) - F.col("l_discount").cast(RATE)))
     return (li.join(orders, li.l_orderkey == orders.o_orderkey)
-            .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-            .join(F.broadcast(nation),
-                  cust.c_nationkey == nation.n_nationkey)
+            .join(cust, orders.o_custkey == cust.c_custkey)
+            .join(nation, cust.c_nationkey == nation.n_nationkey)
             .groupBy("c_custkey", "c_name", "n_name")
             .agg(F.sum(rev).cast("double").alias("revenue"))
             .orderBy(F.desc("revenue"), "c_custkey")
@@ -1488,9 +1482,9 @@ GROUP BY o_year
 """, doc="TPC-H q8 shape: one supplier nation's share of STANDARD-part "
          "revenue sold into EUROPE, per order year — the deepest join "
          "tree in the registry (7 joins, nation joined twice under "
-         "different roles). Every dimension broadcasts; lineitem never "
-         "shuffles for a join. Share = exact-decimal conditional sum "
-         "over exact-decimal total, one double division per year.")
+         "different roles). Dims under the broadcast threshold broadcast; "
+         "lineitem shuffles only for orders. Share = exact-decimal "
+         "conditional sum over exact total, one division per year.")
 def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_suppkey", "l_orderkey",
@@ -1513,14 +1507,13 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
               .filter(F.col("r_name") == "EUROPE").select("r_regionkey"))
     vol = (F.col("l_extendedprice").cast(MONEY)
            * (F.lit(1) - F.col("l_discount").cast(RATE)))
-    base = (li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-            .join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
+    base = (li.join(part, li.l_partkey == part.p_partkey)
+            .join(supp, li.l_suppkey == supp.s_suppkey)
             .join(orders, li.l_orderkey == orders.o_orderkey)
-            .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-            .join(F.broadcast(n1), cust.c_nationkey == F.col("n1_key"))
-            .join(F.broadcast(region),
-                  F.col("n1_region") == region.r_regionkey)
-            .join(F.broadcast(n2), supp.s_nationkey == F.col("n2_key"))
+            .join(cust, orders.o_custkey == cust.c_custkey)
+            .join(n1, cust.c_nationkey == F.col("n1_key"))
+            .join(region, F.col("n1_region") == region.r_regionkey)
+            .join(n2, supp.s_nationkey == F.col("n2_key"))
             .select(F.year("o_orderdate").cast("long").alias("o_year"),
                     vol.alias("vol"), "supp_nation"))
     nation_vol = F.when(F.col("supp_nation") == "NATION_3",
@@ -1585,8 +1578,8 @@ ORDER BY s_acctbal DESC, n_name, s_name, p_partkey
 LIMIT 100
 """, doc="TPC-H q2 shape: correlated-MIN subquery (min-cost supplier "
          "per part within a region), re-expressed as a window MIN — "
-         "one shuffle on l_partkey instead of a self-join; the "
-         "region/nation/supplier/part dims all broadcast. The "
+         "one shuffle on l_partkey instead of a self-join; dims "
+         "broadcast while under the threshold. The "
          "part-supplier offers come from lineitem (no partsupp in "
          "the schema); MIN over exact decimals keeps both engines "
          "bit-identical.")
@@ -1602,17 +1595,15 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     offer = (li.groupBy("l_partkey", "l_suppkey")
              .agg(F.min(F.col("l_extendedprice").cast(MONEY)).alias("cost")))
     regional = (offer
-                .join(F.broadcast(supp), offer.l_suppkey == supp.s_suppkey)
-                .join(F.broadcast(nation),
-                      supp.s_nationkey == nation.n_nationkey)
-                .join(F.broadcast(region),
-                      nation.n_regionkey == region.r_regionkey)
+                .join(supp, offer.l_suppkey == supp.s_suppkey)
+                .join(nation, supp.s_nationkey == nation.n_nationkey)
+                .join(region, nation.n_regionkey == region.r_regionkey)
                 .select("l_partkey", "cost", "s_acctbal", "s_name", "n_name"))
     w = W.partitionBy("l_partkey")
     return (regional
             .withColumn("min_cost", F.min("cost").over(w))
             .filter(F.col("cost") == F.col("min_cost"))
-            .join(F.broadcast(part), F.col("l_partkey") == part.p_partkey)
+            .join(part, F.col("l_partkey") == part.p_partkey)
             .select("s_acctbal", "s_name", "n_name", "p_partkey", "p_name",
                     F.col("cost").cast("double").alias("cost"))
             .orderBy(F.desc("s_acctbal"), "n_name", "s_name", "p_partkey")
@@ -1637,9 +1628,9 @@ GROUP BY 1, 2
 """, doc="TPC-H q9 shape: 5-way star join with a LIKE filter on the "
          "part dim and profit arithmetic (revenue minus a 0.6 * "
          "retailprice * qty cost proxy — the schema has no "
-         "ps_supplycost). All dims broadcast; the one shuffle is "
-         "lineitem-orders, then a 2-key hash agg. Decimal widths "
-         "chosen so both engines stay in exact int128 arithmetic.")
+         "ps_supplycost). Dims under the broadcast threshold broadcast; "
+         "the one shuffle is lineitem-orders, then a 2-key hash agg. "
+         "Decimal widths keep both engines in exact int128 math.")
 def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     part = (load_table(spark, sf_dir, "part")
@@ -1657,9 +1648,9 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 * F.lit(0.6).cast("decimal(2,1)")
                 * F.col("l_quantity").cast(MONEY))
     return (li
-            .join(F.broadcast(part), li.l_partkey == part.p_partkey)
-            .join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
-            .join(F.broadcast(nation), supp.s_nationkey == nation.n_nationkey)
+            .join(part, li.l_partkey == part.p_partkey)
+            .join(supp, li.l_suppkey == supp.s_suppkey)
+            .join(nation, supp.s_nationkey == nation.n_nationkey)
             .join(orders, li.l_orderkey == orders.o_orderkey)
             .groupBy(F.col("n_name").alias("nation"),
                      F.year("o_orderdate").cast("long").alias("o_year"))
@@ -1694,15 +1685,13 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
               .filter(F.col("n_name").isin("NATION_1", "NATION_5", "NATION_9"))
               .select("n_nationkey"))
     vbp = (li
-           .join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
-           .join(F.broadcast(nation),
-                 supp.s_nationkey == nation.n_nationkey)
+           .join(supp, li.l_suppkey == supp.s_suppkey)
+           .join(nation, supp.s_nationkey == nation.n_nationkey)
            .groupBy("l_partkey")
            .agg(F.sum(F.col("l_extendedprice").cast(MONEY)).alias("val")))
     total = vbp.agg((F.sum("val").cast("double") * F.lit(0.001))
                     .alias("_threshold"))
-    return (vbp.join(F.broadcast(total),
-                     F.col("val").cast("double") > F.col("_threshold"))
+    return (vbp.join(total, F.col("val").cast("double") > F.col("_threshold"))
             .select(F.col("l_partkey").alias("p_partkey"),
                     F.col("val").cast("double").alias("part_value")))
 
@@ -1732,10 +1721,9 @@ def q16_supplier_cnt(spark: SparkSession, sf_dir: str) -> DataFrame:
     bad = (load_table(spark, sf_dir, "supplier")
            .filter(F.col("s_acctbal") < 1000).select("s_suppkey"))
     return (li
-            .join(F.broadcast(part), li.l_partkey == part.p_partkey)
+            .join(part, li.l_partkey == part.p_partkey)
             # s_suppkey is never null, so NOT IN == left_anti exactly.
-            .join(F.broadcast(bad), li.l_suppkey == bad.s_suppkey,
-                  "left_anti")
+            .join(bad, li.l_suppkey == bad.s_suppkey, "left_anti")
             .groupBy("p_brand", "p_size")
             .agg(F.countDistinct("l_suppkey").alias("supplier_cnt")))
 
@@ -1779,8 +1767,7 @@ def q20_excess_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
                     .alias("qty")))
     w = W.partitionBy("l_partkey")
     excess = (shipped
-              .join(F.broadcast(part),
-                    shipped.l_partkey == part.p_partkey)
+              .join(part, shipped.l_partkey == part.p_partkey)
               .withColumn("part_total", F.sum("qty").over(w))
               .filter(F.col("qty").cast("double")
                       > F.col("part_total").cast("double") * 0.3)
@@ -1892,7 +1879,7 @@ def grouped_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     bounds = (ranked.groupBy("l_returnflag")
               .agg(pick(0.05, "lo"), pick(0.95, "hi")))
-    clipped = (li.join(F.broadcast(bounds), "l_returnflag")
+    clipped = (li.join(bounds, "l_returnflag")
                .select("l_returnflag",
                        F.col("l_extendedprice").alias("x"),
                        "lo", "hi"))
@@ -2122,12 +2109,12 @@ def join_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     passed = orders.filter(probe[0] & probe[1] & probe[2])
     np_ = passed.agg(F.count("*").cast("long").alias("n_bloom_pass"))
-    return (passed.join(F.broadcast(bld.select("c_custkey")),
+    return (passed.join(bld.select("c_custkey"),
                         passed.o_custkey == F.col("c_custkey"))
             .groupBy(F.col("o_orderpriority").alias("priority"))
             .agg(F.count("*").cast("long").alias("n_orders"),
                  dsum("o_totalprice", "revenue"))
-            .crossJoin(F.broadcast(np_)))
+            .crossJoin(np_))
 
 
 @register("agg_ttest_welch", oracle="""
@@ -2189,7 +2176,7 @@ def agg_ttest_welch(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot = s.agg(F.sum("n").cast("long").alias("tn"),
                 F.sum("sx").alias("tsx"),
                 F.sum("sxx").alias("tsxx"))
-    d = s.crossJoin(F.broadcast(tot)).select(
+    d = s.crossJoin(tot).select(
         "event_type",
         F.col("n").cast("double").alias("na"),
         F.col("sx").cast("double").alias("sxa"),
@@ -2264,9 +2251,9 @@ def agg_chi2_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     m = o.groupBy("event_type").agg(F.sum("n").cast("long").alias("n_row"))
     h = o.groupBy("hod").agg(F.sum("n").cast("long").alias("n_col"))
     t = o.agg(F.sum("n").cast("long").alias("total"))
-    c = (o.join(F.broadcast(m), "event_type")
-         .join(F.broadcast(h), "hod")
-         .crossJoin(F.broadcast(t))
+    c = (o.join(m, "event_type")
+         .join(h, "hod")
+         .crossJoin(t)
          .withColumn("expected",
                      F.col("n_row").cast("double") * F.col("n_col")
                      / F.col("total")))
@@ -2433,7 +2420,7 @@ def agg_ks_statistic(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("cumb_excl") + F.col("cb")).alias("cumb"))
     n = d.agg(F.sum("ca").cast("long").alias("na"),
               F.sum("cb").cast("long").alias("nb"))
-    g = o.crossJoin(F.broadcast(n)).select(
+    g = o.crossJoin(n).select(
         "value", "na", "nb",
         F.abs(F.col("cuma") * F.col("nb")
               - F.col("cumb") * F.col("na")).cast("long").alias("gap"))

@@ -200,11 +200,11 @@ def sample_balance_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     cnt = docs.groupBy("lang").agg(F.count("*").alias("n"))
     m = cnt.agg(F.min("n").alias("min_n"))
-    rates = cnt.join(F.broadcast(m)).select(
+    rates = cnt.join(m).select(
         "lang", F.expr("(1000000 * min_n) div n").alias("keep_below"))
     u = F.expr(_u1e6_spark("CAST(doc_id AS STRING)"))
     return (docs.select("lang", u.alias("u"))
-            .join(F.broadcast(rates), "lang")
+            .join(rates, "lang")
             .filter(F.col("u") < F.col("keep_below"))
             .groupBy("lang")
             .agg(F.count("*").alias("n_kept")))
@@ -456,7 +456,7 @@ def sample_negatives_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
               .withColumn("b", F.expr(
                   "pmod(" + h.format(args="'nd1:', o_custkey, ':', k")
                   + ", 64)"))
-              .join(F.broadcast(sizes), "b")
+              .join(sizes, "b")
               .withColumn("r", F.expr(
                   "pmod(" + h.format(args="'nd2:', o_custkey, ':', k")
                   + ", sz) + 1")))
@@ -524,7 +524,7 @@ def sample_group_holdout(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (tagged.groupBy("split")
             .agg(F.countDistinct("user_id").cast("long").alias("n_users"),
                  F.count("*").cast("long").alias("n_events"))
-            .crossJoin(F.broadcast(leak)))
+            .crossJoin(leak))
 
 
 #: Neyman total sample budget across strata.
@@ -620,7 +620,7 @@ def sample_stratified_neyman(spark: SparkSession, sf_dir: str) -> DataFrame:
                "DOUBLE) / (n_h * (n_h - 1))) * 1000) AS BIGINT) END")
         .alias("w_milli"))
     tot = w.agg(F.sum("w_milli").cast("long").alias("tw"))
-    aw = w.crossJoin(F.broadcast(tot)).select(
+    aw = w.crossJoin(tot).select(
         "lang", "n_h", "w_milli", "tw",
         F.expr(f"({b} * w_milli) div greatest(tw, 1)").alias("base"),
         F.expr(f"({b} * w_milli) % greatest(tw, 1)").alias("rem"))
@@ -641,7 +641,7 @@ def sample_stratified_neyman(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranked = docs.select(
         "lang", "doc_id",
         F.row_number().over(wp).cast("long").alias("pick_rank"))
-    return (ranked.join(F.broadcast(alloc), "lang")
+    return (ranked.join(alloc, "lang")
             .filter(F.col("pick_rank") <= F.col("alloc"))
             .select("lang", "n_h", "alloc", "doc_id", "pick_rank"))
 
@@ -684,7 +684,7 @@ def sample_kfold_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
          .agg(F.count("*").cast("long").alias("n")))
     t = (s.groupBy("lang")
          .agg(F.sum("n").cast("long").alias("lang_total")))
-    return (s.join(F.broadcast(t), "lang")
+    return (s.join(t, "lang")
             .select("fold", "lang", "n", "lang_total",
                     F.expr("(1000 * n) div lang_total")
                     .alias("share_milli")))
@@ -820,7 +820,7 @@ def sample_poisson_bootstrap_mean(spark: SparkSession,
         F.sum(F.col("mq").cast("decimal(38,0)")).alias("smq"),
         F.sum(F.col("mq").cast("decimal(38,0)")
               * F.col("mq").cast("decimal(38,0)")).alias("smq2"))
-    return (means.crossJoin(F.broadcast(s))
+    return (means.crossJoin(s)
             .selectExpr(
                 "b", "n_eff", "mean_cents",
                 "ROUND(CAST(smq AS DOUBLE) / nb / 1000000.0, 6)"

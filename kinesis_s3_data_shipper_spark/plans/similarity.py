@@ -123,7 +123,7 @@ def ann_lsh_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
          .select(F.col("vec_id").alias("query_id"),
                  F.col("embedding").alias("qv"),
                  F.col("_n").alias("_qn"), "bucket"))
-    scored = (b.join(F.broadcast(q), "bucket")
+    scored = (b.join(q, "bucket")
               .filter(F.col("vec_id") != F.col("query_id"))
               .select("query_id", F.col("vec_id").alias("neighbor_id"),
                       F.round(dot("qv", "embedding", _DIM)
@@ -253,7 +253,7 @@ def ann_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
          .select(F.col("vec_id").alias("query_id"),
                  F.col("embedding").alias("qv"),
                  F.col("_n").alias("_qn"), "cluster"))
-    scored = (b.join(F.broadcast(q), "cluster")
+    scored = (b.join(q, "cluster")
               .filter(F.col("vec_id") != F.col("query_id"))
               .select("query_id", F.col("vec_id").alias("neighbor_id"),
                       F.round(dot("qv", "embedding", _DIM)
@@ -345,7 +345,7 @@ def ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.col("_n").alias("_qn"),
                  F.explode(_spark_bit_flips("bucket", _LSH_NPROBE_BITS))
                  .alias("bucket")))
-    scored = (b.join(F.broadcast(q), "bucket")
+    scored = (b.join(q, "bucket")
               .filter(F.col("vec_id") != F.col("query_id"))
               .select("query_id", F.col("vec_id").alias("neighbor_id"),
                       F.round(dot("qv", "embedding", _DIM)
@@ -424,7 +424,7 @@ def ann_ivf_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
          .withColumn("_rn", F.row_number().over(qw))
          .filter(F.col("_rn") <= _IVF_NPROBE)
          .drop("_ccos", "_rn"))
-    scored = (b.join(F.broadcast(q), "cluster")
+    scored = (b.join(q, "cluster")
               .filter(F.col("vec_id") != F.col("query_id"))
               .select("query_id", F.col("vec_id").alias("neighbor_id"),
                       F.round(dot("qv", "embedding", _DIM)
@@ -551,7 +551,7 @@ def ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
          .select(F.col("vec_id").alias("query_id"),
                  pq_adc_lut("embedding", cb).alias("_lut"),
                  norm("embedding", _DIM).alias("_qn")))
-    scored = (enc.crossJoin(F.broadcast(q))
+    scored = (enc.crossJoin(q)
               .filter(F.col("vec_id") != F.col("query_id"))
               .select("query_id", F.col("vec_id").alias("neighbor_id"),
                       F.round(pq_adc_score("_lut", "codes", _PQ_M)
@@ -713,7 +713,7 @@ def _ivfpq_scored(spark: SparkSession, sf_dir: str, *,
     q = (emb.filter(F.expr(_QUERY_PRED))
          .select(*qcols)
          .localCheckpoint(eager=True))
-    scored = (enc.join(F.broadcast(q), "cluster")
+    scored = (enc.join(q, "cluster")
               .filter(F.col("vec_id") != F.col("query_id"))
               .select("query_id", F.col("vec_id").alias("neighbor_id"),
                       F.round(pq_adc_score("_lut", "codes", _PQ_M)
@@ -765,8 +765,8 @@ def ann_ivfpq_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
     nbr = (load_table(spark, sf_dir, "embeddings")
            .select(F.col("vec_id").alias("neighbor_id"),
                    F.col("embedding").alias("_nv")))
-    out = (nbr.join(F.broadcast(short), "neighbor_id")
-           .join(F.broadcast(q.select("query_id", "_qv")), "query_id")
+    out = (nbr.join(short, "neighbor_id")
+           .join(q.select("query_id", "_qv"), "query_id")
            .select("query_id", "neighbor_id",
                    F.round(cosine("_qv", "_nv", _DIM), 6)
                     .alias("exact_cos")))
@@ -813,7 +813,7 @@ FROM a LEFT JOIN k ON a.vec_id = k.id_b
          "as a semantic duplicate of the earliest such vector. The "
          "quadratic verify is bounded to within-cluster pairs (n/K "
          "per cluster), the keeper agg shuffles bare id pairs, and "
-         "the dup map broadcasts back — the same scale shape as "
+         "the dup map joins back by size — the same scale shape as "
          "dedup_embedding_cosine but blocked by learned clusters "
          "instead of random hyperplanes, which is what lets SemDeDup "
          "catch paraphrase-level duplicates that hash-based blocking "
@@ -830,7 +830,7 @@ def semdedup_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
                          block_col="cluster", threshold=_SEMDEDUP_TAU,
                          dim=_DIM)
     dup_map = pairs.groupBy("id_b").agg(F.min("id_a").alias("keeper"))
-    return (a.join(F.broadcast(dup_map), a.vec_id == dup_map.id_b, "left")
+    return (a.join(dup_map, a.vec_id == dup_map.id_b, "left")
             .select("cluster", a.vec_id,
                     F.coalesce("keeper", "vec_id").alias("keeper_vec_id"),
                     F.when(F.col("keeper").isNull(), F.lit(0))
@@ -946,7 +946,7 @@ def mine_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.col("embedding").alias("qv"),
                  F.col("label").alias("qlabel"),
                  F.col("_n").alias("_qn"), "bucket"))
-    scored = (b.join(F.broadcast(q), "bucket")
+    scored = (b.join(q, "bucket")
               .filter((F.col("vec_id") != F.col("query_id"))
                       & (F.col("label") != F.col("qlabel")))
               .select("query_id", F.col("vec_id").alias("negative_id"),
@@ -1028,7 +1028,7 @@ def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
                           / (F.col("_qn") * F.col("_n")), 6)
     wq = W.partitionBy("query_id")
     exact3 = (b.drop("bucket")
-              .join(F.broadcast(q.drop("bucket")), F.lit(True))
+              .join(q.drop("bucket"), F.lit(True))
               .filter(F.col("vec_id") != F.col("query_id"))
               .select("query_id", F.col("vec_id").alias("neighbor_id"),
                       cos().alias("c"))
@@ -1037,7 +1037,7 @@ def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
                           wq.orderBy(F.desc("c"), "neighbor_id"))
                       .alias("rank"))
               .filter(F.col("rank") <= 3).drop("rank"))
-    lsh3 = (b.join(F.broadcast(q), "bucket")
+    lsh3 = (b.join(q, "bucket")
             .filter(F.col("vec_id") != F.col("query_id"))
             .select("query_id", F.col("vec_id").alias("neighbor_id"),
                     cos().alias("c"))
@@ -1109,7 +1109,7 @@ def embedding_int8_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("xf").cast("double").alias("x"))
     calib = x.groupBy("d").agg(F.min("x").alias("mn"),
                                F.max("x").alias("mx"))
-    j = x.join(F.broadcast(calib), "d")
+    j = x.join(calib, "d")
     code = (F.when(F.col("mx") == F.col("mn"), F.lit(0.0))
             .otherwise(F.round((F.col("x") - F.col("mn")) * 255
                                / (F.col("mx") - F.col("mn")))))
@@ -1218,14 +1218,14 @@ def embedding_pca_power_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (μ and w); everything else rides broadcasts of ≤|dims|-row frames
     # (pinned by tests/test_plan_quality.py::test_pca_power_step_no_
     # vec_id_shuffle).
-    xs = (emb.crossJoin(F.broadcast(mus))
+    xs = (emb.crossJoin(mus)
           .select((F.expr("aggregate(embedding, CAST(0.0 AS DOUBLE),"
                           " (a, e) -> a + CAST(e AS DOUBLE) * 0.125)")
                    - F.col("mus")).alias("s"),
                   F.posexplode("embedding").alias("d0", "xf"))
           .select((F.col("d0") + 1).alias("d"),
                   F.col("xf").cast("double").alias("x"), "s"))
-    w = (xs.join(F.broadcast(mu), "d")
+    w = (xs.join(mu, "d")
          .groupBy("d")
          .agg(F.sum(((F.col("x") - F.col("mu")) * F.col("s"))
                     .cast("decimal(32,18)")).cast("double").alias("sw"))
@@ -1233,8 +1233,8 @@ def embedding_pca_power_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     nrm = w.agg(F.sqrt(F.sum((F.col("w") * F.col("w"))
                              .cast("decimal(36,24)")).cast("double"))
                 .alias("nrm"))
-    return (w.join(F.broadcast(mu), "d")
-            .crossJoin(F.broadcast(nrm))
+    return (w.join(mu, "d")
+            .crossJoin(nrm)
             .select(F.col("d").alias("dim_idx"),
                     F.round("mu", 6).alias("dim_mean"),
                     F.round("w", 9).alias("cov_v"),
@@ -1315,8 +1315,7 @@ def embedding_matryoshka_recall(spark: SparkSession,
                  F.col("_n48").alias("_qn48")))
     wq = W.partitionBy("query_id")
     exact3 = (b.select("vec_id", "embedding", "_n")
-              .join(F.broadcast(q.select("query_id", "qv", "_qn")),
-                    F.lit(True))
+              .join(q.select("query_id", "qv", "_qn"), F.lit(True))
               .filter(F.col("vec_id") != F.col("query_id"))
               .select("query_id", F.col("vec_id").alias("neighbor_id"),
                       F.round(dot("qv", "embedding")
@@ -1328,8 +1327,7 @@ def embedding_matryoshka_recall(spark: SparkSession,
                       .alias("rank"))
               .filter(F.col("rank") <= 3).drop("rank"))
     trunc3 = (b.select("vec_id", "e48", "_n48")
-              .join(F.broadcast(q.select("query_id", "q48", "_qn48")),
-                    F.lit(True))
+              .join(q.select("query_id", "q48", "_qn48"), F.lit(True))
               .filter(F.col("vec_id") != F.col("query_id"))
               .select("query_id", F.col("vec_id").alias("neighbor_id"),
                       F.round(dot("q48", "e48")
@@ -1340,8 +1338,8 @@ def embedding_matryoshka_recall(spark: SparkSession,
                           wq.orderBy(F.desc("c"), "neighbor_id"))
                       .alias("rank"))
               .filter(F.col("rank") <= 3).drop("rank"))
-    # Both sides are <= |Q|*3 rows; Spark can't see that through the
-    # rank windows, so broadcast the hit side explicitly.
+    # Both sides are <= |Q|*3 rows, |Q| <= 256 by _QUERY_PRED; Spark
+    # can't see that bound through the rank windows, so hint it.
     hit = trunc3.withColumn("_hit", F.lit(1))
     return (exact3.join(F.broadcast(hit), ["query_id", "neighbor_id"],
                         "left")
@@ -1469,7 +1467,7 @@ def ann_binary_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = (codes.filter(F.expr(_QUERY_PRED))
          .select(F.col("vec_id").alias("query_id"),
                  F.col("w0").alias("q0"), F.col("w1").alias("q1")))
-    scored = (codes.crossJoin(F.broadcast(q))
+    scored = (codes.crossJoin(q)
               .filter(F.col("vec_id") != F.col("query_id"))
               .select("query_id", F.col("vec_id").alias("neighbor_id"),
                       (F.bit_count(F.expr("w0 ^ q0"))
@@ -1573,7 +1571,7 @@ def retrieval_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
           .select(F.col("doc_id").alias("query_id"),
                   F.col("ts").alias("qts")))
     inter = F.size(F.array_intersect("ts", "qts"))
-    lex_scored = (toks.crossJoin(F.broadcast(qt))
+    lex_scored = (toks.crossJoin(qt)
                   .filter(F.col("doc_id") != F.col("query_id"))
                   .select("query_id", "doc_id",
                           (F.lit(1000000).cast("long") * inter)
@@ -1590,7 +1588,7 @@ def retrieval_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     qv = (emb.filter(F.expr(_QUERY_PRED))
           .select(F.col("vec_id").alias("query_id"),
                   F.col("embedding").alias("qe")))
-    sem_scored = (emb.crossJoin(F.broadcast(qv))
+    sem_scored = (emb.crossJoin(qv)
                   .filter(F.col("vec_id") != F.col("query_id"))
                   .select("query_id", F.col("vec_id").alias("doc_id"),
                           F.round(cosine("embedding", "qe", _DIM), 6)
@@ -1760,11 +1758,11 @@ def embedding_cosine_histogram(spark: SparkSession,
          .select("vec_id", "embedding"))
     b = s.select(F.col("vec_id").alias("vid2"),
                  F.col("embedding").alias("emb2"))
-    pairs = (s.join(F.broadcast(b), F.col("vec_id") < F.col("vid2"))
+    pairs = (s.join(b, F.col("vec_id") < F.col("vid2"))
              .select(F.floor(F.round(cosine("embedding", "emb2", _DIM),
                                      6) * 10).cast("long").alias("bin")))
     tot = pairs.agg(F.count("*").cast("long").alias("total"))
-    return (pairs.crossJoin(F.broadcast(tot))
+    return (pairs.crossJoin(tot)
             .groupBy("bin")
             .agg(F.round(F.col("bin") / 10.0, 1).alias("bin_lo"),
                  F.count("*").cast("long").alias("n_pairs"),

@@ -145,7 +145,7 @@ SELECT doc_id, term, tf, df, score, rank FROM (
          "score — one exact int division, not log-idf, so both engines "
          "produce bit-identical doubles). Shape = the HashingTF/IDF "
          "pipeline: tokenize → term stats → per-doc ranking; the df "
-         "side is a broadcastable term dictionary at any corpus size.")
+         "side is a vocabulary-sized term dictionary.")
 def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
     docs = load_table(spark, sf_dir, "documents")
@@ -156,7 +156,7 @@ def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.countDistinct("doc_id").alias("df"))
     score = F.col("tf").cast("double") / F.col("df")
     w = W.partitionBy("doc_id").orderBy(F.desc(score), "term")
-    return (tf.join(F.broadcast(df_), "term")
+    return (tf.join(df_, "term")
             .select("doc_id", "term", "tf", "df", score.alias("score"),
                     F.row_number().over(w).cast("long").alias("rank"))
             .filter(F.col("rank") <= 3))
@@ -386,7 +386,7 @@ def text_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
              .select(F.explode(grams).alias("gram")).distinct())
     train = docs.filter(~F.expr(f"({_BENCH_PRED})"))
     return (train.select("doc_id", F.explode(grams).alias("gram"))
-            .join(F.broadcast(bench), "gram")
+            .join(bench, "gram")
             .groupBy("doc_id")
             .agg(F.count("*").cast("long").alias("n_shared_grams")))
 
@@ -460,7 +460,7 @@ def text_unigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
              # vocabulary selection distributed (partial top-k per
              # partition), unlike a global row_number window.
              .orderBy(F.desc("c"), "w").limit(1000))
-    return (toks.join(F.broadcast(vocab), "w", "left")
+    return (toks.join(vocab, "w", "left")
             .groupBy("doc_id")
             .agg(F.count("*").cast("long").alias("n_tokens"),
                  F.sum(F.coalesce("c", F.lit(0))).cast("long")
@@ -654,7 +654,7 @@ def text_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         "word", "freq",
         F.sum("freq").over(w.rowsBetween(W.unboundedPreceding, 0))
          .alias("cum_freq"))
-    return (ranked.crossJoin(F.broadcast(total))
+    return (ranked.crossJoin(total)
             .select("rank", "word", "freq",
                     F.round(F.col("cum_freq").cast("double")
                             / F.col("n_total"), 6).alias("cum_coverage")))
@@ -700,9 +700,9 @@ def text_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     cands = (misra_gries_candidates(tokens, token_col="word", k=_HH_K)
              .distinct())
     total = tokens.agg(F.count("*").cast("long").alias("n_total"))
-    return (tokens.join(F.broadcast(cands), "word")
+    return (tokens.join(cands, "word")
             .groupBy("word").agg(F.count("*").alias("n"))
-            .crossJoin(F.broadcast(total))
+            .crossJoin(total)
             .filter(F.col("n") * _HH_K > F.col("n_total"))
             .select("word", "n",
                     F.round(F.col("n").cast("double") / F.col("n_total"), 6)
@@ -776,7 +776,7 @@ def text_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
                                F.col("tf")).otherwise(0)).alias("ct")))
     tot = vocab.agg(F.sum("cc").alias("nc"), F.sum("ct").alias("nt"),
                     F.count("*").alias("v"))
-    llr = (vocab.crossJoin(F.broadcast(tot))
+    llr = (vocab.crossJoin(tot)
            .select("word",
                    F.round(F.log(
                        ((F.col("ct") + 1).cast("double")
@@ -784,7 +784,7 @@ def text_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
                        / ((F.col("cc") + 1).cast("double")
                           / (F.col("nc") + F.col("v"))))
                        * _DSIR_SCALE).cast("long").alias("llr_scaled")))
-    return (tf.join(F.broadcast(llr), "word")
+    return (tf.join(llr, "word")
             .groupBy("doc_id", "source")
             .agg(F.sum(F.col("tf") * F.col("llr_scaled")).cast("long")
                  .alias("llr_sum_scaled"))
@@ -867,11 +867,10 @@ def text_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
                      F.split("bigram", " ").getItem(1).alias("w2"))
     ua = uc.select(F.col("word").alias("w1"), F.col("c").alias("ca"))
     ub = uc.select(F.col("word").alias("w2"), F.col("c").alias("cb"))
-    scored = (ua.join(F.broadcast(surv), "w1")
-              .join(F.broadcast(ub.join(
-                  F.broadcast(surv.select("w2").distinct()), "w2")), "w2")
-              .crossJoin(F.broadcast(tot))
-              .crossJoin(F.broadcast(btot))
+    scored = (ua.join(surv, "w1")
+              .join(ub.join(surv.select("w2").distinct(), "w2"), "w2")
+              .crossJoin(tot)
+              .crossJoin(btot)
               .select("bigram", "c_ab",
                       F.round((F.col("c_ab").cast("double")
                                * F.col("t").cast("double")
@@ -991,7 +990,7 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = spark.read.parquet(qdir)
     terms = q.select("term").distinct()
     words = (d.select("doc_id", F.explode("ws").alias("term"))
-             .join(F.broadcast(terms), "term"))
+             .join(terms, "term"))
     tf = (words.groupBy("doc_id", "term")
           .agg(F.count("*").cast("long").alias("tf")))
     dfreq = tf.groupBy("term").agg(F.count("*").cast("long").alias("df"))
@@ -1003,9 +1002,9 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                   * (F.lit(1.0 - b)
                      + F.lit(b) * (F.col("dl") / F.col("avgdl")))))
     scored = (q.join(tf, "term")
-              .join(F.broadcast(dfreq), "term")
+              .join(dfreq, "term")
               .join(dl, "doc_id")
-              .crossJoin(F.broadcast(stats))
+              .crossJoin(stats)
               .select("query_id", "doc_id",
                       contrib.cast("decimal(28,12)").alias("contrib")))
     agg = (scored.groupBy("query_id", "doc_id")
@@ -1103,7 +1102,7 @@ def text_bpe_merge_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     p0 = pair_counts(rep0, [])
     best = (p0.orderBy(F.desc("cnt"), "a", "b").limit(1)
             .select(F.col("a").alias("ba"), F.col("b").alias("bb")))
-    rep1 = (rep0.crossJoin(F.broadcast(best))
+    rep1 = (rep0.crossJoin(best)
             .select("n", "ba", "bb",
                     F.expr("replace(seq, concat(ba, '|', bb),"
                            " concat(ba, bb))").alias("seq")))
@@ -1209,7 +1208,7 @@ def text_bpe_merge_2step(spark: SparkSession, sf_dir: str) -> DataFrame:
     def choose_and_apply(rep):
         best = (pair_counts(rep).orderBy(F.desc("cnt"), "a", "b").limit(1)
                 .select(F.col("a").alias("ba"), F.col("b").alias("bb")))
-        merged = (rep.crossJoin(F.broadcast(best))
+        merged = (rep.crossJoin(best)
                   .select("n",
                           F.expr("replace(seq, concat(ba, '|', bb),"
                                  " concat(ba, bb))").alias("seq"))
@@ -1226,8 +1225,8 @@ def text_bpe_merge_2step(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (p2.select(F.row_number().over(w).cast("long").alias("rank"),
                       "sym_a", "sym_b", "cnt")
             .filter(F.col("rank") <= 20)
-            .crossJoin(F.broadcast(m1))
-            .crossJoin(F.broadcast(m2)))
+            .crossJoin(m1)
+            .crossJoin(m2))
 
 
 @register("feature_hash_vectorize", oracle="""
@@ -1376,7 +1375,7 @@ def text_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     def choose_and_apply(rep):
         best = (pair_counts(rep).orderBy(F.desc("cnt"), "a", "b").limit(1)
                 .select(F.col("a").alias("ba"), F.col("b").alias("bb")))
-        return (rep.crossJoin(F.broadcast(best))
+        return (rep.crossJoin(best)
                 .select("word", "n",
                         F.expr("replace(seq, concat(ba, '|', bb),"
                                " concat(ba, bb))").alias("seq"))
@@ -1458,7 +1457,7 @@ def text_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     top_bg = (cb.orderBy(F.desc("c"), "a", "b").limit(1000)
               .withColumnRenamed("c", "cb"))
     cu = (cb.groupBy("a").agg(F.sum("c").cast("long").alias("cu")))
-    j = (bg.join(F.broadcast(top_bg), ["a", "b"], "left")
+    j = (bg.join(top_bg, ["a", "b"], "left")
          .join(cu, "a"))
     return (j.groupBy("doc_id")
             .agg(F.count("*").cast("long").alias("n_bigrams"),
@@ -1524,7 +1523,7 @@ def grouped_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     wg = W.partitionBy("lang").orderBy("n_chars", "doc_id")
     ng = d.groupBy("lang").agg(F.count("*").alias("n_g"))
     r = (d.withColumn("r", F.row_number().over(wg))
-         .join(F.broadcast(ng), "lang"))
+         .join(ng, "lang"))
     mod = auto_sample_mod(table_row_count(sf_dir, "documents"), 32,
                           target_per_part=128)
     ranked, total = attach_global_rank(
@@ -2063,7 +2062,7 @@ def text_kneser_ney_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.count("*").cast("long").alias("b_types"))
     return (uni.join(lc, "word")
             .join(rc, "word", "left")
-            .crossJoin(F.broadcast(tot))
+            .crossJoin(tot)
             .select("word", "c_w", "n_left",
                     F.coalesce("n_right", F.lit(0)).cast("long")
                     .alias("n_right"),

@@ -238,7 +238,7 @@ def compute_range_splits(spark: SparkSession, sf_dir: str) -> DataFrame:
     targets = [(i, math.ceil(i * n / _SPLIT_PARTS))
                for i in range(1, _SPLIT_PARTS)]
     idx = values_df(spark, targets, "split_idx long, _rn long")
-    return (ranked.join(F.broadcast(idx), "_rn")
+    return (ranked.join(idx, "_rn")
             .select("split_idx", F.col("l_orderkey").alias("split_key")))
 
 
@@ -317,7 +317,7 @@ def compute_range_splits_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     targets = [(i, math.ceil(i * m / _SPLIT_PARTS))
                for i in range(1, _SPLIT_PARTS)]
     idx = values_df(spark, targets, "split_idx long, _rn long")
-    return (ranked.join(F.broadcast(idx), "_rn")
+    return (ranked.join(idx, "_rn")
             .select("split_idx", F.col("l_orderkey").alias("split_key")))
 
 
@@ -441,7 +441,7 @@ def maintenance_compact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
                    F.max("l_orderkey").alias("hi")))
     b = ranges.select(F.col("f").alias("f2"), F.col("lo").alias("lo2"),
                       F.col("hi").alias("hi2"))
-    overlaps = (ranges.join(F.broadcast(b), F.col("f") < F.col("f2"))
+    overlaps = (ranges.join(b, F.col("f") < F.col("f2"))
                 .filter((F.col("lo") <= F.col("hi2"))
                         & (F.col("lo2") <= F.col("hi")))
                 .agg(F.count("*").cast("long").alias("n_range_overlaps")))
@@ -450,7 +450,7 @@ def maintenance_compact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
                  dsum("l_quantity", "sum_qty"),
                  F.countDistinct("l_orderkey").cast("long")
                  .alias("n_orders"))
-            .crossJoin(F.broadcast(overlaps)))
+            .crossJoin(overlaps))
 
 
 @register("warehouse_lifecycle", oracle="""
@@ -549,14 +549,14 @@ def warehouse_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
                    F.max("user_id").alias("hi")))
     b2 = ranges.select(F.col("f").alias("f2"), F.col("lo").alias("lo2"),
                        F.col("hi").alias("hi2"))
-    overlaps = (ranges.join(F.broadcast(b2), F.col("f") < F.col("f2"))
+    overlaps = (ranges.join(b2, F.col("f") < F.col("f2"))
                 .filter((F.col("lo") <= F.col("hi2"))
                         & (F.col("lo2") <= F.col("hi")))
                 .agg(F.count("*").cast("long").alias("n_range_overlaps")))
     return (out.select("user_id", "n", "sum_micros")
             .withColumn("versions_per_bucket",
                         F.lit(n_vers).cast("long"))
-            .crossJoin(F.broadcast(overlaps)))
+            .crossJoin(overlaps))
 
 
 @register("cdc_apply_changes", oracle=f"""
@@ -675,14 +675,14 @@ def warehouse_deletion_vectors(spark: SparkSession,
     deleted = (dv.groupBy("file_id")
                .agg(F.sum(F.bit_count("word")).cast("long")
                     .alias("n_deleted")))
-    live = (pos.join(F.broadcast(dv), ["file_id", "word_idx"], "left")
+    live = (pos.join(dv, ["file_id", "word_idx"], "left")
             .filter(F.col("word").isNull()
                     | (F.expr("shiftright(word, CAST(pos % 64 AS INT))"
                               " & 1") == 0))
             .groupBy("file_id")
             .agg(F.count("*").cast("long").alias("n_live"),
                  dsum("l_extendedprice", "live_revenue")))
-    return (live.join(F.broadcast(deleted), "file_id", "left")
+    return (live.join(deleted, "file_id", "left")
             .select("file_id", "n_live",
                     F.coalesce("n_deleted", F.lit(0)).cast("long")
                      .alias("n_deleted"),
@@ -752,7 +752,7 @@ def warehouse_zorder_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
                F.max("o_custkey").alias("cmax"),
                F.min("day").alias("dmin"),
                F.max("day").alias("dmax"))
-    b = (d.crossJoin(F.broadcast(st))
+    b = (d.crossJoin(st)
          .select("o_orderkey", "o_custkey", "day",
                  F.expr("((o_custkey - cmin) * 16)"
                         " div (cmax - cmin + 1)").alias("bc"),
@@ -1117,7 +1117,7 @@ def warehouse_partition_stats_skew(spark: SparkSession,
               F.count("*").cast("long").alias("n_parts"),
               F.max("n_rows").cast("long").alias("max_rows"))
     w = Window.orderBy(F.desc("n_rows"), "part_month")
-    return (p.crossJoin(F.broadcast(t))
+    return (p.crossJoin(t)
             .select("part_month", "n_rows",
                     F.expr("(1000 * n_rows) div total")
                     .alias("share_milli"),
@@ -1174,8 +1174,8 @@ def warehouse_gdpr_delete_audit(spark: SparkSession,
     req = (ev.filter(F.expr(_GDPR_PRED))
            .select("user_id").distinct()
            .localCheckpoint(eager=True))
-    purged = ev.join(F.broadcast(req), "user_id", "left_anti")
-    residue = purged.join(F.broadcast(req), "user_id", "inner")
+    purged = ev.join(req, "user_id", "left_anti")
+    residue = purged.join(req, "user_id", "inner")
     n_req = req.agg(F.count("*").cast("long").alias("n_requests"))
     before = ev.agg(F.count("*").cast("long").alias("rows_before"))
     after = purged.agg(

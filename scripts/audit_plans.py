@@ -21,6 +21,10 @@ at sf0.1 expecting a static analysis.
 
 Prints one line per query over the scan threshold plus a JSON summary.
 Usage: python scripts/audit_plans.py [sf_dir] [threshold] [-v]
+       python scripts/audit_plans.py <sf_dir> --joins <out.json>
+       python scripts/audit_plans.py --diff <before.json> <after.json>
+  --joins: write the join census (join_census) instead of the scan
+  audit; --diff: print what changed between two such files.
   -v / --verbose: print the FULL traceback for every errored query
   instead of a 200-char summary (a systematic breakage — e.g. a bad
   import taking down a whole plan module — otherwise hides behind
@@ -34,11 +38,12 @@ pytest, not just this script.
 from __future__ import annotations
 
 import json
+import os
 import re
 import sys
 import traceback
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def _tree_depth(line: str) -> int:
@@ -158,9 +163,14 @@ def _invariant_lambda_calls(plan: str) -> int:
     return len(flagged)
 
 
+#: Physical join operators counted per plan (the ``joins`` record).
+JOIN_NODES = ("BroadcastHashJoin", "BroadcastNestedLoopJoin",
+              "SortMergeJoin", "ShuffledHashJoin")
+
+
 def audit_query(df) -> dict:
-    """Scan/cartesian/python/window counts for one built DataFrame's
-    final executed plan.
+    """Scan/cartesian/python/window/join counts for one built
+    DataFrame's final executed plan (for AQE plans, the initial one).
 
     Two scan counts per source table (r11, advice fix — the textual
     number alone mixed reprint artifacts with real re-derivations):
@@ -237,6 +247,9 @@ def audit_query(df) -> dict:
             "per_source_physical": per_source_physical,
             "unpartitioned_windows": unpartitioned_windows,
             "cartesian": plan.count("CartesianProduct"),
+            "joins": {j: len(re.findall(rf"^[ :+\-]*(?:\*\(\d+\) )?{j}\b",
+                                        plan, re.M))
+                      for j in JOIN_NODES},
             "python": plan.count("BatchEvalPython"),
             "invariant_lambda_calls": _invariant_lambda_calls(plan)}
 
@@ -282,7 +295,72 @@ def audit(spark, sf_dir: str, *, threshold: int = 4,
     return flagged, errors
 
 
+def join_census(spark, sf_dir: str) -> dict:
+    """The ``joins`` record of every registered query's final plan, plus
+    one per frame a query hands to ``truncated_checkpoint`` (keyed
+    ``<query>#<n>``): the per-round join choices a final plan does not
+    show.  Builds every plan, so it executes checkpoints like
+    :func:`audit`."""
+    from kinesis_s3_data_shipper_spark.operators import checkpoint
+    from kinesis_s3_data_shipper_spark.plans import REGISTRY, all_queries
+
+    all_queries()
+    census: dict[str, dict] = {}
+    real = checkpoint.truncated_checkpoint
+    frames: list = []
+
+    def recording(df, *args, **kwargs):
+        frames.append(audit_query(df)["joins"])
+        return real(df, *args, **kwargs)
+
+    checkpoint.truncated_checkpoint = recording
+    try:
+        for name in REGISTRY:
+            frames.clear()
+            spark.catalog.clearCache()
+            try:
+                census[name] = audit_query(
+                    REGISTRY[name].spark(spark, sf_dir))["joins"]
+            except Exception as exc:
+                census[name] = {"error": f"{type(exc).__name__}: {exc}"[:200]}
+            census.update((f"{name}#{i}", j) for i, j in enumerate(frames))
+    finally:
+        checkpoint.truncated_checkpoint = real
+    return census
+
+
+def join_diff(before: dict, after: dict) -> list[str]:
+    """Lines for every plan whose join counts differ, then the
+    final-plan totals (``BroadcastHashJoin/BroadcastNestedLoopJoin/
+    SortMergeJoin/ShuffledHashJoin``) of each side."""
+    lines = []
+    for key in sorted(set(before) | set(after)):
+        a, b = before.get(key, {}), after.get(key, {})
+        if a != b:
+            changed = ", ".join(f"{j} {a.get(j, '-')}->{b.get(j, '-')}"
+                                for j in JOIN_NODES if a.get(j) != b.get(j))
+            lines.append(f"{key}: {changed or (a, b)}")
+    for label, census in (("before", before), ("after", after)):
+        totals = [sum(v.get(j, 0) for k, v in census.items() if "#" not in k)
+                  for j in JOIN_NODES]
+        lines.append(f"{label} final-plan totals: "
+                     + "/".join(map(str, totals)))
+    return lines
+
+
 def main() -> None:
+    if sys.argv[1:2] == ["--diff"]:
+        with open(sys.argv[2]) as fa, open(sys.argv[3]) as fb:
+            print("\n".join(join_diff(json.load(fa), json.load(fb))))
+        return
+    if "--joins" in sys.argv:
+        i = sys.argv.index("--joins")
+        from kinesis_s3_data_shipper_spark.session import get_session
+
+        census = join_census(get_session("ksds-join-census"), sys.argv[1])
+        with open(sys.argv[i + 1], "w") as fh:
+            json.dump(census, fh, indent=1, sort_keys=True)
+        return
     args = [a for a in sys.argv[1:] if a not in ("-v", "--verbose")]
     verbose = len(args) != len(sys.argv) - 1
     sf_dir = args[0] if len(args) > 0 else "/root/testdata/sf0.001"

@@ -7,9 +7,9 @@ Usage::
 
 Writes ``<outdir>/<query>_<suffix>.txt`` for each query — the
 before/after plan evidence the optimization rounds commit under
-``plans/r13/``.  Uses the same plain-session shape as the driver
-(local[$SPARK_GRAFT_CPUS], default 32) so plan choices (join strategy,
-AQE nodes) match what the bench sees.  Queries whose function body
+``plans/r13/``.  Builds its session with ``session.get_session``, as
+``bench.py`` does, so plan choices (join strategy, AQE nodes) match
+what the bench sees.  Queries whose function body
 executes side work (staging writes, streaming drains, checkpoints) run
 that work here too — the captured plan is the returned DataFrame's,
 which is what the timed action executes.
@@ -26,13 +26,8 @@ def main() -> int:
     outdir, suffix, names = sys.argv[1], sys.argv[2], sys.argv[3:]
     os.makedirs(outdir, exist_ok=True)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    from pyspark.sql import SparkSession
-    spark = (SparkSession.builder.master(f"local[{cpus}]")
-             .config("spark.sql.shuffle.partitions", cpus)
-             .config("spark.driver.memory", "8g")
-             .config("spark.ui.enabled", "false")
-             .appName("capture-plans").getOrCreate())
+    from kinesis_s3_data_shipper_spark.session import get_session
+    spark = get_session("capture-plans")
     spark.sparkContext.setLogLevel("ERROR")
     from kinesis_s3_data_shipper_spark.plans import all_queries
     queries = all_queries()

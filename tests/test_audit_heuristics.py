@@ -147,3 +147,23 @@ def test_cache_dedup_key_two_consumers_one_key(spark):
         assert text3 > text2, (c2, c3)
     finally:
         base.unpersist()
+
+
+def test_join_counts_follow_the_size_rule(spark):
+    """The audit's ``joins`` record counts physical join nodes: a small
+    side broadcasts, and with the threshold off the same join
+    sort-merges."""
+    from scripts.audit_plans import audit_query
+
+    big = spark.range(1000).selectExpr("id % 10 as k", "id")
+    small = spark.range(10).selectExpr("id as k")
+    assert audit_query(big.join(small, "k"))["joins"] == {
+        "BroadcastHashJoin": 1, "BroadcastNestedLoopJoin": 0,
+        "SortMergeJoin": 0, "ShuffledHashJoin": 0}
+    saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        joins = audit_query(big.join(small, "k"))["joins"]
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
+    assert joins["SortMergeJoin"] == 1 and joins["BroadcastHashJoin"] == 0

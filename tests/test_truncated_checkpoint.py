@@ -38,6 +38,11 @@ def _size_bits(df) -> int:
                .sizeInBytes()).bit_length()
 
 
+def _size(df) -> int:
+    return int(df._jdf.queryExecution().optimizedPlan().stats()
+               .sizeInBytes())
+
+
 def test_chained_truncated_checkpoints_keep_bounded_stats(spark):
     base = spark.range(50).selectExpr("id as k", "id as v")
     cur = truncated_checkpoint(base)
@@ -71,30 +76,35 @@ def test_wrapped_frame_reads_the_same_blocks(spark):
     release_checkpoint(w)
 
 
-def test_firewall_canary_wrap_is_live_not_fallback(spark):
-    """r09 verdict ask #2: truncated_checkpoint rides the private
-    ``internalCreateDataFrame``; if a Spark upgrade moves it, the
-    except-fallback silently returns the PLAIN checkpoint (correct but
-    re-exposing the 98 s deep-loop driver stall).  This canary fails
-    the suite the moment that happens: a single wrap of a join-product
-    frame must report the default leaf estimate, strictly below the
-    inherited product the plain checkpoint carries."""
-    base = spark.range(50).selectExpr("id as k", "id as v")
-    joined = _one_round(base)
-    plain_bits = _size_bits(joined.localCheckpoint(eager=True))
-    wrapped = truncated_checkpoint(joined)
-    wrapped_bits = _size_bits(wrapped)
-    # A LIVE wrap reports the default leaf estimate (Long.MaxValue,
-    # 63 bits) because internalCreateDataFrame attaches no stats; the
-    # FALLBACK (plain localCheckpoint) inherits the origin's computed
-    # estimate instead.  plain_bits < 63 proves inheritance really
-    # happens on this Spark version, so the equality isn't vacuous.
-    assert plain_bits < 63, plain_bits
-    assert wrapped_bits == 63, (wrapped_bits, plain_bits)
-    # and the wrap really is a bare LogicalRDD leaf
-    assert (wrapped._jdf.queryExecution().analyzed().getClass()
-            .getSimpleName()) == "LogicalRDD"
-    release_checkpoint(wrapped)
+def test_checkpoint_reports_measured_size_and_broadcasts_unhinted(spark):
+    """A 50-row join product whose inherited estimate is above the
+    broadcast threshold reports, once checkpointed, a size within 2x
+    of its materialized bytes, and a large frame joined against it
+    plans a BroadcastHashJoin with no hint.  The fallback (the plain
+    checkpoint, inherited estimate) fails both checks, so this also
+    catches the wrap degrading on a new Spark version."""
+    threshold = (spark._jsparkSession.sessionState().conf()
+                 .autoBroadcastJoinThreshold())
+    joined = _one_round(spark.range(50).selectExpr("id as k", "id as v"))
+    plain = joined.localCheckpoint(eager=True)
+    assert _size(plain) > threshold >= 2**20
+    ckpt = truncated_checkpoint(joined)
+    # Materialized as UnsafeRows: an 8-byte null bitset word plus one
+    # 8-byte slot per long column.
+    materialized = ckpt.count() * (8 + 8 * len(ckpt.columns))
+    size = _size(ckpt)
+    assert materialized / 2 <= size <= 2 * materialized, (size,
+                                                          materialized)
+    large = spark.range(10**9).selectExpr("id % 50 as k", "id as z")
+
+    def plan(right):
+        return (large.join(right, "k")._jdf.queryExecution()
+                .executedPlan().toString())
+
+    assert "BroadcastHashJoin" in plan(ckpt)
+    assert "BroadcastHashJoin" not in plan(plain)
+    release_checkpoint(ckpt)
+    release_checkpoint(plain)
 
 
 def test_release_unwraps_unary_derivations(spark):
