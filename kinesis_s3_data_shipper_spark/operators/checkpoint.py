@@ -5,7 +5,7 @@ Two primitives every checkpoint-per-round loop in this repo needs
 components):
 
 - :func:`truncated_checkpoint` — eager ``localCheckpoint`` that
-  reports the checkpoint's MEASURED size.  ``Dataset.localCheckpoint``
+  reports the checkpoint's OBSERVED row count times its row width.  ``Dataset.localCheckpoint``
   copies the origin plan's estimated statistics into the new
   LogicalRDD, and size-only join estimation MULTIPLIES children's
   ``sizeInBytes`` — so when a loop builds round N's checkpoints from
@@ -14,11 +14,15 @@ components):
   ~70 s per level multiplying megabyte-long BigIntegers in the
   driver).  The origin estimate is therefore dropped, and the
   checkpoint instead reports the row count observed while it was
-  written, times the schema's row width — Spark's own size for
-  exactly that many rows.  ``autoBroadcastJoinThreshold`` and AQE
-  then pick the join from the real size: a node-sized frame
-  broadcasts while it is small and sort-merge joins once it is not,
-  with no hint at the call site.
+  written, times Spark's default row width for its schema.  For a
+  fixed-width schema (numbers, booleans, dates, timestamps) that is
+  the frame's size; ``autoBroadcastJoinThreshold`` and AQE then pick
+  the join from it: a node-sized frame broadcasts while it is small
+  and sort-merge joins once it is not, with no hint at the call site.
+  A string, binary or nested column has no fixed width (Spark's
+  default counts a string as 20 bytes and an array as one element),
+  so such a frame reports Spark's default size instead and never
+  broadcasts unhinted.
 
 - :func:`release_checkpoint` — free a checkpointed frame's blocks
   once the loop has superseded it, so live storage stays O(1) rounds
@@ -30,7 +34,7 @@ Both reach through private APIs (the ``LogicalRDD`` constructor and
 that moves the internals falls back to the plain checkpoint / skips
 the release — correctness is never affected, only join choice, deep-
 loop driver time and disk residency.  ``tests/test_truncated_
-checkpoint.py`` fails the suite if the measured size ever degrades to
+checkpoint.py`` fails the suite if the reported size ever degrades to
 the fallback's inherited estimate on the running Spark version.
 
 The re-wrapped leaf keeps the outputPartitioning and outputOrdering
@@ -44,13 +48,19 @@ import logging
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 log = logging.getLogger(__name__)
 
+#: Column types whose Spark default width is their real width.
+_FIXED_WIDTH = (T.NumericType, T.BooleanType, T.DateType, T.TimestampType,
+                T.TimestampNTZType)
+
 
 def truncated_checkpoint(df: DataFrame, storage_level=None) -> DataFrame:
-    """Eager localCheckpoint that reports its measured size (module
-    doc)."""
+    """Eager localCheckpoint that reports its observed row count times
+    its row width, or Spark's default size for a variable-width schema
+    (module doc)."""
     obs = Observation()
     ckpt = (df.observe(obs, F.count(F.lit(1)).alias("rows"))
             .localCheckpoint(eager=True, storageLevel=storage_level))
@@ -66,8 +76,11 @@ def truncated_checkpoint(df: DataFrame, storage_level=None) -> DataFrame:
                     leaf.output(), leaf.rdd(), leaf.outputPartitioning(),
                     leaf.outputOrdering(), False, none, jss, stats, none))
 
+        if not all(isinstance(f.dataType, _FIXED_WIDTH)
+                   for f in ckpt.schema):
+            return DataFrame(wrap(none), spark)
         # Spark sizes a limit(n) over a stats-free leaf as n × row width,
-        # so its Statistics is the measured size.  It stays a JVM object:
+        # so its Statistics is the frame's size.  It stays a JVM object:
         # py4j returns a scala BigInt to Python as an int, so Statistics
         # cannot be built from Python.  Past Int.MaxValue rows the frame
         # reports that many, far above any broadcast threshold.

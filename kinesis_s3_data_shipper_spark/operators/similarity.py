@@ -266,7 +266,9 @@ def ivf_assign_broadcast(vectors: DataFrame, centroids: DataFrame, *,
     best = F.max(F.struct(F.col("_cos").alias("c"),
                           (-F.col("cid")).alias("neg_cid"),
                           F.col("cid").alias("cid")))
-    return (v.crossJoin(c)
+    # The centroid table is K rows, the caller's codebook size; Spark
+    # estimates a filtered or derived table at its input's size.
+    return (v.crossJoin(F.broadcast(c))
             .select(id_col, cos.alias("_cos"), "cid")
             .groupBy(id_col)
             .agg(best.alias("_best"))
@@ -414,6 +416,11 @@ def cosine_topk(corpus: DataFrame, queries: DataFrame, *, id_col: str,
     Output: query_id, neighbor_id, cos (rounded), rank. Ordering uses
     (rounded cos DESC, neighbor_id) so ranks are deterministic even if
     two engines' unrounded doubles differ in the last ulp.
+
+    ``queries`` is the broadcast side of a cross join.  Pass a frame
+    Spark sizes small, or one carrying a broadcast hint (as
+    ``plans/similarity.py::_queries`` does); otherwise the join plans
+    a CartesianProduct over the corpus.
     """
     # Norms are projected per ROW before the join — the per-pair work
     # is then a single dot product. (Inlining cosine() after the join

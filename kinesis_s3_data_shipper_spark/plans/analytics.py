@@ -215,7 +215,9 @@ def agg_sketch_merge_kll(spark: SparkSession, sf_dir: str) -> DataFrame:
                       F.element_at("_sks", 1),
                       lambda acc, x: F.kll_sketch_merge_double(acc, x)),
                   F.lit(0.5)).alias("_med_est")))
-    return (ev.join(merged, "event_type")
+    # merged is one row per event type (events.EVENT_TYPES); Spark
+    # sizes a grouped aggregate at its input's size.
+    return (ev.join(F.broadcast(merged), "event_type")
             .groupBy("event_type")
             .agg(F.count("*").alias("exact_n"),
                  F.avg((F.col("value") <= F.col("_med_est"))
@@ -658,7 +660,7 @@ SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM deg) AS n_nodes,
          "tames power-law hubs, turning the wedge join from "
          "sum(deg^2) on raw degrees (quadratic in the hub) into "
          "O(E^1.5) worst-case total. Dataflow: distinct edges, "
-         "degree agg, two broadcast-degree annotations, wedge "
+         "degree agg, two degree annotations (by size), wedge "
          "self-join on the oriented source, closing-edge probe. "
          "All-integer arithmetic; the oracle replays the identical "
          "orientation rule. The edge, degree and oriented-edge tables "
@@ -721,7 +723,7 @@ CROSS JOIN n
          "C(items, 2), never corpus-quadratic), the pair count is "
          "map-side combined, the min-support HAVING prunes the long "
          "tail BEFORE the stat joins (Apriori's downward-closure "
-         "prune), and the per-part counts broadcast back onto the "
+         "prune), and the per-part counts join back by size onto the "
          "surviving pairs. All ratios are exact-integer numerators "
          "over exact-integer denominators, divided once.")
 def basket_pair_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1082,7 +1084,7 @@ JOIN deg db ON c.pb = db.node
          "never a neighborhood-set intersection. Jaccard = "
          "common/(deg_a+deg_b-common) is one exact-integer-fed "
          "division. Scale shape: distinct-edge and degree aggs, "
-         "broadcast degree annotations, the bounded wedge join, and "
+         "degree annotations (by size), the bounded wedge join, and "
          "a triangle-sized shuffle — all keyed, nothing all-pairs; "
          "the edge/degree/oriented tables are materialized once "
          "(_graph_ckpt) and shared across the wedge join's two sides, "

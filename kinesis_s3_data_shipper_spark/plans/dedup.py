@@ -83,7 +83,7 @@ HAVING COUNT(DISTINCT doc_id) >= 2
          "keeps min(struct(doc_id, pos)) (16 bytes), and reporting "
          "text for the >=2-doc survivors (the repeated-boilerplate "
          "set, tiny by construction) is re-sliced from just those "
-         "documents via a broadcast join — one explode scan total, "
+         "documents via a join by size — one explode scan total, "
          "text-recovery cost O(|survivors|), narrow exchange end to "
          "end. The oracle's MIN(span) equals the re-sliced text "
          "because the group key is the text's own digest.")
@@ -497,7 +497,9 @@ def dedup_bloom_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = docs.select(
         "doc_id",
         F.explode(F.expr(f"array({_bloom_pos_spark('text')})")).alias("p"))
-    return (cand.join(pos, "p", "left")
+    # pos is at most 3 positions for each of at most 256 reference
+    # documents (_BLOOM_REF_PRED); Spark sizes it at the documents scan.
+    return (cand.join(F.broadcast(pos), "p", "left")
             .groupBy("doc_id")
             .agg(F.when(F.count("_m") == 3, F.lit(1)).otherwise(F.lit(0))
                  .cast("long").alias("bloom_maybe_seen")))

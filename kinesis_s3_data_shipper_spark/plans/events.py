@@ -338,7 +338,9 @@ def events_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     n, sx, sxx = F.col("n"), F.col("sx"), F.col("sxx")
     z = ((F.col("value") - sx / n)
          / F.sqrt((sxx - sx * sx / n) / (n - 1)))
-    return (ev.join(s, ev.event_type == F.col("s_type"))
+    # s is one row per event type (EVENT_TYPES); Spark sizes a grouped
+    # aggregate at its input's size.
+    return (ev.join(F.broadcast(s), ev.event_type == F.col("s_type"))
             .select("event_id", "event_type", "value", z.alias("zscore"))
             .filter(F.abs("zscore") > 2.5))
 
@@ -1592,7 +1594,9 @@ def events_markov_stationary_step(spark: SparkSession,
          .localCheckpoint(eager=True))
     rowtot = (c.groupBy("src")
               .agg(F.sum("c").cast("long").alias("c_src")))
-    msg = (c.join(rowtot, "src")
+    # c and rowtot are at most |EVENT_TYPES|^2 and |EVENT_TYPES| rows;
+    # the checkpoint keeps the corpus-sized estimate of its origin.
+    msg = (c.join(F.broadcast(rowtot), "src")
            .select("dst", F.expr("(200000000 * c) div c_src")
                    .alias("units")))
     return (msg.groupBy(F.col("dst").alias("event_type"))

@@ -96,7 +96,7 @@ WHERE c_mktsegment = 'BUILDING'
 GROUP BY l_orderkey, o_orderdate, o_orderpriority
 ORDER BY revenue DESC, l_orderkey
 LIMIT 10
-""", doc="TPC-H Q3 flavor: 3-way join → agg → top-10 (broadcast dims).")
+""", doc="TPC-H Q3 flavor: 3-way join → agg → top-10 (dims by size).")
 def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer").filter(
         F.col("c_mktsegment") == "BUILDING")
@@ -163,7 +163,7 @@ ORDER BY total_qty DESC, o_orderkey
 LIMIT 20
 """, doc="TPC-H Q18 flavor: per-order quantity rollup with HAVING, "
          "joined back to the customer — agg → filter-on-agg → "
-         "broadcast dim join → top-k.")
+         "dim join (a broadcast while under the threshold) → top-k.")
 def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders")
@@ -384,7 +384,9 @@ def join_interval_binned(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr(f"start_d div {_IV_BIN_DAYS}"),
             F.expr(f"end_d div {_IV_BIN_DAYS}"))))
     li_b = li.withColumn("bin", F.expr(f"ship_d div {_IV_BIN_DAYS}"))
-    return (li_b.join(iv_b, "bin")
+    # iv_b is at most 200 intervals (o_orderkey < 200) times their
+    # bins; Spark sizes the filtered orders at the whole scan.
+    return (li_b.join(F.broadcast(iv_b), "bin")
             .filter(F.col("ship_d").between(F.col("start_d"),
                                             F.col("end_d")))
             .groupBy("iv_id")
@@ -994,8 +996,9 @@ WHERE p_brand = 'Brand#23'
     WHERE l2.l_partkey = p_partkey)
 """, doc="TPC-H q17: correlated scalar-average subquery. Spark plans "
          "it as a per-part average aggregated once and joined back — "
-         "the decorrelation Catalyst itself applies — with the tiny "
-         "brand-filtered part side broadcast into both joins.")
+         "the decorrelation Catalyst itself applies. The brand-"
+         "filtered part side and the per-part averages grow with the "
+         "part count, so both joins go by size.")
 def q17_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     part = (load_table(spark, sf_dir, "part")
@@ -1004,7 +1007,7 @@ def q17_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Aggregate per-part averages BEFORE touching only-brand rows? No:
     # the average is over ALL lineitems of the part (per spec), but
     # only brand-filtered parts matter — so semi-reduce lineitem to
-    # those parts first via the broadcast part dim, then compute the
+    # those parts first via the brand-filtered part dim, then compute the
     # threshold on that bounded subset.
     li_brand = li.join(part, li.l_partkey == part.p_partkey)
     thresh = (li_brand.groupBy("l_partkey")
@@ -1280,7 +1283,7 @@ FROM lineitem JOIN part ON l_partkey = p_partkey
 WHERE l_shipdate >= TIMESTAMP '1996-03-01'
   AND l_shipdate < TIMESTAMP '1996-09-01'
 """, doc="TPC-H q14 shape: promo revenue share over a 6-month window. "
-         "part is the broadcast dimension; both sums are exact "
+         "part broadcasts while under the threshold; both sums are exact "
          "decimals (order-independent) and only the final ratio is "
          "one double division, so the share is bit-deterministic.")
 def q14_promo_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1431,8 +1434,8 @@ ORDER BY revenue DESC, c_custkey
 LIMIT 20
 """, doc="TPC-H q10 shape: revenue lost to returns per customer over "
          "one quarter — a 4-way star join (orders date-pruned at the "
-         "scan, lineitem filtered on returnflag, customer+nation ride "
-         "broadcasts), then top-20 by exact-decimal revenue with a "
+         "scan, lineitem filtered on returnflag, customer+nation "
+         "broadcast while under the threshold), then top-20 by exact-decimal revenue with a "
          "custkey tiebreak (TakeOrderedAndProject, no global sort).")
 def q10_returned_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer").select(
@@ -1708,7 +1711,7 @@ GROUP BY p_brand, p_size
 """, doc="TPC-H q16 shape: NOT IN anti-join against a filtered dim "
          "(suppliers below an account-balance floor stand in for the "
          "spec's complaint suppliers) followed by COUNT(DISTINCT) on "
-         "a 2-key group. The anti side and the part dim broadcast; "
+         "a 2-key group. The anti side and the part dim join by size; "
          "the distinct shuffles (brand,size,suppkey) triples only — "
          "bytes, not rows.")
 def q16_supplier_cnt(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1879,7 +1882,9 @@ def grouped_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     bounds = (ranked.groupBy("l_returnflag")
               .agg(pick(0.05, "lo"), pick(0.95, "hi")))
-    clipped = (li.join(bounds, "l_returnflag")
+    # bounds is one row per return flag (3 flags, A/N/R); Spark sizes
+    # a grouped aggregate at its input's size.
+    clipped = (li.join(F.broadcast(bounds), "l_returnflag")
                .select("l_returnflag",
                        F.col("l_extendedprice").alias("x"),
                        "lo", "hi"))
@@ -2251,8 +2256,10 @@ def agg_chi2_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     m = o.groupBy("event_type").agg(F.sum("n").cast("long").alias("n_row"))
     h = o.groupBy("hod").agg(F.sum("n").cast("long").alias("n_col"))
     t = o.agg(F.sum("n").cast("long").alias("total"))
-    c = (o.join(m, "event_type")
-         .join(h, "hod")
+    # m and h are one row per event type and per hour of day (24); the
+    # checkpoint keeps the corpus-sized estimate of its origin.
+    c = (o.join(F.broadcast(m), "event_type")
+         .join(F.broadcast(h), "hod")
          .crossJoin(t)
          .withColumn("expected",
                      F.col("n_row").cast("double") * F.col("n_col")

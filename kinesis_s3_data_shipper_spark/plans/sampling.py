@@ -203,8 +203,10 @@ def sample_balance_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
     rates = cnt.join(m).select(
         "lang", F.expr("(1000000 * min_n) div n").alias("keep_below"))
     u = F.expr(_u1e6_spark("CAST(doc_id AS STRING)"))
+    # rates is one row per language; Spark sizes a grouped aggregate
+    # at its input's size.
     return (docs.select("lang", u.alias("u"))
-            .join(rates, "lang")
+            .join(F.broadcast(rates), "lang")
             .filter(F.col("u") < F.col("keep_below"))
             .groupBy("lang")
             .agg(F.count("*").alias("n_kept")))
@@ -456,7 +458,8 @@ def sample_negatives_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
               .withColumn("b", F.expr(
                   "pmod(" + h.format(args="'nd1:', o_custkey, ':', k")
                   + ", 64)"))
-              .join(sizes, "b")
+              # sizes is one row per ring bucket (pmod 64).
+              .join(F.broadcast(sizes), "b")
               .withColumn("r", F.expr(
                   "pmod(" + h.format(args="'nd2:', o_custkey, ':', k")
                   + ", sz) + 1")))
@@ -641,7 +644,9 @@ def sample_stratified_neyman(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranked = docs.select(
         "lang", "doc_id",
         F.row_number().over(wp).cast("long").alias("pick_rank"))
-    return (ranked.join(alloc, "lang")
+    # alloc is one row per language (stratum); Spark sizes it at the
+    # documents scan.
+    return (ranked.join(F.broadcast(alloc), "lang")
             .filter(F.col("pick_rank") <= F.col("alloc"))
             .select("lang", "n_h", "alloc", "doc_id", "pick_rank"))
 
@@ -684,7 +689,8 @@ def sample_kfold_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
          .agg(F.count("*").cast("long").alias("n")))
     t = (s.groupBy("lang")
          .agg(F.sum("n").cast("long").alias("lang_total")))
-    return (s.join(t, "lang")
+    # t is one row per language; Spark sizes it at the documents scan.
+    return (s.join(F.broadcast(t), "lang")
             .select("fold", "lang", "n", "lang_total",
                     F.expr("(1000 * n) div lang_total")
                     .alias("share_milli")))

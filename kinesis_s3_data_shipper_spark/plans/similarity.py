@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..functions.vectors import cosine, sql_cosine, sql_dot, sql_norm
+from ..operators.checkpoint import truncated_checkpoint
 from ..operators.similarity import (cosine_pairs, cosine_topk, hyperplanes,
                                     lsh_bucket, lsh_bucket_stats,
                                     sql_lsh_bucket)
@@ -23,6 +24,16 @@ from .base import register
 #: constant independent of corpus size — the broadcast stays small and
 #: brute force stays O(256·n), not O(n²/97), at any scale factor.
 _QUERY_PRED = "vec_id % 97 = 0 AND vec_id < 24832"
+
+
+def _queries(frame: DataFrame, pred: str = _QUERY_PRED) -> DataFrame:
+    """The query set: the rows of ``frame`` matching ``pred``, at most
+    256 by the id cap in _QUERY_PRED.  Spark estimates a filter at its
+    input's size and cannot see that bound, so it is hinted here, once
+    for every query set: each probe and cross join below broadcasts the
+    query side at any scale factor instead of shuffling the corpus."""
+    return F.broadcast(frame.filter(F.expr(pred)))
+
 
 #: Embedding dimensionality of the driver's embeddings table. Passing
 #: it to the vector ops unrolls the folds into codegen arithmetic
@@ -51,7 +62,7 @@ SELECT query_id, neighbor_id, cos, rank FROM (
          "ordering + id tiebreak for determinism).")
 def ann_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.expr(_QUERY_PRED))
+    queries = _queries(emb)
     return cosine_topk(emb, queries, id_col="vec_id", vec_col="embedding",
                        k=5, round_dp=6, dim=_DIM)
 
@@ -119,7 +130,7 @@ def ann_lsh_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = emb.select(F.col("vec_id"), F.col("embedding"),
                    norm("embedding", _DIM).alias("_n"),
                    lsh_bucket("embedding", planes).alias("bucket"))
-    q = (b.filter(F.expr(_QUERY_PRED))
+    q = (_queries(b)
          .select(F.col("vec_id").alias("query_id"),
                  F.col("embedding").alias("qv"),
                  F.col("_n").alias("_qn"), "bucket"))
@@ -249,7 +260,7 @@ def ann_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         b = (emb.join(asg, "vec_id")
              .select("vec_id", "embedding",
                      norm("embedding", _DIM).alias("_n"), "cluster"))
-    q = (b.filter(F.expr(_QUERY_PRED))
+    q = (_queries(b)
          .select(F.col("vec_id").alias("query_id"),
                  F.col("embedding").alias("qv"),
                  F.col("_n").alias("_qn"), "cluster"))
@@ -339,7 +350,7 @@ def ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = emb.select(F.col("vec_id"), F.col("embedding"),
                    norm("embedding", _DIM).alias("_n"),
                    lsh_bucket("embedding", planes).alias("bucket"))
-    q = (b.filter(F.expr(_QUERY_PRED))
+    q = (_queries(b)
          .select(F.col("vec_id").alias("query_id"),
                  F.col("embedding").alias("qv"),
                  F.col("_n").alias("_qn"),
@@ -415,7 +426,7 @@ def ann_ivf_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Query side: rank the per-centroid cosine array, keep the top
     # nprobe clusters (cos DESC, cid tiebreak — the oracle's window).
     qw = W.partitionBy("query_id").orderBy(F.desc("_ccos"), "cluster")
-    q = (emb.filter(F.expr(_QUERY_PRED))
+    q = (_queries(emb)
          .select(F.col("vec_id").alias("query_id"),
                  F.col("embedding").alias("qv"),
                  norm("embedding", _DIM).alias("_qn"),
@@ -547,7 +558,7 @@ def ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
            .select("vec_id", pq_codes_arrow("embedding", cb).alias("codes"))
            .withColumn("_n", F.sqrt(pq_adc_score(
                pq_sumsq_literal(cb), "codes", _PQ_M))))
-    q = (emb.filter(F.expr(_QUERY_PRED))
+    q = (_queries(emb)
          .select(F.col("vec_id").alias("query_id"),
                  pq_adc_lut("embedding", cb).alias("_lut"),
                  norm("embedding", _DIM).alias("_qn")))
@@ -710,9 +721,11 @@ def _ivfpq_scored(spark: SparkSession, sf_dir: str, *,
              norm("embedding", _DIM).alias("_qn")]
     if with_query_vec:
         qcols.append(F.col("embedding").alias("_qv"))
-    q = (emb.filter(F.expr(_QUERY_PRED))
-         .select(*qcols)
-         .localCheckpoint(eager=True))
+    # The checkpoint is a new leaf that keeps no hint, so the query
+    # side (|Q| <= 256 by _QUERY_PRED) is hinted after it.
+    q = F.broadcast(emb.filter(F.expr(_QUERY_PRED))
+                    .select(*qcols)
+                    .localCheckpoint(eager=True))
     scored = (enc.join(q, "cluster")
               .filter(F.col("vec_id") != F.col("query_id"))
               .select("query_id", F.col("vec_id").alias("neighbor_id"),
@@ -765,7 +778,9 @@ def ann_ivfpq_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
     nbr = (load_table(spark, sf_dir, "embeddings")
            .select(F.col("vec_id").alias("neighbor_id"),
                    F.col("embedding").alias("_nv")))
-    out = (nbr.join(short, "neighbor_id")
+    # The shortlist is |Q| x 10 rows (|Q| <= 256 by _QUERY_PRED), a
+    # bound Spark cannot see through the rank window.
+    out = (nbr.join(F.broadcast(short), "neighbor_id")
            .join(q.select("query_id", "_qv"), "query_id")
            .select("query_id", "neighbor_id",
                    F.round(cosine("_qv", "_nv", _DIM), 6)
@@ -941,7 +956,7 @@ def mine_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = emb.select("vec_id", "embedding", "label",
                    norm("embedding", _DIM).alias("_n"),
                    lsh_bucket("embedding", planes).alias("bucket"))
-    q = (b.filter(F.expr(_QUERY_PRED))
+    q = (_queries(b)
          .select(F.col("vec_id").alias("query_id"),
                  F.col("embedding").alias("qv"),
                  F.col("label").alias("qlabel"),
@@ -1020,7 +1035,7 @@ def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = emb.select("vec_id", "embedding",
                    norm("embedding", _DIM).alias("_n"),
                    lsh_bucket("embedding", planes).alias("bucket"))
-    q = (b.filter(F.expr(_QUERY_PRED))
+    q = (_queries(b)
          .select(F.col("vec_id").alias("query_id"),
                  F.col("embedding").alias("qv"),
                  F.col("_n").alias("_qn"), "bucket"))
@@ -1109,7 +1124,9 @@ def embedding_int8_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("xf").cast("double").alias("x"))
     calib = x.groupBy("d").agg(F.min("x").alias("mn"),
                                F.max("x").alias("mx"))
-    j = x.join(calib, "d")
+    # calib is one row per dimension (_DIM); Spark sizes it at the
+    # exploded corpus.
+    j = x.join(F.broadcast(calib), "d")
     code = (F.when(F.col("mx") == F.col("mn"), F.lit(0.0))
             .otherwise(F.round((F.col("x") - F.col("mn")) * 255
                                / (F.col("mx") - F.col("mn")))))
@@ -1200,14 +1217,15 @@ def embedding_pca_power_step(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", (F.col("d0") + 1).alias("d"),
         F.col("xf").cast("double").alias("x"))
     # μ is |dims| rows consumed three times (the v0 projection, the
-    # centering join, the output). Eagerly localCheckpoint it so the
+    # centering join, the output). Eagerly checkpoint it so the
     # corpus is exploded ONCE for μ — lazy reuse would replay the
-    # whole scan+agg subtree per consumer.
-    mu = (x.groupBy("d")
-          .agg(F.sum(F.col("x").cast("decimal(27,18)")).cast("double")
-               .alias("smu"))
-          .select("d", (F.col("smu") / nlit).alias("mu"))
-          .localCheckpoint(eager=True))
+    # whole scan+agg subtree per consumer — and so the centering
+    # joins see its real size (_DIM rows), not the corpus estimate.
+    mu = truncated_checkpoint(
+        x.groupBy("d")
+        .agg(F.sum(F.col("x").cast("decimal(27,18)")).cast("double")
+             .alias("smu"))
+        .select("d", (F.col("smu") / nlit).alias("mu")))
     mus = (mu.agg(F.sum((F.col("mu") * F.lit(0.125))
                         .cast("decimal(30,20)")).cast("double")
                   .alias("mus")))
@@ -1307,7 +1325,7 @@ def embedding_matryoshka_recall(spark: SparkSession,
         F.slice("embedding", 1, 48).alias("e48"),
         norm("embedding").alias("_n"),
         norm("slice(embedding, 1, 48)").alias("_n48"))
-    q = (b.filter(F.expr(_QUERY_PRED))
+    q = (_queries(b)
          .select(F.col("vec_id").alias("query_id"),
                  F.col("embedding").alias("qv"),
                  F.col("e48").alias("q48"),
@@ -1464,7 +1482,7 @@ def ann_binary_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
     codes = emb.select("vec_id",
                        F.expr(_bq_word_spark(0)).alias("w0"),
                        F.expr(_bq_word_spark(32)).alias("w1"))
-    q = (codes.filter(F.expr(_QUERY_PRED))
+    q = (_queries(codes)
          .select(F.col("vec_id").alias("query_id"),
                  F.col("w0").alias("q0"), F.col("w1").alias("q1")))
     scored = (codes.crossJoin(q)
@@ -1567,7 +1585,7 @@ def retrieval_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     toks = docs.select(
         "doc_id", F.expr("array_distinct(split(text, ' '))").alias("ts"))
-    qt = (toks.filter(F.expr(_DOC_QUERY_PRED))
+    qt = (_queries(toks, _DOC_QUERY_PRED)
           .select(F.col("doc_id").alias("query_id"),
                   F.col("ts").alias("qts")))
     inter = F.size(F.array_intersect("ts", "qts"))
@@ -1585,7 +1603,7 @@ def retrieval_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
            .select("query_id", "doc_id",
                    F.row_number().over(wl).alias("lex_rank"))
            .filter(F.col("lex_rank") <= 10))
-    qv = (emb.filter(F.expr(_QUERY_PRED))
+    qv = (_queries(emb)
           .select(F.col("vec_id").alias("query_id"),
                   F.col("embedding").alias("qe")))
     sem_scored = (emb.crossJoin(qv)
@@ -1758,7 +1776,9 @@ def embedding_cosine_histogram(spark: SparkSession,
          .select("vec_id", "embedding"))
     b = s.select(F.col("vec_id").alias("vid2"),
                  F.col("embedding").alias("emb2"))
-    pairs = (s.join(b, F.col("vec_id") < F.col("vid2"))
+    # b is _COSHIST_K rows; Spark sees the limit, but a non-equi join
+    # over a side it sizes past the threshold plans a CartesianProduct.
+    pairs = (s.join(F.broadcast(b), F.col("vec_id") < F.col("vid2"))
              .select(F.floor(F.round(cosine("embedding", "emb2", _DIM),
                                      6) * 10).cast("long").alias("bin")))
     tot = pairs.agg(F.count("*").cast("long").alias("total"))

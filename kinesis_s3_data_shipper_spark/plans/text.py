@@ -385,8 +385,10 @@ def text_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench = (docs.filter(F.expr(_BENCH_PRED))
              .select(F.explode(grams).alias("gram")).distinct())
     train = docs.filter(~F.expr(f"({_BENCH_PRED})"))
+    # bench holds the n-grams of at most 32 documents (_BENCH_PRED);
+    # Spark sizes it at the documents scan.
     return (train.select("doc_id", F.explode(grams).alias("gram"))
-            .join(bench, "gram")
+            .join(F.broadcast(bench), "gram")
             .groupBy("doc_id")
             .agg(F.count("*").cast("long").alias("n_shared_grams")))
 
@@ -683,7 +685,7 @@ HAVING COUNT(*) * {_HH_K} > MAX(t.n_total)
          "streams each partition's tokens through k bounded-memory "
          "MG counters (mapInPandas — at most k candidates per "
          "partition, whatever the vocabulary) and phase 2 exactly "
-         "counts ONLY the candidate union (broadcast semi-join gate "
+         "counts ONLY the candidate union (a semi-join gate by size "
          "on the re-scan, then a tiny groupBy), keeping every token "
          "whose global count*k strictly exceeds the corpus token "
          "total. The MG + pigeonhole guarantee makes the candidate "
@@ -761,8 +763,8 @@ GROUP BY f.doc_id, d.source
          "(tf x llr) — order-free across partitions and engines; "
          "no floating-point accumulation ever touches data-sized "
          "rows. Scale shape: token tf agg, a vocab-sized stats "
-         "table broadcast back, one doc-keyed sum — the same "
-         "broadcast-dictionary pattern as text_unigram_lm_score."
+         "table joined back by size, one doc-keyed sum — the same "
+         "dictionary-join pattern as text_unigram_lm_score."
          .format(target=_DSIR_TARGET))
 def text_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
@@ -835,8 +837,8 @@ ORDER BY lift DESC, bigram LIMIT 50
          "multi-word-expression / tokenizer-merge-candidate signal. "
          "Scale shape: min-support (>=5) prunes the bigram table "
          "BEFORE the statistic joins (Apriori downward closure), so "
-         "the survivors side is small and broadcasts into the two "
-         "unigram-count joins; T and B are broadcast scalars; the "
+         "the survivors side is small and, while under the threshold, "
+         "broadcasts into the two unigram-count joins; T and B are broadcast scalars; the "
          "top-50 is a bounded TakeOrdered, never a global sort.")
 def text_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
@@ -1002,7 +1004,8 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                   * (F.lit(1.0 - b)
                      + F.lit(b) * (F.col("dl") / F.col("avgdl")))))
     scored = (q.join(tf, "term")
-              .join(dfreq, "term")
+              # dfreq is one row per query term (_BM25_QUERIES).
+              .join(F.broadcast(dfreq), "term")
               .join(dl, "doc_id")
               .crossJoin(stats)
               .select("query_id", "doc_id",
@@ -1522,8 +1525,9 @@ def grouped_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
          .localCheckpoint(eager=True))
     wg = W.partitionBy("lang").orderBy("n_chars", "doc_id")
     ng = d.groupBy("lang").agg(F.count("*").alias("n_g"))
+    # ng is one row per language; Spark sizes it at the documents scan.
     r = (d.withColumn("r", F.row_number().over(wg))
-         .join(ng, "lang"))
+         .join(F.broadcast(ng), "lang"))
     mod = auto_sample_mod(table_row_count(sf_dir, "documents"), 32,
                           target_per_part=128)
     ranked, total = attach_global_rank(

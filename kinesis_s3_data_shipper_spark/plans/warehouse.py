@@ -441,7 +441,9 @@ def maintenance_compact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
                    F.max("l_orderkey").alias("hi")))
     b = ranges.select(F.col("f").alias("f2"), F.col("lo").alias("lo2"),
                       F.col("hi").alias("hi2"))
-    overlaps = (ranges.join(b, F.col("f") < F.col("f2"))
+    # ranges is one row per compacted file, about 4 (target_file_bytes
+    # is a quarter of the input); Spark sizes it at the whole scan.
+    overlaps = (ranges.join(F.broadcast(b), F.col("f") < F.col("f2"))
                 .filter((F.col("lo") <= F.col("hi2"))
                         & (F.col("lo2") <= F.col("hi")))
                 .agg(F.count("*").cast("long").alias("n_range_overlaps")))
@@ -549,7 +551,9 @@ def warehouse_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
                    F.max("user_id").alias("hi")))
     b2 = ranges.select(F.col("f").alias("f2"), F.col("lo").alias("lo2"),
                        F.col("hi").alias("hi2"))
-    overlaps = (ranges.join(b2, F.col("f") < F.col("f2"))
+    # ranges is one row per compacted file, about 4 (target_file_bytes
+    # is a quarter of the input); Spark sizes it at the whole scan.
+    overlaps = (ranges.join(F.broadcast(b2), F.col("f") < F.col("f2"))
                 .filter((F.col("lo") <= F.col("hi2"))
                         & (F.col("lo2") <= F.col("hi")))
                 .agg(F.count("*").cast("long").alias("n_range_overlaps")))
@@ -648,14 +652,15 @@ GROUP BY 1
          "per BIGINT word via bit_or(shiftleft) — the same "
          "O(1)-probe bit-packing that fixed join_bloom_prefilter's "
          "10x substring regression — and the read is the scan plus a "
-         "BROADCAST left join on (file, word) with a shiftright/AND "
-         "probe per row: no corpus shuffle, deleted-row positions "
-         "travel as bits (64 rows per word), and n_deleted comes "
+         "left join on (file, word) with a shiftright/AND probe per "
+         "row: while the DV words are under the broadcast threshold "
+         "the corpus never shuffles, deleted-row positions travel as "
+         "bits (64 rows per word), and n_deleted comes "
          "from bit_count over the DV words, never a second scan of "
          "the deleted rows. The oracle states the logical spec "
          "(filter by flag), so the hash gate proves the whole "
          "build-pack-probe machinery reproduces it exactly. At "
-         "scale, DVs stay file-local and sparse; the broadcast "
+         "scale, DVs stay file-local and sparse; the DV side "
          "carries only files that HAVE deletes, and compaction "
          "(maintenance_compact_roundtrip) eventually folds them in.")
 def warehouse_deletion_vectors(spark: SparkSession,
@@ -682,7 +687,8 @@ def warehouse_deletion_vectors(spark: SparkSession,
             .groupBy("file_id")
             .agg(F.count("*").cast("long").alias("n_live"),
                  dsum("l_extendedprice", "live_revenue")))
-    return (live.join(deleted, "file_id", "left")
+    # deleted is one row per file (l_orderkey % 32).
+    return (live.join(F.broadcast(deleted), "file_id", "left")
             .select("file_id", "n_live",
                     F.coalesce("n_deleted", F.lit(0)).cast("long")
                      .alias("n_deleted"),

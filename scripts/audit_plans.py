@@ -21,10 +21,14 @@ at sf0.1 expecting a static analysis.
 
 Prints one line per query over the scan threshold plus a JSON summary.
 Usage: python scripts/audit_plans.py [sf_dir] [threshold] [-v]
-       python scripts/audit_plans.py <sf_dir> --joins <out.json>
+       python scripts/audit_plans.py <sf_dir> --joins <out.json> [--scale N]
        python scripts/audit_plans.py --diff <before.json> <after.json>
   --joins: write the join census (join_census) instead of the scan
   audit; --diff: print what changed between two such files.
+  --scale N: multiply every scan's size estimate by N
+  (spark.sql.sources.fileCompressionFactor), so the census shows the
+  joins Spark picks at N times the scale factor: a frame bounded by a
+  constant Spark cannot see then loses its broadcast unless hinted.
   -v / --verbose: print the FULL traceback for every errored query
   instead of a 200-char summary (a systematic breakage — e.g. a bad
   import taking down a whole plan module — otherwise hides behind
@@ -296,11 +300,11 @@ def audit(spark, sf_dir: str, *, threshold: int = 4,
 
 
 def join_census(spark, sf_dir: str) -> dict:
-    """The ``joins`` record of every registered query's final plan, plus
-    one per frame a query hands to ``truncated_checkpoint`` (keyed
-    ``<query>#<n>``): the per-round join choices a final plan does not
-    show.  Builds every plan, so it executes checkpoints like
-    :func:`audit`."""
+    """The ``joins`` record (plus ``CartesianProduct``) of every
+    registered query's final plan, and one per frame a query hands to
+    ``truncated_checkpoint`` (keyed ``<query>#<n>``): the per-round join
+    choices a final plan does not show.  Builds every plan, so it
+    executes checkpoints like :func:`audit`."""
     from kinesis_s3_data_shipper_spark.operators import checkpoint
     from kinesis_s3_data_shipper_spark.plans import REGISTRY, all_queries
 
@@ -309,8 +313,12 @@ def join_census(spark, sf_dir: str) -> dict:
     real = checkpoint.truncated_checkpoint
     frames: list = []
 
+    def joins(df):
+        counts = audit_query(df)
+        return {**counts["joins"], "CartesianProduct": counts["cartesian"]}
+
     def recording(df, *args, **kwargs):
-        frames.append(audit_query(df)["joins"])
+        frames.append(joins(df))
         return real(df, *args, **kwargs)
 
     checkpoint.truncated_checkpoint = recording
@@ -319,8 +327,7 @@ def join_census(spark, sf_dir: str) -> dict:
             frames.clear()
             spark.catalog.clearCache()
             try:
-                census[name] = audit_query(
-                    REGISTRY[name].spark(spark, sf_dir))["joins"]
+                census[name] = joins(REGISTRY[name].spark(spark, sf_dir))
             except Exception as exc:
                 census[name] = {"error": f"{type(exc).__name__}: {exc}"[:200]}
             census.update((f"{name}#{i}", j) for i, j in enumerate(frames))
@@ -332,17 +339,18 @@ def join_census(spark, sf_dir: str) -> dict:
 def join_diff(before: dict, after: dict) -> list[str]:
     """Lines for every plan whose join counts differ, then the
     final-plan totals (``BroadcastHashJoin/BroadcastNestedLoopJoin/
-    SortMergeJoin/ShuffledHashJoin``) of each side."""
+    SortMergeJoin/ShuffledHashJoin/CartesianProduct``) of each side."""
     lines = []
+    nodes = JOIN_NODES + ("CartesianProduct",)
     for key in sorted(set(before) | set(after)):
         a, b = before.get(key, {}), after.get(key, {})
         if a != b:
             changed = ", ".join(f"{j} {a.get(j, '-')}->{b.get(j, '-')}"
-                                for j in JOIN_NODES if a.get(j) != b.get(j))
+                                for j in nodes if a.get(j) != b.get(j))
             lines.append(f"{key}: {changed or (a, b)}")
     for label, census in (("before", before), ("after", after)):
         totals = [sum(v.get(j, 0) for k, v in census.items() if "#" not in k)
-                  for j in JOIN_NODES]
+                  for j in nodes]
         lines.append(f"{label} final-plan totals: "
                      + "/".join(map(str, totals)))
     return lines
@@ -357,7 +365,11 @@ def main() -> None:
         i = sys.argv.index("--joins")
         from kinesis_s3_data_shipper_spark.session import get_session
 
-        census = join_census(get_session("ksds-join-census"), sys.argv[1])
+        spark = get_session("ksds-join-census")
+        if "--scale" in sys.argv:
+            spark.conf.set("spark.sql.sources.fileCompressionFactor",
+                           sys.argv[sys.argv.index("--scale") + 1])
+        census = join_census(spark, sys.argv[1])
         with open(sys.argv[i + 1], "w") as fh:
             json.dump(census, fh, indent=1, sort_keys=True)
         return

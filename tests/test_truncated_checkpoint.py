@@ -107,6 +107,21 @@ def test_checkpoint_reports_measured_size_and_broadcasts_unhinted(spark):
     release_checkpoint(plain)
 
 
+def test_variable_width_checkpoint_reports_default_size(spark):
+    """A string has no fixed width (Spark's default counts 20 bytes),
+    so a row-count size could under-report this frame 50x.  It reports
+    Spark's default size instead, and a large frame joined to it does
+    not plan a broadcast."""
+    ckpt = truncated_checkpoint(spark.range(50).selectExpr(
+        "id as k", "repeat('x', 1000) as s"))
+    assert _size(ckpt) == (spark._jsparkSession.sessionState().conf()
+                           .defaultSizeInBytes())
+    large = spark.range(10**9).selectExpr("id % 50 as k", "id as z")
+    plan = large.join(ckpt, "k")._jdf.queryExecution().executedPlan()
+    assert "BroadcastHashJoin" not in plan.toString()
+    release_checkpoint(ckpt)
+
+
 def test_release_unwraps_unary_derivations(spark):
     """r09 advice (medium): every checkpoint-per-round loop tags a
     convergence column and releases ``ckpt.drop(tag)`` — a Project
