@@ -22,6 +22,9 @@ import tempfile
 
 from pyspark.sql import SparkSession
 
+#: The directory that holds this package.
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 #: Staging dirs created by :func:`staging_dir`, reaped at interpreter
 #: exit.  Module-level so every plan module shares one registration.
 _STAGING_DIRS: list[str] = []
@@ -120,6 +123,13 @@ def get_session(app_name: str = "kinesis_s3_data_shipper_spark", *,
         # sf0.1). Any long-lived session serving many distinct queries
         # wants this raised; memory cost is just class metadata.
         .config("spark.sql.codegen.cache.maxEntries", "10000")
+        # Python workers fork from worker_daemon, which stops every task
+        # re-reading each zip archive on the worker path; the package
+        # directory goes on the workers' PYTHONPATH so the daemon and
+        # the UDF modules import whatever the JVM's cwd is.
+        .config("spark.python.daemon.module",
+                "kinesis_s3_data_shipper_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
     for key, value in RUNTIME_CONFS.items():
         builder = builder.config(key, value)

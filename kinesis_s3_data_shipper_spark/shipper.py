@@ -130,6 +130,24 @@ def glob_escape(path: str) -> str:
     return _GLOB_CHARS.sub(r"\\\1", path)
 
 
+def _qualified_prefix(spark, ns) -> str:
+    """``--prefix`` spelled as the listing's keys are: a scheme-less
+    prefix is qualified by the input's filesystem (scheme, authority
+    and, if relative, the working directory), as ``--input`` is; a
+    prefix with a scheme is kept as given."""
+    hadoop_path = spark._jvm.org.apache.hadoop.fs.Path
+    prefix = hadoop_path(ns.prefix)
+    if prefix.toUri().getScheme() is not None:
+        return ns.prefix
+    fs = hadoop_path(ns.input).getFileSystem(
+        spark.sparkContext._jsc.hadoopConfiguration())
+    qualified = fs.makeQualified(prefix).toString()
+    # Path drops a trailing slash, which bounds a directory prefix.
+    if ns.prefix.endswith("/") and not qualified.endswith("/"):
+        qualified += "/"
+    return qualified
+
+
 def _worklist(spark, ns) -> list[str]:
     """Sorted keys of the input files not yet processed.
 
@@ -146,7 +164,8 @@ def _worklist(spark, ns) -> list[str]:
                .load(ns.input)
                .select("path"))
     if ns.prefix:
-        listing = listing.filter(F.col("path").startswith(ns.prefix))
+        listing = listing.filter(
+            F.col("path").startswith(_qualified_prefix(spark, ns)))
     if ns.processed_dir:
         processed = _read_processed(spark, ns.processed_dir)
         if processed is not None:

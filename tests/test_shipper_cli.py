@@ -385,20 +385,22 @@ def test_batch_odd_filenames_ship_once(spark, tmp_path, capsys):
     blob = make_raw_file(n_blocks=2, events_per_block=3, gzip_depth=1)
     for name in names + ["skip:me.log"]:
         (d / name).write_bytes(blob)
-    out = str(tmp_path / "ev")
-    processed = str(tmp_path / "processed")
-    args = ["--input", str(d), "--output", out, "--processed-dir",
-            processed, "--prefix", f"file:{d}/ship"]
+    # A plain-path prefix selects the same keys as the file: URI one.
+    for run, prefix in enumerate([f"file:{d}/ship", f"{d}/ship"]):
+        out = str(tmp_path / f"ev{run}")
+        processed = str(tmp_path / f"processed{run}")
+        args = ["--input", str(d), "--output", out, "--processed-dir",
+                processed, "--prefix", prefix]
 
-    assert main(args) == 0
-    assert events_per_file(spark, out) == {
-        f"file:{d}/{name}": 6 for name in names}
-    recorded = [r.path for r in spark.read.parquet(processed).collect()]
-    assert sorted(recorded) == sorted(f"file:{d}/{n}" for n in names)
+        assert main(args) == 0
+        assert events_per_file(spark, out) == {
+            f"file:{d}/{name}": 6 for name in names}
+        recorded = [r.path for r in spark.read.parquet(processed).collect()]
+        assert sorted(recorded) == sorted(f"file:{d}/{n}" for n in names)
 
-    capsys.readouterr()
-    assert main(args) == 0
-    assert "nothing to do" in capsys.readouterr().err
+        capsys.readouterr()
+        assert main(args) == 0
+        assert "nothing to do" in capsys.readouterr().err
 
 
 def test_batch_skips_keys_recorded_from_listing(spark, landing, tmp_path):
