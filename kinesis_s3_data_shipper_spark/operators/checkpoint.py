@@ -1,41 +1,45 @@
-"""Lineage-truncating materialization for ITERATIVE dataflows.
-
-Two primitives every checkpoint-per-round loop in this repo needs
-(k-core / PageRank / Louvain fixpoints, min-label connected
-components):
+"""The package's one eager materialization, and its release.
 
 - :func:`truncated_checkpoint` — eager ``localCheckpoint`` that
-  reports the checkpoint's OBSERVED row count times its row width.  ``Dataset.localCheckpoint``
-  copies the origin plan's estimated statistics into the new
-  LogicalRDD, and size-only join estimation MULTIPLIES children's
-  ``sizeInBytes`` — so when a loop builds round N's checkpoints from
-  round N-1's checkpoints, the BigInt estimate compounds
-  exponentially in the round count (the Louvain fixpoint once spent
-  ~70 s per level multiplying megabyte-long BigIntegers in the
-  driver).  The origin estimate is therefore dropped, and the
-  checkpoint instead reports the row count observed while it was
-  written, times Spark's default row width for its schema.  For a
-  fixed-width schema (numbers, booleans, dates, timestamps) that is
-  the frame's size; ``autoBroadcastJoinThreshold`` and AQE then pick
-  the join from it: a node-sized frame broadcasts while it is small
-  and sort-merge joins once it is not, with no hint at the call site.
-  A string, binary or nested column has no fixed width (Spark's
-  default counts a string as 20 bytes and an array as one element),
-  so such a frame reports Spark's default size instead and never
-  broadcasts unhinted.
+  reports the size it measured while writing.  Every frame the package
+  materializes goes through it (``tests/test_checkpoint_chokepoint.py``
+  pins that), so what size a materialized frame reports is decided
+  here and nowhere else.  ``Dataset.localCheckpoint`` alone copies the
+  origin plan's estimated statistics into the new LogicalRDD: a
+  |types| × 24-row aggregate of the corpus reports the corpus's size,
+  and since size-only join estimation MULTIPLIES children's
+  ``sizeInBytes``, a loop that builds round N's checkpoints from round
+  N-1's compounds the BigInt estimate exponentially in the round count
+  (the Louvain fixpoint once spent ~70 s per level multiplying
+  megabyte-long BigIntegers in the driver).  The origin estimate is
+  therefore dropped.  The ``observe()`` that rides on the write counts
+  the rows and sums the bytes of every variable-width value:
+  ``octet_length`` of a string or binary, element count × element
+  width of an array or map of fixed-width elements (or of arrays of
+  them); a null counts 0.  The frame reports
+  ``max(rows × Spark's default row width, rows × UnsafeRow fixed
+  region + measured bytes)`` — never below the plain row-count
+  estimate, never below the bytes its values hold.
+  ``autoBroadcastJoinThreshold`` and AQE then pick the join from it: a
+  frame broadcasts while it is small and sort-merge joins once it is
+  not, with no hint at the call site.  A column of any other nested
+  type (a struct, an array of strings or structs) has no measure here,
+  so such a frame reports Spark's default size and never broadcasts
+  unhinted.
 
 - :func:`release_checkpoint` — free a checkpointed frame's blocks
-  once the loop has superseded it, so live storage stays O(1) rounds
+  once a loop has superseded it, so live storage stays O(1) rounds
   instead of O(rounds) (an 8-round peel otherwise parks ~17
   edge-scale block sets for the session lifetime).
 
-Both reach through private APIs (the ``LogicalRDD`` constructor and
-``classic.Dataset.ofRows``) and degrade gracefully: a Spark release
-that moves the internals falls back to the plain checkpoint / skips
-the release — correctness is never affected, only join choice, deep-
-loop driver time and disk residency.  ``tests/test_truncated_
-checkpoint.py`` fails the suite if the reported size ever degrades to
-the fallback's inherited estimate on the running Spark version.
+Both reach through private APIs (the ``LogicalRDD`` constructor,
+``Limit`` statistics and ``classic.Dataset.ofRows``) and degrade
+gracefully: a Spark release that moves the internals falls back to the
+plain checkpoint / skips the release — correctness is never affected,
+only join choice, deep-loop driver time and disk residency.
+``tests/test_truncated_checkpoint.py`` fails the suite if the reported
+size ever degrades to the fallback's inherited estimate on the running
+Spark version.
 
 The re-wrapped leaf keeps the outputPartitioning and outputOrdering
 that ``localCheckpoint`` recorded (under AQE usually none), and drops
@@ -46,6 +50,7 @@ from __future__ import annotations
 
 import logging
 
+from py4j.java_gateway import JavaClass
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -56,37 +61,100 @@ log = logging.getLogger(__name__)
 _FIXED_WIDTH = (T.NumericType, T.BooleanType, T.DateType, T.TimestampType,
                 T.TimestampNTZType)
 
+#: Bytes one array element of a fixed-width type takes (8 otherwise).
+_NARROW = {T.ByteType: 1, T.BooleanType: 1, T.ShortType: 2,
+           T.IntegerType: 4, T.FloatType: 4, T.DateType: 4}
+
+
+def _width(dtype) -> int:
+    if isinstance(dtype, T.DecimalType) and dtype.precision > 18:
+        return 16
+    return _NARROW.get(type(dtype), 8)
+
+
+def _bytes_of(dtype):
+    """The bytes a value of ``dtype`` holds, as a function of its column
+    (0 for null: ``size`` of a null is -1 or null, depending on ANSI
+    mode), or None for a type this does not measure."""
+    if isinstance(dtype, (T.StringType, T.BinaryType)):
+        measure = F.octet_length
+    elif isinstance(dtype, T.MapType):
+        k, v = dtype.keyType, dtype.valueType
+        if not (isinstance(k, _FIXED_WIDTH) and isinstance(v, _FIXED_WIDTH)):
+            return None
+        measure = lambda c: F.size(c) * (_width(k) + _width(v))  # noqa: E731
+    elif not isinstance(dtype, T.ArrayType):
+        return None
+    elif isinstance(dtype.elementType, _FIXED_WIDTH):
+        width = _width(dtype.elementType)
+        measure = lambda c: F.size(c) * width  # noqa: E731
+    elif (isinstance(dtype.elementType, T.ArrayType)
+          and (inner := _bytes_of(dtype.elementType))):
+        measure = lambda c: F.aggregate(  # noqa: E731
+            c, F.lit(0), lambda acc, x: acc + inner(x))
+    else:
+        return None
+    return lambda c: F.greatest(measure(c), F.lit(0))
+
 
 def truncated_checkpoint(df: DataFrame, storage_level=None) -> DataFrame:
-    """Eager localCheckpoint that reports its observed row count times
-    its row width, or Spark's default size for a variable-width schema
-    (module doc)."""
-    obs = Observation()
-    ckpt = (df.observe(obs, F.count(F.lit(1)).alias("rows"))
-            .localCheckpoint(eager=True, storageLevel=storage_level))
+    """Eager localCheckpoint that reports its measured size (module
+    doc)."""
+    schema = df.schema
+    variable = [(f.name, _bytes_of(f.dataType)) for f in schema
+                if not isinstance(f.dataType, _FIXED_WIDTH)]
+    measured = all(measure for _, measure in variable)
+    if measured:
+        obs = Observation()
+        metrics = [F.count(F.lit(1)).alias("rows")]
+        if variable:
+            metrics.append(F.sum(sum(
+                measure(F.col("`%s`" % name.replace("`", "``")))
+                for name, measure in variable).cast("long")).alias("bytes"))
+        df = df.observe(obs, *metrics)
+    ckpt = df.localCheckpoint(eager=True, storageLevel=storage_level)
     try:
         spark = ckpt.sparkSession
-        jvm, jss = spark._jvm, spark._jsparkSession
+        jss = spark._jsparkSession
+
+        def jclass(name):  # by full name: no py4j round trip per package
+            return JavaClass(name, spark._jvm._gateway_client)
+
         leaf = ckpt._jdf.queryExecution().analyzed()
-        none = jvm.scala.Option.empty()
+        output, rdd = leaf.output(), leaf.rdd()
+        part, order = leaf.outputPartitioning(), leaf.outputOrdering()
+        none = jclass("scala.Option").empty()
+        logical_rdd = jclass("org.apache.spark.sql.execution.LogicalRDD")
 
         def wrap(stats):  # the checkpoint's RDD as a LogicalRDD
-            return jvm.org.apache.spark.sql.classic.Dataset.ofRows(
-                jss, jvm.org.apache.spark.sql.execution.LogicalRDD(
-                    leaf.output(), leaf.rdd(), leaf.outputPartitioning(),
-                    leaf.outputOrdering(), False, none, jss, stats, none))
+            return logical_rdd(output, rdd, part, order, False, none, jss,
+                               stats, none)
 
-        if not all(isinstance(f.dataType, _FIXED_WIDTH)
-                   for f in ckpt.schema):
-            return DataFrame(wrap(none), spark)
-        # Spark sizes a limit(n) over a stats-free leaf as n × row width,
-        # so its Statistics is the frame's size.  It stays a JVM object:
-        # py4j returns a scala BigInt to Python as an int, so Statistics
-        # cannot be built from Python.  Past Int.MaxValue rows the frame
-        # reports that many, far above any broadcast threshold.
-        stats = (wrap(none).limit(min(obs.get["rows"], 2**31 - 1))
-                 .queryExecution().optimizedPlan().stats())
-        return DataFrame(wrap(jvm.scala.Some(stats)), spark)
+        stats = none
+        if measured:
+            got = obs.get
+            rows = got["rows"]
+            if variable:
+                # UnsafeRow: a null-bit word per 64 columns and an
+                # 8-byte slot per column, then the variable bytes.
+                n = len(schema)
+                size = rows * 8 * ((n + 63) // 64 + n) + (got["bytes"] or 0)
+                width = 8 + leaf.schema().defaultSize()
+                rows = max(rows, -(-size // width))
+            # Spark sizes a limit(n) over a stats-free leaf as n × its
+            # default row width, so that Statistics is the frame's
+            # size.  It is built in the JVM: py4j returns a scala BigInt
+            # to Python as an int, so Statistics cannot be built from
+            # Python.  Past Int.MaxValue rows the frame reports that
+            # many, far above any broadcast threshold.
+            catalyst = "org.apache.spark.sql.catalyst."
+            limit = jclass(catalyst + "plans.logical.Limit").apply(
+                getattr(jclass(catalyst + "expressions.Literal$"),
+                        "MODULE$").apply(min(rows, 2**31 - 1)),
+                wrap(none))
+            stats = jclass("scala.Some")(limit.stats())
+        return DataFrame(jclass("org.apache.spark.sql.classic.Dataset")
+                         .ofRows(jss, wrap(stats)), spark)
     except Exception as exc:  # private-API drift: fall back, but say so
         log.warning("truncated_checkpoint kept the inherited size "
                     "estimate (%s)", exc)

@@ -31,6 +31,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from .checkpoint import release_checkpoint, truncated_checkpoint
+
 
 def let(bound_expr: str, var: str, body: str) -> str:
     """SQL let-binding: evaluate ``bound_expr`` ONCE, visible as ``var``
@@ -306,7 +308,7 @@ def minhash_lsh_pairs_incremental(base_index: DataFrame,
                    .alias("jaccard"))
            .filter(F.col("jaccard") >= threshold))
     if eager_release:
-        out = out.localCheckpoint()
+        out = truncated_checkpoint(out)
         full.unpersist()
     return out
 
@@ -336,17 +338,10 @@ def connected_components(edges: DataFrame, *, src: str = "doc_a",
     """
     from pyspark.sql import Observation
 
-    from .checkpoint import release_checkpoint, truncated_checkpoint
-
     sym = (edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
            .union(edges.select(F.col(dst).alias("s"), F.col(src).alias("d")))
            .distinct()
            .persist(StorageLevel.MEMORY_AND_DISK))
-    # truncated_checkpoint, not plain localCheckpoint: the rounds CHAIN
-    # checkpoints, the exact shape whose inherited join-product stats
-    # compound exponentially (operators/checkpoint.py) — invisible at
-    # the 2-4 rounds near-dup graphs need, a driver stall on the
-    # long-chain graphs the large-star fallback note contemplates.
     labels = truncated_checkpoint(
         sym.select(F.col("s").alias("node")).distinct()
         .select("node", F.col("node").alias("label")))
@@ -568,7 +563,7 @@ def blocked_ngram_jaccard_pairs(docs: DataFrame, *, id_col: str,
               .filter(F.lit(1.0) >= F.lit(threshold)))
     out = cross.unionByName(within)
     if eager_release:
-        out = out.localCheckpoint()
+        out = truncated_checkpoint(out)
         members.unpersist()
     return out
 
@@ -871,7 +866,7 @@ def blocked_ngram_jaccard_groups(docs: DataFrame, *, id_col: str,
                    F.coalesce("jaccard_to_rep", F.lit(1.0))
                    .alias("jaccard_to_rep")))
     if eager_release:
-        out = out.localCheckpoint()
+        out = truncated_checkpoint(out)
         members.unpersist()
     return out
 
@@ -1021,7 +1016,7 @@ def setsim_prefix_pairs(docs: DataFrame, *, id_col: str = "doc_id",
               .filter(F.lit(1.0) >= F.lit(t)))
     out = cross.unionByName(within)
     if eager_release:
-        out = out.localCheckpoint()
+        out = truncated_checkpoint(out)
         members.unpersist()
     return out
 

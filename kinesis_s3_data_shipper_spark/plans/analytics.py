@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..functions.decimal_safe import fixed2_str, sql_fixed2_str
-from ..operators.checkpoint import release_checkpoint
+from ..operators.checkpoint import release_checkpoint, truncated_checkpoint
 from ..sources.tables import load_table
 from .base import register
 
@@ -64,14 +64,14 @@ def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # consumers run immediately, so the leak-proof lifetime wins; a
     # long-lived production pipeline holding big frames across stages
     # would flip to persist(MEMORY_AND_DISK) + try/finally unpersist.
-    v = (ev.filter(F.col("event_type") == "view")
-         .groupBy("user_id").agg(F.min("ts_us").alias("v_us"))
-         .localCheckpoint(eager=True))
-    c = (ev.filter(F.col("event_type") == "click")
-         .join(v, "user_id")
-         .filter(F.col("ts_us") > F.col("v_us"))
-         .groupBy("user_id").agg(F.min("ts_us").alias("c_us"))
-         .localCheckpoint(eager=True))
+    v = truncated_checkpoint(
+        ev.filter(F.col("event_type") == "view")
+        .groupBy("user_id").agg(F.min("ts_us").alias("v_us")))
+    c = truncated_checkpoint(
+        ev.filter(F.col("event_type") == "click")
+        .join(v, "user_id")
+        .filter(F.col("ts_us") > F.col("v_us"))
+        .groupBy("user_id").agg(F.min("ts_us").alias("c_us")))
     p = (ev.filter(F.col("event_type") == "purchase")
          .join(c, "user_id")
          .filter(F.col("ts_us") > F.col("c_us"))
@@ -819,8 +819,8 @@ def profile_key_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the corpus-sized key shuffle; without materialization every
     # branch below (totals, cum window, p50, p99) re-derives that
     # shuffle — the r08 plan audit measured 5 lineitem scans here.
-    coc = (kc.groupBy("c").agg(F.count("*").cast("long").alias("k"))
-           .localCheckpoint(eager=True))
+    coc = truncated_checkpoint(
+        kc.groupBy("c").agg(F.count("*").cast("long").alias("k")))
     tot = coc.agg(F.sum("k").cast("long").alias("n_keys"),
                   F.sum(F.col("c") * F.col("k")).cast("long")
                   .alias("n_rows"),
@@ -881,9 +881,9 @@ def events_funnel_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     # read twice (the purchase join and the n_clicked count); eager
     # checkpointing materializes it once and ties the blocks' lifetime
     # to this DataFrame — no cached blocks outlive the query call.
-    c = (ev.filter(F.col("event_type") == "click")
-         .groupBy("user_id").agg(F.min("ts_us").alias("c_us"))
-         .localCheckpoint(eager=True))
+    c = truncated_checkpoint(
+        ev.filter(F.col("event_type") == "click")
+        .groupBy("user_id").agg(F.min("ts_us").alias("c_us")))
     conv = (ev.filter(F.col("event_type") == "purchase")
             .join(c, "user_id")
             .filter((F.col("ts_us") > F.col("c_us"))

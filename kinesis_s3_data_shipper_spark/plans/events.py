@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from ..functions.decimal_safe import sql_dsum, dsum
 from ..operators.asof import asof_join
+from ..operators.checkpoint import truncated_checkpoint
 from ..operators.sessionize import sessionize
 from ..sources.tables import load_table
 from .base import register
@@ -1583,20 +1584,18 @@ def events_markov_stationary_step(spark: SparkSession,
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     seq = ev.select("event_type",
                     F.lead("event_type").over(w).alias("nxt"))
-    c = (seq.filter(F.col("nxt").isNotNull())
-         .groupBy(F.col("event_type").alias("src"),
-                  F.col("nxt").alias("dst"))
-         .agg(F.count("*").cast("long").alias("c"))
-         # Materialize the <=|types|^2-row aggregate once: both the
-         # row-total branch and the message join read it, and without
-         # this the totals branch re-runs the corpus lead() window
-         # (the IVFPQ double-eval lesson; plan-pinned below).
-         .localCheckpoint(eager=True))
+    # Materialize the <=|types|^2-row aggregate once: both the
+    # row-total branch and the message join read it, and without
+    # this the totals branch re-runs the corpus lead() window
+    # (the IVFPQ double-eval lesson; plan-pinned below).
+    c = truncated_checkpoint(
+        seq.filter(F.col("nxt").isNotNull())
+        .groupBy(F.col("event_type").alias("src"),
+                 F.col("nxt").alias("dst"))
+        .agg(F.count("*").cast("long").alias("c")))
     rowtot = (c.groupBy("src")
               .agg(F.sum("c").cast("long").alias("c_src")))
-    # c and rowtot are at most |EVENT_TYPES|^2 and |EVENT_TYPES| rows;
-    # the checkpoint keeps the corpus-sized estimate of its origin.
-    msg = (c.join(F.broadcast(rowtot), "src")
+    msg = (c.join(rowtot, "src")
            .select("dst", F.expr("(200000000 * c) div c_src")
                    .alias("units")))
     return (msg.groupBy(F.col("dst").alias("event_type"))

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..functions.decimal_safe import dsum, davg, sql_dsum, sql_davg
+from ..operators.checkpoint import truncated_checkpoint
 from ..sources.tables import load_table
 from .base import register
 
@@ -1947,7 +1948,7 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
                .cast("double").alias("monetary")))
     # Materialize the per-customer aggregate once so the ranker's prep
     # jobs scan |customers| checkpointed rows, not the fact table.
-    mc = m.localCheckpoint(eager=True)
+    mc = truncated_checkpoint(m)
     metrics = (("last_order_ms", "_rn_r", "r_score"),
                ("frequency", "_rn_f", "f_score"),
                ("monetary", "_rn_m", "m_score"))
@@ -2249,17 +2250,15 @@ def agg_chi2_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpus-sized aggregation; materialized once so the marginals and
     # total branches don't each re-derive the events shuffle (r08 plan
     # audit: 4 events scans).
-    o = (ev.groupBy("event_type",
-                    F.expr("ts div 3600000000000 % 24").alias("hod"))
-         .agg(F.count("*").cast("long").alias("n"))
-         .localCheckpoint(eager=True))
+    o = truncated_checkpoint(
+        ev.groupBy("event_type",
+                   F.expr("ts div 3600000000000 % 24").alias("hod"))
+        .agg(F.count("*").cast("long").alias("n")))
     m = o.groupBy("event_type").agg(F.sum("n").cast("long").alias("n_row"))
     h = o.groupBy("hod").agg(F.sum("n").cast("long").alias("n_col"))
     t = o.agg(F.sum("n").cast("long").alias("total"))
-    # m and h are one row per event type and per hour of day (24); the
-    # checkpoint keeps the corpus-sized estimate of its origin.
-    c = (o.join(F.broadcast(m), "event_type")
-         .join(F.broadcast(h), "hod")
+    c = (o.join(m, "event_type")
+         .join(h, "hod")
          .crossJoin(t)
          .withColumn("expected",
                      F.col("n_row").cast("double") * F.col("n_col")
@@ -2335,7 +2334,7 @@ def agg_mannwhitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
                     .otherwise(0)).cast("long").alias("cb")))
     # The distinct-value frame feeds the prefix-sum's two prep jobs
     # plus the ranked plan; materialize once.
-    d = d.localCheckpoint(eager=True)
+    d = truncated_checkpoint(d)
     o = attach_prefix_sum(d, [("value", "asc")],
                           weight_col="cb", out_col="cumb")
     t = F.col("ca") + F.col("cb")
@@ -2417,7 +2416,7 @@ def agg_ks_statistic(spark: SparkSession, sf_dir: str) -> DataFrame:
                     .otherwise(0)).cast("long").alias("ca"),
               F.sum(F.when(F.col("event_type") == "purchase", 1)
                     .otherwise(0)).cast("long").alias("cb")))
-    d = d.localCheckpoint(eager=True)
+    d = truncated_checkpoint(d)
     o = attach_prefix_sum(d, [("value", "asc")],
                           weights={"cuma_excl": "ca", "cumb_excl": "cb"})
     # inclusive cumulative = exclusive prefix + own count (row-local).

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.checkpoint import truncated_checkpoint
 from ..sources.tables import load_table
 from .base import register
 
@@ -806,21 +807,21 @@ def sample_poisson_bootstrap_mean(spark: SparkSession,
         F.explode(F.expr(f"sequence(0, {_BOOT_B - 1})")).alias("b"))
            .select("b", "cents",
                    F.expr(_POIS_W.format(u=u)).alias("w")))
-    means = (rep.groupBy("b")
-             .agg(F.sum("w").cast("long").alias("n_eff"),
-                  F.round(F.sum(F.expr("CAST(w * cents AS "
-                                       "DECIMAL(38,0))"))
-                          .cast("double") / F.sum("w"), 6)
-                  .alias("mean_cents"))
-             .select(F.col("b").cast("long").alias("b"), "n_eff",
-                     "mean_cents",
-                     F.expr("CAST(floor(mean_cents * 1000000 + 0.5) "
-                            "AS BIGINT)").alias("mq"))
-             # Materialize the 32-row replicate table once: the SE
-             # branch and the output both read it, and without this
-             # the stats branch re-runs the corpus x32 explode (the
-             # Markov-step double-eval lesson; plan-pinned).
-             .localCheckpoint(eager=True))
+    # Materialize the 32-row replicate table once: the SE branch and
+    # the output both read it, and without this the stats branch
+    # re-runs the corpus x32 explode (the Markov-step double-eval
+    # lesson; plan-pinned).
+    means = truncated_checkpoint(
+        rep.groupBy("b")
+        .agg(F.sum("w").cast("long").alias("n_eff"),
+             F.round(F.sum(F.expr("CAST(w * cents AS "
+                                  "DECIMAL(38,0))"))
+                     .cast("double") / F.sum("w"), 6)
+             .alias("mean_cents"))
+        .select(F.col("b").cast("long").alias("b"), "n_eff",
+                "mean_cents",
+                F.expr("CAST(floor(mean_cents * 1000000 + 0.5) "
+                       "AS BIGINT)").alias("mq")))
     s = means.agg(
         F.count("*").cast("long").alias("nb"),
         F.sum(F.col("mq").cast("decimal(38,0)")).alias("smq"),

@@ -702,13 +702,13 @@ def _ivfpq_scored(spark: SparkSession, sf_dir: str, *,
     # projection (two Python eval nodes per stage, measured ~2x this
     # query's steady-state cost). At 100 TB this localCheckpoint is
     # the index-build job writing cells+codes to storage.
-    enc = (emb.repartition(spark.sparkContext.defaultParallelism)
-           .select("vec_id",
-                   ivf_cluster_arrow("embedding", cents).alias("cluster"),
-                   pq_codes_arrow("embedding", cb).alias("codes"))
-           .withColumn("_n", F.sqrt(pq_adc_score(
-               pq_sumsq_literal(cb), "codes", _PQ_M)))
-           .localCheckpoint(eager=True))
+    enc = truncated_checkpoint(
+        emb.repartition(spark.sparkContext.defaultParallelism)
+        .select("vec_id",
+                ivf_cluster_arrow("embedding", cents).alias("cluster"),
+                pq_codes_arrow("embedding", cb).alias("codes"))
+        .withColumn("_n", F.sqrt(pq_adc_score(
+            pq_sumsq_literal(cb), "codes", _PQ_M))))
     # Materialize the bounded query side once (|Q| <= 256 rows of
     # LUT + scalars): its Arrow assignment/LUT UDFs otherwise re-plan
     # into the broadcast-build AND the join stage (the executed plan
@@ -721,11 +721,8 @@ def _ivfpq_scored(spark: SparkSession, sf_dir: str, *,
              norm("embedding", _DIM).alias("_qn")]
     if with_query_vec:
         qcols.append(F.col("embedding").alias("_qv"))
-    # The checkpoint is a new leaf that keeps no hint, so the query
-    # side (|Q| <= 256 by _QUERY_PRED) is hinted after it.
-    q = F.broadcast(emb.filter(F.expr(_QUERY_PRED))
-                    .select(*qcols)
-                    .localCheckpoint(eager=True))
+    q = truncated_checkpoint(emb.filter(F.expr(_QUERY_PRED))
+                             .select(*qcols))
     scored = (enc.join(q, "cluster")
               .filter(F.col("vec_id") != F.col("query_id"))
               .select("query_id", F.col("vec_id").alias("neighbor_id"),

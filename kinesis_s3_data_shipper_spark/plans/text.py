@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.checkpoint import truncated_checkpoint
 from ..operators.dedup import minhash_lsh_candidates
 from ..sources.tables import load_table
 from ..session import staging_dir
@@ -849,9 +850,9 @@ def text_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialized once (r08 plan audit: 6 documents scans here, 3 of
     # them this table's re-derivations).  DISK_ONLY — vocab-scale.
     from pyspark.storagelevel import StorageLevel
-    uc = (uni.groupBy("word").agg(F.count("*").cast("long").alias("c"))
-          .localCheckpoint(eager=True,
-                           storageLevel=StorageLevel.DISK_ONLY))
+    uc = truncated_checkpoint(
+        uni.groupBy("word").agg(F.count("*").cast("long").alias("c")),
+        StorageLevel.DISK_ONLY)
     tot = uc.agg(F.sum("c").cast("long").alias("t"))
     pairs = (w.filter(F.size("ws") >= 2)
              .select(F.explode(F.expr(
@@ -1192,7 +1193,7 @@ def text_bpe_merge_2step(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The distinct-word dictionary is the reused operand of every
     # iteration: materialize it once (64-ish chars per word, |vocab|
     # rows) so the corpus explode+count never replays per branch.
-    rep0 = rep0.localCheckpoint(eager=True)
+    rep0 = truncated_checkpoint(rep0)
 
     def pair_counts(rep):
         syms = rep.select("n", F.split("seq", "[|]").alias("syms"))
@@ -1211,11 +1212,11 @@ def text_bpe_merge_2step(spark: SparkSession, sf_dir: str) -> DataFrame:
     def choose_and_apply(rep):
         best = (pair_counts(rep).orderBy(F.desc("cnt"), "a", "b").limit(1)
                 .select(F.col("a").alias("ba"), F.col("b").alias("bb")))
-        merged = (rep.crossJoin(best)
-                  .select("n",
-                          F.expr("replace(seq, concat(ba, '|', bb),"
-                                 " concat(ba, bb))").alias("seq"))
-                  .localCheckpoint(eager=True))
+        merged = truncated_checkpoint(
+            rep.crossJoin(best)
+            .select("n",
+                    F.expr("replace(seq, concat(ba, '|', bb),"
+                           " concat(ba, bb))").alias("seq")))
         return merged, best
 
     rep1, best1 = choose_and_apply(rep0)
@@ -1355,11 +1356,10 @@ def text_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
                       F.explode(F.split("text", " ")).alias("word"))
           .filter(F.col("word").rlike("^[a-z]+$")))
     wc = (wa.groupBy("word").agg(F.count("*").cast("long").alias("n")))
-    rep0 = (wc.select(
+    rep0 = truncated_checkpoint(wc.select(
         "word", "n",
         F.expr("array_join(regexp_extract_all(word, '.', 0), '|')")
-        .alias("seq"))
-        .localCheckpoint(eager=True))
+        .alias("seq")))
 
     def pair_counts(rep):
         syms = rep.select("n", F.split("seq", "[|]").alias("syms"))
@@ -1378,11 +1378,11 @@ def text_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     def choose_and_apply(rep):
         best = (pair_counts(rep).orderBy(F.desc("cnt"), "a", "b").limit(1)
                 .select(F.col("a").alias("ba"), F.col("b").alias("bb")))
-        return (rep.crossJoin(best)
-                .select("word", "n",
-                        F.expr("replace(seq, concat(ba, '|', bb),"
-                               " concat(ba, bb))").alias("seq"))
-                .localCheckpoint(eager=True))
+        return truncated_checkpoint(
+            rep.crossJoin(best)
+            .select("word", "n",
+                    F.expr("replace(seq, concat(ba, '|', bb),"
+                           " concat(ba, bb))").alias("seq")))
 
     rep2 = choose_and_apply(choose_and_apply(rep0))
     tok = rep2.select(
@@ -1455,8 +1455,8 @@ def text_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
             " i -> named_struct('a', element_at(syms, i),"
             " 'b', element_at(syms, i + 1))) END")).alias("p"))
         .select("doc_id", "p.a", "p.b"))
-    cb = (bg.groupBy("a", "b").agg(F.count("*").cast("long").alias("c"))
-          .localCheckpoint(eager=True))
+    cb = truncated_checkpoint(
+        bg.groupBy("a", "b").agg(F.count("*").cast("long").alias("c")))
     top_bg = (cb.orderBy(F.desc("c"), "a", "b").limit(1000)
               .withColumnRenamed("c", "cb"))
     cu = (cb.groupBy("a").agg(F.sum("c").cast("long").alias("cu")))
@@ -1520,9 +1520,9 @@ def grouped_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
     from ..operators.ranks import attach_global_rank, auto_sample_mod
     from ..sources.tables import table_row_count
-    d = (load_table(spark, sf_dir, "documents")
-         .select("doc_id", "lang", "n_chars")
-         .localCheckpoint(eager=True))
+    d = truncated_checkpoint(
+        load_table(spark, sf_dir, "documents")
+        .select("doc_id", "lang", "n_chars"))
     wg = W.partitionBy("lang").orderBy("n_chars", "doc_id")
     ng = d.groupBy("lang").agg(F.count("*").alias("n_g"))
     # ng is one row per language; Spark sizes it at the documents scan.
@@ -2052,10 +2052,10 @@ def text_kneser_ney_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpus explode + count doesn't re-derive per branch (r08 plan
     # audit: 4 documents scans).  DISK_ONLY — dictionary-scale.
     from pyspark.storagelevel import StorageLevel
-    c2 = (bi.groupBy("w1", "w2")
-          .agg(F.count("*").cast("long").alias("c"))
-          .localCheckpoint(eager=True,
-                           storageLevel=StorageLevel.DISK_ONLY))
+    c2 = truncated_checkpoint(
+        bi.groupBy("w1", "w2")
+        .agg(F.count("*").cast("long").alias("c")),
+        StorageLevel.DISK_ONLY)
     uni = (c2.groupBy(F.col("w2").alias("word"))
            .agg(F.sum("c").cast("long").alias("c_w")))
     lc = (c2.groupBy(F.col("w2").alias("word"))

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from ..functions.decimal_safe import (dsum, fixed2_str, sql_dsum,
                                       sql_fixed2_str)
 from ..functions.values import values_df
+from ..operators.checkpoint import truncated_checkpoint
 from ..sources.tables import load_table
 from ..session import staging_dir
 from .base import register
@@ -300,10 +301,10 @@ def compute_range_splits_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     # job (boundary sample, offsets, final ranks) reads the bounded
     # checkpointed sample instead of re-scanning and re-hashing the
     # corpus.
-    li = (load_table(spark, sf_dir, "lineitem")
-          .select("l_orderkey", "l_linenumber")
-          .filter(F.expr(_SPLIT_GATE_SPARK))
-          .localCheckpoint(eager=True))
+    li = truncated_checkpoint(
+        load_table(spark, sf_dir, "lineitem")
+        .select("l_orderkey", "l_linenumber")
+        .filter(F.expr(_SPLIT_GATE_SPARK)))
     specs = [("l_orderkey", "asc"), ("l_linenumber", "asc")]
     # Modulus sizing needs only n's order of magnitude: estimate the
     # sample's size as footer-count/gate-modulus — no count() job
@@ -1177,9 +1178,9 @@ def warehouse_gdpr_delete_audit(spark: SparkSession,
     # Materialize the (tiny) request list once: it feeds the purge
     # anti-join, the residue re-join and its own count — without the
     # checkpoint each consumer re-runs the filtered scan + distinct.
-    req = (ev.filter(F.expr(_GDPR_PRED))
-           .select("user_id").distinct()
-           .localCheckpoint(eager=True))
+    req = truncated_checkpoint(
+        ev.filter(F.expr(_GDPR_PRED))
+        .select("user_id").distinct())
     purged = ev.join(req, "user_id", "left_anti")
     residue = purged.join(req, "user_id", "inner")
     n_req = req.agg(F.count("*").cast("long").alias("n_requests"))

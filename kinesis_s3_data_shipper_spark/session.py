@@ -5,7 +5,8 @@ Two entry points:
 - :func:`get_session` — build a tuned local session (tests, bench).
 - :func:`ensure_runtime_confs` — idempotently apply the runtime-settable
   confs this engine needs to a session *someone else* built (the
-  correctness driver passes us its own session).
+  correctness driver passes us its own session), and ship the package
+  to its Python workers when they could not import it otherwise.
 
 Scale posture: the static confs below are sized for ``local[N]`` but the
 same knobs are the ones that matter on a 1000-executor cluster — AQE for
@@ -19,6 +20,8 @@ import atexit
 import os
 import shutil
 import tempfile
+import weakref
+import zipfile
 
 from pyspark.sql import SparkSession
 
@@ -79,8 +82,42 @@ RUNTIME_CONFS: dict[str, str] = {
 }
 
 
+#: SparkContexts :func:`_ship_package` has already looked at.
+_SHIP_CHECKED: weakref.WeakSet = weakref.WeakSet()
+
+
+def _ship_package(spark: SparkSession) -> None:
+    """Once per SparkContext: unless its workers can import the package
+    already — the session sets its own ``spark.executorEnv.PYTHONPATH``
+    (as :func:`get_session` does), or the JVM runs from the package's
+    parent directory, the cwd its Python workers inherit — add a zip of
+    the package with ``addPyFile``.  Without it every Python UDF query
+    of a session built elsewhere fails with ``ModuleNotFoundError``."""
+    sc = spark.sparkContext
+    if sc in _SHIP_CHECKED:
+        return
+    _SHIP_CHECKED.add(sc)
+    if (spark.conf.get("spark.executorEnv.PYTHONPATH", None) is not None
+            or sc._jvm.System.getProperty("user.dir") == _PACKAGE_PARENT):
+        return
+    package = os.path.dirname(os.path.abspath(__file__))
+    path = os.path.join(staging_dir("ksds-pyfiles-"),
+                        os.path.basename(package) + ".zip")
+    with zipfile.ZipFile(path, "w") as archive:
+        for root, dirs, files in os.walk(package):
+            dirs[:] = [d for d in dirs if d != "__pycache__"]
+            for name in files:
+                if name.endswith(".py"):
+                    full = os.path.join(root, name)
+                    archive.write(full, os.path.relpath(full, _PACKAGE_PARENT))
+    sc.addPyFile(path)
+
+
 def ensure_runtime_confs(spark: SparkSession) -> SparkSession:
-    """Apply :data:`RUNTIME_CONFS` to an existing session (idempotent)."""
+    """Apply :data:`RUNTIME_CONFS` to an existing session (idempotent),
+    and ship the package to its workers if they need it
+    (:func:`_ship_package`)."""
+    _ship_package(spark)
     for key, value in RUNTIME_CONFS.items():
         try:
             if spark.conf.get(key, None) != value:

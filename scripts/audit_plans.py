@@ -301,16 +301,19 @@ def audit(spark, sf_dir: str, *, threshold: int = 4,
 
 def join_census(spark, sf_dir: str) -> dict:
     """The ``joins`` record (plus ``CartesianProduct``) of every
-    registered query's final plan, and one per frame a query hands to
-    ``truncated_checkpoint`` (keyed ``<query>#<n>``): the per-round join
-    choices a final plan does not show.  Builds every plan, so it
-    executes checkpoints like :func:`audit`."""
-    from kinesis_s3_data_shipper_spark.operators import checkpoint
+    registered query's final plan, and one per frame a query
+    materializes with ``localCheckpoint`` (keyed ``<query>#<n>``): the
+    per-round join choices a final plan does not show.  Recording the
+    ``localCheckpoint`` call itself sees every materialization however
+    its caller imported ``truncated_checkpoint``.  Builds every plan,
+    so it executes checkpoints like :func:`audit`."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
     from kinesis_s3_data_shipper_spark.plans import REGISTRY, all_queries
 
     all_queries()
     census: dict[str, dict] = {}
-    real = checkpoint.truncated_checkpoint
+    real = DataFrame.localCheckpoint
     frames: list = []
 
     def joins(df):
@@ -321,7 +324,7 @@ def join_census(spark, sf_dir: str) -> dict:
         frames.append(joins(df))
         return real(df, *args, **kwargs)
 
-    checkpoint.truncated_checkpoint = recording
+    DataFrame.localCheckpoint = recording
     try:
         for name in REGISTRY:
             frames.clear()
@@ -332,7 +335,7 @@ def join_census(spark, sf_dir: str) -> dict:
                 census[name] = {"error": f"{type(exc).__name__}: {exc}"[:200]}
             census.update((f"{name}#{i}", j) for i, j in enumerate(frames))
     finally:
-        checkpoint.truncated_checkpoint = real
+        DataFrame.localCheckpoint = real
     return census
 
 

@@ -23,7 +23,6 @@ ALLOWED = {
     # Query sets: at most 256 rows by the vec_id cap in _QUERY_PRED,
     # and the frames derived from them (|Q| x 3 hits, |Q| x 10 short).
     ("plans/similarity.py", "_queries"): "_QUERY_PRED",
-    ("plans/similarity.py", "_ivfpq_scored"): "_QUERY_PRED",
     ("plans/similarity.py", "ann_ivfpq_refine"): "_QUERY_PRED",
     ("plans/similarity.py", "embedding_matryoshka_recall"): "_QUERY_PRED",
     ("plans/similarity.py", "embedding_int8_quantize"): "_DIM",
@@ -31,8 +30,6 @@ ALLOWED = {
     ("operators/similarity.py", "ivf_assign_broadcast"): "K rows",
     ("plans/analytics.py", "agg_sketch_merge_kll"): "EVENT_TYPES",
     ("plans/events.py", "events_anomaly_zscore"): "EVENT_TYPES",
-    ("plans/events.py", "events_markov_stationary_step"): "EVENT_TYPES",
-    ("plans/relational.py", "agg_chi2_independence"): "hour of day (24)",
     ("plans/relational.py", "grouped_winsorize"): "3 flags",
     ("plans/relational.py", "join_interval_binned"): "o_orderkey < 200",
     ("plans/sampling.py", "sample_balance_classes"): _LANG,

@@ -9,7 +9,9 @@ up burning seconds-per-round on BigInteger arithmetic inside the stats
 visitor (the round-9 Louvain finding: 98 s -> 10 s for 6 levels).
 These tests pin the firewall: a chained truncated_checkpoint keeps a
 BOUNDED size estimate where the plain localCheckpoint chain provably
-explodes, and the wrapped frame still reads the same persisted blocks.
+explodes, the estimate it reports instead is the frame's measured size
+(variable-width values included), and the wrapped frame still reads the
+same persisted blocks.
 """
 
 from __future__ import annotations
@@ -107,18 +109,41 @@ def test_checkpoint_reports_measured_size_and_broadcasts_unhinted(spark):
     release_checkpoint(plain)
 
 
-def test_variable_width_checkpoint_reports_default_size(spark):
-    """A string has no fixed width (Spark's default counts 20 bytes),
-    so a row-count size could under-report this frame 50x.  It reports
-    Spark's default size instead, and a large frame joined to it does
-    not plan a broadcast."""
-    ckpt = truncated_checkpoint(spark.range(50).selectExpr(
+def test_variable_width_checkpoint_reports_measured_bytes(spark):
+    """A string or array has no fixed width (Spark's default counts a
+    string as 20 bytes and an array as one element), so a row-count
+    size would under-report these frames 25-50x.  The checkpoint sums
+    their value bytes while it writes them and reports a size between
+    those bytes and twice them.  At a 10 KB threshold the 50 KB string
+    frame must not broadcast; sized by default widths (50 rows x 36 B)
+    it would."""
+    strings = truncated_checkpoint(spark.range(50).selectExpr(
         "id as k", "repeat('x', 1000) as s"))
+    floats = truncated_checkpoint(spark.range(50).selectExpr(
+        "id as k", "array_repeat(cast(id as float), 256) as a"))
+    for ckpt, value_bytes in ((strings, 50 * 1000), (floats, 50 * 256 * 4)):
+        assert value_bytes <= _size(ckpt) <= 2 * value_bytes, (
+            _size(ckpt), value_bytes)
+    large = spark.range(10**9).selectExpr("id % 50 as k", "id as z")
+    saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(10 * 1024))
+    try:
+        plan = (large.join(strings, "k")._jdf.queryExecution()
+                .executedPlan().toString())
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
+    assert "BroadcastHashJoin" not in plan
+    release_checkpoint(strings)
+    release_checkpoint(floats)
+
+
+def test_struct_checkpoint_reports_default_size(spark):
+    """A struct is a nested type the checkpoint does not measure, so it
+    reports Spark's default size, as the origin-free leaf would."""
+    ckpt = truncated_checkpoint(spark.range(50).selectExpr(
+        "id as k", "named_struct('s', repeat('x', 1000)) as st"))
     assert _size(ckpt) == (spark._jsparkSession.sessionState().conf()
                            .defaultSizeInBytes())
-    large = spark.range(10**9).selectExpr("id % 50 as k", "id as z")
-    plan = large.join(ckpt, "k")._jdf.queryExecution().executedPlan()
-    assert "BroadcastHashJoin" not in plan.toString()
     release_checkpoint(ckpt)
 
 

@@ -170,3 +170,32 @@ def test_get_session_workers_run_from_a_foreign_cwd(tmp_path, sf_small):
         cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600)
     assert done.returncode == 0, done.stderr[-4000:]
     assert done.stdout.strip().endswith("ok")
+
+
+_PLAIN_SESSION_SCRIPT = """
+import sys
+sys.path.insert(0, {root!r})
+from pyspark.sql import SparkSession
+from kinesis_s3_data_shipper_spark.plans import all_queries
+
+spark = (SparkSession.builder.master("local[2]")
+         .config("spark.ui.enabled", "false").getOrCreate())
+assert all_queries()["ann_ivfpq_refine"](spark, {sf!r}).collect()
+spark.stop()
+print("ok")
+"""
+
+
+def test_plain_session_workers_run_from_a_foreign_cwd(tmp_path, sf_small):
+    """A session built elsewhere (no package confs, so no worker
+    ``PYTHONPATH``) runs a Python UDF query from a foreign cwd with
+    ``PYTHONPATH`` unset: the query's first table load ships the
+    package to the workers."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    done = subprocess.run(
+        [sys.executable, "-c",
+         _PLAIN_SESSION_SCRIPT.format(root=root, sf=sf_small)],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600)
+    assert done.returncode == 0, done.stderr[-4000:]
+    assert done.stdout.strip().endswith("ok")
