@@ -258,8 +258,7 @@ def minhash_lsh_index(docs: DataFrame, *, id_col: str, text_col: str,
 
 def minhash_lsh_pairs_incremental(base_index: DataFrame,
                                   delta_index: DataFrame, *,
-                                  threshold: float = 0.5,
-                                  eager_release: bool = True) -> DataFrame:
+                                  threshold: float = 0.5) -> DataFrame:
     """Near-dup pairs INVOLVING AT LEAST ONE DELTA doc — the
     append-only maintenance step of MinHash-LSH dedup (the streaming
     counterpart of :func:`minhash_lsh_pairs`): only the delta's band
@@ -275,12 +274,9 @@ def minhash_lsh_pairs_incremental(base_index: DataFrame,
     reads it three times (band probe + both verify sides). As the
     designated PER-EPOCH maintenance step this would otherwise
     accumulate cached blocks across invocations until eviction
-    pressure, so by default (``eager_release=True``) the small pair
-    output is materialized here (localCheckpoint) and the index cache
-    is dropped before returning. Pass ``eager_release=False`` to keep
-    the result lazy for plan composition — the CALLER then owns the
-    unioned index's cache lifetime (it is released only by eviction
-    or ``spark.catalog.clearCache()``).
+    pressure, so the small pair output is materialized here
+    (:func:`truncated_checkpoint`) and the index cache is dropped
+    before returning.
     """
     full = (base_index.withColumn("_is_delta", F.lit(False))
             .unionByName(delta_index.withColumn("_is_delta", F.lit(True)))
@@ -307,9 +303,8 @@ def minhash_lsh_pairs_incremental(base_index: DataFrame,
                     / F.size(F.array_union("_sh_a", "_sh_b")))
                    .alias("jaccard"))
            .filter(F.col("jaccard") >= threshold))
-    if eager_release:
-        out = truncated_checkpoint(out)
-        full.unpersist()
+    out = truncated_checkpoint(out)
+    full.unpersist()
     return out
 
 
@@ -415,7 +410,6 @@ def blocked_ngram_jaccard_pairs(docs: DataFrame, *, id_col: str,
                                 text_col: str, block_cols: list[str],
                                 ngram_n: int = 5,
                                 threshold: float = 0.6,
-                                eager_release: bool = False,
                                 diag: dict | None = None) -> DataFrame:
     """Exact char-n-gram Jaccard over pairs inside blocking keys,
     candidate-pruned by PPJoin prefix filtering (Xiao et al. 2008).
@@ -520,14 +514,9 @@ def blocked_ngram_jaccard_pairs(docs: DataFrame, *, id_col: str,
     release.  It is, however, never dropped by the lazy plan itself:
     a long-lived session invoking the operator repeatedly
     accumulates one evictable member map per call until memory
-    pressure or ``spark.catalog.clearCache()``.  Per-epoch callers
-    should pass ``eager_release=True`` — the pair output is
-    materialized here (localCheckpoint) and the member map is
-    unpersisted before returning, the
-    :func:`minhash_lsh_pairs_incremental` lifecycle; the default
-    stays lazy because registered-query plans must compose (and be
-    audited) unexecuted.  (2) within-group expansion is quadratic in
-    GROUP size
+    pressure or ``spark.catalog.clearCache()``; the plan stays lazy
+    because registered-query plans must compose (and be audited)
+    unexecuted.  (2) within-group expansion is quadratic in GROUP size
     because the operator's contract is to emit every qualifying pair
     — that is the output floor, not a join inefficiency (the
     un-collapsed plan verified AND emitted those same pairs).  A
@@ -561,11 +550,7 @@ def blocked_ngram_jaccard_pairs(docs: DataFrame, *, id_col: str,
                       F.col("y._id").alias("doc_b"),
                       F.lit(1.0).alias("jaccard"))
               .filter(F.lit(1.0) >= F.lit(threshold)))
-    out = cross.unionByName(within)
-    if eager_release:
-        out = truncated_checkpoint(out)
-        members.unpersist()
-    return out
+    return cross.unionByName(within)
 
 
 def _ngram_members_and_rep_pairs(
@@ -800,7 +785,6 @@ def blocked_ngram_jaccard_groups(docs: DataFrame, *, id_col: str,
                                  text_col: str, block_cols: list[str],
                                  ngram_n: int = 5,
                                  threshold: float = 0.6,
-                                 eager_release: bool = False,
                                  diag: dict | None = None) -> DataFrame:
     """GROUP form of :func:`blocked_ngram_jaccard_pairs` — one row per
     document: (doc_id, rep, jaccard_to_rep), where ``rep`` is the
@@ -859,30 +843,22 @@ def blocked_ngram_jaccard_groups(docs: DataFrame, *, id_col: str,
     # docs excluded from the pipeline (NULL text / NULL block) are
     # their own reps at similarity 1.0 — the brute-force answer for
     # a doc with no qualifying neighbors
-    out = (docs.select(F.col(id_col).alias("doc_id"))
-           .join(scored, "doc_id", "left")
-           .select("doc_id",
-                   F.coalesce("rep", F.col("doc_id")).alias("rep"),
-                   F.coalesce("jaccard_to_rep", F.lit(1.0))
-                   .alias("jaccard_to_rep")))
-    if eager_release:
-        out = truncated_checkpoint(out)
-        members.unpersist()
-    return out
+    return (docs.select(F.col(id_col).alias("doc_id"))
+            .join(scored, "doc_id", "left")
+            .select("doc_id",
+                    F.coalesce("rep", F.col("doc_id")).alias("rep"),
+                    F.coalesce("jaccard_to_rep", F.lit(1.0))
+                    .alias("jaccard_to_rep")))
 
 
 def setsim_prefix_pairs(docs: DataFrame, *, id_col: str = "doc_id",
                         text_col: str = "text",
                         threshold: float = 0.7,
-                        eager_release: bool = False,
                         diag: dict | None = None) -> DataFrame:
     """EXACT whitespace-token set-similarity self-join via PPJoin
     prefix filtering (Xiao et al. 2008) — the word-token sibling of
     :func:`blocked_ngram_jaccard_pairs`, extracted from the
-    ``dedup_setsim_prefix`` plan so per-epoch callers get the same
-    ``eager_release`` lifecycle (r11 verdict ask #6: the plan carried
-    the identical per-invocation member-map persist with only a
-    docstring caveat).
+    ``dedup_setsim_prefix`` plan.
 
     Output: (doc_a < doc_b, n_common, jaccard) for every pair with
     token-set Jaccard >= ``threshold``.  Pipeline: exact-duplicate
@@ -895,14 +871,9 @@ def setsim_prefix_pairs(docs: DataFrame, *, id_col: str = "doc_id",
     IEEE ceil nudges, and the collapse's two honest bounds are
     documented at :func:`blocked_ngram_jaccard_pairs`; the no-miss
     guarantee is itself oracle-gated (brute-force all-pairs) through
-    the registered plan.
-
-    ``eager_release=True`` materializes the pair output
-    (localCheckpoint) and unpersists the member map before returning
-    — the per-epoch lifecycle; the default stays lazy because
-    registered-query plans must compose (and be audited) unexecuted,
-    leaving one evictable MEMORY_AND_DISK member map per invocation
-    until memory pressure or ``spark.catalog.clearCache()``.
+    the registered plan.  Like the n-gram form it stays lazy, leaving
+    one evictable MEMORY_AND_DISK member map per invocation until
+    memory pressure or ``spark.catalog.clearCache()``.
     """
     from pyspark.sql import Window as W
 
@@ -1014,11 +985,7 @@ def setsim_prefix_pairs(docs: DataFrame, *, id_col: str = "doc_id",
                       F.col("_s_rep").alias("n_common"),
                       F.lit(1.0).alias("jaccard"))
               .filter(F.lit(1.0) >= F.lit(t)))
-    out = cross.unionByName(within)
-    if eager_release:
-        out = truncated_checkpoint(out)
-        members.unpersist()
-    return out
+    return cross.unionByName(within)
 
 
 def minhash_lsh_candidates(docs: DataFrame, *, id_col: str, text_col: str,

@@ -569,12 +569,8 @@ WHERE CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE)
          "persist (two int64s per row) is evictable MEMORY_AND_DISK "
          "and is NOT dropped by the lazy plan — repeated invocations "
          "in one session accumulate evictable entries until memory "
-         "pressure or spark.catalog.clearCache(); per-epoch callers "
-         "pass eager_release=True to the underlying "
-         "operators.dedup.setsim_prefix_pairs (r11 ask #6: output "
-         "localCheckpointed, member map unpersisted — gated by "
-         "tests/test_setsim_operator.py). The ORACLE is deliberately "
-         "INDEPENDENT of all of that: a brute-force all-pairs "
+         "pressure or spark.catalog.clearCache(). The ORACLE is "
+         "deliberately INDEPENDENT of all of that: a brute-force all-pairs "
          "Jaccard over the same subset — so the prefix filter's "
          "no-miss guarantee is itself under test, not replicated. "
          "r10c collapses exact duplicates first (group by md5(text), "
@@ -592,10 +588,8 @@ def dedup_setsim_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").filter(F.expr(_PP_PRED))
     # The whole pipeline (r10c exact-dup collapse, PPJoin prefix +
     # length + positional filters, exact verify, member expansion)
-    # lives in operators.dedup.setsim_prefix_pairs — extracted in r11
-    # so per-epoch callers get the eager_release lifecycle; the
-    # registered form stays lazy (plans must compose and be audited
-    # unexecuted).
+    # lives in operators.dedup.setsim_prefix_pairs; it stays lazy
+    # (plans must compose and be audited unexecuted).
     return setsim_prefix_pairs(docs, id_col="doc_id", text_col="text",
                                threshold=_PP_T)
 

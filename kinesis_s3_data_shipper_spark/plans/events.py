@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from ..functions.changepoint import best_split
 from ..functions.decimal_safe import sql_dsum, dsum
 from ..operators.asof import asof_join
 from ..operators.checkpoint import truncated_checkpoint
@@ -1219,53 +1220,29 @@ CHANGEPOINT_WINDOWED_ORACLE = CHANGEPOINT_ORACLE.replace(
          "WHETHER it drifted): the split k* maximizes the "
          "between-segment SSE reduction S_k^2/k + (S-S_k)^2/(L-k) - "
          "S^2/L, evaluated for every prefix from EXACT integer "
-         "prefix sums (slice-sum HOFs inside the row), the argmax "
-         "found by an in-row struct fold with earliest-k tie-break — "
+         "prefix sums and argmaxed with earliest-k tie-break by ONE "
+         "in-row struct fold (functions/changepoint.py, shared with "
+         "the streaming twins) — "
          "gains are doubles built from exact int64 sums through one "
          "fixed expression tree, IEEE-identical on both engines. "
          "Scale shape: the corpus-sized work is the ONE map-side-"
          "combined hourly pre-agg (|types|x|hours| out); the series "
-         "collect and the O(L^2) slice-sum scoring run on the tiny "
+         "collect and the O(L) running-sum scoring run on the tiny "
          "aggregate inside the row (L = distinct hours, bounded by "
-         "the time span, not the row count — swap the slice sums for "
-         "a prefix-scan fold if L ever grows past ~1e4).")
+         "the time span, not the row count).")
 def events_changepoint_binary(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     hourly = (ev.groupBy("event_type",
                          F.expr("ts div 3600000000000").alias("hr"))
               .agg(F.count("*").cast("long").alias("n")))
     s = (hourly.groupBy("event_type")
-         .agg(F.expr("array_sort(collect_list(struct(hr, n)))").alias("a"),
-              F.count("*").cast("long").alias("L"),
-              F.sum("n").cast("long").alias("S"))
-         .filter(F.col("L") >= 2)
-         .select("event_type", "L", "S",
+         .agg(F.expr("array_sort(collect_list(struct(hr, n)))").alias("a"))
+         .filter(F.size("a") >= 2)
+         .select("event_type",
                  F.expr("transform(a, x -> x.hr)").alias("hrs"),
                  F.expr("transform(a, x -> x.n)").alias("ns")))
-    sk = "aggregate(slice(ns, 1, k), 0L, (a, x) -> a + x)"
-    cands = s.select(
-        "event_type", "hrs", "L", "S",
-        F.expr(
-            f"transform(sequence(1, CAST(L - 1 AS INT)), k -> named_struct("
-            f"'g', CAST({sk} AS DOUBLE) * {sk} / k"
-            f"   + CAST(S - {sk} AS DOUBLE) * (S - {sk}) / (L - k)"
-            f"   - CAST(S AS DOUBLE) * S / L,"
-            f"'k', CAST(k AS BIGINT),"
-            f"'sk', CAST({sk} AS BIGINT)))").alias("cl"))
-    best = cands.select(
-        "event_type", "hrs", "L", "S",
-        F.expr(
-            "aggregate(cl, named_struct("
-            "'g', CAST('-1e308' AS DOUBLE), 'k', 0L, 'sk', 0L),"
-            "(a, b) -> IF(b.g > a.g, b, a))").alias("b"))
-    return best.select(
-        "event_type", F.col("L").alias("n_hours"),
-        F.expr("element_at(hrs, CAST(b.k AS INT))").alias("split_hr"),
-        F.col("b.k").alias("left_len"),
-        F.round(F.expr("CAST(b.sk AS DOUBLE) / b.k"), 6).alias("left_mean"),
-        F.round(F.expr("CAST(S - b.sk AS DOUBLE) / (L - b.k)"), 6)
-         .alias("right_mean"),
-        F.round(F.col("b.g"), 6).alias("gain"))
+    return (s.select("event_type", best_split().alias("c"))
+            .select("event_type", "c.*"))
 
 
 HOLT_ORACLE = """

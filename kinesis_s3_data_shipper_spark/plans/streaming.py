@@ -427,7 +427,7 @@ def _stage_time_slices(spark: SparkSession, sf_dir: str,
               "events_cusum — streaming/batch parity for a non-linear "
               "recursion no built-in streaming aggregate expresses. "
               "State per user is one (s, seen) pair; the memory-sink "
-              "read keeps max_by(n_seen), the final emission.")
+              "read keeps max_by(seen), the final emission.")
 def streaming_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
@@ -538,11 +538,11 @@ def streaming_holt(spark: SparkSession, sf_dir: str) -> DataFrame:
               "machine), sharing its oracle text exactly as the "
               "CUSUM/rate-limit/MATCH_RECOGNIZE/Holt twins share "
               "theirs: per-type (hour -> count) histogram kept as "
-              "ARRAY group state across micro-batches, the current "
-              "best split re-scored and emitted every batch via the "
-              "batch plan's IEEE gain tree and earliest-k argmax "
-              "verbatim.  Hourly counts are exact integers and "
-              "addition commutes, so slicing cannot perturb the "
+              "ARRAY group state across micro-batches, the drained "
+              "histograms scored once by the batch plan's own gain "
+              "and earliest-k argmax Column function "
+              "(functions/changepoint.py).  Hourly counts are exact "
+              "integers and addition commutes, so slicing cannot perturb the "
               "histogram and the drained state hash-matches the batch "
               "oracle bit-for-bit.  State is O(stream HOURS) per type "
               "— time-bounded, not row-bounded, and inherently so "

@@ -18,6 +18,26 @@ Queries whose emissions the caller reads back build their sink in
 :func:`_drain_emissions` (a memory table, or a checkpoint-recoverable
 parquet directory); the ingest and incremental-merge queries hand
 their own ``foreachBatch`` body to :func:`_drain`.
+
+The stateful twins of the batch plans (CUSUM, rate limit,
+MATCH_RECOGNIZE, Holt, change point) share one per-key fold,
+:func:`_fold_per_key`: per-key state, versioned in the checkpoint and
+updated once per micro-batch.  Each batch concatenates a key's rows,
+sorts them by (ts, event_id), folds them into the state with the
+twin's ``step``, and emits the new state; the drained result is each
+key's last emission, found by the monotone row count ``seen``.  EXACT
+batch parity requires the cross-batch fold order to equal the batch
+plan's per-key (ts, event_id) order: the caller stages the landing dir
+as ts-RANGE slices with increasing mtimes
+(``plans/streaming.py::_stage_time_slices``) and the twins read it with
+``maxFilesPerTrigger=1``, so batch k holds exactly the k-th time slice
+and the concatenation of per-batch sorted folds IS the global order.
+Each ``step`` performs the batch fold's IEEE double (or exact integer)
+operations in the identical order on scalar Python values, so the
+drained state matches the batch plan bit for bit before the shared
+final rounding, which runs JVM-side.  With ``output_dir`` a restarted
+query keeps folding its restored state over only the new files (see
+:func:`_drain_emissions`).
 """
 
 from __future__ import annotations
@@ -30,6 +50,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.changepoint import best_split
 from ..session import ensure_runtime_confs
 from ..sources.kinesis import firehose_landing_source
 
@@ -106,7 +127,7 @@ def _events_stream(spark: SparkSession, events_dir: str,
 #: track CPU count.  CORRECTNESS is untouched: every stateful op here
 #: groups by key, a key's rows land in one partition per batch at ANY
 #: partition count, and the per-key fold order is enforced by the
-#: explicit (ts, event_id) sort inside each update function — so the
+#: explicit (ts, event_id) sort inside :func:`_fold_per_key` — so the
 #: partition count can change parallelism and store-file counts, never
 #: values (tests/test_state_partition_invariance.py).
 #: The pin covers the whole drain, so batch jobs launched inside a
@@ -156,6 +177,45 @@ def _drain_emissions(spark: SparkSession, out: DataFrame, mode: str, *,
         lambda batch_df, _epoch:
         batch_df.write.mode("append").parquet(output_dir)))
     return spark.read.parquet(output_dir)
+
+
+def _fold_per_key(stream: DataFrame, key: str, state_ddl: str, init: tuple,
+                  step, *, checkpoint: str, query_name: str,
+                  output_dir: str | None = None) -> DataFrame:
+    """Fold ``stream`` per ``key`` into state of type ``state_ddl``
+    (starting at ``init``) with ``step(state, pdf) -> state`` on each
+    batch's (ts, event_id)-sorted rows, drain it, and return each key's
+    last state as (key, seen, *state).  The contract is in the module
+    doc."""
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    names = ["seen"] + [f.split()[0] for f in state_ddl.split(",")]
+    ddl = f"seen LONG, {state_ddl}"
+
+    def update(k, pdfs, state):
+        pdf = pd.concat(list(pdfs), ignore_index=True)
+        # (ts, event_id) is unique, so lexsort gives sort_values' order
+        # at about a quarter of its per-key cost.
+        pdf = pdf.take(np.lexsort((pdf["event_id"], pdf["ts"])))
+        seen, *acc = state.get if state.exists else (0, *init)
+        row = (seen + len(pdf), *step(acc, pdf))
+        state.update(row)
+        # seen next to the key: pandas builds a frame fastest when
+        # columns of one dtype are adjacent.
+        yield pd.DataFrame([(*k, *row)], columns=[key, *names])
+
+    out = stream.groupBy(key).applyInPandasWithState(
+        update, outputStructType=f"{key} {dict(stream.dtypes)[key]}, {ddl}",
+        stateStructType=ddl, outputMode="update",
+        timeoutConf=GroupStateTimeout.NoTimeout)
+    emissions = _drain_emissions(stream.sparkSession, out, "update",
+                                 checkpoint=checkpoint,
+                                 query_name=query_name, output_dir=output_dir)
+    return (emissions.groupBy(key)
+            .agg(F.max_by(F.struct(*names), "seen").alias("s"))
+            .select(key, "s.*"))
 
 
 def streaming_hourly_counts(spark: SparkSession, events_dir: str, *,
@@ -266,110 +326,34 @@ def streaming_cusum_final(spark: SparkSession, events_dir: str, *,
                           checkpoint: str, query_name: str,
                           baseline: DataFrame, slack_mult: float,
                           output_dir: str | None = None) -> DataFrame:
-    """Per-user one-sided CUSUM drift detector maintained ACROSS
-    micro-batches in explicit group state (applyInPandasWithState) —
-    the streaming counterpart of the batch ``events_cusum`` plan, and
-    a recursion no built-in streaming aggregate can express (the
-    max(0, ·) clamp is non-linear).
+    """Per-user one-sided CUSUM drift detector folded across
+    micro-batches (:func:`_fold_per_key`) — the streaming counterpart
+    of the batch ``events_cusum`` plan, and a recursion no built-in
+    streaming aggregate can express (the max(0, ·) clamp is
+    non-linear).
 
-    Dataflow: the event stream is enriched with the per-user baseline
-    ``(sv, n)`` via a stream-STATIC join (in production the
+    The event stream is enriched with the per-user baseline ``(sv, n)``
+    via a stream-STATIC join ahead of the fold (in production the
     baseline is yesterday's calibration table; here it is the batch
     aggregate over the same data so the drained result is
-    hash-comparable to the batch oracle), then each user's state
-    carries ``(s, seen)`` and every batch folds its rows in
-    (ts, event_id) order:  s = max(0, s + (x - (sv/n)*mult)).
-
-    EXACT batch parity requires the cross-batch fold order to equal
-    the batch plan's global (ts, event_id) sort — the caller stages
-    the landing dir as ts-RANGE slices with increasing mtimes and
-    ``maxFilesPerTrigger=1``, so batch k holds exactly the k-th time
-    slice and the concatenation of per-batch sorted folds IS the
-    global order. Arithmetic parity: the Python fold performs the
-    identical IEEE double ops in the identical order as the JVM/
-    DuckDB folds (scalar Python floats, never float32), so the final
-    statistic matches bit-for-bit before the shared round(6).
-
-    Emits (user_id, n_seen, s_last) per batch a user appears in;
-    ``n_seen`` is monotone, so the final state row is the max_by —
-    state never grows beyond one (s, seen) pair per user.
-
-    Sinks: see :func:`_drain_emissions`.  With ``output_dir`` a
-    restarted query keeps folding its restored state over only the new
-    files, and the max_by read below yields the up-to-date statistic
-    for ALL users (the restart test's subject,
-    tests/test_stateful_streaming.py).
+    hash-comparable to the batch oracle).  State per user is ``s``:
+    s = max(0, s + (x - (sv/n)*mult)).  With ``output_dir`` the
+    restart test (tests/test_stateful_streaming.py) resumes it.
     """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    enriched = _events_stream(spark, events_dir, max_files=1).join(
+        baseline, "user_id")
 
-    events = _events_stream(spark, events_dir, max_files=1)
-    enriched = events.join(baseline, "user_id")
-
-    def update(key, pdfs, state: GroupState):
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        pdf = pdf.sort_values(["ts", "event_id"])
-        (s, seen) = state.get if state.exists else (0.0, 0)
+    def step(state, pdf):
+        (s,) = state
         for x, sv, n in zip(pdf["value"], pdf["sv"], pdf["n"]):
             s = max(0.0, s + (float(x) - (float(sv) / int(n)) * slack_mult))
-            seen += 1
-        state.update((s, seen))
-        yield pd.DataFrame({"user_id": [key[0]], "n_seen": [seen],
-                            "s_last": [s]})
+        return (s,)
 
-    out = (enriched.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType="user_id LONG, n_seen LONG, s_last DOUBLE",
-        stateStructType="s DOUBLE, seen LONG",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout))
-    emissions = _drain_emissions(spark, out, "update",
-                                 checkpoint=checkpoint, query_name=query_name,
-                                 output_dir=output_dir)
-    return (emissions
-            .groupBy("user_id")
-            .agg(F.max("n_seen").alias("n_events"),
-                 F.max_by("s_last", "n_seen").alias("s_final"))
-            .select("user_id", "n_events",
-                    F.round("s_final", 6).alias("cusum_final")))
-
-
-def streaming_running_user_counts(spark: SparkSession, events_dir: str, *,
-                                  checkpoint: str, query_name: str
-                                  ) -> DataFrame:
-    """Custom stateful operator via applyInPandasWithState: a per-user
-    running event counter carried across micro-batches in explicit
-    group state (the surface for stateful logic that session_window /
-    dropDuplicates can't express — e.g. CEP-ish accumulators).
-
-    Emits (user_id, total) on every batch a user appears in; the final
-    emission per user equals the batch groupBy count, which is what the
-    unit test asserts. RocksDB-backed state (session default)."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    events = _events_stream(spark, events_dir, max_files=1)
-
-    def update(key, pdfs, state: GroupState):
-        n = 0
-        for pdf in pdfs:
-            n += len(pdf)
-        (prev,) = state.get if state.exists else (0,)
-        total = prev + n
-        state.update((total,))
-        yield pd.DataFrame({"user_id": [key[0]], "total": [total]})
-
-    counted = (events.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType="user_id LONG, total LONG",
-        stateStructType="total LONG",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout))
-    # Update mode keeps every emission; the running maximum per user IS
-    # the final total (totals are monotone).
-    emissions = _drain_emissions(spark, counted, "update",
-                                 checkpoint=checkpoint, query_name=query_name)
-    return emissions.groupBy("user_id").agg(F.max("total").alias("total"))
+    final = _fold_per_key(enriched, "user_id", "s DOUBLE", (0.0,), step,
+                          checkpoint=checkpoint, query_name=query_name,
+                          output_dir=output_dir)
+    return final.select("user_id", F.col("seen").alias("n_events"),
+                        F.round("s", 6).alias("cusum_final"))
 
 
 def streaming_late_data_counts(spark: SparkSession, events_dir: str, *,
@@ -660,47 +644,23 @@ def streaming_rate_limit_final(spark: SparkSession, events_dir: str, *,
                                checkpoint: str, query_name: str,
                                cap_units: int, cost_units: int,
                                output_dir: str | None = None) -> DataFrame:
-    """Per-user token-bucket admission control maintained ACROSS
-    micro-batches in explicit group state — the streaming counterpart
-    of the batch ``events_rate_limit`` plan, and (like the CUSUM twin
-    above) a recursion no built-in streaming aggregate expresses: the
-    level update min(cap, level + dt) - cost*admit has BOTH a clamp
-    and a branch on the clamped value.
+    """Per-user token-bucket admission control folded across
+    micro-batches (:func:`_fold_per_key`) — the streaming counterpart
+    of the batch ``events_rate_limit`` plan, and (like the CUSUM twin)
+    a recursion no built-in streaming aggregate expresses: the level
+    update min(cap, level + dt) - cost*admit has BOTH a clamp and a
+    branch on the clamped value.
 
     This is the op an ingestion edge actually runs online: admit or
     throttle each arriving event per key, with the bucket level as
-    group state. State per user is (level, admitted, last_ts, seen) —
-    four int64s; refill is the raw nanosecond delta since the
-    previous event (1 token = ``cost_units`` ns of refill), so the
-    whole state machine is EXACT integer arithmetic: Python ints here,
-    BIGINTs in the JVM/DuckDB folds — bit-identical by construction,
-    no float anywhere.
-
-    EXACT batch parity requires the cross-batch fold order to equal
-    the batch plan's per-user (ts, event_id) sort; the caller stages
-    the landing dir as ts-range slices with increasing mtimes +
-    ``maxFilesPerTrigger=1`` (the streaming_cusum staging contract),
-    and last_ts carries the inter-arrival delta ACROSS the batch
-    boundary. Emits (user_id, n_seen, admitted, level) per batch a
-    user appears in; n_seen is monotone so the final state row is the
-    max_by.
-
-    Sinks: see :func:`_drain_emissions`.  With ``output_dir`` a
-    restarted query resumes the restored (level, admitted, last_ts,
-    seen) state over only the new files — the restart test's
-    subject."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    events = _events_stream(spark, events_dir, max_files=1)
-
-    def update(key, pdfs, state: GroupState):
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        pdf = pdf.sort_values(["ts", "event_id"])
-        if state.exists:
-            level, admitted, last_ts, seen = state.get
-        else:
-            level, admitted, last_ts, seen = 0, 0, None, 0
+    state.  State per user is (level, admitted, last_ts); refill is the
+    raw nanosecond delta since the previous event (1 token =
+    ``cost_units`` ns of refill), carried ACROSS the batch boundary by
+    last_ts, so the whole state machine is EXACT integer arithmetic:
+    Python ints here, BIGINTs in the JVM/DuckDB folds.  With
+    ``output_dir`` the restart test resumes it."""
+    def step(state, pdf):
+        level, admitted, last_ts = state
         for t in pdf["ts"]:
             t = int(t)
             dt = cap_units if last_ts is None else t - last_ts
@@ -709,31 +669,17 @@ def streaming_rate_limit_final(spark: SparkSession, events_dir: str, *,
                 admitted += 1
                 level -= cost_units
             last_ts = t
-            seen += 1
-        state.update((level, admitted, last_ts, seen))
-        yield pd.DataFrame({"user_id": [key[0]], "n_seen": [seen],
-                            "admitted": [admitted], "level": [level]})
+        return level, admitted, last_ts
 
-    out = (events.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=("user_id LONG, n_seen LONG, admitted LONG,"
-                          " level LONG"),
-        stateStructType=("level LONG, admitted LONG, last_ts LONG,"
-                         " seen LONG"),
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout))
-    emissions = _drain_emissions(spark, out, "update",
-                                 checkpoint=checkpoint, query_name=query_name,
-                                 output_dir=output_dir)
-    return (emissions
-            .groupBy("user_id")
-            .agg(F.max("n_seen").alias("n_events"),
-                 F.max_by("admitted", "n_seen").alias("n_admitted"),
-                 F.max_by("level", "n_seen").alias("level_final_units"))
-            .select("user_id", "n_events", "n_admitted",
-                    (F.col("n_events") - F.col("n_admitted"))
-                    .alias("n_rejected"),
-                    "level_final_units"))
+    final = _fold_per_key(
+        _events_stream(spark, events_dir, max_files=1), "user_id",
+        "level LONG, admitted LONG, last_ts LONG", (0, 0, None), step,
+        checkpoint=checkpoint, query_name=query_name, output_dir=output_dir)
+    return final.select("user_id", F.col("seen").alias("n_events"),
+                        F.col("admitted").alias("n_admitted"),
+                        (F.col("seen") - F.col("admitted"))
+                        .alias("n_rejected"),
+                        F.col("level").alias("level_final_units"))
 
 
 def streaming_match_recognize_final(spark: SparkSession,
@@ -741,36 +687,18 @@ def streaming_match_recognize_final(spark: SparkSession,
                                     checkpoint: str,
                                     query_name: str) -> DataFrame:
     """Per-user MATCH_RECOGNIZE (pattern CLICK VIEW+ PURCHASE, skip
-    past last row) maintained ACROSS micro-batches in explicit group
-    state — the streaming counterpart of the batch
-    ``events_match_recognize`` plan, i.e. Flink's streaming
-    MATCH_RECOGNIZE re-expressed on Spark's stateful API.  A row
-    pattern is inherently order-sensitive state no built-in streaming
-    aggregate expresses; the FSM here is the batch plan's transition
-    table verbatim, with (matches, fsm_state, seen) as three int64s
-    of group state — exact integer arithmetic end to end, so the
-    drained state hash-matches the SAME oracle as the batch plan.
-
-    EXACT batch parity requires the cross-batch fold order to equal
-    the batch plan's per-user (ts, event_id) sort; the caller stages
-    the landing dir as ts-range slices with increasing mtimes +
-    ``maxFilesPerTrigger=1`` (the streaming_cusum staging contract).
-    A half-open match (fsm_state != 0) carries across the batch
-    boundary by construction — the property batch re-runs get for
-    free and naive per-batch matching silently breaks."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    events = _events_stream(spark, events_dir, max_files=1)
+    past last row) folded across micro-batches (:func:`_fold_per_key`)
+    — the streaming counterpart of the batch ``events_match_recognize``
+    plan, i.e. Flink's streaming MATCH_RECOGNIZE re-expressed on
+    Spark's stateful API.  The FSM is the batch plan's transition table
+    verbatim, with (matches, fsm) as int64 state.  A half-open match
+    (fsm != 0) carries across the batch boundary by construction — the
+    property batch re-runs get for free and naive per-batch matching
+    silently breaks."""
     codes = {"click": 1, "view": 2, "purchase": 3}
 
-    def update(key, pdfs, state: GroupState):
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        pdf = pdf.sort_values(["ts", "event_id"])
-        if state.exists:
-            matches, fsm, seen = state.get
-        else:
-            matches, fsm, seen = 0, 0, 0
+    def step(state, pdf):
+        matches, fsm = state
         for et in pdf["event_type"]:
             x = codes.get(et, 0)
             if x == 1:
@@ -782,99 +710,58 @@ def streaming_match_recognize_final(spark: SparkSession,
                 fsm = 0
             else:
                 fsm = 0
-            seen += 1
-        state.update((matches, fsm, seen))
-        yield pd.DataFrame({"user_id": [key[0]], "n_seen": [seen],
-                            "n_matches": [matches], "fsm": [fsm]})
+        return matches, fsm
 
-    out = (events.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=("user_id LONG, n_seen LONG, n_matches LONG,"
-                          " fsm LONG"),
-        stateStructType="matches LONG, fsm LONG, seen LONG",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout))
-    emissions = _drain_emissions(spark, out, "update",
-                                 checkpoint=checkpoint, query_name=query_name)
-    return (emissions.groupBy("user_id")
-            .agg(F.max("n_seen").alias("n_events"),
-                 F.max_by("n_matches", "n_seen").alias("n_matches"),
-                 F.max_by("fsm", "n_seen").alias("final_state"))
-            .select("user_id", "n_events", "n_matches", "final_state"))
+    final = _fold_per_key(
+        _events_stream(spark, events_dir, max_files=1), "user_id",
+        "matches LONG, fsm LONG", (0, 0), step,
+        checkpoint=checkpoint, query_name=query_name)
+    return final.select("user_id", F.col("seen").alias("n_events"),
+                        F.col("matches").alias("n_matches"),
+                        F.col("fsm").alias("final_state"))
 
 
 def streaming_holt_final(spark: SparkSession, events_dir: str, *,
                          checkpoint: str, query_name: str) -> DataFrame:
-    """Per-user Holt linear-trend smoothing maintained ACROSS
-    micro-batches in explicit group state — the streaming counterpart
-    of the batch ``events_holt_step`` plan (the forecasting SERVING
-    path: each batch refreshes the one-step-ahead forecast per
-    entity), and the first FLOAT-state twin: the CUSUM/rate-limit/
-    MATCH_RECOGNIZE twins carry int64 state, Holt carries the (l, b)
-    doubles plus the deferred first observation.
+    """Per-user Holt linear-trend smoothing folded across micro-batches
+    (:func:`_fold_per_key`) — the streaming counterpart of the batch
+    ``events_holt_step`` plan (the forecasting SERVING path: each batch
+    refreshes the one-step-ahead forecast per entity), and the
+    FLOAT-state twin.
 
-    State per user is (x1, l, b, seen): Holt initializes l0 = x1,
-    b0 = x2 - x1, so the first observation must be HELD until the
-    second arrives — across a batch boundary if necessary (seen == 1
-    state), the float analogue of the half-open MATCH_RECOGNIZE match.
-    From the third observation on, l' = 0.5*x + 0.5*(l+b), b' =
-    0.25*(l'-l) + 0.75*b — the IDENTICAL IEEE expression tree as the
-    batch plan's in-row fold and the oracle's recursive CTE (dyadic
-    coefficients: exact binary multiplies; Python floats ARE IEEE
-    doubles, so the drained state is bit-identical, and the final
-    round(6) runs JVM-side on the emitted doubles exactly as the
-    batch plan's does).
-
-    EXACT batch parity requires the cross-batch fold order to equal
-    the batch plan's per-user (ts, event_id) sort; the caller stages
-    the landing dir as ts-range slices with increasing mtimes +
-    ``maxFilesPerTrigger=1`` (the streaming_cusum staging contract).
-    The batch plan's n >= 4 floor is applied on the DRAINED state
-    (a stream can't know a user's final count mid-flight)."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    events = _events_stream(spark, events_dir, max_files=1)
-
-    def update(key, pdfs, state: GroupState):
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        pdf = pdf.sort_values(["ts", "event_id"])
-        if state.exists:
-            x1, l, b, seen = state.get
-        else:
-            x1, l, b, seen = 0.0, 0.0, 0.0, 0
+    State per user is (x1, l, b): Holt initializes l0 = x1,
+    b0 = x2 - x1, so the first observation must be HELD (l null) until
+    the second arrives — across a batch boundary if necessary, the
+    float analogue of the half-open MATCH_RECOGNIZE match.  From the
+    third observation on, l' = 0.5*x + 0.5*(l+b),
+    b' = 0.25*(l'-l) + 0.75*b — the batch plan's in-row fold and the
+    oracle's recursive CTE term for term (dyadic coefficients: exact
+    binary multiplies).  The batch plan's n >= 4 floor is applied on
+    the DRAINED state (a stream can't know a user's final count
+    mid-flight)."""
+    def step(state, pdf):
+        x1, l, b = state
         for v in pdf["value"]:
             x = float(v)
-            if seen == 0:
+            if x1 is None:
                 x1 = x
-            elif seen == 1:
+            elif l is None:
                 l, b = x1, x - x1
             else:
                 l2 = 0.5 * x + 0.5 * (l + b)
                 b = 0.25 * (l2 - l) + 0.75 * b
                 l = l2
-            seen += 1
-        state.update((x1, l, b, seen))
-        yield pd.DataFrame({"user_id": [key[0]], "n_seen": [seen],
-                            "l": [l], "b": [b]})
+        return x1, l, b
 
-    out = (events.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType="user_id LONG, n_seen LONG, l DOUBLE, b DOUBLE",
-        stateStructType="x1 DOUBLE, l DOUBLE, b DOUBLE, seen LONG",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout))
-    emissions = _drain_emissions(spark, out, "update",
-                                 checkpoint=checkpoint, query_name=query_name)
-    return (emissions.groupBy("user_id")
-            .agg(F.max("n_seen").alias("n_events"),
-                 F.max_by("l", "n_seen").alias("lf"),
-                 F.max_by("b", "n_seen").alias("bf"))
-            .filter(F.col("n_events") >= 4)
-            .select("user_id", "n_events",
-                    F.round(F.col("lf"), 6).alias("level_final"),
-                    F.round(F.col("bf"), 6).alias("trend_final"),
-                    F.round(F.col("lf") + F.col("bf"), 6)
+    final = _fold_per_key(
+        _events_stream(spark, events_dir, max_files=1), "user_id",
+        "x1 DOUBLE, l DOUBLE, b DOUBLE", (None, None, None), step,
+        checkpoint=checkpoint, query_name=query_name)
+    return (final.filter(F.col("seen") >= 4)
+            .select("user_id", F.col("seen").alias("n_events"),
+                    F.round("l", 6).alias("level_final"),
+                    F.round("b", 6).alias("trend_final"),
+                    F.round(F.col("l") + F.col("b"), 6)
                     .alias("forecast_next")))
 
 
@@ -885,22 +772,21 @@ def streaming_changepoint_final(spark: SparkSession, events_dir: str, *,
                                 ) -> DataFrame:
     """Per-type ONLINE binary-segmentation change-point detection — the
     streaming counterpart of the batch ``events_changepoint_binary``
-    plan (the last batch-only state machine without an online form):
-    each micro-batch folds its events into a per-type hourly-count
-    histogram kept as explicit group state, re-scores every candidate
-    split against the full series, and emits the current best split —
-    the "where did the level shift" answer refreshed as data arrives.
+    plan: each micro-batch folds its events into a per-type
+    (hour -> count) histogram kept as state (:func:`_fold_per_key`),
+    and the drained histograms are scored once by the batch plan's own
+    :func:`~..functions.changepoint.best_split`.
 
     STATE BOUNDEDNESS — the honest version: unlike the O(1)-per-key
-    CUSUM/rate-limit/Holt twins, the state here is the (hour -> count)
-    histogram, O(elapsed stream HOURS) per type — time-bounded, not
-    row-bounded (one int64 pair per hour: ~140 KB per type-year).
-    That is inherent to the statistic: the split argmax needs every
-    prefix sum, so no fixed-size sufficient statistic exists.  A
-    production deployment bounds it with a sliding window of W hours
-    (detecting only in-window shifts); the full-horizon twin keeps
-    everything so the drained state can hash-match the batch oracle.
-    SCALE.md records the argument.
+    CUSUM/rate-limit/Holt twins, the state here is the histogram,
+    O(elapsed stream HOURS) per type — time-bounded, not row-bounded
+    (one int64 pair per hour: ~140 KB per type-year).  That is
+    inherent to the statistic: the split argmax needs every prefix
+    sum, so no fixed-size sufficient statistic exists.  A production
+    deployment bounds it with a sliding window of W hours (detecting
+    only in-window shifts); the full-horizon twin keeps everything so
+    the drained state can hash-match the batch oracle.  SCALE.md
+    records the argument.
 
     ``window_hours=W`` is that production cap made checkable
     (``streaming_changepoint_windowed``): after each fold the state
@@ -913,90 +799,25 @@ def streaming_changepoint_final(spark: SparkSession, events_dir: str, *,
     The drained state therefore equals the batch histogram filtered
     to hr > final_max - W, which is exactly the windowed oracle.
 
-    Arithmetic parity: hourly counts are exact integers and ADDITION
-    COMMUTES, so (unlike the order-sensitive twins) batch slicing
-    cannot change the histogram; the per-split gain is then computed
-    in Python floats through the IDENTICAL IEEE expression tree as the
-    batch plan's in-row HOF — (double(sk)*sk/k + double(S-sk)*(S-sk)/
-    (L-k) - double(S)*S/L), left-associated exactly as Spark parses
-    it — with the same strict-> earliest-k argmax, so the drained
-    best split is bit-identical and the final round(6) runs JVM-side
-    on the emitted doubles exactly as the batch plan's does.  The
-    prefix sums are O(L) per emission (the batch HOF's O(L^2) slice
-    sums produce the same exact integers).
+    Hourly counts are exact integers and ADDITION COMMUTES, so batch
+    slicing cannot change the histogram; the L >= 2 floor applies on
+    the drained state (a stream can't know the final hour count
+    mid-flight).
     """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    events = _events_stream(spark, events_dir, max_files=1)
-
-    def update(key, pdfs, state: GroupState):
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        if state.exists:
-            hrs0, ns0, seen = state.get
-            counts = dict(zip(hrs0, ns0))
-        else:
-            counts, seen = {}, 0
-        by_hr = (pdf["ts"] // NS_PER_HOUR).value_counts()
-        for hr, c in by_hr.items():
+    def step(state, pdf):
+        counts = dict(zip(*state))
+        for hr, c in (pdf["ts"] // NS_PER_HOUR).value_counts().items():
             counts[int(hr)] = counts.get(int(hr), 0) + int(c)
-        seen += len(pdf)
-        if window_hours is not None and counts:
+        if window_hours is not None:
             cutoff = max(counts) - window_hours
             counts = {h: c for h, c in counts.items() if h > cutoff}
         hrs = sorted(counts)
-        ns = [counts[h] for h in hrs]
-        state.update((hrs, ns, seen))
-        L, S = len(hrs), sum(ns)
-        best_g, best_k, best_sk = -1e308, 0, 0
-        sk = 0
-        for k in range(1, L):
-            sk += ns[k - 1]
-            g = (float(sk) * sk / k
-                 + float(S - sk) * (S - sk) / (L - k)
-                 - float(S) * S / L)
-            if g > best_g:
-                best_g, best_k, best_sk = g, k, sk
-        yield pd.DataFrame({
-            "event_type": [key[0]], "seen": [seen],
-            "n_hours": [L], "s_total": [S],
-            "split_hr": [hrs[best_k - 1] if best_k else 0],
-            "left_len": [best_k], "sk": [best_sk],
-            "g": [best_g if best_k else 0.0]})
+        return hrs, [counts[h] for h in hrs]
 
-    out = (events.groupBy("event_type").applyInPandasWithState(
-        update,
-        outputStructType=(
-            "event_type STRING, seen LONG, n_hours LONG, s_total LONG,"
-            " split_hr LONG, left_len LONG, sk LONG, g DOUBLE"),
-        stateStructType="hrs ARRAY<LONG>, ns ARRAY<LONG>, seen LONG",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout))
-    # With output_dir a restarted query folds only the new files onto
-    # the restored histograms (the streaming_cusum contract).
-    emissions = _drain_emissions(spark, out, "update",
-                                 checkpoint=checkpoint, query_name=query_name,
-                                 output_dir=output_dir)
-    # seen is monotone per type: max_by(seen) is the drained state.
-    # Means + rounding are JVM-side with the batch plan's expression
-    # trees; the L >= 2 floor applies on the drained state (a stream
-    # can't know the final hour count mid-flight).
-    final = (emissions.groupBy("event_type")
-             .agg(F.max_by(F.struct("n_hours", "s_total", "split_hr",
-                                    "left_len", "sk", "g"),
-                           "seen").alias("b"))
-             .select("event_type",
-                     F.col("b.n_hours").alias("n_hours"),
-                     F.col("b.s_total").alias("S"),
-                     F.col("b.split_hr").alias("split_hr"),
-                     F.col("b.left_len").alias("left_len"),
-                     F.col("b.sk").alias("sk"),
-                     F.col("b.g").alias("g"))
-             .filter(F.col("n_hours") >= 2))
-    return final.select(
-        "event_type", "n_hours", "split_hr", "left_len",
-        F.round(F.expr("CAST(sk AS DOUBLE) / left_len"), 6)
-        .alias("left_mean"),
-        F.round(F.expr("CAST(S - sk AS DOUBLE) / (n_hours - left_len)"),
-                6).alias("right_mean"),
-        F.round(F.col("g"), 6).alias("gain"))
+    final = _fold_per_key(
+        _events_stream(spark, events_dir, max_files=1), "event_type",
+        "hrs ARRAY<LONG>, ns ARRAY<LONG>", ([], []), step,
+        checkpoint=checkpoint, query_name=query_name, output_dir=output_dir)
+    return (final.filter(F.size("hrs") >= 2)
+            .select("event_type", best_split().alias("c"))
+            .select("event_type", "c.*"))

@@ -41,16 +41,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import DataFrame, SparkSession  # noqa: E402
+from pyspark.sql import SparkSession  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
-
-def _hash_agg(df: DataFrame) -> None:
-    """The sweep's fetch-free full-value aggregate: xxhash64 over every
-    column, bit_xor-folded — forces every column of every row to be
-    computed without a driver fetch."""
-    cols = [F.col(c) for c in df.columns]
-    df.agg(F.bit_xor(F.xxhash64(*cols)).alias("h")).collect()
+from tests.oracle_harness import full_value_agg  # noqa: E402
 
 
 def run_one(spark: SparkSession, sf_dir: str, name: str) -> dict:
@@ -87,7 +81,7 @@ def run_one(spark: SparkSession, sf_dir: str, name: str) -> dict:
         n_nonnull = nonnull.count()
     spark.catalog.clearCache()
     start = time.perf_counter()
-    _hash_agg(out)
+    full_value_agg(out)
     compute_sec = round(time.perf_counter() - start, 3)
     counts = diag_counts(diag)
     if "sym_rows" in counts:

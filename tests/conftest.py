@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import contextlib
 import http.server
 import os
 import socket
@@ -22,6 +23,20 @@ SF_ORACLE = os.path.join(TESTDATA, "sf0.01")
 def spark():
     s = get_session("ksds-tests", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
     yield s
+
+
+@contextlib.contextmanager
+def persisted_since(spark):
+    """Yield a set that, when the block exits, holds the ids of the RDDs
+    persisted during the block and still persisted: the persistent-RDD
+    key set after, minus the key set before.  Ids, not map sizes:
+    Python's GC releases RDDs of earlier tests whenever it collects old
+    py4j cycles, which would shrink a size and cancel a new entry."""
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet().toArray())
+    new: set[int] = set()
+    yield new
+    new.update(set(jsc.getPersistentRDDs().keySet().toArray()) - before)
 
 
 @pytest.fixture(scope="session")

@@ -1,6 +1,7 @@
 """Every streaming query in the package starts and drains in
-``streaming/jobs.py::_drain``, and every collecting sink is built in
-``_drain_emissions``.  A static check over the package source: a second
+``streaming/jobs.py::_drain``, every collecting sink is built in
+``_drain_emissions``, and every per-key state fold in
+``_fold_per_key``.  A static check over the package source: a second
 ``.start()`` or memory sink would be a drain that per-query settings
 (the state-partition pin) and progress capture silently miss."""
 
@@ -60,3 +61,10 @@ def test_foreach_batch_sinks():
     assert sorted(_call_sites(_method("foreachBatch"))) == [
         (JOBS, "_drain_emissions"), (JOBS, "streaming_incremental_merge"),
         (JOBS, "streaming_ingest")]
+
+
+def test_per_key_state_folded_only_in_fold_per_key():
+    """Every stateful twin folds its keys through the one helper that
+    owns the sort, the ``seen`` count and the drained-state read."""
+    assert _call_sites(_method("applyInPandasWithState")) == [
+        (JOBS, "_fold_per_key")]

@@ -11,6 +11,8 @@ from pyspark.sql import functions as F
 from kinesis_s3_data_shipper_spark.plans import REGISTRY, all_queries
 from kinesis_s3_data_shipper_spark.plans.analytics import _KCORE_K
 
+from .conftest import persisted_since
+
 all_queries()
 
 SF = "/root/testdata/sf0.001"
@@ -60,16 +62,14 @@ def test_fixpoint_releases_superseded_round_blocks(spark):
     block set per round for the session lifetime.  After the result is
     consumed, at most the final round's survivor set (plus the frames
     a still-live result could read) may remain persistent."""
-    jsc = spark.sparkContext._jsc.sc()
-    before = jsc.getPersistentRDDs().size()
-    out = REGISTRY["graph_kcore_fixpoint"].spark(spark, SF)
-    rows = out.collect()
+    with persisted_since(spark) as left:
+        out = REGISTRY["graph_kcore_fixpoint"].spark(spark, SF)
+        rows = out.collect()
     assert rows
-    after = jsc.getPersistentRDDs().size()
     # und (the live fixpoint edge set feeding `out`) is allowed to
     # stay; superseded rounds (deg + prior survivors, ~2 per round)
     # must be gone.
-    assert after - before <= 2, (before, after)
+    assert len(left) <= 2, left
 
 
 @pytest.mark.parametrize("name", ["graph_kcore_fixpoint",
@@ -94,16 +94,14 @@ def test_connected_components_releases_superseded_round_blocks(spark):
     loop must leave at most the FINAL labels checkpoint (plus the
     persisted sym edge set it already unpersists) live after the
     result is consumed."""
-    jsc = spark.sparkContext._jsc.sc()
-    before = jsc.getPersistentRDDs().size()
-    out = REGISTRY["dedup_clusters_cc"].spark(spark, SF)
-    rows = out.collect()
+    with persisted_since(spark) as left:
+        out = REGISTRY["dedup_clusters_cc"].spark(spark, SF)
+        rows = out.collect()
     assert rows
-    after = jsc.getPersistentRDDs().size()
     # The live result may keep the final round's labels checkpoint
     # (and round 0's initial checkpoint if the graph converged in one
     # pass); every superseded middle round must be gone.
-    assert after - before <= 2, (before, after)
+    assert len(left) <= 2, left
 
 
 @pytest.mark.parametrize("name", ["graph_louvain_fixpoint",
@@ -114,10 +112,8 @@ def test_other_fixpoints_release_superseded_round_blocks(spark, name):
     release_checkpoint primitive, so the same bound must hold — after
     the result is consumed, at most the final round's checkpoint plus
     one live input frame may remain, never one block set per round."""
-    jsc = spark.sparkContext._jsc.sc()
-    before = jsc.getPersistentRDDs().size()
-    out = REGISTRY[name].spark(spark, SF)
-    rows = out.collect()
+    with persisted_since(spark) as left:
+        out = REGISTRY[name].spark(spark, SF)
+        rows = out.collect()
     assert rows
-    after = jsc.getPersistentRDDs().size()
-    assert after - before <= 2, (name, before, after)
+    assert len(left) <= 2, (name, left)

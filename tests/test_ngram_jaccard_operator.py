@@ -178,46 +178,6 @@ def test_null_block_docs_never_pair(spark):
     assert got == want
 
 
-def test_eager_release_drops_member_map_and_keeps_output(spark):
-    """eager_release=True must return the same pairs while leaving no
-    cached member map behind (the per-epoch caller lifecycle: output
-    is localCheckpointed, the persist is dropped before returning) —
-    contrasted with the default lazy form, whose member-map cache
-    lives until eviction or clearCache (the documented caller-owned
-    lifetime)."""
-    jsc = spark.sparkContext._jsc.sc()
-    spark.catalog.clearCache()
-    rows = [(1, "x", "abcdefgh"), (2, "x", "abcdefgh"),
-            (3, "x", "abcdefg"), (4, "y", "abcdefgh")]
-    df = spark.createDataFrame(rows, "doc_id long, blk string, text string")
-    before = jsc.getPersistentRDDs().size()
-    out = blocked_ngram_jaccard_pairs(
-        df, id_col="doc_id", text_col="text", block_cols=["blk"],
-        ngram_n=1, threshold=T, eager_release=True)
-    got = {(r.doc_a, r.doc_b): r.jaccard for r in out.collect()}
-    assert got == _brute(rows)
-    # only the localCheckpointed OUTPUT may remain live; the member
-    # map's MEMORY_AND_DISK entry was unpersisted before returning
-    assert jsc.getPersistentRDDs().size() - before <= 1
-    # the default lazy form leaves its member-map cache behind after
-    # execution — one more live entry, released only by clearCache.
-    # Compare persistent-RDD ID SETS, not map sizes: in the shared
-    # session the async ContextCleaner may unpersist an UNRELATED
-    # earlier RDD between the two snapshots, and a -1 from that
-    # cancels the lazy call's +1 (observed as a full-suite-only
-    # flake, same as the setsim twin).
-    jjsc = spark.sparkContext._jsc
-    ids_before = set(jjsc.getPersistentRDDs().keySet().toArray())
-    lazy = blocked_ngram_jaccard_pairs(
-        df, id_col="doc_id", text_col="text", block_cols=["blk"],
-        ngram_n=1, threshold=T)
-    assert {(r.doc_a, r.doc_b): r.jaccard
-            for r in lazy.collect()} == _brute(rows)
-    ids_after = set(jjsc.getPersistentRDDs().keySet().toArray())
-    assert len(ids_after - ids_before) == 1
-    spark.catalog.clearCache()
-
-
 def _brute_groups(rows, threshold=T):
     """Reference group form: per doc, the min id over {doc} ∪ {same-
     block neighbors with J >= t} plus the similarity to it."""

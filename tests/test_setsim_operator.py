@@ -1,8 +1,5 @@
-"""setsim_prefix_pairs — the extracted PPJoin word-token operator
-(r11 verdict ask #6): correctness against a brute force, and the
-eager_release cache lifecycle mirroring
-tests/test_ngram_jaccard_operator.py::test_eager_release_drops_member_map_and_keeps_output
-/ tests/test_graph_family.py's block-count gates."""
+"""setsim_prefix_pairs — the extracted PPJoin word-token operator:
+correctness against a brute force."""
 
 from __future__ import annotations
 
@@ -42,36 +39,3 @@ def test_pairs_match_brute_force(spark):
     got = {(r.doc_a, r.doc_b): (r.n_common, r.jaccard)
            for r in out.collect()}
     assert got == _brute(ROWS)
-
-
-def test_eager_release_drops_member_map_and_keeps_output(spark):
-    """eager_release=True must return the same pairs while leaving no
-    cached member map behind (output localCheckpointed, persist
-    dropped before returning); the default lazy form leaves exactly
-    one more live cache entry — the documented caller-owned
-    lifetime."""
-    jsc = spark.sparkContext._jsc.sc()
-    spark.catalog.clearCache()
-    df = spark.createDataFrame(ROWS, "doc_id long, text string")
-    before = jsc.getPersistentRDDs().size()
-    out = setsim_prefix_pairs(df, threshold=T, eager_release=True)
-    got = {(r.doc_a, r.doc_b): (r.n_common, r.jaccard)
-           for r in out.collect()}
-    assert got == _brute(ROWS)
-    # only the localCheckpointed OUTPUT may remain live; the member
-    # map's MEMORY_AND_DISK entry was unpersisted before returning
-    assert jsc.getPersistentRDDs().size() - before <= 1
-    # Compare persistent-RDD ID SETS, not map sizes: in the shared
-    # session the async ContextCleaner may unpersist an UNRELATED
-    # earlier RDD between the two snapshots, and a -1 from that
-    # cancels the lazy call's +1 (observed as a full-suite-only
-    # flake).  New-id arithmetic is immune to concurrent removals.
-    jjsc = spark.sparkContext._jsc
-    ids_before = set(jjsc.getPersistentRDDs().keySet().toArray())
-    lazy = setsim_prefix_pairs(df, threshold=T)
-    assert {(r.doc_a, r.doc_b): (r.n_common, r.jaccard)
-            for r in lazy.collect()} == _brute(ROWS)
-    ids_after = set(jjsc.getPersistentRDDs().keySet().toArray())
-    # exactly one NEW live entry: the lazy form's caller-owned
-    # member-map cache
-    assert len(ids_after - ids_before) == 1

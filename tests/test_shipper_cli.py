@@ -25,6 +25,8 @@ from kinesis_s3_data_shipper_spark.ingest.tracking import (
     filter_unprocessed, record_processed)
 from kinesis_s3_data_shipper_spark.shipper import main, redacted
 
+from .conftest import persisted_since
+
 
 @pytest.fixture()
 def landing(tmp_path):
@@ -215,11 +217,10 @@ def test_post_outage_no_loss_no_dup_across_retry(spark, landing, tmp_path):
     args = lambda: ["--input", landing, "--output", out, "--payloads",  # noqa: E731
                     "--post-url", f"http://127.0.0.1:{port_holder['port']}",
                     "--processed-dir", str(processed), "--batch-size", "5"]
-    cached_rdds = spark.sparkContext._jsc.getPersistentRDDs().size()
-    with pytest.raises(Exception):
+    with persisted_since(spark) as left, pytest.raises(Exception):
         main(args())
     # The failed run leaves no cached blocks behind.
-    assert spark.sparkContext._jsc.getPersistentRDDs().size() == cached_rdds
+    assert not left, left
     # The POSTs run inside the payload write, so a failed delivery
     # commits no payload rows: the re-run does not append them twice.
     assert not glob.glob(os.path.join(out + "_payloads", "*.parquet"))

@@ -1,34 +1,10 @@
-"""applyInPandasWithState: the custom stateful operator must carry
-per-user counts across micro-batches (two files, one per trigger) and
-land exactly on the batch groupBy counts.
+"""Stateful streaming: the per-key folds carried across micro-batches,
+the foreachBatch incremental merge, and its version housekeeping.
 """
 
 from __future__ import annotations
 
 import shutil
-
-from kinesis_s3_data_shipper_spark.streaming.jobs import (
-    streaming_running_user_counts)
-
-
-def test_running_counts_match_batch(spark, tmp_path, sf_small):
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    # Two copies → two micro-batches (maxFilesPerTrigger=1): state must
-    # persist across batches, so every user's total is 2× the single-
-    # copy count.
-    src = f"{sf_small}/events.parquet"
-    shutil.copy(src, landing / "a.parquet")
-    shutil.copy(src, landing / "b.parquet")
-
-    got = streaming_running_user_counts(
-        spark, str(landing), checkpoint=str(tmp_path / "ckpt"),
-        query_name="running_counts_test")
-    got_map = {r.user_id: r.total for r in got.collect()}
-
-    want = (spark.read.parquet(src).groupBy("user_id").count().collect())
-    want_map = {r.user_id: 2 * r["count"] for r in want}
-    assert got_map == want_map
 
 
 def test_incremental_merge_matches_batch(spark, tmp_path, sf_small):
@@ -599,7 +575,7 @@ def test_streaming_changepoint_windowed_state_is_bounded(spark, tmp_path,
                                                          sf_oracle):
     """The production-capped twin (r09 verdict ask #4): with
     window_hours=W the per-type histogram state must hold at most W
-    hours in EVERY emission (n_hours IS len(state.hrs) post-trim, so
+    hours in EVERY emission (each emission IS the post-trim state, so
     the per-batch emissions are a state-size trace), and the drained
     result must equal the batch change-point plan filtered to the
     trailing W hours per type — the windowed oracle with W
@@ -628,7 +604,7 @@ def test_streaming_changepoint_windowed_state_is_bounded(spark, tmp_path,
 
     emissions = spark.read.parquet(out_dir).collect()
     assert emissions
-    assert max(r.n_hours for r in emissions) <= W, "state cap breached"
+    assert max(len(r.hrs) for r in emissions) <= W, "state cap breached"
     # the cap engaged mid-stream: the UNCAPPED twin's histograms grow
     # far past W over the same staged slices
     full = {r.event_type: r.n_hours

@@ -21,6 +21,8 @@ from pyspark.sql import functions as F
 from kinesis_s3_data_shipper_spark.operators.checkpoint import (
     release_checkpoint, truncated_checkpoint)
 
+from .conftest import persisted_since
+
 ROUNDS = 4
 
 
@@ -152,14 +154,13 @@ def test_release_unwraps_unary_derivations(spark):
     convergence column and releases ``ckpt.drop(tag)`` — a Project
     over the LogicalRDD.  The release must unwrap to the leaf and
     actually free the blocks (returns True), not silently no-op."""
-    jsc = spark.sparkContext._jsc.sc()
-    before = jsc.getPersistentRDDs().size()
-    ckpt = truncated_checkpoint(
-        spark.range(40).selectExpr("id as k", "id as v",
-                                   "id % 2 as _changed"))
-    derived = ckpt.drop("_changed").select("k", "v")
-    assert release_checkpoint(derived) is True
-    assert jsc.getPersistentRDDs().size() == before
+    with persisted_since(spark) as left:
+        ckpt = truncated_checkpoint(
+            spark.range(40).selectExpr("id as k", "id as v",
+                                       "id % 2 as _changed"))
+        derived = ckpt.drop("_changed").select("k", "v")
+        assert release_checkpoint(derived) is True
+    assert not left, left
 
 
 def test_release_refuses_multi_child_plans(spark):
