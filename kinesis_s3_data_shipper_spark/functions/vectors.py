@@ -18,22 +18,18 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def dot(a: str, b: str, dim: int | None = None) -> Column:
+def dot(a: str, b: str) -> Column:
     """Sequential-fold double dot product of two float-array columns.
 
-    ``dim`` (a statically known vector length) is accepted for call-
-    site documentation but no longer changes the plan: an earlier
-    variant unrolled the fold into ``((0 + a[0]*b[0]) + a[1]*b[1]) +
-    …`` on the theory that codegen arithmetic beats the lambda
-    evaluator, but measured at d=64 the unrolled Project is ~2x
-    SLOWER than the ``aggregate`` fold at every pair count tried
-    (42k pairs: 0.9s vs 0.42s; 1M pairs: 8.6s vs 4.9s) — a 64-term
-    generated method is past what the JIT will compile, so it runs
-    interpreted, while the fold's tight per-element loop stays hot.
-    The fold is also the one summation order every engine reproduces
-    (DuckDB list_reduce mirrors it), so scores stay bit-identical.
+    Kept as the ``aggregate`` fold: measured at d=64, a Project that
+    unrolls it into ``((0 + a[0]*b[0]) + a[1]*b[1]) + …`` is ~2x
+    SLOWER at every pair count tried (42k pairs: 0.9s vs 0.42s; 1M
+    pairs: 8.6s vs 4.9s) — a 64-term generated method is past what
+    the JIT will compile, so it runs interpreted, while the fold's
+    tight per-element loop stays hot. The fold is also the one
+    summation order every engine reproduces (DuckDB list_reduce
+    mirrors it), so scores stay bit-identical.
     """
-    del dim  # documented above: unrolling measured slower
     return F.expr(
         f"aggregate(zip_with({a}, {b},"
         f"  (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
@@ -41,18 +37,17 @@ def dot(a: str, b: str, dim: int | None = None) -> Column:
     )
 
 
-def norm(a: str, dim: int | None = None) -> Column:
-    """L2 norm via the same sequential fold (see dot() re: ``dim``)."""
-    del dim
+def norm(a: str) -> Column:
+    """L2 norm via the same sequential fold."""
     return F.sqrt(F.expr(
         f"aggregate({a}, CAST(0 AS DOUBLE),"
         f"  (acc, x) -> acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))"
     ))
 
 
-def cosine(a: str, b: str, dim: int | None = None) -> Column:
+def cosine(a: str, b: str) -> Column:
     """Cosine similarity, engine-reproducible."""
-    return dot(a, b, dim) / (norm(a, dim) * norm(b, dim))
+    return dot(a, b) / (norm(a) * norm(b))
 
 
 # DuckDB spellings of the SAME folds (list_zip structs are indexed

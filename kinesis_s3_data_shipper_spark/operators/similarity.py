@@ -1,20 +1,24 @@
 """Similarity search over embedding columns.
 
-Two paths, per the standard large-scale ANN playbook:
+Every top-k search has one shape: prune the corpus to candidates,
+score each candidate, keep the best k per query.
 
-- **Brute-force cosine top-k** (the exactness baseline): broadcast the
-  (small) query set against the corpus — a map-side-only join, no
-  shuffle of the corpus — then per-query top-k via window row_number.
-  O(|Q|·n·d); correct at any scale where |Q| is bounded.
+- **Scoring and ranking**: :func:`score_candidates` pairs the corpus
+  with the (small, broadcast) query set — an equi-join on a pruning
+  key, or a cross join for brute force — drops each query's own row
+  and projects the caller's score; :func:`top_k_per_query` keeps the
+  k best rows per query by ``row_number`` over ``query_id``. Brute
+  force is O(|Q|·n·d) with no shuffle of the corpus; correct at any
+  scale where |Q| is bounded.
 
-- **Sign-LSH bucketing** (the scale path): 8 deterministic random
-  hyperplanes → 8 sign bits → bucket key. Hyperplane weights are
-  generated driver-side from a seeded PRNG derived from md5, embedded
-  as literals into the plan (and into the DuckDB oracle), so both
-  engines compute identical buckets. Search cost drops from n to
-  n/2^bits per query at matching recall tradeoffs; at 100 TB this is
-  the difference between a broadcast of everything and a bucket-pruned
-  scan (bucket key is also a fine partition/cluster key for storage).
+- **Pruning keys**: sign-LSH buckets (8 deterministic hyperplanes → 8
+  sign bits; weights generated driver-side from md5 and embedded as
+  literals into the plan and the DuckDB oracle, so both engines
+  compute identical buckets), IVF cells (nearest data-derived
+  centroid) and PQ codes. Search cost drops from n to n/2^bits or n/K
+  per query; at 100 TB this is the difference between a broadcast of
+  everything and a bucket-pruned scan (the key is also a fine
+  partition/cluster key for storage).
 """
 
 from __future__ import annotations
@@ -26,10 +30,13 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
-from ..functions.vectors import cosine, dot, norm
+from ..functions.vectors import dot, norm
 
 
-def hyperplanes(num_planes: int, dim: int, seed: str = "ksds-lsh-v1") -> list[list[float]]:
+_LSH_SEED = "ksds-lsh-v1"
+
+
+def hyperplanes(num_planes: int, dim: int) -> list[list[float]]:
     """Deterministic pseudo-random hyperplane weights in [-0.5, 0.5].
 
     Derived from md5(seed|plane|dim-chunk) so any engine/language can
@@ -41,7 +48,8 @@ def hyperplanes(num_planes: int, dim: int, seed: str = "ksds-lsh-v1") -> list[li
         weights: list[float] = []
         counter = 0
         while len(weights) < dim:
-            digest = hashlib.md5(f"{seed}|{p}|{counter}".encode()).digest()
+            digest = hashlib.md5(
+                f"{_LSH_SEED}|{p}|{counter}".encode()).digest()
             for off in range(0, 16, 4):
                 (u,) = struct.unpack_from(">I", digest, off)
                 weights.append(u / 4294967295.0 - 0.5)
@@ -57,11 +65,10 @@ def _plane_literal(weights: list[float]) -> str:
 def lsh_bucket(vec_col: str, planes: list[list[float]]) -> Column:
     """Sign-bit bucket string for a float-array column.
 
-    Kept as HOF folds: A/B-measured, the 8-plane × 64-term unrolled
-    form is ~2× SLOWER here (one projection with 512 arithmetic terms
-    + 8 CASEs pays more in codegen size/compile than the interpreted
-    lambda costs — bucket assignment is once per row, not per pair).
-    Only the per-PAIR scoring dots unroll (functions.vectors.dot).
+    Kept as HOF folds, like every vector fold (functions.vectors.dot):
+    A/B-measured, the 8-plane × 64-term unrolled form is ~2× SLOWER
+    (one projection with 512 arithmetic terms + 8 CASEs pays more in
+    codegen size/compile than the interpreted lambda costs).
     """
     bits = []
     for weights in planes:
@@ -234,8 +241,7 @@ def ivf_cosines_arrow(vec_col: str,
 def ivf_assign_broadcast(vectors: DataFrame, centroids: DataFrame, *,
                          id_col: str = "vec_id",
                          vec_col: str = "embedding",
-                         out_col: str = "cluster",
-                         dim: int | None = None) -> DataFrame:
+                         out_col: str = "cluster") -> DataFrame:
     """IVF assignment past the closure cap: broadcast centroid TABLE
     + argmax aggregate instead of a plan-literal codebook.
 
@@ -259,10 +265,10 @@ def ivf_assign_broadcast(vectors: DataFrame, centroids: DataFrame, *,
     """
     c = centroids.select(F.col("cid"),
                          F.col("cvec"),
-                         norm("cvec", dim).alias("_cn"))
+                         norm("cvec").alias("_cn"))
     v = vectors.select(F.col(id_col), F.col(vec_col),
-                       norm(vec_col, dim).alias("_nv"))
-    cos = dot(vec_col, "cvec", dim) / (F.col("_nv") * F.col("_cn"))
+                       norm(vec_col).alias("_nv"))
+    cos = dot(vec_col, "cvec") / (F.col("_nv") * F.col("_cn"))
     best = F.max(F.struct(F.col("_cos").alias("c"),
                           (-F.col("cid")).alias("neg_cid"),
                           F.col("cid").alias("cid")))
@@ -408,80 +414,63 @@ def pq_adc_score(lut_col: str, codes_col: str,
         f" CAST(0 AS DOUBLE), (acc, v) -> acc + v)")
 
 
-def cosine_topk(corpus: DataFrame, queries: DataFrame, *, id_col: str,
-                vec_col: str, k: int, round_dp: int = 6,
-                dim: int | None = None) -> DataFrame:
-    """Exact top-k cosine neighbors for each query vector.
+def score_candidates(corpus: DataFrame, queries: DataFrame, *cols,
+                     on=None) -> DataFrame:
+    """(query_id, neighbor_id, *cols) for every candidate pair.
 
-    Output: query_id, neighbor_id, cos (rounded), rank. Ordering uses
-    (rounded cos DESC, neighbor_id) so ranks are deterministic even if
-    two engines' unrounded doubles differ in the last ulp.
+    ``corpus`` rows carry ``vec_id``, ``queries`` rows ``query_id``;
+    ``cols`` (the score, and any carried columns) are evaluated over
+    the paired row.  ``on`` is the pruning join — a column name or a
+    join condition, as :meth:`DataFrame.join` takes it — and ``None``
+    pairs every query with the whole corpus.  A query's own row is
+    never its candidate.
 
-    ``queries`` is the broadcast side of a cross join.  Pass a frame
-    Spark sizes small, or one carrying a broadcast hint (as
-    ``plans/similarity.py::_queries`` does); otherwise the join plans
-    a CartesianProduct over the corpus.
+    ``queries`` is the broadcast side.  Pass a frame Spark sizes small,
+    or one carrying a broadcast hint (as ``plans/similarity.py::
+    _queries`` does); otherwise a cross join plans a CartesianProduct
+    over the corpus.  Project norms per ROW before pairing: the
+    per-pair work is then a single dot product.
     """
-    # Norms are projected per ROW before the join — the per-pair work
-    # is then a single dot product. (Inlining cosine() after the join
-    # would recompute ‖q‖ once per corpus row and ‖c‖ once per query:
-    # O((|Q|+1)·n·d) wasted flops. Same arithmetic, same result —
-    # dot/(‖a‖·‖b‖) on identical operands.)
-    q = queries.select(F.col(id_col).alias("query_id"),
-                       F.col(vec_col).alias("_qv"),
-                       norm(vec_col, dim).alias("_qn"))
-    c = corpus.select(F.col(id_col).alias("neighbor_id"),
-                      F.col(vec_col).alias("_cv"),
-                      norm(vec_col, dim).alias("_cn"))
-    scored = (
-        c.crossJoin(q)
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id",
-                F.round(dot("_qv", "_cv", dim)
-                        / (F.col("_qn") * F.col("_cn")),
-                        round_dp).alias("cos")))
-    w = W.partitionBy("query_id").orderBy(F.desc("cos"), "neighbor_id")
-    return (scored.select("query_id", "neighbor_id", "cos",
-                          F.row_number().over(w).cast("long").alias("rank"))
-            .filter(F.col("rank") <= k))
+    pairs = (corpus.crossJoin(queries) if on is None
+             else corpus.join(queries, on))
+    return (pairs.filter(F.col("vec_id") != F.col("query_id"))
+            .select("query_id", F.col("vec_id").alias("neighbor_id"),
+                    *cols))
+
+
+def top_k_per_query(df: DataFrame, k: int, *order,
+                    rank: str = "rank") -> DataFrame:
+    """The rows of ``df`` ranked <= k within their ``query_id`` by
+    ``order``, with the long ``rank`` column appended.  Order by a
+    rounded score and an id tiebreak so ranks are deterministic even
+    if two engines' unrounded doubles differ in the last ulp."""
+    w = W.partitionBy("query_id").orderBy(*order)
+    return (df.select("*", F.row_number().over(w).cast("long").alias(rank))
+            .filter(F.col(rank) <= k))
 
 
 def cosine_pairs(vectors: DataFrame, *, id_col: str, vec_col: str,
-                 block_col: str, threshold: float,
-                 dim: int | None = None) -> DataFrame:
+                 block_col: str, threshold: float) -> DataFrame:
     """Embedding near-duplicate pairs (cos ≥ threshold) within blocks.
 
     Blocking (label, or an LSH bucket at scale) bounds the quadratic
     verify to within-block pairs.
     """
-    # Per-row norms before the self-join (see cosine_topk): per-pair
-    # cost is one dot product, not dot + two norm recomputations.
+    # Per-row norms before the self-join: per-pair cost is one dot
+    # product, not dot + two norm recomputations.
     v = vectors.select(F.col(id_col).alias("_id"),
                        F.col(block_col).alias("_blk"),
                        F.col(vec_col).alias("_v"),
-                       norm(vec_col, dim).alias("_n"))
+                       norm(vec_col).alias("_n"))
     a, b = v.alias("a"), v.alias("b")
     return (
         a.join(b, (F.col("a._blk") == F.col("b._blk"))
                   & (F.col("a._id") < F.col("b._id")))
         .select(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"),
                 F.col("a._blk").alias("block"),
-                (dot("a._v", "b._v", dim)
+                (dot("a._v", "b._v")
                  / (F.col("a._n") * F.col("b._n")))
                 .alias("_cos_raw"))
         .filter(F.col("_cos_raw") >= threshold)
         .select("id_a", "id_b", "block",
                 F.round("_cos_raw", 6).alias("cos")))
-
-
-def lsh_bucket_stats(vectors: DataFrame, *, id_col: str, vec_col: str,
-                     num_planes: int = 8, dim: int = 64) -> DataFrame:
-    """Assign sign-LSH buckets and summarize occupancy (the IVF-style
-    coarse index a scale deployment would partition by)."""
-    planes = hyperplanes(num_planes, dim)
-    return (vectors
-            .select(F.col(id_col).alias("vid"),
-                    lsh_bucket(vec_col, planes).alias("bucket"))
-            .groupBy("bucket")
-            .agg(F.count("*").alias("n_vecs"),
-                 F.min("vid").alias("min_vec_id")))

@@ -305,8 +305,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucketed = emb.withColumn(
         "bucket", lsh_bucket("embedding", hyperplanes(8, 64)))
     pairs = cosine_pairs(bucketed, id_col="vec_id", vec_col="embedding",
-                         block_col="bucket", threshold=_EMB_DUP_TAU,
-                         dim=64)
+                         block_col="bucket", threshold=_EMB_DUP_TAU)
     dup_map = pairs.groupBy("id_b").agg(F.min("id_a").alias("min_dup"))
     return (emb.join(dup_map, emb.vec_id == dup_map.id_b, "left")
             .select(emb.vec_id,

@@ -1,21 +1,28 @@
-"""Similarity-search plans over the `embeddings` table (north-star ⊕):
-brute-force cosine top-k, blocked cosine near-dup pairs, sign-LSH
-bucket assignment. All oracles reproduce the same sequential-fold
-double arithmetic (functions.vectors) and the same hyperplane literals
-(operators.similarity.hyperplanes), so scores and buckets match
+"""Similarity-search plans over the `embeddings` table (north-star ⊕).
+
+Every top-k query here has one shape: prune the corpus to candidates
+(a sign-LSH bucket, an IVF cell, a PQ-coded corpus, or all of it),
+score each candidate with ``operators.similarity.score_candidates``,
+keep each query's best k with ``top_k_per_query``.  The oracles
+mirror that with the SQL builders below (``_sql_scored``,
+``_sql_top_k``, and the IVF-assignment and PQ-encode CTEs).  The
+other queries (semantic dedup, k-means, k-center, quantization, PCA,
+histograms) reuse the same assignment kernels.  Both engines run the
+same sequential-fold double arithmetic (functions.vectors) on the
+same hyperplane and centroid literals, so scores and buckets match
 bit-for-bit-then-rounded.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..functions.vectors import cosine, sql_cosine, sql_dot, sql_norm
+from ..functions.vectors import cosine, dot, norm, sql_cosine, sql_norm
 from ..operators.checkpoint import truncated_checkpoint
-from ..operators.similarity import (cosine_pairs, cosine_topk, hyperplanes,
-                                    lsh_bucket, lsh_bucket_stats,
-                                    sql_lsh_bucket)
+from ..operators.similarity import (cosine_pairs, hyperplanes, lsh_bucket,
+                                    pq_adc_score, score_candidates,
+                                    sql_lsh_bucket, top_k_per_query)
 from ..sources.tables import load_table, table_row_count
 from .base import register
 
@@ -35,36 +42,82 @@ def _queries(frame: DataFrame, pred: str = _QUERY_PRED) -> DataFrame:
     return F.broadcast(frame.filter(F.expr(pred)))
 
 
-#: Embedding dimensionality of the driver's embeddings table. Passing
-#: it to the vector ops unrolls the folds into codegen arithmetic
-#: (functions.vectors.dot) — same sequential-fold result, ~2× faster.
-_DIM = 64
+#: The 8 sign-LSH hyperplanes over the 64-dim embeddings, and the
+#: DuckDB spelling of the bucket they assign.
+_PLANES = hyperplanes(8, 64)
+_SQL_BUCKET = sql_lsh_bucket("embedding", _PLANES)
+
+
+def _normed(frame: DataFrame, *cols) -> DataFrame:
+    """Corpus side of a search: vec_id, embedding, its norm ``_n``
+    (projected per ROW, so a candidate costs one dot), and ``cols``."""
+    return frame.select("vec_id", "embedding",
+                        norm("embedding").alias("_n"), *cols)
+
+
+def _query_side(b: DataFrame, *cols) -> DataFrame:
+    """The query set of a :func:`_normed` frame, renamed for pairing:
+    query_id, qv, _qn, and ``cols``."""
+    return _queries(b).select(F.col("vec_id").alias("query_id"),
+                              F.col("embedding").alias("qv"),
+                              F.col("_n").alias("_qn"), *cols)
+
+
+def _cos(q: str = "qv", c: str = "embedding", qn: str = "_qn",
+         n: str = "_n") -> Column:
+    """A candidate's cosine from the per-row norms, rounded at 6dp."""
+    return F.round(dot(q, c) / (F.col(qn) * F.col(n)), 6).alias("cos")
+
+
+def _top3(scored: DataFrame) -> DataFrame:
+    """Each query's 3 best candidates by rounded cosine."""
+    return top_k_per_query(scored, 3, F.desc("cos"), "neighbor_id")
+
+
+def _first_vectors(emb: DataFrame, n: int) -> list[list[float]]:
+    """The vectors with vec_id < n, in id order, as Python lists: the
+    deterministic data-derived centroids and codebook rows both engines
+    recompute identically (production would k-means them).  A bounded
+    driver-side collect of exactly n vectors, shipped inside the plan
+    or UDF as literals (the hyperplanes pattern — not a join input)."""
+    return [list(map(float, r.embedding)) for r in
+            emb.filter(F.col("vec_id") < n).orderBy("vec_id").collect()]
+
+
+#: Oracle side.  Every candidate scorer pairs corpus rows ``e`` with
+#: the query CTE ``q`` (query_id, qv, ...).
+_SQL_COS = f"ROUND({sql_cosine('q.qv', 'e.embedding')}, 6) AS cos"
+
+
+def _sql_scored(corpus: str, *cols: str, on: str | None = None) -> str:
+    """DuckDB twin of score_candidates: (query_id, neighbor_id, *cols)."""
+    join = "CROSS JOIN q" if on is None else f"JOIN q ON {on}"
+    return (f"SELECT q.query_id, e.vec_id AS neighbor_id,"
+            f" {', '.join(cols or (_SQL_COS,))}\n"
+            f"  FROM {corpus} e {join} WHERE e.vec_id <> q.query_id")
+
+
+def _sql_top_k(src: str, k: int, order: str = "cos DESC, neighbor_id",
+               rank: str = "rank") -> str:
+    """DuckDB twin of top_k_per_query over the rows of ``src``."""
+    return (f"SELECT *, row_number() OVER (PARTITION BY query_id"
+            f" ORDER BY {order}) AS {rank}\n"
+            f"  FROM {src} QUALIFY {rank} <= {k}")
 
 
 @register("ann_bruteforce_topk", oracle=f"""
 WITH q AS (
   SELECT vec_id AS query_id, embedding AS qv FROM embeddings
   WHERE {_QUERY_PRED}
-), scored AS (
-  SELECT q.query_id, e.vec_id AS neighbor_id,
-         ROUND({sql_cosine('q.qv', 'e.embedding')}, 6) AS cos
-  FROM embeddings e CROSS JOIN q
-  WHERE e.vec_id <> q.query_id
 )
-SELECT query_id, neighbor_id, cos, rank FROM (
-  SELECT query_id, neighbor_id, cos,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY cos DESC, neighbor_id) AS rank
-  FROM scored
-) WHERE rank <= 5
+{_sql_top_k(f"({_sql_scored('embeddings')})", 5)}
 """, doc="Exact ANN baseline: broadcast query set × corpus, sequential-"
          "fold double cosine, per-query top-5 via window (rounded-score "
          "ordering + id tiebreak for determinism).")
 def ann_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = _queries(emb)
-    return cosine_topk(emb, queries, id_col="vec_id", vec_col="embedding",
-                       k=5, round_dp=6, dim=_DIM)
+    b = _normed(load_table(spark, sf_dir, "embeddings"))
+    return top_k_per_query(score_candidates(b, _query_side(b), _cos()), 5,
+                           F.desc("cos"), "neighbor_id")
 
 
 @register("embedding_cosine_pairs", oracle=f"""
@@ -81,69 +134,27 @@ WHERE {sql_cosine('a.embedding', 'b.embedding')} >= 0.35
 def embedding_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     return cosine_pairs(emb, id_col="vec_id", vec_col="embedding",
-                        block_col="label", threshold=0.35, dim=_DIM)
+                        block_col="label", threshold=0.35)
 
 
-def _lsh_oracle() -> str:
-    bucket = sql_lsh_bucket("embedding", hyperplanes(8, 64))
-    return f"""
-SELECT bucket, COUNT(*) AS n_vecs, MIN(vid) AS min_vec_id FROM (
-  SELECT vec_id AS vid, {bucket} AS bucket FROM embeddings
-) GROUP BY bucket
-"""
-
-
-def _lsh_probe_oracle() -> str:
-    bucket = sql_lsh_bucket("embedding", hyperplanes(8, 64))
-    return f"""
+@register("ann_lsh_probe", oracle=f"""
 WITH b AS (
-  SELECT vec_id, embedding, {bucket} AS bucket FROM embeddings
+  SELECT vec_id, embedding, {_SQL_BUCKET} AS bucket FROM embeddings
 ), q AS (
   SELECT vec_id AS query_id, embedding AS qv, bucket FROM b
   WHERE {_QUERY_PRED}
-), scored AS (
-  SELECT q.query_id, b.vec_id AS neighbor_id,
-         ROUND({sql_cosine('q.qv', 'b.embedding')}, 6) AS cos
-  FROM b JOIN q ON b.bucket = q.bucket
-  WHERE b.vec_id <> q.query_id
 )
-SELECT query_id, neighbor_id, cos, rank FROM (
-  SELECT query_id, neighbor_id, cos,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY cos DESC, neighbor_id) AS rank
-  FROM scored
-) WHERE rank <= 3
-"""
-
-
-@register("ann_lsh_probe", oracle=_lsh_probe_oracle(),
-          doc="Bucket-pruned ANN (the 100 TB search path): queries probe "
-              "only their own sign-LSH bucket instead of the full corpus "
-              "— an equi-join on the bucket key replaces the broadcast "
-              "cross join, cutting per-query work to n/2^bits. Same "
-              "deterministic cosine + top-k machinery as the exact path.")
+{_sql_top_k(f"({_sql_scored('b', on='e.bucket = q.bucket')})", 3)}
+""", doc="Bucket-pruned ANN (the 100 TB search path): queries probe "
+         "only their own sign-LSH bucket instead of the full corpus "
+         "— an equi-join on the bucket key replaces the broadcast "
+         "cross join, cutting per-query work to n/2^bits. Same "
+         "deterministic cosine + top-k machinery as the exact path.")
 def ann_lsh_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.vectors import dot, norm
-    emb = load_table(spark, sf_dir, "embeddings")
-    planes = hyperplanes(8, 64)
-    # Norms projected per row before the bucket join (one dot per pair).
-    b = emb.select(F.col("vec_id"), F.col("embedding"),
-                   norm("embedding", _DIM).alias("_n"),
-                   lsh_bucket("embedding", planes).alias("bucket"))
-    q = (_queries(b)
-         .select(F.col("vec_id").alias("query_id"),
-                 F.col("embedding").alias("qv"),
-                 F.col("_n").alias("_qn"), "bucket"))
-    scored = (b.join(q, "bucket")
-              .filter(F.col("vec_id") != F.col("query_id"))
-              .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                      F.round(dot("qv", "embedding", _DIM)
-                              / (F.col("_qn") * F.col("_n")), 6)
-                       .alias("cos")))
-    w = W.partitionBy("query_id").orderBy(F.desc("cos"), "neighbor_id")
-    return (scored.select("query_id", "neighbor_id", "cos",
-                          F.row_number().over(w).cast("long").alias("rank"))
-            .filter(F.col("rank") <= 3))
+    b = _normed(load_table(spark, sf_dir, "embeddings"),
+                lsh_bucket("embedding", _PLANES).alias("bucket"))
+    return _top3(score_candidates(b, _query_side(b, "bucket"), _cos(),
+                                  on="bucket"))
 
 
 #: IVF coarse-quantizer size. Centroids are the K lowest-vec_id vectors
@@ -183,11 +194,14 @@ def _ivf_k(n: int) -> int:
     return max(_IVF_K_MIN, min(_IVF_K_CAP, math.isqrt(n)))
 
 
-def _ivf_probe_oracle() -> str:
-    return f"""
-WITH c AS (
+def _sql_ivf_assign(k: str) -> str:
+    """DuckDB twin of the IVF assignment, as CTEs: ``c`` the first k
+    vectors as centroids, ``asg`` every vector's centroids ranked by
+    cosine (ties to the lowest cid), ``a`` its nearest one as
+    ``cluster``."""
+    return f"""c AS (
   SELECT vec_id AS cid, embedding AS cv FROM embeddings
-  WHERE vec_id < {_SQL_IVF_K}
+  WHERE vec_id < {k}
 ), asg AS (
   SELECT e.vec_id, e.embedding, c.cid,
          row_number() OVER (PARTITION BY e.vec_id
@@ -195,25 +209,16 @@ WITH c AS (
   FROM embeddings e CROSS JOIN c
 ), a AS (
   SELECT vec_id, embedding, cid AS cluster FROM asg WHERE rn = 1
-), q AS (
+)"""
+
+
+@register("ann_ivf_probe", oracle=f"""
+WITH {_sql_ivf_assign(_SQL_IVF_K)}, q AS (
   SELECT vec_id AS query_id, embedding AS qv, cluster FROM a
   WHERE {_QUERY_PRED}
-), scored AS (
-  SELECT q.query_id, a.vec_id AS neighbor_id,
-         ROUND({sql_cosine('q.qv', 'a.embedding')}, 6) AS cos
-  FROM a JOIN q ON a.cluster = q.cluster
-  WHERE a.vec_id <> q.query_id
 )
-SELECT query_id, neighbor_id, cos, rank FROM (
-  SELECT query_id, neighbor_id, cos,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY cos DESC, neighbor_id) AS rank
-  FROM scored
-) WHERE rank <= 3
-"""
-
-
-@register("ann_ivf_probe", oracle=_ivf_probe_oracle(),
+{_sql_top_k(f"({_sql_scored('a', on='e.cluster = q.cluster')})", 3)}
+""",
           doc="IVF-style ANN (the other standard 100 TB search path, "
               "alongside sign-LSH): a K-centroid coarse quantizer "
               "assigns every vector to its nearest-cosine centroid in "
@@ -229,23 +234,17 @@ SELECT query_id, neighbor_id, cos, rank FROM (
               "same sequential-fold cosines, so the candidate sets "
               "match exactly.")
 def ann_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.vectors import dot, norm
     from ..operators.similarity import ivf_assign_broadcast, ivf_cluster_arrow
     emb = load_table(spark, sf_dir, "embeddings")
     k = _ivf_k(table_row_count(sf_dir, "embeddings"))
     if k <= _IVF_CLOSURE_CAP:
-        # Bounded driver-side collect: exactly K centroid vectors,
-        # shipped inside the Arrow-assignment UDF (the hyperplanes
-        # pattern — not a join input). count() is parquet-metadata-
-        # only; the closure cap bounds the collect. The Arrow twin is
-        # bit-identical to the HOF fold (tests/test_similarity_ops.py)
-        # and O(K) faster once K grows with sqrt(n).
-        cents = [list(map(float, r.embedding)) for r in
-                 emb.filter(F.col("vec_id") < k)
-                    .orderBy("vec_id").collect()]
-        b = emb.select("vec_id", "embedding",
-                       norm("embedding", _DIM).alias("_n"),
-                       ivf_cluster_arrow("embedding", cents).alias("cluster"))
+        # count() is parquet-metadata-only; the closure cap bounds the
+        # collect. The Arrow twin is bit-identical to the HOF fold
+        # (tests/test_similarity_ops.py) and O(K) faster once K grows
+        # with sqrt(n).
+        cents = _first_vectors(emb, k)
+        b = _normed(emb, ivf_cluster_arrow("embedding", cents)
+                    .alias("cluster"))
     else:
         # Graduation past the closure cap: centroids stay a broadcast
         # TABLE; assignment is a broadcast nested-loop + argmax agg
@@ -256,24 +255,10 @@ def ann_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
                    .select(F.col("vec_id").alias("cid"),
                            F.col("embedding").alias("cvec")))
         asg = ivf_assign_broadcast(emb, cent_df, id_col="vec_id",
-                                   vec_col="embedding", dim=_DIM)
-        b = (emb.join(asg, "vec_id")
-             .select("vec_id", "embedding",
-                     norm("embedding", _DIM).alias("_n"), "cluster"))
-    q = (_queries(b)
-         .select(F.col("vec_id").alias("query_id"),
-                 F.col("embedding").alias("qv"),
-                 F.col("_n").alias("_qn"), "cluster"))
-    scored = (b.join(q, "cluster")
-              .filter(F.col("vec_id") != F.col("query_id"))
-              .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                      F.round(dot("qv", "embedding", _DIM)
-                              / (F.col("_qn") * F.col("_n")), 6)
-                       .alias("cos")))
-    w = W.partitionBy("query_id").orderBy(F.desc("cos"), "neighbor_id")
-    return (scored.select("query_id", "neighbor_id", "cos",
-                          F.row_number().over(w).cast("long").alias("rank"))
-            .filter(F.col("rank") <= 3))
+                                   vec_col="embedding")
+        b = _normed(emb.join(asg, "vec_id"), "cluster")
+    return _top3(score_candidates(b, _query_side(b, "cluster"), _cos(),
+                                  on="cluster"))
 
 
 #: Multi-probe fan-outs: the LSH probe visits the query's own bucket
@@ -306,31 +291,16 @@ def _spark_bit_flips(bucket: str, bits: int):
     return F.expr(f"array({bucket}, {flips})")
 
 
-def _lsh_multiprobe_oracle() -> str:
-    bucket = sql_lsh_bucket("embedding", hyperplanes(8, 64))
-    return f"""
+@register("ann_lsh_multiprobe", oracle=f"""
 WITH b AS (
-  SELECT vec_id, embedding, {bucket} AS bucket FROM embeddings
+  SELECT vec_id, embedding, {_SQL_BUCKET} AS bucket FROM embeddings
 ), q AS (
   SELECT vec_id AS query_id, embedding AS qv,
          unnest({_sql_bit_flips('bucket', _LSH_NPROBE_BITS)}) AS bucket
   FROM b WHERE {_QUERY_PRED}
-), scored AS (
-  SELECT q.query_id, b.vec_id AS neighbor_id,
-         ROUND({sql_cosine('q.qv', 'b.embedding')}, 6) AS cos
-  FROM b JOIN q ON b.bucket = q.bucket
-  WHERE b.vec_id <> q.query_id
 )
-SELECT query_id, neighbor_id, cos, rank FROM (
-  SELECT query_id, neighbor_id, cos,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY cos DESC, neighbor_id) AS rank
-  FROM scored
-) WHERE rank <= 3
-"""
-
-
-@register("ann_lsh_multiprobe", oracle=_lsh_multiprobe_oracle(),
+{_sql_top_k(f"({_sql_scored('b', on='e.bucket = q.bucket')})", 3)}
+""",
           doc="Multi-probe LSH ANN (Lv et al. 2007): each query probes "
               "its own sign-LSH bucket AND the 8 buckets one bit-flip "
               "away — the buckets a near-neighbor most likely fell "
@@ -344,61 +314,20 @@ SELECT query_id, neighbor_id, cos, rank FROM (
               "needed. Same deterministic cosine + top-k as the "
               "single-probe path.")
 def ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.vectors import dot, norm
-    emb = load_table(spark, sf_dir, "embeddings")
-    planes = hyperplanes(8, 64)
-    b = emb.select(F.col("vec_id"), F.col("embedding"),
-                   norm("embedding", _DIM).alias("_n"),
-                   lsh_bucket("embedding", planes).alias("bucket"))
-    q = (_queries(b)
-         .select(F.col("vec_id").alias("query_id"),
-                 F.col("embedding").alias("qv"),
-                 F.col("_n").alias("_qn"),
-                 F.explode(_spark_bit_flips("bucket", _LSH_NPROBE_BITS))
-                 .alias("bucket")))
-    scored = (b.join(q, "bucket")
-              .filter(F.col("vec_id") != F.col("query_id"))
-              .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                      F.round(dot("qv", "embedding", _DIM)
-                              / (F.col("_qn") * F.col("_n")), 6)
-                       .alias("cos")))
-    w = W.partitionBy("query_id").orderBy(F.desc("cos"), "neighbor_id")
-    return (scored.select("query_id", "neighbor_id", "cos",
-                          F.row_number().over(w).cast("long").alias("rank"))
-            .filter(F.col("rank") <= 3))
+    b = _normed(load_table(spark, sf_dir, "embeddings"),
+                lsh_bucket("embedding", _PLANES).alias("bucket"))
+    q = _query_side(b, F.explode(_spark_bit_flips(
+        "bucket", _LSH_NPROBE_BITS)).alias("bucket"))
+    return _top3(score_candidates(b, q, _cos(), on="bucket"))
 
 
-def _ivf_multiprobe_oracle() -> str:
-    return f"""
-WITH c AS (
-  SELECT vec_id AS cid, embedding AS cv FROM embeddings
-  WHERE vec_id < {_SQL_IVF_K}
-), asg AS (
-  SELECT e.vec_id, e.embedding, c.cid,
-         row_number() OVER (PARTITION BY e.vec_id
-             ORDER BY {sql_cosine('e.embedding', 'c.cv')} DESC, c.cid) AS rn
-  FROM embeddings e CROSS JOIN c
-), a AS (
-  SELECT vec_id, embedding, cid AS cluster FROM asg WHERE rn = 1
-), qp AS (
+@register("ann_ivf_multiprobe", oracle=f"""
+WITH {_sql_ivf_assign(_SQL_IVF_K)}, q AS (
   SELECT vec_id AS query_id, embedding AS qv, cid AS cluster
   FROM asg WHERE rn <= {_IVF_NPROBE} AND {_QUERY_PRED}
-), scored AS (
-  SELECT qp.query_id, a.vec_id AS neighbor_id,
-         ROUND({sql_cosine('qp.qv', 'a.embedding')}, 6) AS cos
-  FROM a JOIN qp ON a.cluster = qp.cluster
-  WHERE a.vec_id <> qp.query_id
 )
-SELECT query_id, neighbor_id, cos, rank FROM (
-  SELECT query_id, neighbor_id, cos,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY cos DESC, neighbor_id) AS rank
-  FROM scored
-) WHERE rank <= 3
-"""
-
-
-@register("ann_ivf_multiprobe", oracle=_ivf_multiprobe_oracle(),
+{_sql_top_k(f"({_sql_scored('a', on='e.cluster = q.cluster')})", 3)}
+""",
           doc="IVF ANN with nprobe=4: corpus vectors live in their "
               "argmax cluster (one shuffle-free assignment, as "
               "ann_ivf_probe), but each QUERY probes its 4 "
@@ -413,48 +342,36 @@ SELECT query_id, neighbor_id, cos, rank FROM (
               "probe sets from the identical ranking (rn <= nprobe of "
               "the same window the nprobe=1 oracle takes rn = 1 of).")
 def ann_ivf_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.vectors import dot, norm
     from ..operators.similarity import ivf_cluster_arrow, ivf_cosines_arrow
     emb = load_table(spark, sf_dir, "embeddings")
-    k = _ivf_k(table_row_count(sf_dir, "embeddings"))
-    cents = [list(map(float, r.embedding)) for r in
-             emb.filter(F.col("vec_id") < k)
-                .orderBy("vec_id").collect()]
-    b = emb.select("vec_id", "embedding",
-                   norm("embedding", _DIM).alias("_n"),
-                   ivf_cluster_arrow("embedding", cents).alias("cluster"))
+    cents = _first_vectors(emb, _ivf_k(table_row_count(sf_dir,
+                                                       "embeddings")))
+    b = _normed(emb, ivf_cluster_arrow("embedding", cents).alias("cluster"))
     # Query side: rank the per-centroid cosine array, keep the top
     # nprobe clusters (cos DESC, cid tiebreak — the oracle's window).
-    qw = W.partitionBy("query_id").orderBy(F.desc("_ccos"), "cluster")
-    q = (_queries(emb)
-         .select(F.col("vec_id").alias("query_id"),
-                 F.col("embedding").alias("qv"),
-                 norm("embedding", _DIM).alias("_qn"),
-                 F.posexplode(ivf_cosines_arrow("embedding", cents))
-                 .alias("cluster", "_ccos"))
-         .withColumn("_rn", F.row_number().over(qw))
-         .filter(F.col("_rn") <= _IVF_NPROBE)
-         .drop("_ccos", "_rn"))
-    scored = (b.join(q, "cluster")
-              .filter(F.col("vec_id") != F.col("query_id"))
-              .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                      F.round(dot("qv", "embedding", _DIM)
-                              / (F.col("_qn") * F.col("_n")), 6)
-                       .alias("cos")))
-    w = W.partitionBy("query_id").orderBy(F.desc("cos"), "neighbor_id")
-    return (scored.select("query_id", "neighbor_id", "cos",
-                          F.row_number().over(w).cast("long").alias("rank"))
-            .filter(F.col("rank") <= 3))
+    probes = F.posexplode(ivf_cosines_arrow("embedding", cents))
+    q = top_k_per_query(
+        _query_side(_normed(emb), probes.alias("cluster", "_ccos")),
+        _IVF_NPROBE, F.desc("_ccos"), "cluster", rank="_rn")
+    return _top3(score_candidates(b, q.drop("_ccos", "_rn"), _cos(),
+                                  on="cluster"))
 
 
-@register("ann_lsh_buckets", oracle=_lsh_oracle(),
+@register("ann_lsh_buckets", oracle=f"""
+SELECT bucket, COUNT(*) AS n_vecs, MIN(vid) AS min_vec_id FROM (
+  SELECT vec_id AS vid, {_SQL_BUCKET} AS bucket FROM embeddings
+) GROUP BY bucket
+""",
           doc="Sign-LSH coarse index: 8 deterministic hyperplanes → 8-bit "
               "bucket per vector → occupancy stats. The bucket key is the "
               "partition/cluster key a 100 TB ANN deployment prunes by.")
 def ann_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    return lsh_bucket_stats(emb, id_col="vec_id", vec_col="embedding",
-                            num_planes=8, dim=64)
+    return (emb.select("vec_id", lsh_bucket("embedding", _PLANES)
+                       .alias("bucket"))
+            .groupBy("bucket")
+            .agg(F.count("*").alias("n_vecs"),
+                 F.min("vec_id").alias("min_vec_id")))
 
 
 #: PQ geometry: 8 subspaces over the 64-dim embeddings, 16 codewords
@@ -465,66 +382,83 @@ _PQ_D = 8
 _PQ_K = 16
 
 
-def _pq_oracle() -> str:
-    sub_a = "e.embedding[md.m*8+1 : md.m*8+8]"
-    sub_c = "c.cv[md.m*8+1 : md.m*8+8]"
-    sub_q = "q.qv[e.m*8+1 : e.m*8+8]"
-    sq_l2 = (f"list_reduce(list_transform(list_zip({sub_a}, {sub_c}),"
+def _sql_pq_encode() -> str:
+    """DuckDB twin of the PQ encode, as CTEs: ``pc`` the codebook
+    vectors, ``d`` every (vector, subspace, codeword) squared-L2
+    distance, ``enc`` each vector's nearest codeword ``cw`` per
+    subspace ``m`` (ties to the lowest ``cid``)."""
+    sub = "[md.m*8+1 : md.m*8+8]"
+    sq_l2 = (f"list_reduce(list_transform(list_zip(e.embedding{sub},"
+             f" pc.cv{sub}),"
              f" p -> (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))"
              f" * (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))),"
              f" (acc, v) -> acc + v)")
-    sub_dot = (f"list_reduce(list_transform(list_zip({sub_q}, e.cw),"
-               f" p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)),"
-               f" (acc, v) -> acc + v)")
-    sub_ssq = ("list_reduce(list_transform(cw,"
-               " x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)),"
-               " (acc, v) -> acc + v)")
-    fold_m = "list_reduce(list({v} ORDER BY {m}), (acc, v) -> acc + v)"
-    return f"""
-WITH c AS (
+    return f"""pc AS (
   SELECT vec_id AS cid, embedding AS cv FROM embeddings
   WHERE vec_id < {_PQ_K}
 ), md AS (SELECT unnest(range(0, {_PQ_M})) AS m),
 d AS (
-  SELECT e.vec_id, md.m, c.cid, {sub_c} AS cw, {sq_l2} AS dist
-  FROM embeddings e CROSS JOIN c CROSS JOIN md
+  SELECT e.vec_id, md.m, pc.cid, pc.cv{sub} AS cw, {sq_l2} AS dist
+  FROM embeddings e CROSS JOIN pc CROSS JOIN md
 ), enc AS (
-  SELECT vec_id, m, cw FROM (
-    SELECT vec_id, m, cw,
+  SELECT vec_id, m, cid, cw FROM (
+    SELECT vec_id, m, cid, cw,
            row_number() OVER (PARTITION BY vec_id, m
                               ORDER BY dist, cid) AS rn
     FROM d
   ) WHERE rn = 1
-), nrm AS (
+)"""
+
+
+def _sql_adc_scored(pairs: str) -> str:
+    """The ADC score of the candidate pairs ``pairs`` joins (``enc e``
+    to the query CTE ``q`` with query_id, qv, qn), as CTEs after
+    :func:`_sql_pq_encode`: ``nrm`` every vector's code-derived norm,
+    ``scored`` (query_id, neighbor_id, adc_cos)."""
+    sub_dot = ("list_reduce(list_transform(list_zip("
+               "q.qv[e.m*8+1 : e.m*8+8], e.cw),"
+               " p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)),"
+               " (acc, v) -> acc + v)")
+    sub_ssq = ("list_reduce(list_transform(cw,"
+               " x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)),"
+               " (acc, v) -> acc + v)")
+    fold_m = "list_reduce(list({v} ORDER BY {m}), (acc, v) -> acc + v)"
+    return f"""nrm AS (
   SELECT vec_id,
          sqrt({fold_m.format(v='sub', m='m')}) AS nv
   FROM (SELECT vec_id, m, {sub_ssq} AS sub FROM enc)
   GROUP BY vec_id
-), q AS (
-  SELECT vec_id AS query_id, embedding AS qv,
-         {sql_norm('embedding')} AS qn
-  FROM embeddings WHERE {_QUERY_PRED}
 ), sc AS (
   SELECT q.query_id, q.qn, e.vec_id AS neighbor_id,
          {fold_m.format(v=sub_dot, m='e.m')} AS raw
-  FROM enc e CROSS JOIN q
+  FROM {pairs}
   WHERE e.vec_id <> q.query_id
   GROUP BY q.query_id, q.qn, e.vec_id
 ), scored AS (
   SELECT sc.query_id, sc.neighbor_id,
          ROUND(sc.raw / (sc.qn * n.nv), 6) AS adc_cos
   FROM sc JOIN nrm n ON sc.neighbor_id = n.vec_id
-)
-SELECT query_id, neighbor_id, adc_cos, rank FROM (
-  SELECT query_id, neighbor_id, adc_cos,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY adc_cos DESC, neighbor_id) AS rank
-  FROM scored
-) WHERE rank <= 3
-"""
+)"""
 
 
-@register("ann_pq_adc", oracle=_pq_oracle(),
+_SQL_ADC_TOP_K = "adc_cos DESC, neighbor_id"
+
+
+def _adc_cos() -> Column:
+    """A candidate's ADC cosine (M LUT lookups over the norms), rounded
+    at 6dp."""
+    return F.round(pq_adc_score("_lut", "codes", _PQ_M)
+                   / (F.col("_qn") * F.col("_n")), 6).alias("adc_cos")
+
+
+@register("ann_pq_adc", oracle=f"""
+WITH {_sql_pq_encode()}, q AS (
+  SELECT vec_id AS query_id, embedding AS qv,
+         {sql_norm('embedding')} AS qn
+  FROM embeddings WHERE {_QUERY_PRED}
+), {_sql_adc_scored("enc e CROSS JOIN q")}
+{_sql_top_k("scored", 3, _SQL_ADC_TOP_K)}
+""",
           doc="Product-quantization ANN with asymmetric-distance "
               "scoring (Jegou et al. 2011): each vector is encoded "
               "once, in the scan, to 8 sub-codes (argmin squared-L2 "
@@ -541,15 +475,10 @@ SELECT query_id, neighbor_id, adc_cos, rank FROM (
               "and the same subspace-order fold, so ranks match "
               "exactly.")
 def ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.similarity import (pq_adc_lut, pq_adc_score,
-                                        pq_codebook, pq_codes_arrow,
-                                        pq_sumsq_literal)
+    from ..operators.similarity import (pq_adc_lut, pq_codebook,
+                                        pq_codes_arrow, pq_sumsq_literal)
     emb = load_table(spark, sf_dir, "embeddings")
-    train = [list(map(float, r.embedding)) for r in
-             emb.filter(F.col("vec_id") < _PQ_K)
-                .orderBy("vec_id").collect()]
-    cb = pq_codebook(train, _PQ_M)
-    from ..functions.vectors import norm
+    cb = pq_codebook(_first_vectors(emb, _PQ_K), _PQ_M)
     # The encode projection costs M*K*d flops/row — round-robin the
     # corpus first so that stage's parallelism comes from the cluster,
     # not the input file layout (same rationale as operators.dedup.
@@ -561,88 +490,20 @@ def ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = (_queries(emb)
          .select(F.col("vec_id").alias("query_id"),
                  pq_adc_lut("embedding", cb).alias("_lut"),
-                 norm("embedding", _DIM).alias("_qn")))
-    scored = (enc.crossJoin(q)
-              .filter(F.col("vec_id") != F.col("query_id"))
-              .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                      F.round(pq_adc_score("_lut", "codes", _PQ_M)
-                              / (F.col("_qn") * F.col("_n")), 6)
-                       .alias("adc_cos")))
-    w = W.partitionBy("query_id").orderBy(F.desc("adc_cos"), "neighbor_id")
-    return (scored.select("query_id", "neighbor_id", "adc_cos",
-                          F.row_number().over(w).cast("long").alias("rank"))
-            .filter(F.col("rank") <= 3))
+                 norm("embedding").alias("_qn")))
+    return top_k_per_query(score_candidates(enc, q, _adc_cos()), 3,
+                           F.desc("adc_cos"), "neighbor_id")
 
 
 def _ivfpq_oracle(topk: int = 3) -> str:
-    sub_a = "e.embedding[md.m*8+1 : md.m*8+8]"
-    sub_c = "c.cv[md.m*8+1 : md.m*8+8]"
-    sub_q = "q.qv[e.m*8+1 : e.m*8+8]"
-    sq_l2 = (f"list_reduce(list_transform(list_zip({sub_a}, {sub_c}),"
-             f" p -> (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))"
-             f" * (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))),"
-             f" (acc, v) -> acc + v)")
-    sub_dot = (f"list_reduce(list_transform(list_zip({sub_q}, e.cw),"
-               f" p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)),"
-               f" (acc, v) -> acc + v)")
-    sub_ssq = ("list_reduce(list_transform(cw,"
-               " x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)),"
-               " (acc, v) -> acc + v)")
-    fold_m = "list_reduce(list({v} ORDER BY {m}), (acc, v) -> acc + v)"
     return f"""
-WITH ivfc AS (
-  SELECT vec_id AS cid, embedding AS cv FROM embeddings
-  WHERE vec_id < {_SQL_IVF_K}
-), asg AS (
-  SELECT e.vec_id, v.cid,
-         row_number() OVER (PARTITION BY e.vec_id
-             ORDER BY {sql_cosine('e.embedding', 'v.cv')} DESC, v.cid) AS rn
-  FROM embeddings e CROSS JOIN ivfc v
-), a AS (
-  SELECT vec_id, cid AS cluster FROM asg WHERE rn = 1
-), c AS (
-  SELECT vec_id AS cid, embedding AS cv FROM embeddings
-  WHERE vec_id < {_PQ_K}
-), md AS (SELECT unnest(range(0, {_PQ_M})) AS m),
-d AS (
-  SELECT e.vec_id, md.m, c.cid, {sub_c} AS cw, {sq_l2} AS dist
-  FROM embeddings e CROSS JOIN c CROSS JOIN md
-), enc AS (
-  SELECT vec_id, m, cw FROM (
-    SELECT vec_id, m, cw,
-           row_number() OVER (PARTITION BY vec_id, m
-                              ORDER BY dist, cid) AS rn
-    FROM d
-  ) WHERE rn = 1
-), nrm AS (
-  SELECT vec_id,
-         sqrt({fold_m.format(v='sub', m='m')}) AS nv
-  FROM (SELECT vec_id, m, {sub_ssq} AS sub FROM enc)
-  GROUP BY vec_id
-), q AS (
-  SELECT e.vec_id AS query_id, e.embedding AS qv,
-         {sql_norm('e.embedding')} AS qn, a.cluster
-  FROM embeddings e JOIN a ON e.vec_id = a.vec_id
-  WHERE {_QUERY_PRED.replace('vec_id', 'e.vec_id')}
-), sc AS (
-  SELECT q.query_id, q.qn, e.vec_id AS neighbor_id,
-         {fold_m.format(v=sub_dot, m='e.m')} AS raw
-  FROM enc e
-  JOIN a ON e.vec_id = a.vec_id
-  JOIN q ON a.cluster = q.cluster
-  WHERE e.vec_id <> q.query_id
-  GROUP BY q.query_id, q.qn, e.vec_id
-), scored AS (
-  SELECT sc.query_id, sc.neighbor_id,
-         ROUND(sc.raw / (sc.qn * n.nv), 6) AS adc_cos
-  FROM sc JOIN nrm n ON sc.neighbor_id = n.vec_id
-)
-SELECT query_id, neighbor_id, adc_cos, rank FROM (
-  SELECT query_id, neighbor_id, adc_cos,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY adc_cos DESC, neighbor_id) AS rank
-  FROM scored
-) WHERE rank <= {topk}
+WITH {_sql_ivf_assign(_SQL_IVF_K)}, {_sql_pq_encode()}, q AS (
+  SELECT vec_id AS query_id, embedding AS qv,
+         {sql_norm('embedding')} AS qn, cluster
+  FROM a WHERE {_QUERY_PRED}
+), {_sql_adc_scored("enc e JOIN a ON e.vec_id = a.vec_id"
+                    " JOIN q ON a.cluster = q.cluster")}
+{_sql_top_k("scored", topk, _SQL_ADC_TOP_K)}
 """
 
 
@@ -665,10 +526,7 @@ SELECT query_id, neighbor_id, adc_cos, rank FROM (
               "CTE blocks, so candidate sets and ranks match exactly.")
 def ann_ivfpq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored, _q = _ivfpq_scored(spark, sf_dir)
-    w = W.partitionBy("query_id").orderBy(F.desc("adc_cos"), "neighbor_id")
-    return (scored.select("query_id", "neighbor_id", "adc_cos",
-                          F.row_number().over(w).cast("long").alias("rank"))
-            .filter(F.col("rank") <= 3))
+    return top_k_per_query(scored, 3, F.desc("adc_cos"), "neighbor_id")
 
 
 def _ivfpq_scored(spark: SparkSession, sf_dir: str, *,
@@ -678,19 +536,13 @@ def _ivfpq_scored(spark: SparkSession, sf_dir: str, *,
     ann_ivfpq_refine shortlists then re-ranks exactly. With
     ``with_query_vec`` the query side also carries its raw vector (for
     the exact re-rank's fold)."""
-    from ..functions.vectors import norm
     from ..operators.similarity import (ivf_cluster_arrow, pq_adc_lut,
-                                        pq_adc_score, pq_codebook,
-                                        pq_codes_arrow, pq_sumsq_literal)
+                                        pq_codebook, pq_codes_arrow,
+                                        pq_sumsq_literal)
     emb = load_table(spark, sf_dir, "embeddings")
-    k = _ivf_k(table_row_count(sf_dir, "embeddings"))
-    cents = [list(map(float, r.embedding)) for r in
-             emb.filter(F.col("vec_id") < k)
-                .orderBy("vec_id").collect()]
-    train = [list(map(float, r.embedding)) for r in
-             emb.filter(F.col("vec_id") < _PQ_K)
-                .orderBy("vec_id").collect()]
-    cb = pq_codebook(train, _PQ_M)
+    cents = _first_vectors(emb, _ivf_k(table_row_count(sf_dir,
+                                                       "embeddings")))
+    cb = pq_codebook(_first_vectors(emb, _PQ_K), _PQ_M)
     # One scan projection carries the whole index: coarse cell + PQ
     # code + code-derived norm (round-robin first — same parallelism
     # rationale as ann_pq_adc's encode).
@@ -718,19 +570,12 @@ def _ivfpq_scored(spark: SparkSession, sf_dir: str, *,
     qcols = [F.col("vec_id").alias("query_id"),
              ivf_cluster_arrow("embedding", cents).alias("cluster"),
              pq_adc_lut("embedding", cb).alias("_lut"),
-             norm("embedding", _DIM).alias("_qn")]
+             norm("embedding").alias("_qn")]
     if with_query_vec:
         qcols.append(F.col("embedding").alias("_qv"))
     q = truncated_checkpoint(emb.filter(F.expr(_QUERY_PRED))
                              .select(*qcols))
-    scored = (enc.join(q, "cluster")
-              .filter(F.col("vec_id") != F.col("query_id"))
-              .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                      F.round(pq_adc_score("_lut", "codes", _PQ_M)
-                              / (F.col("_qn") * F.col("_n")), 6)
-                       .alias("adc_cos")))
-    return scored, q
-
+    return score_candidates(enc, q, _adc_cos(), on="cluster"), q
 
 
 @register("ann_ivfpq_refine", oracle=f"""
@@ -743,12 +588,7 @@ WITH short AS ({_ivfpq_oracle(topk=10)}
   JOIN embeddings qe ON qe.vec_id = s.query_id
   JOIN embeddings ne ON ne.vec_id = s.neighbor_id
 )
-SELECT query_id, neighbor_id, exact_cos, rank FROM (
-  SELECT query_id, neighbor_id, exact_cos,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY exact_cos DESC, neighbor_id) AS rank
-  FROM ref
-) WHERE rank <= 3
+{_sql_top_k("ref", 3, "exact_cos DESC, neighbor_id")}
 """, doc="IVFPQ with an exact REFINE stage -- the two-stage serving "
          "pattern every production FAISS deployment runs (IndexRefine "
          "/ IVFPQR): the compressed-domain ADC pass shortlists top-10 "
@@ -765,13 +605,9 @@ SELECT query_id, neighbor_id, exact_cos, rank FROM (
          "topk=10 with the identical exact-cosine fold, so shortlist "
          "membership AND refined ranks match exactly.")
 def ann_ivfpq_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.vectors import cosine
     scored, q = _ivfpq_scored(spark, sf_dir, with_query_vec=True)
-    ws = W.partitionBy("query_id").orderBy(F.desc("adc_cos"), "neighbor_id")
-    short = (scored
-             .select("query_id", "neighbor_id",
-                     F.row_number().over(ws).alias("_rn"))
-             .filter(F.col("_rn") <= 10).drop("_rn"))
+    short = (top_k_per_query(scored, 10, F.desc("adc_cos"), "neighbor_id")
+             .select("query_id", "neighbor_id"))
     nbr = (load_table(spark, sf_dir, "embeddings")
            .select(F.col("vec_id").alias("neighbor_id"),
                    F.col("embedding").alias("_nv")))
@@ -780,13 +616,8 @@ def ann_ivfpq_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = (nbr.join(F.broadcast(short), "neighbor_id")
            .join(q.select("query_id", "_qv"), "query_id")
            .select("query_id", "neighbor_id",
-                   F.round(cosine("_qv", "_nv", _DIM), 6)
-                    .alias("exact_cos")))
-    wr = W.partitionBy("query_id").orderBy(F.desc("exact_cos"),
-                                           "neighbor_id")
-    return (out.select("query_id", "neighbor_id", "exact_cos",
-                       F.row_number().over(wr).cast("long").alias("rank"))
-            .filter(F.col("rank") <= 3))
+                   F.round(cosine("_qv", "_nv"), 6).alias("exact_cos")))
+    return top_k_per_query(out, 3, F.desc("exact_cos"), "neighbor_id")
 
 
 #: SemDeDup keep/drop threshold — just under the corpus's max
@@ -796,17 +627,7 @@ _SEMDEDUP_TAU = 0.35
 
 
 @register("semdedup_kmeans", oracle=f"""
-WITH c AS (
-  SELECT vec_id AS cid, embedding AS cv FROM embeddings
-  WHERE vec_id < {_IVF_K}
-), asg AS (
-  SELECT e.vec_id, e.embedding, c.cid,
-         row_number() OVER (PARTITION BY e.vec_id
-             ORDER BY {sql_cosine('e.embedding', 'c.cv')} DESC, c.cid) AS rn
-  FROM embeddings e CROSS JOIN c
-), a AS (
-  SELECT vec_id, embedding, cid AS cluster FROM asg WHERE rn = 1
-), pairs AS (
+WITH {_sql_ivf_assign(_IVF_K)}, pairs AS (
   SELECT x.vec_id AS id_a, y.vec_id AS id_b
   FROM a x JOIN a y ON x.cluster = y.cluster AND x.vec_id < y.vec_id
   WHERE {sql_cosine('x.embedding', 'y.embedding')} >= {_SEMDEDUP_TAU}
@@ -833,14 +654,11 @@ FROM a LEFT JOIN k ON a.vec_id = k.id_b
 def semdedup_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import ivf_cluster
     emb = load_table(spark, sf_dir, "embeddings")
-    cents = [list(map(float, r.embedding)) for r in
-             emb.filter(F.col("vec_id") < _IVF_K)
-                .orderBy("vec_id").collect()]
+    cents = _first_vectors(emb, _IVF_K)
     a = emb.select("vec_id", "embedding",
                    ivf_cluster("embedding", cents).alias("cluster"))
     pairs = cosine_pairs(a, id_col="vec_id", vec_col="embedding",
-                         block_col="cluster", threshold=_SEMDEDUP_TAU,
-                         dim=_DIM)
+                         block_col="cluster", threshold=_SEMDEDUP_TAU)
     dup_map = pairs.groupBy("id_b").agg(F.min("id_a").alias("keeper"))
     return (a.join(dup_map, a.vec_id == dup_map.id_b, "left")
             .select("cluster", a.vec_id,
@@ -851,17 +669,7 @@ def semdedup_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register("kmeans_lloyd_iter", oracle=f"""
-WITH c AS (
-  SELECT vec_id AS cid, embedding AS cv FROM embeddings
-  WHERE vec_id < {_IVF_K}
-), asg AS (
-  SELECT e.vec_id, e.embedding, c.cid,
-         row_number() OVER (PARTITION BY e.vec_id
-             ORDER BY {sql_cosine('e.embedding', 'c.cv')} DESC, c.cid) AS rn
-  FROM embeddings e CROSS JOIN c
-), a AS (
-  SELECT vec_id, embedding, cid AS cluster FROM asg WHERE rn = 1
-), exp AS (
+WITH {_sql_ivf_assign(_IVF_K)}, exp AS (
   -- parallel unnests zip pairwise in DuckDB: (dim, value) per element
   SELECT cluster,
          unnest(generate_series(0, len(embedding) - 1)) AS dim,
@@ -894,9 +702,7 @@ FROM exp GROUP BY cluster, dim
 def kmeans_lloyd_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import ivf_cluster
     emb = load_table(spark, sf_dir, "embeddings")
-    cents = [list(map(float, r.embedding)) for r in
-             emb.filter(F.col("vec_id") < _IVF_K)
-                .orderBy("vec_id").collect()]
+    cents = _first_vectors(emb, _IVF_K)
     assigned = emb.select(
         "vec_id", "embedding",
         ivf_cluster("embedding", cents).alias("cluster"))
@@ -911,30 +717,19 @@ def kmeans_lloyd_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "c_val", "n_members"))
 
 
-def _hard_negatives_oracle() -> str:
-    bucket = sql_lsh_bucket("embedding", hyperplanes(8, 64))
-    return f"""
+@register("mine_hard_negatives", oracle=f"""
 WITH b AS (
-  SELECT vec_id, embedding, label, {bucket} AS bucket FROM embeddings
+  SELECT vec_id, embedding, label, {_SQL_BUCKET} AS bucket FROM embeddings
 ), q AS (
   SELECT vec_id AS query_id, embedding AS qv, label AS qlabel, bucket
   FROM b WHERE {_QUERY_PRED}
 ), scored AS (
-  SELECT q.query_id, b.vec_id AS negative_id, b.label AS neg_label,
-         ROUND({sql_cosine('q.qv', 'b.embedding')}, 6) AS cos
-  FROM b JOIN q ON b.bucket = q.bucket
-  WHERE b.vec_id <> q.query_id AND b.label <> q.qlabel
+  SELECT query_id, neighbor_id AS negative_id, neg_label, cos FROM (
+    {_sql_scored('b', 'e.label AS neg_label', _SQL_COS,
+                 on='e.bucket = q.bucket AND e.label <> q.qlabel')})
 )
-SELECT query_id, negative_id, neg_label, cos, rank FROM (
-  SELECT query_id, negative_id, neg_label, cos,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY cos DESC, negative_id) AS rank
-  FROM scored
-) WHERE rank <= 3
-"""
-
-
-@register("mine_hard_negatives", oracle=_hard_negatives_oracle(),
+{_sql_top_k("scored", 3, "cos DESC, negative_id")}
+""",
           doc="Hard-negative mining for contrastive training: for each "
               "query vector, the highest-cosine neighbors whose LABEL "
               "DIFFERS — the near-misses that make the best negatives "
@@ -947,57 +742,26 @@ SELECT query_id, negative_id, neg_label, cos, rank FROM (
               "predicate, not a new dataflow. Same deterministic "
               "cosine + rounded-score/id-tiebreak top-k.")
 def mine_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.vectors import dot, norm
-    emb = load_table(spark, sf_dir, "embeddings")
-    planes = hyperplanes(8, 64)
-    b = emb.select("vec_id", "embedding", "label",
-                   norm("embedding", _DIM).alias("_n"),
-                   lsh_bucket("embedding", planes).alias("bucket"))
-    q = (_queries(b)
-         .select(F.col("vec_id").alias("query_id"),
-                 F.col("embedding").alias("qv"),
-                 F.col("label").alias("qlabel"),
-                 F.col("_n").alias("_qn"), "bucket"))
-    scored = (b.join(q, "bucket")
-              .filter((F.col("vec_id") != F.col("query_id"))
-                      & (F.col("label") != F.col("qlabel")))
-              .select("query_id", F.col("vec_id").alias("negative_id"),
-                      F.col("label").alias("neg_label"),
-                      F.round(dot("qv", "embedding", _DIM)
-                              / (F.col("_qn") * F.col("_n")), 6)
-                       .alias("cos")))
-    w = W.partitionBy("query_id").orderBy(F.desc("cos"), "negative_id")
-    return (scored.select("query_id", "negative_id", "neg_label", "cos",
-                          F.row_number().over(w).cast("long").alias("rank"))
-            .filter(F.col("rank") <= 3))
+    b = _normed(load_table(spark, sf_dir, "embeddings"), "label",
+                lsh_bucket("embedding", _PLANES).alias("bucket"))
+    q = _query_side(b, F.col("label").alias("qlabel"),
+                    F.col("bucket").alias("qbucket"))
+    on = ((F.col("bucket") == F.col("qbucket"))
+          & (F.col("label") != F.col("qlabel")))
+    scored = (score_candidates(b, q, F.col("label").alias("neg_label"),
+                               _cos(), on=on)
+              .withColumnRenamed("neighbor_id", "negative_id"))
+    return top_k_per_query(scored, 3, F.desc("cos"), "negative_id")
 
 
-def _ann_recall_oracle() -> str:
-    bucket = sql_lsh_bucket("embedding", hyperplanes(8, 64))
-    return f"""
-WITH b AS (
-  SELECT vec_id, embedding, {bucket} AS bucket FROM embeddings
-), q AS (
-  SELECT vec_id AS query_id, embedding AS qv, bucket FROM b
-  WHERE {_QUERY_PRED}
-), exact3 AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT q.query_id, e.vec_id AS neighbor_id,
-           row_number() OVER (PARTITION BY q.query_id
-               ORDER BY ROUND({sql_cosine('q.qv', 'e.embedding')}, 6) DESC,
-                        e.vec_id) AS rank
-    FROM embeddings e CROSS JOIN q
-    WHERE e.vec_id <> q.query_id
-  ) WHERE rank <= 3
-), lsh3 AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT q.query_id, b.vec_id AS neighbor_id,
-           row_number() OVER (PARTITION BY q.query_id
-               ORDER BY ROUND({sql_cosine('q.qv', 'b.embedding')}, 6) DESC,
-                        b.vec_id) AS rank
-    FROM b JOIN q ON b.bucket = q.bucket
-    WHERE b.vec_id <> q.query_id
-  ) WHERE rank <= 3
+def _sql_recall_at_3(exact: str, approx: str) -> str:
+    """recall@3 per query of the ``approx`` candidate pairs against the
+    ``exact`` ones (both :func:`_sql_scored` queries), after the CTEs
+    that define ``q``."""
+    return f"""exact3 AS (
+  {_sql_top_k(f"({exact})", 3)}
+), approx3 AS (
+  {_sql_top_k(f"({approx})", 3)}
 )
 SELECT e.query_id,
        CAST(COUNT(*) AS BIGINT) AS n_exact,
@@ -1005,13 +769,33 @@ SELECT e.query_id,
        ROUND(CAST(COUNT(l.neighbor_id) AS DOUBLE) / COUNT(*), 6)
          AS recall_at_3
 FROM exact3 e
-LEFT JOIN lsh3 l
+LEFT JOIN approx3 l
   ON e.query_id = l.query_id AND e.neighbor_id = l.neighbor_id
 GROUP BY e.query_id
 """
 
 
-@register("ann_recall_eval", oracle=_ann_recall_oracle(),
+def _recall_at_3(exact3: DataFrame, approx3: DataFrame) -> DataFrame:
+    """recall@3 per query of the ``approx3`` top-3 pairs against the
+    ``exact3`` ones."""
+    hit = approx3.select("query_id", "neighbor_id", F.lit(1).alias("_hit"))
+    return (exact3.select("query_id", "neighbor_id")
+            .join(hit, ["query_id", "neighbor_id"], "left")
+            .groupBy("query_id")
+            .agg(F.count("*").cast("long").alias("n_exact"),
+                 F.count("_hit").cast("long").alias("n_hit"),
+                 F.round(F.count("_hit").cast("double") / F.count("*"), 6)
+                  .alias("recall_at_3")))
+
+
+@register("ann_recall_eval", oracle=f"""
+WITH b AS (
+  SELECT vec_id, embedding, {_SQL_BUCKET} AS bucket FROM embeddings
+), q AS (
+  SELECT vec_id AS query_id, embedding AS qv, bucket FROM b
+  WHERE {_QUERY_PRED}
+), {_sql_recall_at_3(_sql_scored('embeddings'),
+                     _sql_scored('b', on='e.bucket = q.bucket'))}""",
           doc="ANN index-quality evaluation: recall@3 of the sign-LSH "
               "probe against exact search, per query — the measurement "
               "every production vector index runs before (and while) "
@@ -1026,45 +810,11 @@ GROUP BY e.query_id
               "|Q|*k-row join. Recall < 1 rows are the evidence the "
               "multiprobe recall levers exist for. Audit note (accepted 4-scan flag): the exact-baseline arm and the ANN arm each scan the vector column — the table IS the vector column, so a checkpoint saves nothing over the pruned re-scans.")
 def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.vectors import dot, norm
-    emb = load_table(spark, sf_dir, "embeddings")
-    planes = hyperplanes(8, 64)
-    b = emb.select("vec_id", "embedding",
-                   norm("embedding", _DIM).alias("_n"),
-                   lsh_bucket("embedding", planes).alias("bucket"))
-    q = (_queries(b)
-         .select(F.col("vec_id").alias("query_id"),
-                 F.col("embedding").alias("qv"),
-                 F.col("_n").alias("_qn"), "bucket"))
-    cos = lambda: F.round(dot("qv", "embedding", _DIM)  # noqa: E731
-                          / (F.col("_qn") * F.col("_n")), 6)
-    wq = W.partitionBy("query_id")
-    exact3 = (b.drop("bucket")
-              .join(q.drop("bucket"), F.lit(True))
-              .filter(F.col("vec_id") != F.col("query_id"))
-              .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                      cos().alias("c"))
-              .select("query_id", "neighbor_id",
-                      F.row_number().over(
-                          wq.orderBy(F.desc("c"), "neighbor_id"))
-                      .alias("rank"))
-              .filter(F.col("rank") <= 3).drop("rank"))
-    lsh3 = (b.join(q, "bucket")
-            .filter(F.col("vec_id") != F.col("query_id"))
-            .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                    cos().alias("c"))
-            .select("query_id", "neighbor_id",
-                    F.row_number().over(
-                        wq.orderBy(F.desc("c"), "neighbor_id"))
-                    .alias("rank"))
-            .filter(F.col("rank") <= 3).drop("rank"))
-    hit = lsh3.withColumn("_hit", F.lit(1))
-    return (exact3.join(hit, ["query_id", "neighbor_id"], "left")
-            .groupBy("query_id")
-            .agg(F.count("*").cast("long").alias("n_exact"),
-                 F.count("_hit").cast("long").alias("n_hit"),
-                 F.round(F.count("_hit").cast("double") / F.count("*"), 6)
-                  .alias("recall_at_3")))
+    b = _normed(load_table(spark, sf_dir, "embeddings"),
+                lsh_bucket("embedding", _PLANES).alias("bucket"))
+    q = _query_side(b, "bucket")
+    return _recall_at_3(_top3(score_candidates(b, q, _cos())),
+                        _top3(score_candidates(b, q, _cos(), on="bucket")))
 
 
 @register("embedding_int8_quantize", oracle="""
@@ -1121,8 +871,8 @@ def embedding_int8_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("xf").cast("double").alias("x"))
     calib = x.groupBy("d").agg(F.min("x").alias("mn"),
                                F.max("x").alias("mx"))
-    # calib is one row per dimension (_DIM); Spark sizes it at the
-    # exploded corpus.
+    # calib is one row per dimension; Spark sizes it at the exploded
+    # corpus.
     j = x.join(F.broadcast(calib), "d")
     code = (F.when(F.col("mx") == F.col("mn"), F.lit(0.0))
             .otherwise(F.round((F.col("x") - F.col("mn")) * 255
@@ -1217,7 +967,8 @@ def embedding_pca_power_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     # centering join, the output). Eagerly checkpoint it so the
     # corpus is exploded ONCE for μ — lazy reuse would replay the
     # whole scan+agg subtree per consumer — and so the centering
-    # joins see its real size (_DIM rows), not the corpus estimate.
+    # joins see its real size (one row per dimension), not the corpus
+    # estimate.
     mu = truncated_checkpoint(
         x.groupBy("d")
         .agg(F.sum(F.col("x").cast("decimal(27,18)")).cast("double")
@@ -1256,45 +1007,15 @@ def embedding_pca_power_step(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.round(F.col("w") / F.col("nrm"), 6).alias("v1")))
 
 
-def _mrl_recall_oracle() -> str:
-    return f"""
+@register("embedding_matryoshka_recall", oracle=f"""
 WITH b AS (
   SELECT vec_id, embedding, embedding[1:48] AS e48 FROM embeddings
 ), q AS (
   SELECT vec_id AS query_id, embedding AS qv, e48 AS q48 FROM b
   WHERE {_QUERY_PRED}
-), exact3 AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT q.query_id, e.vec_id AS neighbor_id,
-           row_number() OVER (PARTITION BY q.query_id
-               ORDER BY ROUND({sql_cosine('q.qv', 'e.embedding')}, 6) DESC,
-                        e.vec_id) AS rank
-    FROM embeddings e CROSS JOIN q
-    WHERE e.vec_id <> q.query_id
-  ) WHERE rank <= 3
-), trunc3 AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT q.query_id, b.vec_id AS neighbor_id,
-           row_number() OVER (PARTITION BY q.query_id
-               ORDER BY ROUND({sql_cosine('q.q48', 'b.e48')}, 6) DESC,
-                        b.vec_id) AS rank
-    FROM b CROSS JOIN q
-    WHERE b.vec_id <> q.query_id
-  ) WHERE rank <= 3
-)
-SELECT e.query_id,
-       CAST(COUNT(*) AS BIGINT) AS n_exact,
-       CAST(COUNT(t.neighbor_id) AS BIGINT) AS n_hit,
-       ROUND(CAST(COUNT(t.neighbor_id) AS DOUBLE) / COUNT(*), 6)
-         AS recall_at_3
-FROM exact3 e
-LEFT JOIN trunc3 t
-  ON e.query_id = t.query_id AND e.neighbor_id = t.neighbor_id
-GROUP BY e.query_id
-"""
-
-
-@register("embedding_matryoshka_recall", oracle=_mrl_recall_oracle(),
+), {_sql_recall_at_3(
+    _sql_scored('embeddings'),
+    _sql_scored('b', f"ROUND({sql_cosine('q.q48', 'e.e48')}, 6) AS cos"))}""",
           doc="Matryoshka (MRL) truncation quality: recall@3 of "
               "48-of-64-dim truncated-cosine search against full-dim "
               "exact search, per query — THE measurement run before "
@@ -1315,54 +1036,16 @@ GROUP BY e.query_id
               "no pairs materialized beyond rank<=3. Audit note (accepted 4-scan flag): each prefix-length eval arm scans the vector column independently; the vectors ARE the table, so re-scans beat a full-table checkpoint.")
 def embedding_matryoshka_recall(spark: SparkSession,
                                 sf_dir: str) -> DataFrame:
-    from ..functions.vectors import dot, norm
-    emb = load_table(spark, sf_dir, "embeddings")
-    b = emb.select(
-        "vec_id", "embedding",
-        F.slice("embedding", 1, 48).alias("e48"),
-        norm("embedding").alias("_n"),
-        norm("slice(embedding, 1, 48)").alias("_n48"))
-    q = (_queries(b)
-         .select(F.col("vec_id").alias("query_id"),
-                 F.col("embedding").alias("qv"),
-                 F.col("e48").alias("q48"),
-                 F.col("_n").alias("_qn"),
-                 F.col("_n48").alias("_qn48")))
-    wq = W.partitionBy("query_id")
-    exact3 = (b.select("vec_id", "embedding", "_n")
-              .join(q.select("query_id", "qv", "_qn"), F.lit(True))
-              .filter(F.col("vec_id") != F.col("query_id"))
-              .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                      F.round(dot("qv", "embedding")
-                              / (F.col("_qn") * F.col("_n")), 6)
-                      .alias("c"))
-              .select("query_id", "neighbor_id",
-                      F.row_number().over(
-                          wq.orderBy(F.desc("c"), "neighbor_id"))
-                      .alias("rank"))
-              .filter(F.col("rank") <= 3).drop("rank"))
-    trunc3 = (b.select("vec_id", "e48", "_n48")
-              .join(q.select("query_id", "q48", "_qn48"), F.lit(True))
-              .filter(F.col("vec_id") != F.col("query_id"))
-              .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                      F.round(dot("q48", "e48")
-                              / (F.col("_qn48") * F.col("_n48")), 6)
-                      .alias("c"))
-              .select("query_id", "neighbor_id",
-                      F.row_number().over(
-                          wq.orderBy(F.desc("c"), "neighbor_id"))
-                      .alias("rank"))
-              .filter(F.col("rank") <= 3).drop("rank"))
+    b = _normed(load_table(spark, sf_dir, "embeddings"),
+                F.slice("embedding", 1, 48).alias("e48"),
+                norm("slice(embedding, 1, 48)").alias("_n48"))
+    q = _query_side(b, F.col("e48").alias("q48"),
+                    F.col("_n48").alias("_qn48"))
+    trunc = score_candidates(b, q, _cos("q48", "e48", "_qn48", "_n48"))
     # Both sides are <= |Q|*3 rows, |Q| <= 256 by _QUERY_PRED; Spark
     # can't see that bound through the rank windows, so hint it.
-    hit = trunc3.withColumn("_hit", F.lit(1))
-    return (exact3.join(F.broadcast(hit), ["query_id", "neighbor_id"],
-                        "left")
-            .groupBy("query_id")
-            .agg(F.count("*").cast("long").alias("n_exact"),
-                 F.count("_hit").cast("long").alias("n_hit"),
-                 F.round(F.count("_hit").cast("double") / F.count("*"), 6)
-                  .alias("recall_at_3")))
+    return _recall_at_3(_top3(score_candidates(b, q, _cos())),
+                        F.broadcast(_top3(trunc)))
 
 
 @register("embedding_kcenter_step", oracle=f"""
@@ -1402,8 +1085,7 @@ QUALIFY pick_rank <= 10
 def embedding_kcenter_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import ivf_cluster, ivf_cosines
     emb = load_table(spark, sf_dir, "embeddings")
-    cents = [list(map(float, r.embedding)) for r in
-             emb.filter(F.col("vec_id") < 4).orderBy("vec_id").collect()]
+    cents = _first_vectors(emb, 4)
     scored = emb.select(
         "vec_id",
         ivf_cluster("embedding", cents).alias("nearest_center"),
@@ -1431,6 +1113,10 @@ def _bq_word_sql(lo: int) -> str:
             f"ELSE CAST(0 AS BIGINT) END), (acc, v) -> acc + v)")
 
 
+_SQL_HAMMING = ("bit_count(xor(e.w0, q.q0)) + bit_count(xor(e.w1, q.q1))"
+                " AS hamming")
+
+
 @register("ann_binary_hamming", oracle=f"""
 WITH codes AS (
   SELECT vec_id, {_bq_word_sql(0)} AS w0, {_bq_word_sql(32)} AS w1
@@ -1438,17 +1124,9 @@ WITH codes AS (
 ), q AS (
   SELECT vec_id AS query_id, w0 AS q0, w1 AS q1
   FROM codes WHERE {_QUERY_PRED}
-), scored AS (
-  SELECT q.query_id, c.vec_id AS neighbor_id,
-         bit_count(xor(c.w0, q.q0)) + bit_count(xor(c.w1, q.q1))
-           AS hamming
-  FROM codes c CROSS JOIN q
-  WHERE c.vec_id <> q.query_id
 ), top AS (
-  SELECT query_id, neighbor_id, hamming,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY hamming, neighbor_id) AS rank
-  FROM scored QUALIFY rank <= 3
+  {_sql_top_k(f"({_sql_scored('codes', _SQL_HAMMING)})", 3,
+              "hamming, neighbor_id")}
 )
 SELECT t.query_id, t.neighbor_id, CAST(t.hamming AS BIGINT) AS hamming,
        ROUND({sql_cosine('eq.embedding', 'en.embedding')}, 6) AS cos,
@@ -1482,24 +1160,17 @@ def ann_binary_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = (_queries(codes)
          .select(F.col("vec_id").alias("query_id"),
                  F.col("w0").alias("q0"), F.col("w1").alias("q1")))
-    scored = (codes.crossJoin(q)
-              .filter(F.col("vec_id") != F.col("query_id"))
-              .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                      (F.bit_count(F.expr("w0 ^ q0"))
-                       + F.bit_count(F.expr("w1 ^ q1")))
-                      .cast("long").alias("hamming")))
-    w = W.partitionBy("query_id").orderBy("hamming", "neighbor_id")
-    top = (scored.select("query_id", "neighbor_id", "hamming",
-                         F.row_number().over(w).cast("long")
-                         .alias("rank"))
-           .filter(F.col("rank") <= 3))
+    hamming = (F.bit_count(F.expr("w0 ^ q0"))
+               + F.bit_count(F.expr("w1 ^ q1"))).cast("long")
+    top = top_k_per_query(score_candidates(codes, q, hamming.alias("hamming")),
+                          3, "hamming", "neighbor_id")
     eq = emb.select(F.col("vec_id").alias("query_id"),
                     F.col("embedding").alias("qv"))
     en = emb.select(F.col("vec_id").alias("neighbor_id"),
                     F.col("embedding").alias("nv"))
     return (top.join(eq, "query_id").join(en, "neighbor_id")
             .select("query_id", "neighbor_id", "hamming",
-                    F.round(cosine("qv", "nv", _DIM), 6).alias("cos"),
+                    F.round(cosine("qv", "nv"), 6).alias("cos"),
                     "rank"))
 
 
@@ -1523,24 +1194,16 @@ WITH toks AS (
   FROM toks t CROSS JOIN qt q
   WHERE t.doc_id <> q.query_id
 ), lex AS (
-  SELECT query_id, doc_id,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY j_m DESC, doc_id) AS lex_rank
-  FROM lex_scored WHERE j_m > 0
-  QUALIFY lex_rank <= 10
-), qv AS (
-  SELECT vec_id AS query_id, embedding AS qe FROM embeddings
+  {_sql_top_k("(SELECT * FROM lex_scored WHERE j_m > 0)", 10,
+              "j_m DESC, doc_id", "lex_rank")}
+), q AS (
+  SELECT vec_id AS query_id, embedding AS qv FROM embeddings
   WHERE {_QUERY_PRED}
 ), sem_scored AS (
-  SELECT q.query_id, e.vec_id AS doc_id,
-         ROUND({sql_cosine('e.embedding', 'q.qe')}, 6) AS cos
-  FROM embeddings e CROSS JOIN qv q
-  WHERE e.vec_id <> q.query_id
+  SELECT query_id, neighbor_id AS doc_id, cos
+  FROM ({_sql_scored('embeddings')})
 ), sem AS (
-  SELECT query_id, doc_id,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY cos DESC, doc_id) AS sem_rank
-  FROM sem_scored QUALIFY sem_rank <= 10
+  {_sql_top_k("sem_scored", 10, "cos DESC, doc_id", "sem_rank")}
 ), fused AS (
   SELECT COALESCE(l.query_id, s.query_id) AS query_id,
          COALESCE(l.doc_id, s.doc_id) AS doc_id,
@@ -1552,11 +1215,7 @@ WITH toks AS (
   FROM lex l FULL OUTER JOIN sem s
     ON l.query_id = s.query_id AND l.doc_id = s.doc_id
 )
-SELECT query_id, doc_id, lex_rank, sem_rank, rrf_m,
-       CAST(row_number() OVER (PARTITION BY query_id
-            ORDER BY rrf_m DESC, doc_id) AS BIGINT) AS fused_rank
-FROM fused
-QUALIFY fused_rank <= 10
+{_sql_top_k("fused", 10, "rrf_m DESC, doc_id", "fused_rank")}
 """, doc="Hybrid retrieval with reciprocal-rank fusion — the modern "
          "search-serving composition (BM25/lexical arm + dense/"
          "semantic arm fused by RRF, the battle-tested rank fusion "
@@ -1577,9 +1236,7 @@ QUALIFY fused_rank <= 10
          "unchanged. One full-outer join of two |Q|x10 frames, "
          "windows over |Q| keys only.")
 def retrieval_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
     docs = load_table(spark, sf_dir, "documents")
-    emb = load_table(spark, sf_dir, "embeddings")
     toks = docs.select(
         "doc_id", F.expr("array_distinct(split(text, ' '))").alias("ts"))
     qt = (_queries(toks, _DOC_QUERY_PRED)
@@ -1595,26 +1252,15 @@ def retrieval_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
                           .alias("den"))
                   .select("query_id", "doc_id",
                           F.expr("num div den").alias("j_m")))
-    wl = W.partitionBy("query_id").orderBy(F.desc("j_m"), "doc_id")
-    lex = (lex_scored.filter(F.col("j_m") > 0)
-           .select("query_id", "doc_id",
-                   F.row_number().over(wl).alias("lex_rank"))
-           .filter(F.col("lex_rank") <= 10))
-    qv = (_queries(emb)
-          .select(F.col("vec_id").alias("query_id"),
-                  F.col("embedding").alias("qe")))
-    sem_scored = (emb.crossJoin(qv)
-                  .filter(F.col("vec_id") != F.col("query_id"))
-                  .select("query_id", F.col("vec_id").alias("doc_id"),
-                          F.round(cosine("embedding", "qe", _DIM), 6)
-                          .alias("cos")))
-    ws = W.partitionBy("query_id").orderBy(F.desc("cos"), "doc_id")
-    sem = (sem_scored
-           .select("query_id", "doc_id",
-                   F.row_number().over(ws).alias("sem_rank"))
-           .filter(F.col("sem_rank") <= 10))
-    fused = (lex.withColumnRenamed("lex_rank", "lr")
-             .join(sem.withColumnRenamed("sem_rank", "sr"),
+    lex = top_k_per_query(lex_scored.filter(F.col("j_m") > 0), 10,
+                          F.desc("j_m"), "doc_id", rank="lr")
+    b = _normed(load_table(spark, sf_dir, "embeddings"))
+    sem = top_k_per_query(
+        score_candidates(b, _query_side(b), _cos())
+        .withColumnRenamed("neighbor_id", "doc_id"),
+        10, F.desc("cos"), "doc_id", rank="sr")
+    fused = (lex.select("query_id", "doc_id", "lr")
+             .join(sem.select("query_id", "doc_id", "sr"),
                    ["query_id", "doc_id"], "full_outer")
              .select("query_id", "doc_id",
                      F.coalesce("lr", F.lit(0)).cast("long")
@@ -1626,38 +1272,13 @@ def retrieval_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
                       + F.coalesce(F.expr("1000000000 div (60 + sr)"),
                                    F.lit(0))).cast("long")
                      .alias("rrf_m")))
-    wf = W.partitionBy("query_id").orderBy(F.desc("rrf_m"), "doc_id")
-    return (fused.select("query_id", "doc_id", "lex_rank", "sem_rank",
-                         "rrf_m",
-                         F.row_number().over(wf).cast("long")
-                         .alias("fused_rank"))
-            .filter(F.col("fused_rank") <= 10))
+    return top_k_per_query(fused, 10, F.desc("rrf_m"), "doc_id",
+                           rank="fused_rank")
 
 
-def _pq_train_oracle() -> str:
-    sub_a = "e.embedding[CAST(md.m*8+1 AS INTEGER) : CAST(md.m*8+8 AS INTEGER)]"
-    sub_c = "c.cv[CAST(md.m*8+1 AS INTEGER) : CAST(md.m*8+8 AS INTEGER)]"
-    sq_l2 = (f"list_reduce(list_transform(list_zip({sub_a}, {sub_c}),"
-             f" p -> (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))"
-             f" * (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))),"
-             f" (acc, v) -> acc + v)")
-    return f"""
-WITH c AS (
-  SELECT vec_id AS cid, embedding AS cv FROM embeddings
-  WHERE vec_id < {_PQ_K}
-), md AS (SELECT unnest(range(0, {_PQ_M})) AS m),
-d AS (
-  SELECT e.vec_id, md.m, c.cid, {sq_l2} AS dist
-  FROM embeddings e CROSS JOIN c CROSS JOIN md
-), enc AS (
-  SELECT vec_id, m, cid + 1 AS code FROM (
-    SELECT vec_id, m, cid,
-           row_number() OVER (PARTITION BY vec_id, m
-                              ORDER BY dist, cid) AS rn
-    FROM d
-  ) WHERE rn = 1
-), sub AS (
-  SELECT enc.m, enc.code,
+@register("embedding_pq_train_step", oracle=f"""
+WITH {_sql_pq_encode()}, sub AS (
+  SELECT enc.m, enc.cid + 1 AS code,
          unnest(generate_series(0, {_PQ_D - 1})) AS subdim,
          unnest(e.embedding[CAST(enc.m*8+1 AS INTEGER)
                             : CAST(enc.m*8+8 AS INTEGER)]) AS x
@@ -1670,10 +1291,7 @@ SELECT CAST(m AS BIGINT) AS m, CAST(code AS BIGINT) AS code,
          / 10000000.0 / COUNT(*) AS c_val,
        CAST(COUNT(*) AS BIGINT) AS n_members
 FROM sub GROUP BY m, code, subdim
-"""
-
-
-@register("embedding_pq_train_step", oracle=_pq_train_oracle(),
+""",
     doc="One k-means training iteration for the PQ codebook — the "
         "step that turns ann_pq_adc's deterministic data-derived "
         "codebook into a FAISS-style trained one (FAISS trains each "
@@ -1696,10 +1314,7 @@ FROM sub GROUP BY m, code, subdim
 def embedding_pq_train_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import pq_codebook, pq_codes_arrow
     emb = load_table(spark, sf_dir, "embeddings")
-    train = [list(map(float, r.embedding)) for r in
-             emb.filter(F.col("vec_id") < _PQ_K)
-                .orderBy("vec_id").collect()]
-    cb = pq_codebook(train, _PQ_M)
+    cb = pq_codebook(_first_vectors(emb, _PQ_K), _PQ_M)
     enc = (emb.repartition(spark.sparkContext.defaultParallelism)
            .select("vec_id", "embedding",
                    pq_codes_arrow("embedding", cb).alias("codes")))
@@ -1776,7 +1391,7 @@ def embedding_cosine_histogram(spark: SparkSession,
     # b is _COSHIST_K rows; Spark sees the limit, but a non-equi join
     # over a side it sizes past the threshold plans a CartesianProduct.
     pairs = (s.join(F.broadcast(b), F.col("vec_id") < F.col("vid2"))
-             .select(F.floor(F.round(cosine("embedding", "emb2", _DIM),
+             .select(F.floor(F.round(cosine("embedding", "emb2"),
                                      6) * 10).cast("long").alias("bin")))
     tot = pairs.agg(F.count("*").cast("long").alias("total"))
     return (pairs.crossJoin(tot)

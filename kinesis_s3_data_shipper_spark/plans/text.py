@@ -968,7 +968,7 @@ FROM (
 def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
-    from pyspark.sql import Window as W
+    from ..operators.similarity import top_k_per_query
     docs = load_table(spark, sf_dir, "documents")
     d = docs.select("doc_id", F.split("text", " ").alias("ws"))
     dl = d.select("doc_id", F.size("ws").cast("long").alias("dl"))
@@ -1013,10 +1013,7 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                       contrib.cast("decimal(28,12)").alias("contrib")))
     agg = (scored.groupBy("query_id", "doc_id")
            .agg(F.sum("contrib").alias("score_dec")))
-    w = W.partitionBy("query_id").orderBy(F.desc("score_dec"), "doc_id")
-    return (agg.select("query_id", "doc_id", "score_dec",
-                       F.row_number().over(w).alias("rn"))
-            .filter(F.col("rn") <= 10)
+    return (top_k_per_query(agg, 10, F.desc("score_dec"), "doc_id")
             .select("query_id", "doc_id",
                     F.round(F.col("score_dec").cast("double"), 6)
                     .alias("bm25")))

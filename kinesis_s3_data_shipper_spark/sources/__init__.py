@@ -1,3 +1,3 @@
 """Sources: parquet table loaders and the raw shipper-file binary source."""
 
-from .tables import TABLE_NAMES, load_table, register_views  # noqa: F401
+from .tables import TABLE_NAMES, load_table  # noqa: F401

@@ -107,10 +107,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         df = _normalize_event_ts(df)
     return df
-
-
-def register_views(spark: SparkSession, sf_dir: str,
-                   names: tuple[str, ...] = TABLE_NAMES) -> None:
-    """Register each table as a temp view (for the SQL-API queries)."""
-    for name in names:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -25,7 +25,8 @@ ALLOWED = {
     ("plans/similarity.py", "_queries"): "_QUERY_PRED",
     ("plans/similarity.py", "ann_ivfpq_refine"): "_QUERY_PRED",
     ("plans/similarity.py", "embedding_matryoshka_recall"): "_QUERY_PRED",
-    ("plans/similarity.py", "embedding_int8_quantize"): "_DIM",
+    ("plans/similarity.py", "embedding_int8_quantize"):
+        "one row per dimension",
     ("plans/similarity.py", "embedding_cosine_histogram"): "_COSHIST_K",
     ("operators/similarity.py", "ivf_assign_broadcast"): "K rows",
     ("plans/analytics.py", "agg_sketch_merge_kll"): "EVENT_TYPES",

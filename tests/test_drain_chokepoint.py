@@ -68,3 +68,16 @@ def test_per_key_state_folded_only_in_fold_per_key():
     owns the sort, the ``seen`` count and the drained-state read."""
     assert _call_sites(_method("applyInPandasWithState")) == [
         (JOBS, "_fold_per_key")]
+
+
+def test_per_query_top_k_ranked_only_in_top_k_per_query():
+    """Every per-query top-k (the similarity family and BM25) ranks
+    through the one helper, so the rank type and the <= k cut are the
+    same everywhere."""
+    def query_window(call):
+        return (_method("partitionBy")(call) and len(call.args) == 1
+                and isinstance(call.args[0], ast.Constant)
+                and call.args[0].value == "query_id")
+
+    assert _call_sites(query_window) == [
+        ("operators/similarity.py", "top_k_per_query")]

@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from kinesis_s3_data_shipper_spark.operators.checkpoint import (
-    release_checkpoint, truncated_checkpoint)
+    _logical_rdd_leaf, release_checkpoint, truncated_checkpoint)
 
 from .conftest import persisted_since
 
@@ -167,12 +167,17 @@ def test_release_refuses_multi_child_plans(spark):
     """A join of two checkpoints is not a unary chain over ONE leaf;
     releasing either would be a guess.  Must return False (and warn),
     never raise, never release."""
-    jsc = spark.sparkContext._jsc.sc()
     a = truncated_checkpoint(spark.range(10).selectExpr("id as k"))
     b = truncated_checkpoint(spark.range(10).selectExpr("id as k"))
-    live = jsc.getPersistentRDDs().size()
     assert release_checkpoint(a.join(b, "k")) is False
-    assert jsc.getPersistentRDDs().size() == live
+    # Nothing released: a's and b's RDDs are still persisted.  (Not a
+    # map-size compare: other tests' RDDs leave the map whenever
+    # Python's GC collects their py4j handles.)
+    live = set(spark.sparkContext._jsc.getPersistentRDDs().keySet()
+               .toArray())
+    ids = {_logical_rdd_leaf(f._jdf.queryExecution().analyzed()).rdd().id()
+           for f in (a, b)}
+    assert ids <= live, (ids, live)
     release_checkpoint(a)
     release_checkpoint(b)
 
