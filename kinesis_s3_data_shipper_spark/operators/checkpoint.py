@@ -32,6 +32,9 @@
   instead of O(rounds) (an 8-round peel otherwise parks ~17
   edge-scale block sets for the session lifetime).
 
+- :func:`fixpoint` — the package's one iterate-to-convergence loop:
+  each round is checkpointed, counted and released through it.
+
 Both reach through private APIs (the ``LogicalRDD`` constructor,
 ``Limit`` statistics and ``classic.Dataset.ofRows``) and degrade
 gracefully: a Spark release that moves the internals falls back to the
@@ -198,3 +201,44 @@ def release_checkpoint(df: DataFrame) -> bool:
         log.warning("release_checkpoint skipped (%s) — blocks were "
                     "NOT released", exc)
         return False
+
+
+def fixpoint(state, step, *, rounds: int):
+    """Iterate ``step`` from ``state`` until a round changes nothing,
+    at most ``rounds`` times, and return the last state.
+
+    ``state`` is a frame or a tuple of frames.  ``step(state)`` returns
+    ``(next_state, n_changed, scratch)``: the next round's frames,
+    materialized eagerly (:func:`truncated_checkpoint`) with the change
+    count observed on the same write, so a round costs its checkpoint
+    jobs and no separate convergence scan; and a tuple of the frames
+    the round built only for itself.  Round N reads round N-1's blocks
+    only, never a lineage chain re-deriving every earlier round.
+
+    Every round releases ``scratch``.  On progress the old state's
+    frames the new state does not hold are released, so live blocks
+    stay O(1) rounds, not O(rounds).  On ``n_changed == 0`` the new
+    frames are released instead and the state ``step`` was given is
+    returned: a step that changes nothing is the identity, so a
+    fixpoint reached before the cap is the state every later round
+    would return, and an oracle that unrolls all ``rounds`` agrees.
+    A step that knows it changed nothing may return its input state
+    itself and skip building the next one.
+
+    The loop stops only on a zero count.  Observed metrics are
+    accumulator-backed, and a task retry can only inflate them, so a
+    retry costs at most an extra round, never an early stop.
+    """
+    def frames(s):
+        return s if isinstance(s, tuple) else (s,)
+
+    for _ in range(rounds):
+        nxt, n_changed, scratch = step(state)
+        dead, live = (state, nxt) if n_changed else (nxt, state)
+        for df in scratch + frames(dead):
+            if not any(df is kept for kept in frames(live)):
+                release_checkpoint(df)
+        if not n_changed:
+            return state
+        state = nxt
+    return state

@@ -31,7 +31,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from .checkpoint import release_checkpoint, truncated_checkpoint
+from .checkpoint import fixpoint, truncated_checkpoint
 
 
 def let(bound_expr: str, var: str, body: str) -> str:
@@ -308,53 +308,47 @@ def minhash_lsh_pairs_incremental(base_index: DataFrame,
     return out
 
 
-def connected_components(edges: DataFrame, *, src: str = "doc_a",
-                         dst: str = "doc_b",
-                         max_iters: int = 25) -> DataFrame:
-    """Connected components over an undirected edge list via min-label
-    propagation: every node's label converges to the smallest node id
-    reachable from it. Returns (node, component_id).
+#: Cap on label-propagation rounds, the initial labels included.
+_CC_ROUNDS = 25
+
+
+def connected_components(edges: DataFrame) -> DataFrame:
+    """Connected components over an undirected (doc_a, doc_b) edge list
+    via min-label propagation: every node's label converges to the
+    smallest node id reachable from it. Returns (node, component_id).
 
     This is the step that turns near-dup PAIRS into dedup CLUSTERS —
     transitive closure (A~B, B~C → {A,B,C} one group, keep one doc) —
     which pair output alone cannot express.
 
-    Scale design: each iteration is one shuffle join + one min-agg,
-    i.e. the same dataflow GraphFrames/Pregel uses; `localCheckpoint`
-    truncates lineage every round so plan depth stays O(1) instead of
-    O(iters). Iterations needed = graph diameter, and near-dup graphs
-    are unions of small dense clusters (diameter ≲ a few), so the loop
-    exits after 2-4 rounds with the early-convergence check. For
-    adversarial long-chain graphs, swap in large-star/small-star
-    (O(log n) rounds) — the per-round dataflow is identical.
-
-    The per-iteration driver action (the convergence count) is loop
-    control, not data movement — it collects ONE number.
+    Scale design: each round is one shuffle join + one min-agg, i.e.
+    the same dataflow GraphFrames/Pregel uses, run through
+    :func:`~.checkpoint.fixpoint` (lineage truncated every round, one
+    observed change count per round). Rounds needed = graph diameter,
+    and near-dup graphs are unions of small dense clusters (diameter
+    ≲ a few), so the loop exits after 2-4 rounds. For adversarial
+    long-chain graphs, swap in large-star/small-star (O(log n) rounds)
+    — the per-round dataflow is identical.
     """
     from pyspark.sql import Observation
 
-    sym = (edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-           .union(edges.select(F.col(dst).alias("s"), F.col(src).alias("d")))
+    sym = (edges.select(F.col("doc_a").alias("s"), F.col("doc_b").alias("d"))
+           .union(edges.select(F.col("doc_b").alias("s"),
+                               F.col("doc_a").alias("d")))
            .distinct()
            .persist(StorageLevel.MEMORY_AND_DISK))
-    labels = truncated_checkpoint(
-        sym.select(F.col("s").alias("node")).distinct()
-        .select("node", F.col("node").alias("label")))
-    for i in range(max_iters):
-        if i == 0:
-            # Round 0: labels are still the identity (label == node),
-            # so min-label-over-neighbors is just min(s) per d straight
-            # off the edge list — same result, one join saved.
-            nbr = (sym.groupBy(F.col("d").alias("node"))
-                   .agg(F.min("s").alias("nbr_label")))
-        else:
-            nbr = (sym.join(labels, F.col("s") == F.col("node"))
-                   .groupBy(F.col("d").alias("node"))
-                   .agg(F.min("label").alias("nbr_label")))
-        # One job per round: the eager localCheckpoint materializes the
-        # new labels AND (via observe) counts label changes in the same
-        # pass — no separate convergence-scan job.
-        obs = Observation(f"cc_round_{i}")
+    # Round one straight off the edge list (it is symmetric, so every
+    # node is some edge's d): the least of a node's id and its
+    # neighbours' ids.
+    first = truncated_checkpoint(
+        sym.groupBy(F.col("d").alias("node"))
+        .agg(F.least(F.col("node"), F.min("s")).alias("label")))
+
+    def step(labels):
+        nbr = (sym.join(labels, F.col("s") == F.col("node"))
+               .groupBy(F.col("d").alias("node"))
+               .agg(F.min("label").alias("nbr_label")))
+        obs = Observation()
         new = truncated_checkpoint(
             labels.join(nbr, "node", "left")
             .select("node",
@@ -363,16 +357,9 @@ def connected_components(edges: DataFrame, *, src: str = "doc_a",
                     (F.coalesce("nbr_label", "label") < F.col("label"))
                     .cast("long").alias("_changed"))
             .observe(obs, F.sum("_changed").alias("n_changed")))
-        # The eager materialization above fully consumed the previous
-        # round's labels — release them so live blocks stay O(1)
-        # rounds, not O(rounds).  After round 0 `labels` is a Project
-        # (.drop) over the checkpoint's LogicalRDD; release_checkpoint
-        # unwraps unary nodes to the leaf, so this frees the previous
-        # round's blocks, not a silent no-op (r09 advice).
-        release_checkpoint(labels)
-        labels = new.drop("_changed")
-        if not obs.get["n_changed"]:
-            break
+        return new.drop("_changed"), obs.get["n_changed"], ()
+
+    labels = fixpoint(first, step, rounds=_CC_ROUNDS - 1)
     sym.unpersist()
     return labels.select("node", F.col("label").alias("component_id"))
 

@@ -240,7 +240,7 @@ def dedup_clusters_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = minhash_lsh_pairs(docs, id_col="doc_id", text_col="text",
                               shingle_k=3, num_hashes=16, num_bands=4,
                               threshold=0.5)
-    return connected_components(pairs, src="doc_a", dst="doc_b")
+    return connected_components(pairs)
 
 
 @register("dedup_simhash", oracle="""
@@ -739,7 +739,7 @@ def dedup_cluster_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = minhash_lsh_pairs(docs, id_col="doc_id", text_col="text",
                               shingle_k=3, num_hashes=16, num_bands=4,
                               threshold=0.5)
-    comps = connected_components(pairs, src="doc_a", dst="doc_b")
+    comps = connected_components(pairs)
     m = (comps.withColumnRenamed("node", "doc_id")
          .join(docs.select("doc_id", "n_chars"), "doc_id"))
     w = W.partitionBy("component_id").orderBy(F.desc("n_chars"), "doc_id")

@@ -778,7 +778,10 @@ GROUP BY e.query_id
 def _recall_at_3(exact3: DataFrame, approx3: DataFrame) -> DataFrame:
     """recall@3 per query of the ``approx3`` top-3 pairs against the
     ``exact3`` ones."""
-    hit = approx3.select("query_id", "neighbor_id", F.lit(1).alias("_hit"))
+    # The hits are <= |Q|*3 rows, |Q| <= 256 by _QUERY_PRED; Spark
+    # can't see that bound through the rank window, so hint it.
+    hit = F.broadcast(approx3.select("query_id", "neighbor_id",
+                                     F.lit(1).alias("_hit")))
     return (exact3.select("query_id", "neighbor_id")
             .join(hit, ["query_id", "neighbor_id"], "left")
             .groupBy("query_id")
@@ -1042,10 +1045,7 @@ def embedding_matryoshka_recall(spark: SparkSession,
     q = _query_side(b, F.col("e48").alias("q48"),
                     F.col("_n48").alias("_qn48"))
     trunc = score_candidates(b, q, _cos("q48", "e48", "_qn48", "_n48"))
-    # Both sides are <= |Q|*3 rows, |Q| <= 256 by _QUERY_PRED; Spark
-    # can't see that bound through the rank windows, so hint it.
-    return _recall_at_3(_top3(score_candidates(b, q, _cos())),
-                        F.broadcast(_top3(trunc)))
+    return _recall_at_3(_top3(score_candidates(b, q, _cos())), _top3(trunc))
 
 
 @register("embedding_kcenter_step", oracle=f"""

@@ -24,7 +24,7 @@ ALLOWED = {
     # and the frames derived from them (|Q| x 3 hits, |Q| x 10 short).
     ("plans/similarity.py", "_queries"): "_QUERY_PRED",
     ("plans/similarity.py", "ann_ivfpq_refine"): "_QUERY_PRED",
-    ("plans/similarity.py", "embedding_matryoshka_recall"): "_QUERY_PRED",
+    ("plans/similarity.py", "_recall_at_3"): "_QUERY_PRED",
     ("plans/similarity.py", "embedding_int8_quantize"):
         "one row per dimension",
     ("plans/similarity.py", "embedding_cosine_histogram"): "_COSHIST_K",

@@ -16,9 +16,9 @@ PKG = pathlib.Path(kinesis_s3_data_shipper_spark.__file__).parent
 JOBS = "streaming/jobs.py"
 
 
-def _call_sites(is_match) -> list[tuple[str, str | None]]:
-    """(module path, innermost enclosing function) of every call in the
-    package that ``is_match`` accepts."""
+def _call_sites(is_match, kind=ast.Call) -> list[tuple[str, str | None]]:
+    """(module path, innermost enclosing function) of every call (or
+    other ``kind`` of node) in the package that ``is_match`` accepts."""
     sites = []
 
     def visit(node, path, func):
@@ -26,7 +26,7 @@ def _call_sites(is_match) -> list[tuple[str, str | None]]:
             if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
                 visit(child, path, child.name)
                 continue
-            if isinstance(child, ast.Call) and is_match(child):
+            if isinstance(child, kind) and is_match(child):
                 sites.append((path, func))
             visit(child, path, func)
 
