@@ -1,10 +1,11 @@
 """Dedup plans over the `documents` table (north-star ⊕ operators,
 SURVEY.md §2.2): exact, hash-keyed exact, MinHash-LSH near-dup,
-SimHash fingerprint, blocked n-gram Jaccard.
+SimHash fingerprint, blocked n-gram Jaccard, PPJoin set similarity.
 
-Each oracle mirrors the md5-based pipeline exactly (same shingles,
-same salts, same bands), so the LSH candidate set — not just the final
-verdicts — is engine-reproducible.
+Each MinHash oracle mirrors the md5-based pipeline exactly (same
+shingles, same permutations, same bands), so the LSH candidate set —
+not just the final verdicts — is engine-reproducible; the PPJoin
+oracles are brute-force all-pairs joins.
 """
 
 from __future__ import annotations
@@ -12,7 +13,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.dedup import (blocked_ngram_jaccard_pairs, minhash_lsh_pairs,
+from ..operators.dedup import (blocked_ngram_jaccard_pairs, bloom_pos_duck,
+                               bloom_pos_spark, join_ends,
+                               minhash_lsh_candidates, minhash_lsh_index,
+                               minhash_lsh_pairs, shingle_hash_rows,
                                simhash_bits, token_window_spans)
 from ..sources.tables import load_table
 from .base import register
@@ -113,16 +117,15 @@ def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "first_doc_id"))
 
 
-def _sql_minhash_sig(num_hashes: int = 16) -> str:
+def _sql_minhash_sig() -> str:
     """DuckDB spelling of the minhash signature over the 60-bit shingle
     hashes — generated from the SAME coefficients as the Spark side
-    (operators.dedup.minhash_perm_params), so the two engines cannot
-    drift."""
-    from ..operators.dedup import MINHASH_PRIME, minhash_perm_params
+    (operators.dedup.perm_params), so the two engines cannot drift."""
+    from ..operators.dedup import MINHASH_PRIME, NUM_HASHES, perm_params
     mins = ", ".join(
         f"list_min(list_transform(hsh, h -> ({a} * (h % 4294967296)"
         f" + {b}) % {MINHASH_PRIME}))"
-        for a, b in minhash_perm_params(num_hashes))
+        for a, b in perm_params("minhash", NUM_HASHES))
     return f"[{mins}]"
 
 
@@ -132,16 +135,20 @@ _SQL_BAND_BUCKET = ("array_to_string(list_transform("
                     "sig[t.b*4+1 : t.b*4+4],"
                     " x -> CAST(x AS VARCHAR)), '|')")
 
-#: The minhash-LSH verified-pairs pipeline as a CTE block, shared by the
-#: pairs oracle and the connected-components clusters oracle.
-_SQL_MINHASH_CTES = f"""sh AS (
-  SELECT doc_id, {_SQL_SHINGLES} AS shingles FROM documents
+
+def sql_minhash_cand_ctes(source: str = "documents") -> str:
+    """The sh/hs/sigs/bands/cand CTE block over an arbitrary source
+    relation — the oracle twin of operators.dedup.minhash_lsh_index
+    probed by the batch band self-join (same shingles, same md5 shingle
+    hashes and permutations, same 4x4 banding)."""
+    return f"""sh AS (
+  SELECT doc_id, {_SQL_SHINGLES} AS shingles FROM {source}
 ), hs AS (
   SELECT doc_id, list_transform(shingles,
          s -> CAST('0x' || substr(md5(s), 1, 15) AS BIGINT)) AS hsh
   FROM sh
 ), sigs AS (
-  SELECT doc_id, {_sql_minhash_sig(16)} AS sig FROM hs
+  SELECT doc_id, {_sql_minhash_sig()} AS sig FROM hs
 ), bands AS (
   SELECT doc_id, t.b AS band_idx, {_SQL_BAND_BUCKET} AS bucket
   FROM sigs CROSS JOIN (SELECT unnest(range(0, 4)) AS b) t
@@ -150,7 +157,12 @@ _SQL_MINHASH_CTES = f"""sh AS (
   FROM bands a JOIN bands b
     ON a.band_idx = b.band_idx AND a.bucket = b.bucket
    AND a.doc_id < b.doc_id
-), pairs AS (
+)"""
+
+
+#: The minhash-LSH verified-pairs pipeline as a CTE block (the oracle of
+#: minhash_lsh_pairs), shared by the pairs and the clusters oracles.
+_SQL_MINHASH_CTES = sql_minhash_cand_ctes() + """, pairs AS (
   SELECT doc_a, doc_b,
          CAST(len(list_intersect(sa.hsh, sb.hsh)) AS DOUBLE)
            / len(list_distinct(sa.hsh || sb.hsh)) AS jaccard
@@ -173,12 +185,12 @@ SELECT doc_a, doc_b, jaccard FROM pairs
          "bucket join is the only shuffle and its width is bounded by "
          "collisions. The verify joins shuffle 60-bit shingle HASHES "
          "(8B/element, md5-derived so the oracle mirrors them), never "
-         "raw shingle strings. Audit note (accepted 4-scan flag): the bucket-join sides and the exact-Jaccard verify arms each re-read a column-pruned projection of documents; checkpointing would materialize corpus-wide shingle sets, strictly more IO than the pruned re-scans.")
+         "raw shingle strings. Audit note (accepted 4-scan flag): the "
+         "persisted index's one documents scan reprints under the band "
+         "join's two sides and the verify's two ends.")
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    return minhash_lsh_pairs(docs, id_col="doc_id", text_col="text",
-                             shingle_k=3, num_hashes=16, num_bands=4,
-                             threshold=0.5)
+    return minhash_lsh_pairs(docs, id_col="doc_id", text_col="text")
 
 
 @register("dedup_minhash_lsh_incremental", oracle=f"""
@@ -200,14 +212,13 @@ WHERE doc_a % 5 = 0 OR doc_b % 5 = 0
          "is pytest-proven: the base index is written/read as "
          "parquet in tests/test_operators.py.)")
 def dedup_minhash_lsh_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import (minhash_lsh_index,
-                                   minhash_lsh_pairs_incremental)
+    from ..operators.dedup import minhash_lsh_pairs_incremental
     docs = load_table(spark, sf_dir, "documents")
     base = minhash_lsh_index(docs.filter(F.col("doc_id") % 5 != 0),
                              id_col="doc_id", text_col="text")
     delta = minhash_lsh_index(docs.filter(F.col("doc_id") % 5 == 0),
                               id_col="doc_id", text_col="text")
-    return minhash_lsh_pairs_incremental(base, delta, threshold=0.5)
+    return minhash_lsh_pairs_incremental(base, delta)
 
 
 @register("dedup_clusters_cc", oracle=f"""
@@ -237,9 +248,7 @@ SELECT node, MIN(r) AS component_id FROM reach GROUP BY node
 def dedup_clusters_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import connected_components
     docs = load_table(spark, sf_dir, "documents")
-    pairs = minhash_lsh_pairs(docs, id_col="doc_id", text_col="text",
-                              shingle_k=3, num_hashes=16, num_bands=4,
-                              threshold=0.5)
+    pairs = minhash_lsh_pairs(docs, id_col="doc_id", text_col="text")
     return connected_components(pairs)
 
 
@@ -261,7 +270,7 @@ FROM fp GROUP BY simhash32
          "projection + one hash-agg.")
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    return (docs.select(simhash_bits("text", 32).alias("simhash32"), "doc_id")
+    return (docs.select(simhash_bits("text").alias("simhash32"), "doc_id")
             .groupBy("simhash32")
             .agg(F.count("*").alias("n_docs"),
                  F.min("doc_id").alias("keeper_doc_id")))
@@ -341,21 +350,15 @@ SELECT doc_a, doc_b,
        CAST(i AS DOUBLE) / (sa + sb - i) AS jaccard
 FROM p WHERE CAST(i AS DOUBLE) / (sa + sb - i) >= 0.6
 """, doc="Exact char-5-gram Jaccard restricted to (lang, length-bucket) "
-         "blocks, candidate-pruned by PPJoin prefix filtering inside "
-         "each block (r10: the registry-wide timing record caught the "
-         "previous all-pairs-within-block join at 128 s for sf0.1 — "
-         "block sizes grow with the corpus, so within-block pairs are "
-         "quadratic; prefix filtering makes every stage linear in gram "
-         "volume except the candidate-only verify, 128 s -> 13 s). "
-         "The oracle stays brute-force all-pairs, keeping the no-miss "
-         "guarantee under test. r10b adds PPJoin's length+positional "
-         "filters to the candidate join and attaches per-block df via "
-         "a count window instead of groupBy+join (one less full-token "
-         "shuffle); r10c collapses exact duplicates before the "
-         "near-dup machinery (group by (block, md5(text)), PPJoin on "
-         "min-id reps only, expand pairs after — the C4/RefinedWeb "
-         "pipeline order, 290 s -> ~60 s on the 10x-replicated "
-         "corpus). Audit note (accepted flag, 10 textual / 5 "
+         "blocks, candidate-pruned by PPJoin inside each block: block "
+         "sizes grow with the corpus, so all pairs within a block are "
+         "quadratic, while the prefix, length and positional filters "
+         "keep every stage linear in gram volume except the "
+         "candidate-only verify. Exact duplicates collapse first "
+         "(group by (block, md5(text)), PPJoin on min-id reps only, "
+         "expand pairs after — the C4/RefinedWeb pipeline order). The "
+         "oracle stays brute-force all-pairs, keeping the no-miss "
+         "guarantee under test. Audit note (accepted flag, 10 textual / 5 "
          "physical documents scans): the prefix-candidate build and "
          "the exact verify read gram arrays per join side — "
          "column-pruned re-scans, while a checkpoint would persist "
@@ -409,7 +412,7 @@ SELECT docs.doc_id,
             THEN m.j_at_min ELSE CAST(1.0 AS DOUBLE) END
          AS jaccard_to_rep
 FROM documents docs LEFT JOIN m ON docs.doc_id = m.d
-""", doc="GROUP form of dedup_ngram_jaccard (r11, the r10 verdict's "
+""", doc="GROUP form of dedup_ngram_jaccard (the pairs form's "
          "registered escape hatch): one row per document — (doc_id, "
          "rep, jaccard_to_rep), rep = min doc id over {doc} ∪ {same-"
          "block neighbors with J >= 0.6}, similarity to it attached. "
@@ -442,32 +445,18 @@ def dedup_ngram_jaccard_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
         block_cols=["lang", "len_bucket"], ngram_n=5, threshold=0.6)
 
 
-#: Bloom-filter geometry: m bits, k=3 probe positions per document.
-#: The reference set is HARD-CAPPED (doc_id % 101 = 0 and < 101*256)
-#: so |ref| is a constant independent of corpus size.
-_BLOOM_M = 8192
+#: The bloom reference set is HARD-CAPPED (doc_id % 101 = 0 and
+#: < 101*256) so |ref| is a constant independent of corpus size.
 _BLOOM_REF_PRED = "doc_id % 101 = 0 AND doc_id < 25856"
-
-
-def _bloom_pos_spark(col: str) -> str:
-    return ",".join(
-        f"CAST(conv(substring(md5({col}), {j * 8 + 1}, 8), 16, 10)"
-        f" AS BIGINT) % {_BLOOM_M}" for j in range(3))
-
-
-def _bloom_pos_duck(col: str) -> str:
-    return ",".join(
-        f"CAST('0x' || substr(md5({col}), {j * 8 + 1}, 8) AS BIGINT)"
-        f" % {_BLOOM_M}" for j in range(3))
 
 
 @register("dedup_bloom_membership", oracle=f"""
 WITH ref AS (
   SELECT text FROM documents WHERE {_BLOOM_REF_PRED}
 ), pos AS (
-  SELECT DISTINCT unnest([{_bloom_pos_duck('text')}]) AS p FROM ref
+  SELECT DISTINCT unnest([{",".join(bloom_pos_duck('text'))}]) AS p FROM ref
 ), cand AS (
-  SELECT doc_id, unnest([{_bloom_pos_duck('text')}]) AS p FROM documents
+  SELECT doc_id, unnest([{",".join(bloom_pos_duck('text'))}]) AS p FROM documents
 )
 SELECT c.doc_id,
        CAST(CASE WHEN COUNT(pos.p) = 3 THEN 1 ELSE 0 END AS BIGINT)
@@ -488,43 +477,19 @@ GROUP BY c.doc_id
          "the contract and the oracle reproduces them bit-for-bit.")
 def dedup_bloom_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
+    positions = F.explode(F.expr(
+        f"array({','.join(bloom_pos_spark('text'))})"))
     pos = (docs.filter(F.expr(_BLOOM_REF_PRED))
-           .select(F.explode(F.expr(f"array({_bloom_pos_spark('text')})"))
-                   .alias("p"))
+           .select(positions.alias("p"))
            .distinct()
            .withColumn("_m", F.lit(1)))
-    cand = docs.select(
-        "doc_id",
-        F.explode(F.expr(f"array({_bloom_pos_spark('text')})")).alias("p"))
+    cand = docs.select("doc_id", positions.alias("p"))
     # pos is at most 3 positions for each of at most 256 reference
     # documents (_BLOOM_REF_PRED); Spark sizes it at the documents scan.
     return (cand.join(F.broadcast(pos), "p", "left")
             .groupBy("doc_id")
             .agg(F.when(F.count("_m") == 3, F.lit(1)).otherwise(F.lit(0))
                  .cast("long").alias("bloom_maybe_seen")))
-
-
-def sql_minhash_cand_ctes(source: str = "documents") -> str:
-    """The sh/sigs/bands/cand CTE block over an arbitrary source
-    relation — the oracle twin of operators.dedup.minhash_lsh_candidates
-    (same shingles, same salted md5 min-hashes, same 4x4 banding)."""
-    return f"""sh AS (
-  SELECT doc_id, {_SQL_SHINGLES} AS shingles FROM {source}
-), hs0 AS (
-  SELECT doc_id, list_transform(shingles,
-         s -> CAST('0x' || substr(md5(s), 1, 15) AS BIGINT)) AS hsh
-  FROM sh
-), sigs AS (
-  SELECT doc_id, {_sql_minhash_sig(16)} AS sig FROM hs0
-), bands AS (
-  SELECT doc_id, t.b AS band_idx, {_SQL_BAND_BUCKET} AS bucket
-  FROM sigs CROSS JOIN (SELECT unnest(range(0, 4)) AS b) t
-), cand AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM bands a JOIN bands b
-    ON a.band_idx = b.band_idx AND a.bucket = b.bucket
-   AND a.doc_id < b.doc_id
-)"""
 
 
 #: Exact set-similarity join: Jaccard threshold and the deterministic
@@ -572,11 +537,10 @@ WHERE CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE)
          "deliberately INDEPENDENT of all of that: a brute-force all-pairs "
          "Jaccard over the same subset — so the prefix filter's "
          "no-miss guarantee is itself under test, not replicated. "
-         "r10c collapses exact duplicates first (group by md5(text), "
-         "PPJoin on min-id reps, expand pairs after — see "
-         "blocked_ngram_jaccard_pairs): 433 s -> 6.9 s on the "
-         "10x-replicated step with identical 28.3M output rows. "
-         "Audit note (accepted flag, 18 textual scans): PPJoin's "
+         "Exact duplicates collapse first (group by md5(text), PPJoin "
+         "on min-id reps, expand pairs after), so a replicated corpus "
+         "costs its output rows, not its copies squared. "
+         "Audit note (accepted flag, 14 textual scans): PPJoin's "
          "prefix-candidate build and the exact verify read token "
          "arrays per join side — column-pruned re-scans, while a "
          "checkpoint would persist every tokenized document; the "
@@ -585,10 +549,6 @@ WHERE CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE)
 def dedup_setsim_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import setsim_prefix_pairs
     docs = load_table(spark, sf_dir, "documents").filter(F.expr(_PP_PRED))
-    # The whole pipeline (r10c exact-dup collapse, PPJoin prefix +
-    # length + positional filters, exact verify, member expansion)
-    # lives in operators.dedup.setsim_prefix_pairs; it stays lazy
-    # (plans must compose and be audited unexecuted).
     return setsim_prefix_pairs(docs, id_col="doc_id", text_col="text",
                                threshold=_PP_T)
 
@@ -673,16 +633,11 @@ JOIN embeddings eb ON eb.vec_id = c.doc_b
               "candidate membership and verified pairs hash-match.")
 def dedup_hybrid_lsh_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.vectors import cosine
-    from ..operators.dedup import minhash_lsh_candidates
     docs = load_table(spark, sf_dir, "documents")
     cand = minhash_lsh_candidates(docs, id_col="doc_id", text_col="text")
     emb = load_table(spark, sf_dir, "embeddings")
-    ea = emb.select(F.col("vec_id").alias("doc_a"),
-                    F.col("embedding").alias("_va"))
-    eb = emb.select(F.col("vec_id").alias("doc_b"),
-                    F.col("embedding").alias("_vb"))
-    c = cosine("_va", "_vb")
-    return (cand.join(ea, "doc_a").join(eb, "doc_b")
+    c = cosine("embedding_a", "embedding_b")
+    return (join_ends(cand, emb, "vec_id", "embedding")
             .select("doc_a", "doc_b", F.round(c, 6).alias("cos"),
                     (c >= 0.35).alias("semantic_confirm")))
 
@@ -736,9 +691,7 @@ def dedup_cluster_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
     from ..operators.dedup import connected_components
     docs = load_table(spark, sf_dir, "documents")
-    pairs = minhash_lsh_pairs(docs, id_col="doc_id", text_col="text",
-                              shingle_k=3, num_hashes=16, num_bands=4,
-                              threshold=0.5)
+    pairs = minhash_lsh_pairs(docs, id_col="doc_id", text_col="text")
     comps = connected_components(pairs)
     m = (comps.withColumnRenamed("node", "doc_id")
          .join(docs.select("doc_id", "n_chars"), "doc_id"))
@@ -785,24 +738,20 @@ WHERE greatest(cont_a_in_b, cont_b_in_a) >= 0.7
          "all-pairs; the exchanges carry hashes, not text. The "
          "oracle replays the identical md5 shingle pipeline, so "
          "candidate membership, both ratios (two raw IEEE "
-         "divisions of exact ints), and the tag hash-match. Audit note (accepted 4-scan flag): the containment verify needs both sides' raw token sets; pruned re-scans beat materializing tokenized text corpus-wide.")
+         "divisions of exact ints), and the tag hash-match. Audit note "
+         "(accepted 4-scan flag): the candidates cache only the band "
+         "buckets and the verify's two ends re-read a column-pruned "
+         "projection of documents; caching the shingle hashes too "
+         "puts four reads of that cache in the plan, one job each.")
 def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import (minhash_lsh_candidates, shingle_hashes,
-                                   word_shingles)
     docs = load_table(spark, sf_dir, "documents")
-    cand = minhash_lsh_candidates(docs, id_col="doc_id", text_col="text")
-    sh = (docs.select(F.col("doc_id").alias("_id"),
-                      word_shingles("text", 3).alias("_shingles"))
-          .withColumn("_hsh", shingle_hashes("_shingles"))
-          .select("_id", "_hsh"))
-    j = (cand
-         .join(sh.select(F.col("_id").alias("doc_a"),
-                         F.col("_hsh").alias("_sh_a")), "doc_a")
-         .join(sh.select(F.col("_id").alias("doc_b"),
-                         F.col("_hsh").alias("_sh_b")), "doc_b"))
-    inter = F.size(F.array_intersect("_sh_a", "_sh_b")).cast("double")
-    ca = (inter / F.size("_sh_a")).alias("cont_a_in_b")
-    cb = (inter / F.size("_sh_b")).alias("cont_b_in_a")
+    j = join_ends(minhash_lsh_candidates(docs, id_col="doc_id",
+                                         text_col="text"),
+                  shingle_hash_rows(docs, id_col="doc_id", text_col="text"),
+                  "_id", "_hsh")
+    inter = F.size(F.array_intersect("_hsh_a", "_hsh_b")).cast("double")
+    ca = (inter / F.size("_hsh_a")).alias("cont_a_in_b")
+    cb = (inter / F.size("_hsh_b")).alias("cont_b_in_a")
     out = j.select("doc_a", "doc_b", ca, cb)
     return (out.filter(F.greatest("cont_a_in_b", "cont_b_in_a") >= 0.7)
             .withColumn("direction",
@@ -872,7 +821,7 @@ def dedup_bow_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("dedup_minhash_est_quality", oracle=f"""
 WITH {sql_minhash_cand_ctes()},
 hsd AS (
-  SELECT doc_id, list_distinct(hsh) AS hs FROM hs0
+  SELECT doc_id, list_distinct(hsh) AS hs FROM hs
 ), pairsig AS (
   SELECT c.doc_a, c.doc_b, sa.sig AS sig_a, sb.sig AS sig_b,
          ha.hs AS hs_a, hb.hs AS hs_b
@@ -912,30 +861,21 @@ FROM pairsig
          "all pairs); the exact verify is the same O(candidates x "
          "shingle-set) the production pipeline already pays; the "
          "per-doc signature/shingle frames join candidates on doc "
-         "id. Audit note (accepted 4-scan flag): the estimate arm and the exact-Jaccard arm each need the raw token sets per pair side — a checkpoint would materialize full shingle sets corpus-wide, dwarfing the pruned re-scans.")
+         "id, both derived from the same shingle hashes the index "
+         "signs. Audit note (accepted 4-scan flag): as "
+         "dedup_containment, the candidates cache only the band "
+         "buckets and the verify's two ends re-read a column-pruned "
+         "projection of documents.")
 def dedup_minhash_est_quality(spark: SparkSession,
                               sf_dir: str) -> DataFrame:
-    from ..operators.dedup import (_shingle_hashes_sql,
-                                   _signature_sql,
-                                   minhash_lsh_candidates,
-                                   word_shingles)
+    from ..operators.dedup import _signature_sql
     docs = load_table(spark, sf_dir, "documents")
-    cand = minhash_lsh_candidates(docs, id_col="doc_id",
-                                  text_col="text")
-    per = (docs.select(
-        F.col("doc_id").alias("_id"),
-        word_shingles("text", 3).alias("_sh"))
-        .withColumn("_hsh", F.expr(_shingle_hashes_sql("_sh")))
-        .select("_id",
-                F.expr(_signature_sql("_hsh", 16)).alias("sig"),
-                F.expr("array_distinct(_hsh)").alias("hs")))
-    ps = (cand
-          .join(per.select(F.col("_id").alias("doc_a"),
-                           F.col("sig").alias("sig_a"),
-                           F.col("hs").alias("hs_a")), "doc_a")
-          .join(per.select(F.col("_id").alias("doc_b"),
-                           F.col("sig").alias("sig_b"),
-                           F.col("hs").alias("hs_b")), "doc_b"))
+    per = (shingle_hash_rows(docs, id_col="doc_id", text_col="text")
+           .select("_id", F.expr(_signature_sql("_hsh")).alias("sig"),
+                   F.array_distinct("_hsh").alias("hs")))
+    ps = join_ends(minhash_lsh_candidates(docs, id_col="doc_id",
+                                          text_col="text"),
+                   per, "_id", "sig", "hs")
     est = ("1000 * size(filter(sequence(1, 16), "
            "i -> element_at(sig_a, i) = element_at(sig_b, i))) div 16")
     inter = "size(array_intersect(hs_a, hs_b))"

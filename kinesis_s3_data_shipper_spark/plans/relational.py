@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from ..functions.decimal_safe import dsum, davg, sql_dsum, sql_davg
 from ..operators.checkpoint import truncated_checkpoint
+from ..operators.dedup import BLOOM_M, bloom_pos_duck, bloom_pos_spark
 from ..sources.tables import load_table
 from .base import register
 
@@ -2035,33 +2036,17 @@ def agg_distinct_twophase(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.sum("_c").cast("long").alias("n_events")))
 
 
-#: Runtime-filter bloom: m bits, k=3 md5-derived positions — same
-#: portable hash family as dedup_bloom_membership, over the join key.
-_JBLOOM_M = 8192
-
-
-def _jbloom_pos_spark(col: str) -> list[str]:
-    return [f"CAST(conv(substring(md5(CAST({col} AS STRING)),"
-            f" {j * 8 + 1}, 8), 16, 10) AS BIGINT) % {_JBLOOM_M}"
-            for j in range(3)]
-
-
-def _jbloom_pos_duck(col: str) -> list[str]:
-    return [f"CAST('0x' || substr(md5(CAST({col} AS VARCHAR)),"
-            f" {j * 8 + 1}, 8) AS BIGINT) % {_JBLOOM_M}"
-            for j in range(3)]
-
-
 @register("join_bloom_prefilter", oracle=f"""
 WITH bld AS (
   SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING'
 ), pos AS (
-  SELECT DISTINCT unnest([{",".join(_jbloom_pos_duck('c_custkey'))}]) AS p
+  SELECT DISTINCT unnest([{",".join(
+      bloom_pos_duck('CAST(c_custkey AS VARCHAR)'))}]) AS p
   FROM bld
 ), passed AS (
   SELECT o.* FROM orders o
   WHERE {" AND ".join(f"({e}) IN (SELECT p FROM pos)"
-                      for e in _jbloom_pos_duck('o.o_custkey'))}
+                      for e in bloom_pos_duck('CAST(o.o_custkey AS VARCHAR)'))}
 ), np AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_bloom_pass FROM passed)
 SELECT o.o_orderpriority AS priority,
        CAST(COUNT(*) AS BIGINT) AS n_orders,
@@ -2093,7 +2078,8 @@ def join_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bounded collect, <= min(3*|dim|, m) ints — at scale this is the
     # runtime-filter build job every engine pays).
     pos_rows = (bld.select(F.explode(F.array(
-        *[F.expr(e) for e in _jbloom_pos_spark("c_custkey")])).alias("p"))
+        *[F.expr(e) for e in bloom_pos_spark("CAST(c_custkey AS STRING)")]))
+        .alias("p"))
         .distinct().collect())
     bits = {int(r.p) for r in pos_rows}
     # Probe: pure expression against the BIT-PACKED bitmap (m/64 long
@@ -2103,7 +2089,7 @@ def join_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     # probe would cost O(position) — measured 10x this filter's whole
     # runtime at m=8192. No join, no shuffle: the filter evaluates
     # inside the fact scan stage.
-    words = [0] * (_JBLOOM_M // 64)
+    words = [0] * (BLOOM_M // 64)
     for b in bits:
         words[b // 64] |= 1 << (b % 64)
     arr = "array(" + ",".join(
@@ -2111,7 +2097,7 @@ def join_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe = [F.expr(f"(shiftright(element_at({arr},"
                     f" CAST(({e}) DIV 64 AS INT) + 1),"
                     f" CAST(({e}) % 64 AS INT)) & 1) = 1")
-             for e in _jbloom_pos_spark("o_custkey")]
+             for e in bloom_pos_spark("CAST(o_custkey AS STRING)")]
     orders = load_table(spark, sf_dir, "orders")
     passed = orders.filter(probe[0] & probe[1] & probe[2])
     np_ = passed.agg(F.count("*").cast("long").alias("n_bloom_pass"))

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.checkpoint import truncated_checkpoint
+from ..operators.dedup import perm_params
 from ..sources.tables import load_table
 from .base import register
 
@@ -707,28 +708,19 @@ _POIS_W = ("CASE WHEN {u} < 368 THEN 0 WHEN {u} < 736 THEN 1 "
 _BOOT_B = 32
 
 
-def _boot_perm_params(num: int = _BOOT_B) -> list[tuple[int, int]]:
-    """Deterministic (a_j, b_j) for the replicate-draw family
-    u_j(h) = ((a_j*h32 + b_j) mod 4294967311) mod 1000 — md5-derived
-    from the index alone (the minhash_perm_params convention), so one
-    md5 per ROW serves all replicates instead of one md5 per
-    (row, replicate): the exact num_hashes-fold hashing saving
-    operators.dedup documents for signatures. a_j odd, below 2^28."""
-    import hashlib
-
-    def _c(tag: str, j: int) -> int:
-        return int(hashlib.md5(f"bootstrap-{tag}-{j}".encode())
-                   .hexdigest()[:7], 16)
-
-    return [(_c("a", j) | 1, _c("b", j)) for j in range(num)]
-
-
-_BOOT_A_SQL = "[" + ", ".join(str(a) for a, _ in _boot_perm_params()) + "]"
-_BOOT_B_SQL = "[" + ", ".join(str(b) for _, b in _boot_perm_params()) + "]"
+#: Deterministic (a_j, b_j) for the replicate-draw family
+#: u_j(h) = ((a_j*h32 + b_j) mod 4294967311) mod 1000 — the minhash
+#: permutation convention with its own tag, so one md5 per ROW serves
+#: all replicates instead of one md5 per (row, replicate): the exact
+#: num_hashes-fold hashing saving operators.dedup documents for
+#: signatures.
+_BOOT_PARAMS = perm_params("bootstrap", _BOOT_B)
+_BOOT_A_SQL = "[" + ", ".join(str(a) for a, _ in _BOOT_PARAMS) + "]"
+_BOOT_B_SQL = "[" + ", ".join(str(b) for _, b in _BOOT_PARAMS) + "]"
 _BOOT_A_SPARK = ("array(" + ", ".join(
-    f"{a}L" for a, _ in _boot_perm_params()) + ")")
+    f"{a}L" for a, _ in _BOOT_PARAMS) + ")")
 _BOOT_B_SPARK = ("array(" + ", ".join(
-    f"{b}L" for _, b in _boot_perm_params()) + ")")
+    f"{b}L" for _, b in _BOOT_PARAMS) + ")")
 
 
 @register("sample_poisson_bootstrap_mean", oracle=f"""

@@ -10,7 +10,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.checkpoint import truncated_checkpoint
-from ..operators.dedup import minhash_lsh_candidates
+from ..operators.dedup import join_ends, minhash_lsh_candidates
 from ..sources.tables import load_table
 from ..session import staging_dir
 from .base import register
@@ -416,12 +416,8 @@ def text_fuzzy_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     en = docs.filter(F.col("lang") == "en")
     cand = minhash_lsh_candidates(en, id_col="doc_id", text_col="text")
-    ta = en.select(F.col("doc_id").alias("doc_a"),
-                   F.col("text").alias("_text_a"))
-    tb = en.select(F.col("doc_id").alias("doc_b"),
-                   F.col("text").alias("_text_b"))
-    dist = F.levenshtein("_text_a", "_text_b")
-    return (cand.join(ta, "doc_a").join(tb, "doc_b")
+    dist = F.levenshtein("text_a", "text_b")
+    return (join_ends(cand, en, "doc_id", "text")
             .filter(dist <= 10)
             .select("doc_a", "doc_b", dist.cast("long").alias("dist")))
 

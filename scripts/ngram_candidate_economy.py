@@ -1,18 +1,19 @@
 #!/usr/bin/env python3
-"""Candidate-economy record for the n-gram/set-similarity family
-(r12 verdict ask #2): run the three PPJoin-backed registered shapes at
-sf0.01 and sf0.1 with the operators' diag taps attached, and commit
-the MEASURED candidate-pair / verify-pair counts, so the family's
-10x-step ratios are explained by recorded numbers instead of argued
-from the plan shape.
+"""Candidate-economy record for the n-gram/set-similarity family: run
+the three PPJoin-backed registered shapes at sf0.01 and sf0.1 with the
+operators' diag taps attached, and commit the MEASURED candidate-pair /
+verify-pair counts, so the family's 10x-step ratios are explained by
+recorded numbers instead of argued from the plan shape.
 
 Counts recorded per (query, sf):
 - docs / nonnull_docs / reps — corpus size, pipeline-eligible size,
   and collapsed-representative count (the PPJoin's true input);
-- cand_rows — candidate-join output rows surviving PPJoin's
-  length+positional filters BEFORE distinct (the shuffle volume);
-- cand_pairs — distinct candidate pairs (exactly what the exact
-  verify touches);
+- cand_rows — candidate-join output rows surviving PPJoin's length
+  filter, the input of the per-pair positional-bound aggregation;
+- cand_pairs — candidate pairs passing the positional bound (exactly
+  what the verify touches);
+- hash_survivors — n-gram forms only: pairs passing the hashed
+  prefilter (the exact string verify's input);
 - qualifying_rep_pairs — rep pairs passing the exact Jaccard
   threshold (groups form records sym_rows == 2x this);
 - compute_sec — build + fetch-free full-value aggregate over the
@@ -115,8 +116,9 @@ def main() -> None:
                      "aggregate with no driver fetch, cache cleared "
                      "before; counts collected from the same "
                      "execution's row flow"),
-        "taps": ["cand_rows (pre-distinct join output)",
-                 "cand_pairs (distinct, = exact-verify input)",
+        "taps": ["cand_rows (length-filtered join rows)",
+                 "cand_pairs (positional-bound pairs, = verify input)",
+                 "hash_survivors (n-gram hashed prefilter survivors)",
                  "qualifying_rep_pairs (post-threshold)"],
     }}
     for sf_dir in args.sf_dirs:

@@ -81,3 +81,34 @@ def test_per_query_top_k_ranked_only_in_top_k_per_query():
 
     assert _call_sites(query_window) == [
         ("operators/similarity.py", "top_k_per_query")]
+
+
+def test_near_dup_fronts_built_once():
+    """The near-dup family builds each MinHash signature in
+    ``minhash_lsh_index``, pairs band buckets in ``band_probe``, and
+    runs the PPJoin exact-duplicate collapse and prefix rank in
+    ``_ppjoin_reps`` — one site each, so the near-dup operators share
+    one candidate path and cannot drift apart."""
+    dedup = "operators/dedup.py"
+
+    def named(name):
+        return lambda call: (isinstance(call.func, ast.Name)
+                             and call.func.id == name)
+
+    def spark_fn(name):
+        return lambda call: (_method(name)(call)
+                             and isinstance(call.func.value, ast.Name)
+                             and call.func.value.id == "F")
+
+    def bands_explode(call):
+        return (_method("posexplode")(call) and len(call.args) == 1
+                and isinstance(call.args[0], ast.Constant)
+                and call.args[0].value == "_bands")
+
+    def in_dedup(is_match):
+        return [s for s in _call_sites(is_match) if s[0] == dedup]
+
+    assert _call_sites(named("lsh_bands")) == [(dedup, "minhash_lsh_index")]
+    assert _call_sites(bands_explode) == [(dedup, "band_probe")]
+    assert in_dedup(spark_fn("row_number")) == [(dedup, "_ppjoin_reps")]
+    assert in_dedup(spark_fn("md5")) == [(dedup, "_ppjoin_reps")]

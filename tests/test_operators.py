@@ -123,13 +123,11 @@ def test_lsh_index_parquet_roundtrip_incremental(spark, tmp_path, sf_small):
                                   text_col="text")
     inc = {(r.doc_a, r.doc_b): r.jaccard
            for r in minhash_lsh_pairs_incremental(
-               stored, delta_idx, threshold=0.5).collect()}
+               stored, delta_idx).collect()}
 
     batch = {(r.doc_a, r.doc_b): r.jaccard
              for r in minhash_lsh_pairs(
-                 docs, id_col="doc_id", text_col="text",
-                 shingle_k=3, num_hashes=16, num_bands=4,
-                 threshold=0.5).collect()
+                 docs, id_col="doc_id", text_col="text").collect()
              if r.doc_a % 5 == 0 or r.doc_b % 5 == 0}
     assert inc == batch
 

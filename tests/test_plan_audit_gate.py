@@ -34,11 +34,11 @@ THRESHOLD = 4
 ACCEPTED_SCANS: dict[str, dict[str, int]] = {
     "dedup_minhash_lsh": {"documents": 4},
     "dedup_minhash_est_quality": {"documents": 4},
-    # 18 textual after the r10c collapse (6 before): the cached
-    # member-map scan reprints under each InMemoryTableScan — live
-    # scans are members (once, then cached) + the toks re-derivations
-    # (prefix pa/pb, verify ta/tb, sizes), each column-pruned.
-    "dedup_setsim_prefix": {"documents": 18},
+    # the cached member-map scan reprints under each
+    # InMemoryTableScan — live scans are members (once, then cached)
+    # + the rep-text re-derivations (prefix pa/pb, verify ta/tb,
+    # sizes), each column-pruned.
+    "dedup_setsim_prefix": {"documents": 14},
     # 16 TEXTUAL (12 in r11-r12), 7 physical (was 5): the r13
     # two-stage verify replaced the ga/gb string-gram sides with
     # ha/hb hashed-gram prefilter sides PLUS sa/sb survivor-text
@@ -70,7 +70,7 @@ ACCEPTED_SCANS: dict[str, dict[str, int]] = {
 ACCEPTED_SCANS_PHYSICAL: dict[str, dict[str, int]] = {
     "dedup_minhash_lsh": {"documents": 1},
     "dedup_minhash_est_quality": {"documents": 3},
-    "dedup_setsim_prefix": {"documents": 8},
+    "dedup_setsim_prefix": {"documents": 6},
     # 5 -> 7 / 10 -> 14 in r13: the two-stage verify's hashed
     # prefilter (ha/hb) and survivor-text (sa/sb) sides are four
     # rep-sized derivations where ga/gb were two — the re-scan-beats-
