@@ -15,17 +15,23 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def stream_prefix(col: Column | str) -> Column:
-    """First two '/'-segments of a path, re-joined with '/'.
+#: Spark SQL spelling of the derivation: exactly
+#: ``'/'.join(s.split('/')[0:2])`` including empty-segment edge cases,
+#: because Spark's ``slice`` past the array end truncates just like
+#: Python list slicing, and ``array_join`` keeps empty strings (unlike
+#: ``concat_ws``, which would drop them — wrong for a trailing-slash
+#: input like ``'a/'``). A SQL string, so a whole projection can be one
+#: ``selectExpr``: one driver call, where Column objects cost one each.
+SPARK_SQL_STREAM_PREFIX = "array_join(slice(split({col}, '/', -1), 1, 2), '/')"
 
-    Exactly ``'/'.join(s.split('/')[0:2])`` including empty-segment
-    edge cases, because Spark's ``slice`` past the array end truncates
-    just like Python list slicing, and ``array_join`` keeps empty
-    strings (unlike ``concat_ws``, which would drop them — wrong for
-    a trailing-slash input like ``'a/'``).
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    return F.array_join(F.slice(F.split(c, "/", -1), 1, 2), "/")
+
+def spark_sql_stream_prefix(col_expr: str) -> str:
+    return SPARK_SQL_STREAM_PREFIX.format(col=col_expr)
+
+
+def stream_prefix(col_expr: str) -> Column:
+    """First two '/'-segments of a path, re-joined with '/'."""
+    return F.expr(spark_sql_stream_prefix(col_expr))
 
 
 #: DuckDB spelling of the same derivation (kept adjacent on purpose).

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.strings import stream_prefix
+from ..functions.strings import spark_sql_stream_prefix
 from .fixture import BLOCK_SCHEMA_DDL
 
 #: PERMISSIVE parse with quarantine: malformed blocks (e.g. the marker-
@@ -28,6 +28,7 @@ _PAYLOAD_EVENTS = (
     "'timestamp', e.timestamp, 'attributes', named_struct("
     "'id', e.id, 'message', e.message, 'file', file,"
     " 'logStream', logStream))))")
+_STREAM_PREFIX = spark_sql_stream_prefix("logStream")
 
 
 def parse_blocks(split_df: DataFrame) -> DataFrame:
@@ -42,28 +43,25 @@ def parse_blocks(split_df: DataFrame) -> DataFrame:
 
 def _valid(parsed: DataFrame) -> DataFrame:
     """The blocks that parsed and carry a logEvents array."""
-    return parsed.filter(F.col("_corrupt").isNull()
-                         & F.col("logEvents").isNotNull())
+    return parsed.filter("_corrupt IS NULL AND logEvents IS NOT NULL")
 
 
 def flatten_events(parsed: DataFrame) -> DataFrame:
     """Valid blocks → one row per log event, enriched like the
     reference (K:136-148): provenance `file`, copied-down `logStream`,
-    tags `logStreamPrefix` + `logGroup`, epoch-ms → TimestampType."""
+    tags `logStreamPrefix` + `logGroup`, epoch-ms → TimestampType.
+    SQL-string projections: each is one driver call, not one per
+    Column."""
     return (
-        _valid(parsed).select(
-            "path", "block_index", "logGroup", "logStream", "owner",
-            F.explode("logEvents").alias("event"))
-        .select(
-            F.col("path").alias("file"),
-            "block_index",
-            F.col("logGroup").alias("logGroup"),
-            F.col("logStream").alias("logStream"),
-            stream_prefix("logStream").alias("logStreamPrefix"),
-            F.col("event.id").alias("event_id"),
-            F.col("event.timestamp").alias("timestamp_ms"),
-            F.timestamp_millis(F.col("event.timestamp")).alias("ts"),
-            F.col("event.message").alias("message"))
+        _valid(parsed).selectExpr(
+            "path", "block_index", "logGroup", "logStream",
+            "explode(logEvents) AS event")
+        .selectExpr(
+            "path AS file", "block_index", "logGroup", "logStream",
+            f"{_STREAM_PREFIX} AS logStreamPrefix",
+            "event.id AS event_id", "event.timestamp AS timestamp_ms",
+            "timestamp_millis(event.timestamp) AS ts",
+            "event.message AS message")
     )
 
 
@@ -79,7 +77,7 @@ def _assemble(blocks: DataFrame, batch_size: int) -> DataFrame:
     if batch_size < 1:
         raise ValueError(f"batch_size must be at least 1, not {batch_size}")
     # An empty logEvents would make sequence(0, -1) count down: skip it.
-    nonempty = blocks.filter(F.size("logEvents") > 0).selectExpr(
+    nonempty = blocks.filter("size(logEvents) > 0").selectExpr(
         "path AS file", "block_index", "logGroup", "logStream",
         "sort_array(logEvents) AS sorted")
     # posexplode is a Generate, so `sorted` is computed once per block,
@@ -89,14 +87,13 @@ def _assemble(blocks: DataFrame, batch_size: int) -> DataFrame:
         f"posexplode(transform(sequence(0, (size(sorted) - 1) div "
         f"{batch_size}), i -> slice(sorted, i * {batch_size} + 1, "
         f"{batch_size}))) AS (batch_id, chunk)")
-    return chunks.select(
+    return chunks.selectExpr(
         "file", "block_index", "batch_id",
-        F.to_json(F.struct(
-            F.struct(
-                stream_prefix("logStream").alias("logStreamPrefix"),
-                F.col("logGroup").alias("logGroup")).alias("tags"),
-            F.expr(_PAYLOAD_EVENTS).alias("events"))).alias("payload"),
-        F.size("chunk").alias("n_events"))
+        "to_json(named_struct("
+        f"'tags', named_struct('logStreamPrefix', {_STREAM_PREFIX},"
+        " 'logGroup', logGroup),"
+        f" 'events', {_PAYLOAD_EVENTS})) AS payload",
+        "size(chunk) AS n_events")
 
 
 def block_payloads(parsed: DataFrame, batch_size: int = 5000) -> DataFrame:

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.strings import stream_prefix, sql_stream_prefix
+from ..functions.strings import spark_sql_stream_prefix, sql_stream_prefix
 from ..ingest.fixture import fixture_files, ground_truth_events
 from ..ingest.pipeline import flatten_events, parse_blocks
 from ..ingest.splitter import split_blocks
@@ -151,10 +151,8 @@ FROM orders
          "against the equivalent list-slice SQL.")
 def tag_prefix_derivation(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
-    synth = F.concat_ws(
-        "/", "o_orderstatus", "o_orderpriority",
-        F.col("o_orderkey").cast("string"))
-    return orders.select(
-        "o_orderkey",
-        synth.alias("synth_stream"),
-        stream_prefix(synth).alias("stream_prefix"))
+    synth = ("concat_ws('/', o_orderstatus, o_orderpriority,"
+             " CAST(o_orderkey AS STRING))")
+    return orders.selectExpr(
+        "o_orderkey", f"{synth} AS synth_stream",
+        f"{spark_sql_stream_prefix(synth)} AS stream_prefix")

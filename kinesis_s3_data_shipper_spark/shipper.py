@@ -18,9 +18,13 @@ like the reference's pp_args (K:236-245).
 Batch mode makes one pass over exactly the worklist, as the reference
 downloads and parses each unprocessed file once (K:187-216, K:82-174):
 
-1. list ``--input`` (the path column only, so no content is read),
-   drop the keys already in ``--processed-dir`` and load exactly the
-   rest by explicit, glob-escaped path;
+1. list ``--input`` (each file's path and length, so no content is
+   read), drop the keys already in ``--processed-dir`` (read with the
+   record's known schema, so no job infers it) and load exactly the
+   rest by explicit, glob-escaped path; a worklist smaller than one
+   :data:`SHIP_TASK_FLOOR_BYTES` per core is coalesced to one
+   partition per floor (:func:`ship_partitions`), so a cron tick of a
+   few small files runs a task or two per stage, not one per core;
 2. :func:`ship` them: split and parse once and write the flattened
    events; with ``--payloads`` the parsed blocks are cached, and a
    second job assembles each block's payloads in place (no shuffle),
@@ -38,6 +42,7 @@ from __future__ import annotations
 
 import argparse
 import json
+import math
 import re
 import sys
 
@@ -52,6 +57,15 @@ from .session import get_session
 REDACT_KEYS = ("token", "secret", "password", "key")
 #: Characters Hadoop expands in a path glob (GlobPattern).
 _GLOB_CHARS = re.compile(r"([\\\[\]{}*?])")
+#: The schema record_processed writes: read with it, the record needs
+#: no schema-inference job.
+PROCESSED_SCHEMA = "path STRING"
+#: Bytes on disk per ship task of a small worklist. On a 4-core VM a
+#: ship task costs about 150 ms fixed and each MB of compressed input
+#: adds about 60 ms, so below this floor a task's fixed cost outweighs
+#: its work. A 3.3 MB backfill comes to 4 floors, not fewer than 4
+#: cores, so it keeps the scan's own 4 tasks.
+SHIP_TASK_FLOOR_BYTES = 1 << 20
 
 
 def redacted(args: dict) -> dict:
@@ -116,12 +130,26 @@ def _read_processed(spark, processed_dir: str) -> DataFrame | None:
     re-append every previously-shipped file."""
     from pyspark.errors import AnalysisException
     try:
-        return spark.read.parquet(processed_dir)
+        processed = spark.read.schema(PROCESSED_SCHEMA).parquet(
+            processed_dir)
     except AnalysisException as e:
         msg = str(e)
         if "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
             return None
         raise
+    # The known schema reads a file without a path column as null
+    # keys, which would skip nothing: fail in the same scan instead.
+    return processed.select(F.coalesce("path", F.raise_error(F.lit(
+        f"{processed_dir} holds a record without a path"))).alias("path"))
+
+
+def ship_partitions(total_bytes: int, cores: int) -> int | None:
+    """The partitions to coalesce a worklist of ``total_bytes`` on disk
+    to: one per :data:`SHIP_TASK_FLOOR_BYTES`, at least one. None, so
+    the scan keeps its own partitioning, when that is not fewer than
+    ``cores``."""
+    n = max(1, math.ceil(total_bytes / SHIP_TASK_FLOOR_BYTES))
+    return n if n < cores else None
 
 
 def glob_escape(path: str) -> str:
@@ -148,21 +176,22 @@ def _qualified_prefix(spark, ns) -> str:
     return qualified
 
 
-def _worklist(spark, ns) -> list[str]:
-    """Sorted keys of the input files not yet processed.
+def _worklist(spark, ns) -> list[tuple[str, int]]:
+    """Sorted keys, with their lengths, of the input files not yet
+    processed.
 
     Materialized ONCE (sorted: the reference's lexicographic work-list
     order, K:292) and the whole run is pinned to this snapshot: the
     write and the processed-record must see the SAME file set, or a
     file landing between two lazy re-listings gets recorded as
     processed without its events ever being written. Driver memory:
-    path strings only, the same order of magnitude Spark's own
-    InMemoryFileIndex already holds for this listing."""
-    # Only the path column: binaryFile reads no content for it.
+    a path and a length per file, the same order of magnitude Spark's
+    own InMemoryFileIndex already holds for this listing."""
+    # No content column: binaryFile reads no content for these.
     listing = (spark.read.format("binaryFile")
                .option("recursiveFileLookup", "true")
                .load(ns.input)
-               .select("path"))
+               .select("path", "length"))
     if ns.prefix:
         listing = listing.filter(
             F.col("path").startswith(_qualified_prefix(spark, ns)))
@@ -170,7 +199,7 @@ def _worklist(spark, ns) -> list[str]:
         processed = _read_processed(spark, ns.processed_dir)
         if processed is not None:
             listing = filter_unprocessed(listing, processed, key_col="path")
-    return sorted(r.path for r in listing.collect())
+    return sorted((r.path, r.length) for r in listing.collect())
 
 
 def _write(df: DataFrame, path: str, epoch: int | None) -> None:
@@ -246,7 +275,12 @@ def run_batch(spark, ns) -> int:
     # The worklist's files by explicit path: history bytes are never
     # read, and a file gone since the listing fails the load.
     raw = spark.read.format("binaryFile").load(
-        [glob_escape(p) for p in worklist])
+        [glob_escape(p) for p, _ in worklist])
+    n = ship_partitions(sum(length for _, length in worklist),
+                        spark.sparkContext.defaultParallelism)
+    if n is not None:
+        # Narrow: no shuffle and no job.
+        raw = raw.coalesce(n)
     ship(raw, ns)
     if ns.processed_dir:
         # The static snapshot — NOT a re-listing — becomes the record:

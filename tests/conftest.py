@@ -39,6 +39,26 @@ def persisted_since(spark):
     new.update(set(jsc.getPersistentRDDs().keySet().toArray()) - before)
 
 
+@contextlib.contextmanager
+def jobs_and_tasks(spark, group: str):
+    """Run the block's Spark jobs in job group ``group``. When the block
+    exits, the yielded list holds one entry per job of the group, in
+    job-id order: the task count of each of its stages, in stage-id
+    order."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    jobs: list[list[int]] = []
+    try:
+        yield jobs
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    jobs.extend([tracker.getStageInfo(s).numTasks
+                 for s in sorted(tracker.getJobInfo(j).stageIds)]
+                for j in sorted(tracker.getJobIdsForGroup(group)))
+
+
 @pytest.fixture(scope="session")
 def sf_small():
     return SF_SMALL

@@ -20,6 +20,8 @@ from kinesis_s3_data_shipper_spark.ingest.splitter import (
     SPLIT_SCHEMA, gunzip_recursive, split_blocks, split_marker_blocks)
 from kinesis_s3_data_shipper_spark.plans.ingest import raw_fixture_df
 
+from .conftest import jobs_and_tasks
+
 
 # ---------------------------------------------------------- pure-python unit
 
@@ -281,16 +283,11 @@ def test_send_payloads_posts_every_row_in_one_job(spark, http_sink):
     payloads = spark.createDataFrame(
         rows, "file string, block_index int, batch_id int, payload string,"
               " n_events int")
-    sc = spark.sparkContext
-    group = "test_send_payloads_posts_every_row_in_one_job"
-    sc.setJobGroup(group, group)
-    try:
+    with jobs_and_tasks(
+            spark, "test_send_payloads_posts_every_row_in_one_job") as jobs:
         sent = send_payloads(payloads, http_transport_factory(http_sink.url))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
     assert sent == 5
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert len(jobs) == 1
     assert sorted(h["X-Idempotency-Key"] for _, h, _ in http_sink.received) \
         == sorted(payload_key(r[3]) for r in rows)
 

@@ -23,9 +23,10 @@ from kinesis_s3_data_shipper_spark.ingest.fixture import (
     fixture_files, ground_truth_events, make_raw_file)
 from kinesis_s3_data_shipper_spark.ingest.tracking import (
     filter_unprocessed, record_processed)
-from kinesis_s3_data_shipper_spark.shipper import main, redacted
+from kinesis_s3_data_shipper_spark.shipper import (
+    SHIP_TASK_FLOOR_BYTES, main, redacted, ship_partitions)
 
-from .conftest import persisted_since
+from .conftest import jobs_and_tasks, persisted_since
 
 
 @pytest.fixture()
@@ -269,6 +270,61 @@ def test_processed_dir_read_errors_are_fatal(spark, landing, tmp_path):
               "--processed-dir", str(processed)])
 
 
+def test_processed_dir_without_path_column_is_fatal(spark, landing,
+                                                    tmp_path):
+    """A processed dir whose parquet has no ``path`` column (a foreign
+    table) reads as null keys under the record's schema; the run must
+    fail on them, not skip nothing, and record nothing."""
+    processed = str(tmp_path / "processed")
+    spark.createDataFrame([("file:/elsewhere/a.log",)],
+                          "key string").write.parquet(processed)
+    before = sorted(os.listdir(processed))
+    out = str(tmp_path / "o")
+    with pytest.raises(Exception, match="holds a record without a path"):
+        main(["--input", landing, "--output", out,
+              "--processed-dir", processed])
+    assert sorted(os.listdir(processed)) == before
+    assert not os.path.exists(out)
+
+
+def test_empty_processed_dir_is_a_first_run(spark, landing, tmp_path):
+    """An existing but empty processed dir holds no keys: the run ships
+    every file and records every key, as a first run does."""
+    processed = tmp_path / "processed"
+    processed.mkdir()
+    out = str(tmp_path / "o")
+    assert main(["--input", landing, "--output", out,
+                 "--processed-dir", str(processed)]) == 0
+    keys = sorted(r.path for r in spark.read.format("binaryFile")
+                  .load(landing).select("path").collect())
+    recorded = sorted(r.path for r in
+                      spark.read.parquet(str(processed)).collect())
+    assert recorded == keys
+    assert set(events_per_file(spark, out)) == {
+        f"file:{landing}/{ev['file'].replace('/', '__')}"
+        for ev in ground_truth_events()}
+
+
+@pytest.mark.parametrize("total,cores,want", [
+    (13_000, 4, 1),                  # a cron tick of 8 small files
+    (3_300_000, 4, None),            # a backfill's 3.3 MB keeps 4 tasks
+    (0, 4, 1),                       # only empty files
+    (2 * SHIP_TASK_FLOOR_BYTES + 1, 8, 3),
+])
+def test_ship_partitions(total, cores, want):
+    assert ship_partitions(total, cores) == want
+
+
+@pytest.mark.parametrize("cores", [1, 2, 4, 8, 64])
+def test_ship_partitions_leaves_large_worklists(cores):
+    """At or above one floor per core the scan keeps its own
+    partitioning."""
+    for total in (cores * SHIP_TASK_FLOOR_BYTES,
+                  cores * SHIP_TASK_FLOOR_BYTES + 1,
+                  100 * cores * SHIP_TASK_FLOOR_BYTES):
+        assert ship_partitions(total, cores) is None
+
+
 def test_stream_requires_checkpoint(landing, tmp_path):
     assert main(["--input", landing, "--output", str(tmp_path / "o"),
                  "--stream"]) == 2
@@ -455,7 +511,7 @@ def test_batch_vanished_file_fails_unrecorded(spark, landing, tmp_path,
 
     def list_then_delete(spark, ns):
         worklist = listed(spark, ns)
-        os.remove(worklist[0][len("file:"):])
+        os.remove(worklist[0][0][len("file:"):])
         return worklist
 
     monkeypatch.setattr(shipper, "_worklist", list_then_delete)
@@ -507,30 +563,27 @@ def test_batch_post_job_count(spark, landing, tmp_path, http_sink):
     of parsed blocks; and one job that assembles the payloads block by
     block, POSTs them and writes them. A shuffle in payload assembly
     (AQE runs each shuffle stage as a job) or a send job of its own
-    would add jobs."""
-    sc = spark.sparkContext
-    group = "test_batch_post_job_count"
-    sc.setJobGroup(group, group)
-    try:
+    would add jobs. The fixture's 74 files hold well under one
+    ``SHIP_TASK_FLOOR_BYTES``, so each ship stage runs one task."""
+    with jobs_and_tasks(spark, "test_batch_post_job_count") as jobs:
         assert main(["--input", landing, "--output", str(tmp_path / "ev"),
                      "--payloads", "--post-url", http_sink.url,
                      "--batch-size", "40"]) == 0
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 4
+    assert len(jobs) == 4
+    assert jobs[2:] == [[1], [1]]
     assert http_sink.received
 
 
 def test_batch_processed_dir_job_count(spark, landing, tmp_path):
     """Structural guard on tracking: the Spark jobs of a
     ``--processed-dir`` re-run that finds 2 new files beside the 74 the
-    first run recorded. They are the processed dir's schema read; the
-    listing's anti-join against the recorded keys, two jobs (the
-    planner broadcasts the small key table, then the listing is
-    collected); the events write; and the record. A ``distinct()`` on
-    either side of tracking would add a job (AQE runs each shuffle
-    stage as a job)."""
+    first run recorded. They are the listing's anti-join against the
+    recorded keys, two jobs (the planner broadcasts the small key
+    table, then the listing is collected); the events write; and the
+    record. A ``distinct()`` on either side of tracking would add a job
+    (AQE runs each shuffle stage as a job). The 2 new files are packed
+    into one partition, so the events write runs one task, and the run
+    leaves the session's conf as it found it."""
     out = str(tmp_path / "ev")
     args = ["--input", landing, "--output", out,
             "--processed-dir", str(tmp_path / "processed")]
@@ -539,15 +592,13 @@ def test_batch_processed_dir_job_count(spark, landing, tmp_path):
         with open(os.path.join(landing, name), "wb") as fh:
             fh.write(make_raw_file(n_blocks=2, events_per_block=3,
                                    gzip_depth=1))
-    sc = spark.sparkContext
-    group = "test_batch_processed_dir_job_count"
-    sc.setJobGroup(group, group)
-    try:
-        assert main(args) == 0
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 5
+    conf = spark.conf.getAll
+    with jobs_and_tasks(spark, "test_batch_processed_dir_job_count") as jobs:
+        assert shipper.run_batch(
+            spark, shipper.build_parser().parse_args(args)) == 0
+    assert spark.conf.getAll == conf
+    assert len(jobs) == 4
+    assert jobs[2] == [1]
     assert set(events_per_file(spark, out)) >= {
         f"file:{landing}/new1.dat", f"file:{landing}/new2.dat"}
 
